@@ -94,7 +94,7 @@ def connected_components(
             .localCheckpoint()
         )
         changed = (
-            fused.filter(F.col("component") != F.col("_old"))
+            fused.filter(~F.col("component").eqNullSafe(F.col("_old")))
             .limit(1)
             .count()
         )

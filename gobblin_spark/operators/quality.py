@@ -69,8 +69,10 @@ def check_rows(
     """Single-pass split into (passed, quarantined).
 
     RowLevelPolicyChecker.java:103-127: passing records continue down the
-    pipeline; failures go to the err file. Caller is expected to persist
-    ``df`` (or run inside foreachBatch) so the scan happens once.
+    pipeline; failures go to the err file. Both outputs are filters over
+    one flagged frame: a caller writing both should build it with
+    ``with_ok_flag`` and persist THAT (as ``plans.run`` does), or run
+    inside foreachBatch, so the scan happens once.
     """
     flagged = with_ok_flag(df, policies)
     passed = flagged.filter(F.col("_ok")).drop("_ok")

@@ -15,12 +15,13 @@ Reference mapping (all relative to /root/reference/):
   commit policy decides what publishes — delegated to sinks/publish.py.
 
 Spark design: a Pipeline never materializes intermediate rows — it
-COMPOSES one lazy DataFrame plan per branch, so Catalyst optimizes
-across stage boundaries (a converter's projection pushes into the scan
-even though the user declared it three stages later). The only barriers
-are the persist for multi-branch fan-out and the final writes. Running
-the same spec in streaming mode wraps the identical composition in a
-foreachBatch epoch (streaming/runner.py semantics).
+COMPOSES lazy DataFrame plans, so Catalyst optimizes across stage
+boundaries (a converter's projection pushes into the scan even though
+the user declared it three stages later). The fork point is ONE
+row-policy-flagged frame, persisted when several writes read it; the
+branches and the quarantine are filters over it, staged concurrently,
+so the source is scanned once. Streaming mode wraps the identical
+composition in a foreachBatch epoch (streaming/runner.py semantics).
 """
 
 from __future__ import annotations
@@ -76,34 +77,52 @@ class PipelineResult:
     events: list = dc_field(default_factory=list)  # TrackingEvents emitted
 
 
-def compose(pipeline: Pipeline, spark: SparkSession) -> tuple[DataFrame, DataFrame]:
-    """Build the shared (passed, quarantined) plan up to the fork point —
-    pure composition, no action."""
+def _flagged(pipeline: Pipeline, spark: SparkSession) -> DataFrame:
+    """The fork point: source → converters → the ``_ok`` row-policy flag
+    (constant true when there are no policies)."""
     df = pipeline.source(spark)
     for t in pipeline.transforms:
         df = t(df)
-    if pipeline.row_policies:
-        return Q.check_rows(df, pipeline.row_policies)
-    return df, df.filter(F.lit(False))
+    return Q.with_ok_flag(df, pipeline.row_policies)
+
+
+def _split(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(passed, quarantined): two filters over ONE flagged frame
+    (RowLevelPolicyChecker.java:103-127)."""
+    ok = F.col("_ok")
+    return flagged.filter(ok).drop("_ok"), flagged.filter(~ok).drop("_ok")
+
+
+def compose(pipeline: Pipeline, spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+    """Build the shared (passed, quarantined) plan up to the fork point —
+    pure composition, no action."""
+    return _split(_flagged(pipeline, spark))
 
 
 def branch_frames(pipeline: Pipeline, spark: SparkSession) -> dict[str, DataFrame]:
     """The per-branch DataFrames (post-mask, post-branch-transforms) —
     the dry-run surface: inspect/.explain each branch without writing."""
     passed, _ = compose(pipeline, spark)
-    out = {}
-    for b in pipeline.branches:
-        bdf = passed.filter(b.mask) if b.mask is not None else passed
-        for t in b.transforms:
-            bdf = t(bdf)
-        out[b.name] = bdf
-    return out
+    return {b.name: _branch_frame(passed, b) for b in pipeline.branches}
+
+
+def _branch_frame(passed: DataFrame, b: Branch) -> DataFrame:
+    bdf = passed.filter(b.mask) if b.mask is not None else passed
+    for t in b.transforms:
+        bdf = t(bdf)
+    return bdf
 
 
 def run(pipeline: Pipeline, spark: SparkSession, persist: bool = True) -> PipelineResult:
-    """Execute the spec: one source scan feeds every branch (persisted
-    fan-out), each branch stages through write-audit, then ONE job-level
-    commit publishes per the commit policy (AbstractJobLauncher.java:442).
+    """Execute the spec: one scan of the persisted flagged frame feeds
+    every write; branch and quarantine staging writes, plus branch
+    audits, run concurrently. ONE job-level commit then publishes the
+    branches per the commit policy (AbstractJobLauncher.java:442); the
+    quarantine publishes with that commit (directly when no branch
+    writes) and is aborted with it, so a retry never re-appends what a
+    failed attempt quarantined. ``result.quarantined`` is the quarantine
+    write's row observation (-1 if unavailable: published anyway); an
+    empty quarantine is dropped, creating no dir.
 
     Branches without a ``final_dir`` are returned as DataFrames instead
     of written — a pipeline can end in further programmatic use.
@@ -115,102 +134,67 @@ def run(pipeline: Pipeline, spark: SparkSession, persist: bool = True) -> Pipeli
     from gobblin_spark import metrics as M
 
     ctx = M.root_context().child(f"job.{pipeline.job_id or 'job'}")
-    passed, quarantined = compose(pipeline, spark)
+    flagged = _flagged(pipeline, spark)
+    fan_out = persist and (len(pipeline.branches) > 1
+                           or pipeline.quarantine_dir is not None)
+    if fan_out:
+        flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
+    passed, quarantined = _split(flagged)
     result = PipelineResult(report=None, metrics=ctx)
-
-    writing = [b for b in pipeline.branches if b.final_dir]
-    if persist and (len(pipeline.branches) > 1 or pipeline.quarantine_dir):
-        passed = passed.persist(StorageLevel.MEMORY_AND_DISK)
 
     job_timer = ctx.timer("job_duration")
     t0 = _time.monotonic()
-    quar_persisted = False
+    writes: list[tuple[DataFrame, Branch]] = []  # branches, then quarantine
+    staged: dict[int, P.StagedDataset] = {}  # by index into writes
     try:
-        if pipeline.quarantine_dir is not None:
-            # audit-r7: the quarantine branch runs TWO actions (count,
-            # then the err-file write) — persist it so the source is
-            # scanned once for the pair, not once per action
-            quarantined = quarantined.persist(StorageLevel.MEMORY_AND_DISK)
-            quar_persisted = True
-            result.quarantined = quarantined.count()
-            ctx.counter("records_quarantined").inc(result.quarantined)
-            if result.quarantined:
-                # staged write + rename publish, NOT a direct append:
-                # under the v2 output committer a mid-job failure of a
-                # direct append leaves partial task files visible in
-                # the destination, so a retried pipeline would double-
-                # count quarantined rows (advice-r13). The staging-dir
-                # + merge-rename path is atomic per publish; existing
-                # quarantine content is preserved (rename merges).
-                P.publish_staged(
-                    P.stage(quarantined, pipeline.quarantine_dir,
-                            name="quarantine", job_id=pipeline.job_id),
-                    spark)
-
-        # branch staging writes are INDEPENDENT jobs over the shared
-        # persisted parent: submit them from a small thread pool so a
-        # later branch's tasks back-fill executors freed by an earlier
-        # branch's tail (guide §2.6 — actions are only sequential
-        # because driver code calls them sequentially). Concurrent
-        # first-computation of a cached partition is safe: the
-        # BlockManager's per-partition lock lets one task compute and
-        # the others read the stored block. Results keep branch order.
-        to_write: list[tuple[int, object]] = []  # (branch idx, bdf)
-        staged_by_idx: dict[int, P.StagedDataset] = {}
-        for i, b in enumerate(pipeline.branches):
-            bdf = passed.filter(b.mask) if b.mask is not None else passed
-            for t in b.transforms:
-                bdf = t(bdf)
+        for b in pipeline.branches:
+            bdf = _branch_frame(passed, b)
             if b.final_dir:
-                to_write.append((i, bdf))
+                writes.append((bdf, b))
             else:
                 result.dataframes[b.name] = bdf
+        if not pipeline.branches:  # sink-less pipeline: expose the main frame
+            result.dataframes["main"] = passed
+        n_branch = len(writes)
+        if pipeline.quarantine_dir is not None:
+            # staged + rename-merged, NOT a direct append: a failed v2-
+            # committer append leaves partial files visible (advice-r13)
+            writes.append((quarantined, Branch(
+                "quarantine", final_dir=pipeline.quarantine_dir)))
 
-        def _stage_one(item):
-            i, bdf = item
-            b = pipeline.branches[i]
+        # staging writes are INDEPENDENT jobs over the shared persisted
+        # parent: a small thread pool lets a later write's tasks back-
+        # fill executors freed by an earlier one's tail (guide §2.6).
+        # Concurrent first-computation of a cached partition scans
+        # once: the BlockManager's per-partition lock lets one task
+        # compute and the others read the stored block.
+        def _stage_one(i):
+            bdf, b = writes[i]
             s = P.stage(bdf, b.final_dir, name=b.name, fmt=b.fmt,
                         partition_by=b.partition_by, job_id=pipeline.job_id)
             if b.task_policies:
                 P.audit(s, spark, b.task_policies)
-            staged_by_idx[i] = s
+            staged[i] = s
 
-        try:
-            if len(to_write) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-                with ThreadPoolExecutor(
-                        max_workers=min(3, len(to_write))) as ex:
-                    futs = [ex.submit(_stage_one, item)
-                            for item in to_write]
-                    errs = [f.exception() for f in futs]
-                first = next((e for e in errs if e is not None), None)
-                if first is not None:
-                    raise first
-            else:
-                for item in to_write:
-                    _stage_one(item)
-        except BaseException:
-            # one branch failed: the OTHER branches may have finished
-            # (or been mid-) staging — abort their staging dirs before
-            # re-raising, or retried pipelines inherit orphaned
-            # staging trees (advice-r13; the sequential path had the
-            # same leak for already-staged earlier branches)
-            for s in staged_by_idx.values():
-                try:
-                    P.abort_staged(s, spark)
-                except Exception:
-                    pass
-            raise
-        staged = [staged_by_idx[i] for i, _ in to_write]
-        if not pipeline.branches:  # sink-less pipeline: expose the main frame
-            result.dataframes["main"] = passed
+        if len(writes) > 1:
+            from concurrent.futures import ThreadPoolExecutor
+            with ThreadPoolExecutor(max_workers=min(3, len(writes))) as ex:
+                futs = [ex.submit(_stage_one, i) for i in range(len(writes))]
+                errs = [f.exception() for f in futs]
+            first = next((e for e in errs if e is not None), None)
+            if first is not None:
+                raise first
+        else:
+            for i in range(len(writes)):
+                _stage_one(i)
 
-        if staged:
-            result.report = P.commit(staged, spark, pipeline.commit_policy)
+        branch_staged = [staged[i] for i in range(n_branch)]
+        if branch_staged:
+            result.report = P.commit(branch_staged, spark, pipeline.commit_policy)
             sub = M.EventSubmitter("gobblin.pipeline", context=ctx,
                                    job_id=str(pipeline.job_id or "job"))
             lineage: dict[str, str] = {}
-            for s in staged:
+            for s in branch_staged:
                 if s.write:
                     result.branch_files[s.name] = s.write.files
                     ctx.counter("files_written").inc(s.write.files)
@@ -227,12 +211,30 @@ def run(pipeline: Pipeline, spark: SparkSession, persist: bool = True) -> Pipeli
                     **lineage,
                 )
             )
+        if pipeline.quarantine_dir is not None:
+            quar = staged[n_branch]
+            result.quarantined = quar.write.rows
+            if quar.write.rows >= 0:
+                ctx.counter("records_quarantined").inc(quar.write.rows)
+            if quar.write.rows == 0 or (result.report is not None
+                                        and not result.report.committed):
+                P.abort_staged(quar, spark)
+            else:
+                P.publish_staged(quar, spark)
+    except BaseException:
+        # abort every staging dir before re-raising, or retried
+        # pipelines inherit orphaned staging trees (advice-r13); a
+        # published dataset has none left
+        for s in staged.values():
+            try:
+                P.abort_staged(s, spark)
+            except Exception:
+                pass
+        raise
     finally:
         job_timer.update(_time.monotonic() - t0)
-        if persist and (len(pipeline.branches) > 1 or pipeline.quarantine_dir):
-            passed.unpersist()
-        if quar_persisted:
-            quarantined.unpersist()
+        if fan_out:
+            flagged.unpersist()
     return result
 
 
@@ -300,12 +302,10 @@ def run_streaming(
             source=lambda s: batch_df,
             job_id=f"{pipeline.job_id or 'stream'}-e{epoch_id}",
             # r11 audit: a PARTIAL-marker replay proves this epoch's
-            # run() already executed once — its quarantine write
-            # (mode append, no marker of its own) already landed, and
-            # re-running it would duplicate every quarantined row.
-            # Skip it on detected replays; the crash window BEFORE any
-            # marker landed stays documented alongside the
-            # commit-vs-marker gap.
+            # run() committed once, and its quarantine (no marker of
+            # its own) published with that commit — re-running it
+            # would duplicate every quarantined row. A crash before
+            # any marker is the documented commit-vs-marker gap.
             quarantine_dir=(None if done_markers
                             else pipeline.quarantine_dir),
         )

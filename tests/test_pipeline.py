@@ -183,7 +183,7 @@ def test_streaming_partial_marker_replay_skips_quarantine(
     quar = ev.filter(~F.col("value").between(0, 90))
     assert quar.count() > 0
     # simulate the crashed first attempt: branch A published+marked,
-    # quarantine written (it runs before staging), B's marker lost
+    # quarantine published with A's commit, B's marker lost
     passed.filter(F.col("event_id") % 2 == 0).write.mode(
         "overwrite").parquet(str(out / "a"))
     (out / "a" / f"_epoch-{token}-0.done").write_text("")
@@ -261,11 +261,24 @@ def test_streaming_partial_marker_replays_only_unmarked(
     assert (out / "b" / f"_epoch-{token}-0.done").exists()
 
 
+def _staging_leftovers(root):
+    import glob
+
+    return (glob.glob(str(root / "_staging*"))
+            + glob.glob(str(root / "*" / "_staging*")))
+
+
+def _n_persisted(spark):
+    return spark._jsc.sc().getPersistentRDDs().size()
+
+
 def test_branch_failure_aborts_sibling_staging(spark, sf_dir, tmp_path):
     """A failing branch must not leave sibling branches' staging dirs
     behind (advice-r13): staged-but-uncommitted trees would otherwise
-    accumulate under every retried pipeline run."""
-    import glob
+    accumulate under every retried pipeline run. The quarantine stages
+    beside the branches and is aborted with them — publishing it would
+    let a retry append the same rows again — and the fork cache is
+    released."""
 
     def boom(df):
         # fails when the STAGING WRITE executes, not at plan build —
@@ -275,6 +288,8 @@ def test_branch_failure_aborts_sibling_staging(spark, sf_dir, tmp_path):
 
     pl = plans.Pipeline(
         source=events_source(sf_dir),
+        row_policies=[quality.range_policy("value", 0, 80)],
+        quarantine_dir=str(tmp_path / "quar"),
         branches=[
             plans.Branch("ok_a", F.col("event_type") == "click",
                          final_dir=str(tmp_path / "a")),
@@ -284,12 +299,110 @@ def test_branch_failure_aborts_sibling_staging(spark, sf_dir, tmp_path):
                          final_dir=str(tmp_path / "c")),
         ],
     )
-    try:
+    before = _n_persisted(spark)
+    with pytest.raises(Exception, match="branch stage boom"):
         plans.run(pl, spark)
-        raise AssertionError("pipeline must propagate the branch error")
-    except Exception as ex:
-        assert "branch stage boom" in str(ex)
-    leftovers = [p for p in glob.glob(str(tmp_path / "*"))
-                 if "staging" in p.lower() or "_staged" in p]
-    leftovers += glob.glob(str(tmp_path / "*" / "_staging*"))
-    assert leftovers == [], leftovers
+    assert _staging_leftovers(tmp_path) == []
+    assert not (tmp_path / "quar").exists()  # no quarantine rows published
+    assert _n_persisted(spark) == before
+
+
+def test_full_success_abort_keeps_quarantine_unpublished(
+        spark, sf_dir, tmp_path):
+    """A FULL_SUCCESS audit abort publishes nothing: the watermark does
+    not advance, so a quarantine published here would be appended
+    again by the retry."""
+    pl = plans.Pipeline(
+        source=events_source(sf_dir),
+        row_policies=[quality.range_policy("value", 0, 80)],
+        quarantine_dir=str(tmp_path / "quar"),
+        branches=[
+            plans.Branch("a", F.col("value") >= 50,
+                         final_dir=str(tmp_path / "a")),
+            plans.Branch(
+                "b", F.col("value") < 50, final_dir=str(tmp_path / "b"),
+                task_policies=[lambda df: quality.row_count_policy(-1, df.count())],
+            ),
+        ],
+    )
+    res = plans.run(pl, spark)
+    assert not res.report.committed
+    assert res.quarantined > 0
+    assert not (tmp_path / "quar").exists()
+    assert _staging_leftovers(tmp_path) == []
+
+
+def test_all_pass_creates_no_quarantine(spark, sf_dir, tmp_path):
+    """An empty quarantine is dropped: no quarantine dir, no staging."""
+    pl = plans.Pipeline(
+        source=events_source(sf_dir),
+        row_policies=[quality.RowPolicy("all", F.lit(True))],
+        quarantine_dir=str(tmp_path / "quar"),
+        branches=[plans.Branch("main", None, final_dir=str(tmp_path / "main"))],
+    )
+    res = plans.run(pl, spark)
+    assert res.report.committed and res.quarantined == 0
+    assert not (tmp_path / "quar").exists()
+    assert _staging_leftovers(tmp_path) == []
+
+
+def test_unknown_quarantine_count_still_publishes(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A quarantine write whose row observation was unavailable (rows
+    == -1) publishes: quarantined rows are never silently dropped."""
+    import dataclasses
+
+    real = P.write_data
+
+    def unobserved(*a, **kw):
+        return dataclasses.replace(real(*a, **kw), rows=-1)
+
+    monkeypatch.setattr(P, "write_data", unobserved)
+    pl = plans.Pipeline(
+        source=events_source(sf_dir),
+        row_policies=[quality.range_policy("value", 0, 80)],
+        quarantine_dir=str(tmp_path / "quar"),
+        branches=[plans.Branch("main", None, final_dir=str(tmp_path / "main"))],
+    )
+    res = plans.run(pl, spark)
+    assert res.report.committed and res.quarantined == -1
+    ev = files.load_table(spark, sf_dir, "events")
+    assert spark.read.parquet(str(tmp_path / "quar")).count() == ev.filter(
+        ~F.coalesce(F.col("value").between(0, 80), F.lit(False))).count()
+
+
+def test_fork_scans_source_once_and_releases_cache(spark, sf_dir, tmp_path):
+    """Two branches plus the quarantine read ONE persisted flagged
+    frame: every source row is evaluated exactly once per run (two
+    caches over the same parent used to scan it twice), and the cache
+    is released when the run ends."""
+    from pyspark.sql.types import DoubleType
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(v):
+        seen.add(1)
+        return v
+
+    tick_udf = F.udf(tick, DoubleType()).asNondeterministic()
+    ev = files.load_table(spark, sf_dir, "events")
+    pl = plans.Pipeline(
+        source=lambda s: ev.withColumn(
+            "value", tick_udf(F.col("value").cast("double"))),
+        row_policies=[quality.range_policy("value", 0, 80)],
+        quarantine_dir=str(tmp_path / "quar"),
+        branches=[
+            plans.Branch("clicks", F.col("event_type") == "click",
+                         final_dir=str(tmp_path / "clicks")),
+            plans.Branch("rest", F.col("event_type") != "click",
+                         final_dir=str(tmp_path / "rest")),
+        ],
+    )
+    before = _n_persisted(spark)
+    res = plans.run(pl, spark)
+    total = ev.count()
+    assert seen.value == total
+    n_out = sum(spark.read.parquet(str(tmp_path / d)).count()
+                for d in ("clicks", "rest", "quar"))
+    assert n_out == total and res.quarantined > 0
+    assert _n_persisted(spark) == before
