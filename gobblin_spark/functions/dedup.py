@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, GroupedData, functions as F
 
 from gobblin_spark.functions.text import fingerprint, normalize_text, word_shingles
 from gobblin_spark.session import ensure_parallelism
@@ -61,25 +61,20 @@ def dedup_exact(
     base = ensure_parallelism(df.select(id_col, text_col)).select(
         F.col(id_col), fingerprint(F.col(text_col)).alias("fp")
     )
-    # ONE scan + ONE shuffle: null-fp rows get a unique synthetic group
-    # key ("\0id:<id>" cannot collide with 32-hex digests), so they come
-    # out as singleton groups instead of needing a second filtered scan
-    # unioned back in (the old shape read the text column twice).
-    gk = F.coalesce(
-        F.col("fp"), F.concat(F.lit("\0id:"), F.col(id_col).cast("string"))
-    )
     return (
-        base.groupBy(gk.alias("_gk"))
-        .agg(
-            F.min(id_col).alias(id_col),
-            # fp is constant within a group (it IS the key, or null):
-            # min == first but keeps the aggregate hash-based instead of
-            # forcing a SortAggregate
-            F.min("fp").alias("fp"),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
+        _fp_groups(base, id_col)
+        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
         .select(id_col, "fp", "dup_count")
     )
+
+
+def _fp_groups(base: DataFrame, id_col: str) -> GroupedData:
+    """Group ``base`` on ``(fp, _solo)``: ``_solo`` is the id when fp is
+    null and null otherwise, so equal fingerprints share one group and
+    every null-text doc is a singleton. ONE scan + ONE shuffle, and no
+    string buffer to carry fp through the aggregate (fp is a key)."""
+    solo = F.when(F.col("fp").isNull(), F.col(id_col)).alias("_solo")
+    return base.groupBy(F.col("fp"), solo)
 
 
 def ngram_jaccard_pairs(
@@ -676,19 +671,16 @@ def dedup_keep_best(
     one candidate row per (mapper, distinct doc) — the
     window/row_number formulation costs a second exchange because
     each Window node re-projects its own partition key. The
-    struct-valued max_by buffer makes Spark pick SortAggregate over
+    struct-valued min_by buffer makes Spark pick SortAggregate over
     HashAggregate; the map-side combine (the property that matters at
-    scale) still applies. Null-fp docs pass through as singletons
-    under a synthetic key, mirroring ``dedup_exact``.
+    scale) still applies. Groups on ``(fp, _solo)`` like ``dedup_exact``,
+    so null-fp docs pass through as singletons.
     """
     base = ensure_parallelism(
         df.select(id_col, score_col, text_col)).select(
         F.col(id_col),
         F.col(score_col),
         fingerprint(F.col(text_col)).alias("fp"),
-    )
-    gk = F.coalesce(
-        F.col("fp"), F.concat(F.lit("\0id:"), F.col(id_col).cast("string"))
     )
     # minimize (-score, id): highest score wins, smallest id breaks
     # ties. The SCORE (numeric by contract) is what gets negated —
@@ -706,12 +698,8 @@ def dedup_keep_best(
             F.col(id_col)),
     )
     return (
-        base.groupBy(gk.alias("_gk"))
-        .agg(
-            best.alias("_best"),
-            F.min("fp").alias("fp"),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
+        _fp_groups(base, id_col)
+        .agg(best.alias("_best"), F.count(F.lit(1)).alias("dup_count"))
         .select(
             F.col("_best")[id_col].alias(id_col),
             "fp",

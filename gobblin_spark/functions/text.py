@@ -5,7 +5,9 @@ Two tiers, chosen per op:
   everything relational — token counting, quality scoring, language
   ID, fingerprinting, shingles, PII redaction, Gopher metrics,
   perplexity. These run at scan speed over 100 TB and each has an
-  exact ANSI-SQL twin used as the DuckDB oracle.
+  exact ANSI-SQL twin used as the DuckDB oracle. Character counts keep
+  their regex form in the oracle; the engine counts with ``translate``
+  and ``replace`` (identical values, no per-match string arrays).
 - Arrow-batched pandas UDFs ONLY where the algorithm is genuinely
   imperative: BPE segmentation (data-dependent merge loop) and zlib
   compression ratio (DEFLATE). Deterministic, unit-tested against
@@ -14,6 +16,7 @@ Two tiers, chosen per op:
 
 from __future__ import annotations
 
+import string
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -32,6 +35,15 @@ LANG_MARKERS: dict[str, list[str]] = {
 # punctuation — a portable stand-in for a real subword vocab.
 BPE_ISH_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
+# Java regex's ASCII ``\s`` class, spelled out for ``translate``.
+_SPACE_CHARS = " \t\n\x0b\f\r"
+
+
+def _count_chars(col: Column, chars: str) -> Column:
+    """Code points of ``col`` that are in ``chars`` — the same count as
+    ``regexp_count(col, '[chars]')`` without building a match array."""
+    return F.length(col) - F.length(F.translate(col, chars, ""))
+
 
 def whitespace_token_count(col: Column) -> Column:
     """Number of whitespace-separated tokens (0 for empty/blank)."""
@@ -49,14 +61,16 @@ def bpe_ish_token_count(col: Column) -> Column:
 def punct_ratio(col: Column) -> Column:
     """Punctuation chars / total chars (0 for empty)."""
     n = F.length(col)
-    p = F.regexp_count(col, F.lit(r"[^A-Za-z0-9\s]"))
+    # [^A-Za-z0-9\s]: what is left once alphanumerics and \s are deleted
+    p = F.length(F.translate(
+        col, string.ascii_letters + string.digits + _SPACE_CHARS, ""))
     return F.when(n == 0, F.lit(0.0)).otherwise(p.cast("double") / n.cast("double"))
 
 
 def alpha_ratio(col: Column) -> Column:
     """Alphabetic chars / total chars (0 for empty)."""
     n = F.length(col)
-    a = F.regexp_count(col, F.lit(r"[A-Za-z]"))
+    a = _count_chars(col, string.ascii_letters)
     return F.when(n == 0, F.lit(0.0)).otherwise(a.cast("double") / n.cast("double"))
 
 
@@ -106,13 +120,9 @@ def lang_id(col: Column) -> Column:
 
 
 def normalize_text(col: Column) -> Column:
-    """Canonical form for fingerprinting: lowercase, strip non-alnum to
-    spaces, collapse whitespace, trim."""
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(col), r"[^a-z0-9\s]", " "), r"\s+", " "
-        )
-    )
+    """Canonical form for fingerprinting: lowercase, turn every run of
+    non-[a-z0-9] characters (whitespace included) into one space, trim."""
+    return F.trim(F.regexp_replace(F.lower(col), r"[^a-z0-9]+", " "))
 
 
 def fingerprint(col: Column) -> Column:
@@ -187,22 +197,25 @@ def gopher_quality_metrics(col: Column) -> dict[str, Column]:
     - alpha_word_ratio: fraction of words containing a letter
     - stopword_hits: count of common-English-stopword occurrences
 
-    Engine-portable by construction (same regexes run in DuckDB) —
-    every metric is oracle-checkable. Null text counts as empty (fails
-    the word-count floor) rather than poisoning downstream AND chains
-    with SQL nulls."""
+    Every metric is oracle-checkable: the DuckDB oracle keeps the regex
+    form, while the engine counts non-space characters and symbols with
+    ``translate`` and ``replace`` — identical values, no per-match
+    arrays. Null text counts as empty (fails the word-count floor)
+    rather than poisoning downstream AND chains with SQL nulls."""
     col = F.coalesce(col, F.lit(""))
     trimmed = F.trim(col)
     words = F.split(trimmed, r"\s+")
     wc = F.when(trimmed == "", F.lit(0)).otherwise(F.size(words))
     wc_d = wc.cast("double")
     # mean word length over non-space characters
-    nonspace = F.length(F.regexp_replace(trimmed, r"\s+", ""))
+    nonspace = F.length(F.translate(trimmed, _SPACE_CHARS, ""))
     mean_len = F.when(wc == 0, F.lit(0.0)).otherwise(
         nonspace.cast("double") / wc_d)
-    symbols = (F.regexp_count(col, F.lit(r"#")) +
-               F.regexp_count(col, F.lit(r"\.\.\.")) +
-               F.regexp_count(col, F.lit("…")))
+    # '...' occurrences are counted left to right without overlap, as
+    # regexp_count does: each one removed shortens the text by 3
+    ellipses = (F.length(col) -
+                F.length(F.replace(col, F.lit("..."), F.lit("")))) / 3
+    symbols = _count_chars(col, "#…") + ellipses
     sym_ratio = F.when(wc == 0, F.lit(0.0)).otherwise(
         symbols.cast("double") / wc_d)
     alpha_words = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))

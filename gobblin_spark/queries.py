@@ -722,7 +722,7 @@ def text_token_stats(spark, sf_dir):
 def text_quality_scores(spark, sf_dir):
     """Quality scoring: alpha/punct ratios + composite score.
 
-    16 KiB/task width hint: the 3 regex char-class counts are the
+    16 KiB/task width hint: the char-class counts are the
     heaviest per-byte projection in the text family — full width wins
     0.81x over the 64 KiB bound (r14 arm-alternating A/B; this was
     the one red row in PERF_r13)."""

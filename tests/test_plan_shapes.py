@@ -204,10 +204,10 @@ def test_asof_join_stays_single_shuffle(spark, sf_dir):
 
 
 def test_keep_best_aggregates_map_side(spark, sf_dir):
-    """dedup_keep_best's argmax must run as a partial+final hash
-    aggregate (map-side combine before the fingerprint exchange) —
-    the property that keeps the shuffle ~one row per distinct doc.
-    A window/row_number formulation would show Window nodes here and
+    """dedup_keep_best's argmax must run as a map-side partial
+    aggregate (combine before the fingerprint exchange) — the property
+    that keeps the shuffle ~one row per distinct doc. A
+    window/row_number formulation would show Window nodes here and
     cost a second exchange. (The struct-valued min_by buffer forces
     SortAggregate rather than HashAggregate — acceptable; the combine
     still happens before the exchange. min_by since r6: the negated
@@ -215,6 +215,30 @@ def test_keep_best_aggregates_map_side(spark, sf_dir):
     plan = _plan(spark, sf_dir, "dedup_keep_best_docs")
     assert "partial_min_by" in plan, plan[:1200]
     assert "Window" not in plan, plan[:1200]
+
+
+def test_dedup_exact_hash_aggregates(spark, sf_dir):
+    """Grouping on (fp, _solo) leaves only a long min(id) buffer, so
+    exact dedup is a partial+final HashAggregate — a string buffer
+    (e.g. min(fp)) would force the sort-based aggregate."""
+    plan = _plan(spark, sf_dir, "dedup_exact_docs")
+    assert "HashAggregate" in plan and "partial_min" in plan, plan[:1200]
+    assert "SortAggregate" not in plan, plan[:1200]
+
+
+@pytest.mark.parametrize("name", ["text_quality_scores", "dedup_exact_docs"])
+def test_text_kernels_build_no_match_arrays(spark, sf_dir, name):
+    """Character-class counts run as translate/length, not as
+    regexp_count — which Spark plans as size(regexp_extract_all(...)),
+    one string allocated per match."""
+    plan = _plan(spark, sf_dir, name)
+    assert "regexp_extract_all" not in plan, plan[:1200]
+
+
+def test_fingerprint_single_regex_pass(spark, sf_dir):
+    """normalize_text is one regexp_replace over the lowered text."""
+    plan = _plan(spark, sf_dir, "text_fingerprint")
+    assert plan.count("regexp_replace(") == 1, plan[:1200]
 
 
 def test_ensure_parallelism_bytes_per_task_hint(spark, sf_dir):
