@@ -78,7 +78,7 @@ def entry(spark: SparkSession) -> DataFrame:
             )
         ],
     )
-    return plans.run(pl, spark, persist=False).dataframes["rollup"]
+    return plans.run(pl, spark).dataframes["rollup"]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

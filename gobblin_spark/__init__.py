@@ -5,7 +5,7 @@ multimodal plumbing).
 
 Layout:
 - session: tuned SparkSession factory
-- sources/: file, JDBC-incremental, Kafka, copy-manifest readers
+- sources/: file, JDBC-incremental, REST, copy-manifest readers; Kafka offset planning
 - operators/: converters, quality, fork, compaction, retention, windows, limits
 - functions/: text analysis, document dedup, embedding similarity, multimodal
 - sinks/: writers + atomic publish protocol

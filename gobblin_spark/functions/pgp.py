@@ -39,15 +39,6 @@ SYM_ALGO_FOR_KEYLEN = {16: 7, 24: 8, 32: 9}
 HASH_ALGO = {1: "md5", 2: "sha1", 8: "sha256", 9: "sha384", 10: "sha512", 11: "sha224"}
 
 
-def cryptography_available() -> bool:
-    try:
-        import cryptography  # noqa: F401
-
-        return True
-    except ImportError:  # pragma: no cover
-        return False
-
-
 def _aes_cfb(key: bytes):
     try:
         from cryptography.hazmat.primitives.ciphers import Cipher, algorithms

@@ -553,7 +553,6 @@ def semantic_dedup_clustered(
     k: int = 8,
     iterations: int = 2,
     threshold: float = 0.95,
-    pair_engine: str = "blas",
 ) -> DataFrame:
     """Paper-shaped SemDeDup (Abbas et al. 2023): k-means the corpus,
     compute pairwise cosine ONLY within each cluster, drop the greater
@@ -569,17 +568,11 @@ def semantic_dedup_clustered(
     missed by construction — the documented SemDeDup trade; raise k
     for speed, lower it for recall.
 
-    ``pair_engine``:
-    - 'blas' (default): per-cluster ``applyInPandas`` computes the
-      gram matrix U @ U.T with NumPy — one BLAS call replaces |C|²·d
-      interpreted fold steps (A/B at sf0.1, 5k x 64d: pair stage
-      2.4 s → 0.4 s). Requires a cluster's vectors to fit one group —
-      the same "k sized so clusters fit an executor" contract the
-      join formulation already carries.
-    - 'column': pure Column self-join + dot fold — zero Python, for
-      environments where Arrow/pandas is unavailable.
-    Both emit identical pairs: the threshold margin (≥1e-4 in tests)
-    dwarfs BLAS-vs-fold summation-order noise (~1e-15).
+    The pair step is a per-cluster ``applyInPandas`` that computes the
+    gram matrix U @ U.T with NumPy — one BLAS call replaces |C|²·d
+    interpreted fold steps of a Column self-join (A/B at sf0.1,
+    5k x 64d: pair stage 2.4 s → 0.4 s). A cluster's vectors must fit
+    one group: size k so clusters fit an executor.
     """
     # the assignment projection carries the double-cast vector, so the
     # normalized table derives straight from it — no raw corpus
@@ -588,68 +581,46 @@ def semantic_dedup_clustered(
     # the join keyed the same rows the projection already holds)
     assigned = kmeans_fit_predict(
         corpus, id_col, vec_col, k, iterations, _with_vectors=True)
-    # normalize ONCE so the per-pair cosine is a single dot product,
-    # and persist: the table feeds both sides of the pair step
-    vecs = (
-        assigned.select(id_col, "cluster", "_e",
-                        _norm(F.col("_e")).alias("_n"))
-        .select(
-            id_col,
-            # zero-norm guard (audit r8): x/0 under non-ANSI divide
-            # yields an all-NULL unit vector that crashes the blas
-            # engine (object-dtype gram) and silently drops pairs in
-            # the column engine; an all-zero unit keeps the row with
-            # cosine 0 to everything in BOTH engines
-            F.when(
-                F.col("_n") > 0,
-                F.transform("_e", lambda x: x / F.col("_n")),
-            ).otherwise(
-                F.transform("_e", lambda x: F.lit(0.0))).alias("_u"),
-            "cluster",
-        )
-        .persist()
+    # normalize ONCE so the per-pair cosine is a single dot product
+    vecs = assigned.select(id_col, "cluster", "_e",
+                           _norm(F.col("_e")).alias("_n")).select(
+        id_col,
+        # zero-norm guard (audit r8): x/0 under non-ANSI divide yields
+        # an all-NULL unit vector that crashes the gram (object dtype);
+        # an all-zero unit keeps the row with cosine 0 to everything
+        F.when(
+            F.col("_n") > 0,
+            F.transform("_e", lambda x: x / F.col("_n")),
+        ).otherwise(
+            F.transform("_e", lambda x: F.lit(0.0))).alias("_u"),
+        "cluster",
     )
-    if pair_engine == "blas":
-        def find_dropped(pdf):
-            import pandas as pd
 
-            ids = pdf[id_col].to_numpy()
-            order = np.argsort(ids)
-            ids = ids[order]
-            u = np.asarray(list(pdf["_u"].to_numpy()[order]))
-            if len(ids) < 2:
-                return pd.DataFrame({id_col: ids[:0]})
-            g = u @ u.T
-            ia, ib = np.triu_indices(len(ids), k=1)
-            # strict id inequality, like the column engine's
-            # id_a < id_b: duplicate-id rows otherwise nominated
-            # THEMSELVES and the anti-join erased the document with
-            # no survivor (audit r8)
-            hit = (g[ia, ib] >= threshold) & (ids[ia] != ids[ib])
-            return pd.DataFrame({id_col: np.unique(ids[ib[hit]])})
+    def find_dropped(pdf):
+        import pandas as pd
 
-        id_type = corpus.schema[id_col].dataType.simpleString()
-        dropped = (
-            vecs.groupBy("cluster")
-            # schema follows the ACTUAL id type — hardcoding long broke
-            # string/UUID ids that the column engine supports
-            .applyInPandas(find_dropped, f"{id_col} {id_type}")
-            .distinct()
-        )
-    elif pair_engine == "column":
-        a = vecs.select(F.col(id_col).alias("id_a"),
-                        F.col("_u").alias("ua"), "cluster")
-        b = vecs.select(F.col(id_col).alias("id_b"),
-                        F.col("_u").alias("ub"), "cluster")
-        pairs = a.join(b, "cluster").filter(F.col("id_a") < F.col("id_b"))
-        dropped = (
-            pairs.withColumn("_cos", _dot(F.col("ua"), F.col("ub")))
-            .filter(F.col("_cos") >= threshold)
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-        )
-    else:
-        raise ValueError(f"unknown pair_engine: {pair_engine}")
+        ids = pdf[id_col].to_numpy()
+        order = np.argsort(ids)
+        ids = ids[order]
+        u = np.asarray(list(pdf["_u"].to_numpy()[order]))
+        if len(ids) < 2:
+            return pd.DataFrame({id_col: ids[:0]})
+        g = u @ u.T
+        ia, ib = np.triu_indices(len(ids), k=1)
+        # strict id inequality: duplicate-id rows otherwise nominated
+        # THEMSELVES and the anti-join erased the document with no
+        # survivor (audit r8)
+        hit = (g[ia, ib] >= threshold) & (ids[ia] != ids[ib])
+        return pd.DataFrame({id_col: np.unique(ids[ib[hit]])})
+
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    dropped = (
+        vecs.groupBy("cluster")
+        # schema follows the ACTUAL id type — hardcoding long broke
+        # string/UUID ids
+        .applyInPandas(find_dropped, f"{id_col} {id_type}")
+        .distinct()
+    )
     return corpus.select(id_col).join(dropped, id_col, "left_anti")
 
 

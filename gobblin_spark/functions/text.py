@@ -74,16 +74,6 @@ def alpha_ratio(col: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(a.cast("double") / n.cast("double"))
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    """Stopword tokens / whitespace tokens (0 for empty)."""
-    pattern = r"\b(" + "|".join(LANG_MARKERS[lang]) + r")\b"
-    hits = F.regexp_count(F.lower(col), F.lit(pattern))
-    toks = whitespace_token_count(col)
-    return F.when(toks == 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / toks.cast("double")
-    )
-
-
 def quality_score(col: Column) -> Column:
     """Composite doc-quality heuristic in [0,1]:
     mean of (alpha_ratio, 1 - punct_ratio, min(1, tokens/20)).

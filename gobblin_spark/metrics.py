@@ -347,13 +347,6 @@ def root_context() -> MetricContext:
         return _root
 
 
-def reset_root_context() -> None:
-    """Test hook: drop the process root."""
-    global _root
-    with _root_lock:
-        _root = None
-
-
 # --------------------------------------------------------------------------
 # Tracking events (EventSubmitter.java:42 / GobblinTrackingEvent)
 # --------------------------------------------------------------------------

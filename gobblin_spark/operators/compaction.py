@@ -22,15 +22,14 @@ splitting). Reference semantics:
   conditions/RecompactionConditionBasedOnRatio.java)
 
 Scale notes (100 TB):
-- ``dedup_by_key`` is a single hash shuffle on the key columns. We use
-  ``max_by(struct(all), struct(delta...))`` where possible: one
-  aggregation with map-side partial combine — strictly less data moved
-  than a row_number() window (which must shuffle *all* rows, sort each
-  partition, then filter). The window variant is kept for
-  ``keep='all_ranked'`` debugging output.
-- ``snapshot_delta_merge`` broadcast-joins when the delta is small
-  (the common nightly case: delta << snapshot), else shuffles both sides
-  on the pk; AQE picks the strategy at runtime from actual sizes.
+- ``dedup_by_key`` is a single hash shuffle on the key columns:
+  ``max_by(struct(all), struct(delta...))``, one aggregation with
+  map-side partial combine — strictly less data moved than a
+  row_number() window (which must shuffle *all* rows, sort each
+  partition, then filter; the tests keep that form as the reference).
+- ``snapshot_delta_merge`` is a left-anti join on the pk; AQE
+  broadcasts the delta at runtime when it is small (the common nightly
+  case: delta << snapshot), else shuffles both sides on the pk.
 """
 
 from __future__ import annotations
@@ -38,43 +37,25 @@ from __future__ import annotations
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
-
-
-def _delta_ordering(delta_cols: Sequence[str]) -> list[Column]:
-    return [F.col(c).desc_nulls_last() for c in delta_cols]
+from pyspark.sql import DataFrame, functions as F
 
 
 def dedup_by_key(
     df: DataFrame,
     key_cols: Sequence[str],
     delta_cols: Sequence[str],
-    strategy: str = "max_by",
 ) -> DataFrame:
     """Keep exactly one record per ``key_cols``, the max by ``delta_cols``.
 
     Mirrors AvroKeyDedupReducer.java:89 (keep record with the greatest
     delta-field tuple). ``delta_cols`` must form a deterministic total
     order within each key (include a unique id as the last tiebreaker).
-
-    strategy='max_by' → single agg with map-side combine (preferred at
-    scale); strategy='window' → row_number() window (same result, more
-    shuffle+sort; kept for parity testing).
+    One aggregation with map-side combine.
     """
-    if strategy == "max_by":
-        payload = F.struct(*[F.col(c) for c in df.columns])
-        rank = F.struct(*[F.col(c) for c in delta_cols])
-        best = df.groupBy(*key_cols).agg(F.max_by(payload, rank).alias("_best"))
-        return best.select("_best.*")
-    if strategy == "window":
-        w = Window.partitionBy(*key_cols).orderBy(*_delta_ordering(delta_cols))
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    raise ValueError(f"unknown dedup strategy: {strategy}")
+    payload = F.struct(*[F.col(c) for c in df.columns])
+    rank = F.struct(*[F.col(c) for c in delta_cols])
+    best = df.groupBy(*key_cols).agg(F.max_by(payload, rank).alias("_best"))
+    return best.select("_best.*")
 
 
 def duplicate_stats(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
@@ -95,7 +76,6 @@ def snapshot_delta_merge(
     delta: DataFrame,
     pk_cols: Sequence[str],
     delta_order_cols: Sequence[str] | None = None,
-    broadcast_delta: bool = False,
 ) -> DataFrame:
     """Upsert: snapshot rows not touched by delta, plus the delta.
 
@@ -106,8 +86,7 @@ def snapshot_delta_merge(
     """
     if delta_order_cols:
         delta = dedup_by_key(delta, pk_cols, delta_order_cols)
-    d = F.broadcast(delta) if broadcast_delta else delta
-    untouched = snapshot.join(d, on=list(pk_cols), how="left_anti")
+    untouched = snapshot.join(delta, on=list(pk_cols), how="left_anti")
     return untouched.unionByName(delta)
 
 

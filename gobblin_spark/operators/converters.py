@@ -206,18 +206,6 @@ def grok_parse(
     return out.drop(field) if drop_source else out
 
 
-def parse_timestamp(
-    df: DataFrame, field: str, fmt: str, out_col: str | None = None
-) -> DataFrame:
-    """String → timestamp with explicit format.
-
-    The DATE/TIME/TIMESTAMP conversions of
-    JsonElementConversionFactory.java:106-118 (format + timezone);
-    session timezone is pinned to UTC in session.py.
-    """
-    return df.withColumn(out_col or field, F.to_timestamp(F.col(field), fmt))
-
-
 def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
     """Type-cast converters (TextToString/ObjectToString/StringToBytes...).
 

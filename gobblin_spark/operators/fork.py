@@ -11,19 +11,18 @@ own converter→quality→writer chain on a bounded queue
 
 Spark design: a branch is a filter predicate over an (optionally
 persisted) parent DataFrame — Rows are immutable so Gobblin's copy
-machinery (CopyHelper) is moot. ``write_branches`` persists the parent
-once, so N sinks cost ONE source scan + N cheap filtered writes, the
-same single-read fan-out Gobblin gets from its in-memory queues. In
-streaming, the same happens per micro-batch inside foreachBatch (see
-streaming/runner.py).
+machinery (CopyHelper) is moot. ``plans.pipeline.run`` persists the
+flagged parent once, so N sinks cost ONE source scan + N cheap filtered
+writes, the same single-read fan-out Gobblin gets from its in-memory
+queues. In streaming, the same happens per micro-batch inside
+foreachBatch (see streaming/runner.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def identity_fork(df: DataFrame, n_branches: int) -> list[DataFrame]:
@@ -41,11 +40,6 @@ def fork(df: DataFrame, masks: Sequence[Column]) -> list[DataFrame]:
     return [df.filter(m) for m in masks]
 
 
-def fork_by_value(df: DataFrame, field: str, values: Sequence) -> list[DataFrame]:
-    """Common routing fork: one branch per field value."""
-    return fork(df, [F.col(field) == F.lit(v) for v in values])
-
-
 def with_branch_ids(df: DataFrame, masks: Sequence[Column]) -> DataFrame:
     """Annotate rows with every branch id whose mask matches (exploded).
 
@@ -59,23 +53,3 @@ def with_branch_ids(df: DataFrame, masks: Sequence[Column]) -> DataFrame:
     return df.withColumn(
         "branch", F.explode(F.filter(branch_array, lambda x: x.isNotNull()))
     )
-
-
-def write_branches(
-    df: DataFrame,
-    branches: Sequence[tuple[Column, Callable[[DataFrame], None]]],
-    persist: bool = True,
-) -> None:
-    """Cache-once multi-sink: persist parent, run each branch's writer.
-
-    Fork.java's bounded-queue fan-out maps to persist + N filtered
-    writes: one upstream computation, N sinks. MEMORY_AND_DISK so a
-    100 TB-scale batch spills instead of recomputing the source N times.
-    """
-    parent = df.persist(StorageLevel.MEMORY_AND_DISK) if persist else df
-    try:
-        for mask, writer in branches:
-            writer(parent.filter(mask))
-    finally:
-        if persist:
-            parent.unpersist()

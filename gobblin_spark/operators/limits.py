@@ -10,8 +10,8 @@ Spark mapping: count cap = limit(); deterministic top-k = ORDER BY +
 LIMIT, which Spark executes as TakeOrderedAndProject (per-partition
 heap + driver merge — no full sort, no full shuffle; exactly the right
 plan at 100 TB). Rate/time limits belong to the streaming source
-(maxOffsetsPerTrigger / maxFilesPerTrigger — see streaming/runner.py),
-not to a batch operator.
+(maxFilesPerTrigger on ``streaming.runner.file_stream``, Spark's own
+maxOffsetsPerTrigger for Kafka), not to a batch operator.
 """
 
 from __future__ import annotations
@@ -33,18 +33,3 @@ def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     single driver merge of k·num_partitions rows.
     """
     return df.orderBy(*order).limit(k)
-
-
-def streaming_rate_options(
-    max_offsets_per_trigger: int | None = None,
-    max_files_per_trigger: int | None = None,
-) -> dict[str, str]:
-    """RateBasedLimiter / ThrottleWriter analog for streaming reads:
-    built-in source throttles (RateBasedLimiter.java:29,
-    gobblin-core/.../writer/ThrottleWriter.java:44)."""
-    opts: dict[str, str] = {}
-    if max_offsets_per_trigger is not None:
-        opts["maxOffsetsPerTrigger"] = str(max_offsets_per_trigger)
-    if max_files_per_trigger is not None:
-        opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
-    return opts

@@ -80,13 +80,6 @@ def check_rows(
     return passed, quarantined
 
 
-def quarantine_sampled(quarantined: DataFrame, max_ratio: float = 0.1, seed: int = 42) -> DataFrame:
-    """Bounded error sample for the err file (RowLevelPolicyChecker.java:94).
-    Plain Bernoulli — use ``front_loaded_sample`` when early records
-    should dominate the sample."""
-    return quarantined.sample(False, max_ratio, seed)
-
-
 def front_loaded_sample(
     df: DataFrame,
     initial_ratio: float = 1.0,

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
@@ -104,20 +104,6 @@ def purge_by_id(
     data_id_col = data_id_col or id_col
     ids_small = F.broadcast(ids.select(F.col(id_col).alias(data_id_col)).dropDuplicates())
     return data.join(ids_small, on=data_id_col, how="left_anti")
-
-
-def purge_partition_predicate(retained: DataFrame, partition_col: str) -> Column:
-    """Helper: restrict a purge rewrite to partitions that actually contain
-    affected ids (HivePurgerQueryTemplate writes partition-wise INSERT
-    OVERWRITEs). Returns a Column usable for partition pruning.
-
-    Driver-side collect is intentional and bounded: the input is the
-    *partition inventory of rows containing forget-ids* (≤ total
-    partition count — thousands, not data rows). A literal IN-list is
-    what static partition pruning needs; a semi-join would shuffle and
-    not prune directories."""
-    parts = [r[0] for r in retained.select(partition_col).distinct().collect()]
-    return F.col(partition_col).isin(parts)
 
 
 def list_dataset_versions(spark, base_path: str) -> DataFrame:

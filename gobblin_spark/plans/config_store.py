@@ -60,20 +60,8 @@ class ConfigStore:
         self._imports[p] = [self._norm(i) for i in imports]
         return self
 
-    def own_config(self, path: str) -> dict[str, str]:
-        return dict(self._own.get(self._norm(path), {}))
-
     def own_imports(self, path: str) -> list[str]:
         return list(self._imports.get(self._norm(path), []))
-
-    def _ancestors(self, path: str) -> list[str]:
-        """path → [path, parent, ..., '/'] (nearest first)."""
-        p = self._norm(path)
-        chain = [p]
-        while p != "/":
-            p = posixpath.dirname(p)
-            chain.append(p)
-        return chain
 
     def resolve(self, path: str) -> dict[str, str]:
         """Resolved config for a node: own keys win over imported tag
@@ -100,14 +88,6 @@ class ConfigStore:
         # own keys strongest
         out.update(self._own.get(path, {}))
         return out
-
-    def leaf_paths(self) -> list[str]:
-        """All nodes that have own config and no configured child."""
-        nodes = set(self._own)
-        return sorted(
-            n for n in nodes
-            if not any(m != n and m.startswith(n.rstrip("/") + "/") for m in nodes)
-        )
 
     def resolve_for_datasets(
         self, dataset_paths: Sequence[str]

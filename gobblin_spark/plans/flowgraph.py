@@ -81,12 +81,6 @@ class FlowGraph:
                 raise KeyError(f"edge {edge.id!r} references unknown node {nid!r}")
         self._edges[edge.src].append(edge)
 
-    def remove_node(self, node_id: str) -> None:
-        self._nodes.pop(node_id, None)
-        self._edges.pop(node_id, None)
-        for edges in self._edges.values():
-            edges[:] = [e for e in edges if e.dst != node_id]
-
     def remove_edge(self, edge_id: str) -> None:
         for edges in self._edges.values():
             edges[:] = [e for e in edges if e.id != edge_id]

@@ -113,7 +113,7 @@ def _branch_frame(passed: DataFrame, b: Branch) -> DataFrame:
     return bdf
 
 
-def run(pipeline: Pipeline, spark: SparkSession, persist: bool = True) -> PipelineResult:
+def run(pipeline: Pipeline, spark: SparkSession) -> PipelineResult:
     """Execute the spec: one scan of the persisted flagged frame feeds
     every write; branch and quarantine staging writes, plus branch
     audits, run concurrently. ONE job-level commit then publishes the
@@ -135,8 +135,8 @@ def run(pipeline: Pipeline, spark: SparkSession, persist: bool = True) -> Pipeli
 
     ctx = M.root_context().child(f"job.{pipeline.job_id or 'job'}")
     flagged = _flagged(pipeline, spark)
-    fan_out = persist and (len(pipeline.branches) > 1
-                           or pipeline.quarantine_dir is not None)
+    fan_out = (len(pipeline.branches) > 1
+               or pipeline.quarantine_dir is not None)
     if fan_out:
         flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
     passed, quarantined = _split(flagged)

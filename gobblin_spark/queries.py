@@ -5669,28 +5669,6 @@ def simhash_incremental_checked(spark, sf_dir):
         "new_id", "corpus_id", F.col("hamming").cast("int").alias("hamming"))
 
 
-# retired from the catalog (round 5, net-growth freeze): a
-# composition of operators certified by their own entries; the
-# function stays tested (pytest + plan-shape pins) below.
-def dedup_fuzzy_survivors(spark, sf_dir):
-    """The fuzzy-dedup chain taken all the way to the CURATED CORPUS:
-    LSH pairs → connected components → keep the min-id representative
-    per transitive group, everyone else anti-joins out. Ids only move
-    through the graph and the anti-join; document rows stream through
-    once at the end. The oracle replays components as a recursive CTE
-    and subtracts the same losers."""
-    from gobblin_spark.functions import graph
-
-    docs = load_docs(spark, sf_dir)
-    pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", n=3, num_perm=_MH_PERM, bands=_MH_BANDS,
-        threshold=0.5, seed=42, base_hash="md5_60", band_key="concat",
-    )
-    kept = graph.keep_one_per_component(
-        docs.select("doc_id", "lang", "n_chars"), pairs, "doc_id")
-    return kept
-
-
 @q(
     "cleaning_line_census",
     """
@@ -8382,40 +8360,6 @@ def text_hash_embeddings(spark, sf_dir):
         F.lit(0).cast("long"), lambda a, x: a + x)
     return emb.select(
         "doc_id", checksum.alias("checksum"), l1.alias("l1"))
-
-
-# retired from the catalog (round 6, net-growth freeze — swapped for
-# tracking_event_flatten): the margins variant of the driver-certified
-# lang-id family (same LANG_MARKERS, same hit counts); the function
-# stays, exercised by pytest.
-def text_lang_confidence(spark, sf_dir):
-    """Language-ID confidence margin: top stopword-hit score minus the
-    RUNNER-UP score (margin 0 = tie, unreliable detection — route to a
-    heavier model or an 'und' bucket; the filter signal lang_id alone
-    cannot give). Exact integer hit counts; for 4 sorted values
-    x1≤x2≤x3≤x4 the runner-up is total − max − min_pair_sum (the
-    smallest pairwise sum is x1+x2), so margin = 2·max +
-    min_pair_sum − total — no sort, no explode, one scan-speed pass,
-    identical expression on both engines."""
-    ev = load_docs(spark, sf_dir).filter(F.col("text").isNotNull())
-    from gobblin_spark.functions.text import LANG_MARKERS
-
-    lowered = F.lower(F.col("text"))
-    scores = {
-        lang: F.regexp_count(
-            lowered, F.lit(r"\b(" + "|".join(words) + r")\b"))
-        for lang, words in LANG_MARKERS.items()
-    }
-    vals = [scores[k] for k in sorted(scores)]
-    top = F.greatest(*vals)
-    total = vals[0] + vals[1] + vals[2] + vals[3]
-    pair_sums = [a + b for i, a in enumerate(vals) for b in vals[i + 1:]]
-    margin = F.lit(2) * top + F.least(*pair_sums) - total
-    return ev.select(
-        "doc_id",
-        top.cast("long").alias("top_hits"),
-        margin.cast("long").alias("margin"),
-    )
 
 
 @q("bloom_fpr_report")  # rows-only: the sketch bits are xxhash64-laid

@@ -308,26 +308,6 @@ def write_jdbc(
     w.jdbc(url, table)
 
 
-def write_kafka(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    options: dict[str, str] | None = None,
-) -> None:
-    """KafkaDataWriter (gobblin-modules/gobblin-kafka-common/.../writer/
-    KafkaDataWriter.java:28) — requires a ``value`` (and optional
-    ``key``) binary/string column; async produce + callbacks are the
-    datasource's own machinery."""
-    w = (
-        df.write.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-    )
-    for k, v in (options or {}).items():
-        w = w.option(k, v)
-    w.save()
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

@@ -101,10 +101,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: Sequence[str] = TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def register_tables(
     spark: SparkSession, sf_dir: str, names: Sequence[str] = TABLES
 ) -> None:

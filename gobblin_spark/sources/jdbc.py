@@ -86,7 +86,7 @@ class Dialect:
         if isinstance(v, _dt.datetime):
             # microsecond precision: committed watermarks keep fractional
             # seconds, so truncating here would re-pull boundary rows on
-            # the next run (and disagree with state.jdbc_incremental_query)
+            # the next run
             return self.ts_format.format(
                 v=v.isoformat(sep=" ", timespec="microseconds"))
         if isinstance(v, _dt.date):

@@ -21,7 +21,7 @@ Spark design: planning is driver-side metadata (offsets are a few
 longs per partition — exactly the reference's shape). The PULL is a
 DataFrame filter-join of the message stream against the planned
 intervals: with the real connector that is ``spark.read.format("kafka")``
-with startingOffsets/endingOffsets JSON (streaming/runner.py);
+with startingOffsets/endingOffsets JSON (``offsets_json`` below);
 with the file-backed stub it is the same interval predicate over a
 (topic, partition, offset, ...) table — identical plan shape, no
 broker required."""
@@ -33,7 +33,7 @@ import re
 from dataclasses import dataclass
 from collections.abc import Iterable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 LATEST = "latest"
 EARLIEST = "earliest"
@@ -189,8 +189,8 @@ def plan_work_units(
 def offsets_json(units: Sequence[KafkaWorkUnit]) -> tuple[str, str]:
     """(startingOffsets, endingOffsets) JSON for Spark's real Kafka
     batch source — the handoff from this planner to
-    ``spark.read.format('kafka')`` (streaming/runner.py's
-    kafka_batch_offsets)."""
+    ``spark.read.format('kafka')``, whose own connector owns offsets
+    and delivery."""
     start: dict[str, dict[str, int]] = {}
     end: dict[str, dict[str, int]] = {}
     for u in units:

@@ -48,9 +48,8 @@ def page_manifest(
 
 def http_json_transport(url_template: str, timeout_sec: int = 30,
                         headers: dict | None = None):
-    """Default transport: GET ``url_template.format(offset=, limit=)``.
-    Needs network egress — unavailable in this sandbox (the injectable
-    transport below is the tested path)."""
+    """Default transport: GET ``url_template.format(offset=, limit=)``
+    with ``headers``, returning the body decoded as UTF-8."""
 
     def fetch(offset: int, limit: int) -> str:
         import urllib.request
@@ -163,7 +162,7 @@ def read_rest_api(
 
 def incremental_rest_query(base_params: dict, wm_field: str, lwm, hwm) -> dict:
     """SalesforceExtractor-style incremental predicate as query params
-    (the REST twin of state.jdbc_incremental_query)."""
+    (the REST twin of ``jdbc.watermark_predicate``)."""
     params = dict(base_params)
     if lwm is not None:
         params[f"{wm_field}__gt"] = json.dumps(lwm, default=str).strip('"')

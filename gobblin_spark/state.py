@@ -442,70 +442,6 @@ def pull_incremental(
     )
 
 
-def jdbc_incremental_query(
-    table: str, wm_col: str, lwm, hwm, columns: str = "*"
-) -> str:
-    """JdbcExtractor.java:85 — the pushed-down incremental SQL for
-    ``spark.read.format('jdbc').option('query', ...)``: the WHERE clause
-    runs ON the database, so only the interval crosses the wire."""
-
-    def sql_lit(v):
-        if isinstance(v, (_dt.datetime, _dt.date)):
-            return f"TIMESTAMP '{v}'" if isinstance(v, _dt.datetime) else f"DATE '{v}'"
-        if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
-        return repr(v)
-
-    bounds = [f"{wm_col} <= {sql_lit(hwm)}"]
-    if lwm is not None:
-        bounds.insert(0, f"{wm_col} > {sql_lit(lwm)}")
-    return f"SELECT {columns} FROM {table} WHERE {' AND '.join(bounds)}"
-
-
-def read_jdbc_incremental(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    wm_col: str,
-    store: WatermarkStore,
-    dataset: str,
-    hwm,
-    num_partitions: int = 1,
-    partition_column: str | None = None,
-    partition_bounds: tuple | None = None,
-    options: dict[str, str] | None = None,
-) -> IncrementalPull:
-    """Incremental JDBC source: interval predicate pushed into the
-    database query; optional ``partitionColumn`` splits the interval
-    into *num_partitions* parallel range reads (the reference's
-    partitioned WorkUnits, QueryBasedSource.java:216). Requires a JDBC
-    driver on the Spark classpath; untested in this sandbox (no DB
-    endpoint) — the query construction is covered by tests."""
-    lwm = store.get(dataset)
-    sql = jdbc_incremental_query(table, wm_col, lwm, hwm)
-    reader = spark.read.format("jdbc").option("url", url)
-    if partition_column and partition_bounds and num_partitions > 1:
-        # Spark forbids 'query' together with partitionColumn
-        # (JDBCOptions: "Options 'query' and 'partitionColumn' can not
-        # be specified together") — the partitioned path must ship the
-        # incremental SQL as a dbtable SUBQUERY instead
-        reader = (
-            reader.option("dbtable", f"({sql}) gobblin_inc")
-            .option("partitionColumn", partition_column)
-            .option("lowerBound", str(partition_bounds[0]))
-            .option("upperBound", str(partition_bounds[1]))
-            .option("numPartitions", str(num_partitions))
-        )
-    else:
-        reader = reader.option("query", sql)
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    df = reader.load()
-    return IncrementalPull(
-        df, dataset, wm_col, lwm, hwm, lambda: store.commit(dataset, hwm)
-    )
-
-
 def snapshot_store_path(root: str, dataset: str) -> str:
     """Where a FileBasedSource persists its file-listing snapshot."""
     return f"{root.rstrip('/')}/{dataset}/_file_snapshot"

@@ -7,8 +7,6 @@ from gobblin_spark.streaming.runner import (
     EpochStats,
     file_stream,
     rate_stream,
-    kafka_stream,
-    kafka_batch_offsets,
     run_ingest,
     run_ingest_blocking,
     split_late,
@@ -24,8 +22,6 @@ __all__ = [
     "EpochStats",
     "file_stream",
     "rate_stream",
-    "kafka_stream",
-    "kafka_batch_offsets",
     "run_ingest",
     "run_ingest_blocking",
     "split_late",

@@ -83,50 +83,6 @@ def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
     )
 
 
-def kafka_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topics: str,
-    starting_offsets: str = "earliest",
-    options: dict[str, str] | None = None,
-) -> DataFrame:
-    """KafkaSource/KafkaStreamingExtractor (gobblin-modules/
-    gobblin-kafka-common/.../KafkaSource.java:89): offset tracking,
-    rebalancing and exactly-once source semantics are Spark's Kafka
-    connector's own machinery; columns arrive as (key, value, topic,
-    partition, offset, timestamp). Needs a broker — untestable in this
-    sandbox; covered by the file-stream path which shares the runner."""
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topics)
-        .option("startingOffsets", starting_offsets)
-    )
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def kafka_batch_offsets(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topics: str,
-    starting_offsets: str = "earliest",
-    ending_offsets: str = "latest",
-) -> DataFrame:
-    """KafkaExtractor batch mode (KafkaSource.java:89 work-unit offset
-    ranges): a bounded offset-interval read — Spark's batch Kafka source
-    with explicit starting/ending offsets."""
-    return (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topics)
-        .option("startingOffsets", starting_offsets)
-        .option("endingOffsets", ending_offsets)
-        .load()
-    )
-
-
 # ------------------------------------------------------------------
 # late-data routing
 # ------------------------------------------------------------------

@@ -4,7 +4,7 @@ MRCompactorAvroKeyDedupJobRunnerTest.java; retention policies under
 gobblin-data-management/src/test/java/.../retention/)."""
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row, Window, functions as F
 
 from gobblin_spark.operators import compaction, retention
 
@@ -23,19 +23,26 @@ def versions(spark):
 
 
 def test_dedup_strategies_agree(spark):
+    """dedup_by_key's single max_by aggregate keeps the same record per
+    key as a row_number() window over the delta columns, newest first
+    with null deltas last (the reference form, kept only here)."""
     df = spark.createDataFrame(
         [
             Row(k=1, scn=5, payload="old"),
             Row(k=1, scn=9, payload="new"),
             Row(k=2, scn=1, payload="only"),
+            Row(k=3, scn=None, payload="unknown"),
+            Row(k=3, scn=2, payload="known"),
         ],
         "k int, scn int, payload string",
     )
-    a = compaction.dedup_by_key(df, ["k"], ["scn"], strategy="max_by")
-    b = compaction.dedup_by_key(df, ["k"], ["scn"], strategy="window")
+    a = compaction.dedup_by_key(df, ["k"], ["scn"])
+    w = Window.partitionBy("k").orderBy(F.col("scn").desc_nulls_last())
+    b = (df.withColumn("_rn", F.row_number().over(w))
+         .filter(F.col("_rn") == 1).drop("_rn"))
     ra = sorted((r.k, r.scn, r.payload) for r in a.collect())
     rb = sorted((r.k, r.scn, r.payload) for r in b.collect())
-    assert ra == rb == [(1, 9, "new"), (2, 1, "only")]
+    assert ra == rb == [(1, 9, "new"), (2, 1, "only"), (3, 2, "known")]
 
 
 def test_snapshot_delta_merge_upsert(spark):

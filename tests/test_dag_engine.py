@@ -201,6 +201,19 @@ def test_crash_recovery_from_state_store(tmp_path):
     eng2.shutdown()
 
 
+def test_state_store_lists_checkpointed_dags(tmp_path):
+    """The crash-recovery listing: checkpoint ids in sorted order, other
+    files in the root ignored, a cleaned-up dag gone."""
+    store = E.FSDagStateStore(str(tmp_path))
+    for dag_id in ("zeta", "alpha"):
+        store.write_checkpoint(E._DagState(_spec(dag_id, []), launched_at=0.0))
+    (tmp_path / "notes.txt").write_text("not a checkpoint")
+    (tmp_path / "beta.json.tmp").write_text("{}")  # torn checkpoint write
+    assert store.list_dags() == ["alpha", "zeta"]
+    store.clean_up("alpha")
+    assert store.list_dags() == ["zeta"]
+
+
 def test_register_recovered_refuses_live_dag(tmp_path):
     """r11 audit: register_recovered over a LIVE dag would cross-wire
     its in-flight futures onto the recovered instance's fresh node

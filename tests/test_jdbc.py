@@ -71,6 +71,22 @@ def test_watermark_predicate_literals():
             == '"amt" > 10.50')
 
 
+def test_incremental_extract_sql():
+    """The pushed-down incremental pull: the (lwm, hwm] predicate folded
+    into the extract query, so only the interval crosses the wire."""
+    q = J.build_extract_sql("orders", None, [J.watermark_predicate(
+        "o_orderdate", dt.date(2024, 1, 1), dt.date(2024, 2, 1))])
+    assert q == ('SELECT * FROM "orders" WHERE ("o_orderdate" > '
+                 "DATE '2024-01-01' AND \"o_orderdate\" <= DATE '2024-02-01')")
+    # first pull: no low watermark, only the upper bound
+    assert J.build_extract_sql(
+        "t", None, [J.watermark_predicate("id", None, 100)]) == \
+        'SELECT * FROM "t" WHERE ("id" <= 100)'
+    # strings are quoted (and escaped)
+    assert "''" in J.build_extract_sql(
+        "t", None, [J.watermark_predicate("name", "o'b", "z")])
+
+
 def test_partition_interval_simple_int_disjoint_covering():
     parts = J.partition_interval(0, 1000, 7)
     assert parts[0][0] == 0 and parts[-1][1] == 1000

@@ -652,6 +652,33 @@ def test_kmeans_deterministic_and_bounded(spark, sf_dir):
     assert len(a) == emb.count()
 
 
+def _semantic_dedup_column_ref(corpus, id_col, vec_col, k, threshold,
+                               iterations=2):
+    """Reference for semantic_dedup_clustered's BLAS gram pair step: the
+    same k-means assignment and unit vectors, then a Column self-join
+    within each cluster and a dot fold per pair (id_a < id_b); the
+    greater id of every pair at/above the threshold is dropped."""
+    from gobblin_spark.functions.similarity import _dot, _norm
+
+    assigned = similarity.kmeans_fit_predict(
+        corpus, id_col, vec_col, k, iterations, _with_vectors=True)
+    vecs = assigned.withColumn("_n", _norm(F.col("_e"))).select(
+        id_col, "cluster",
+        F.when(F.col("_n") > 0,
+               F.transform("_e", lambda x: x / F.col("_n")))
+        .otherwise(F.transform("_e", lambda x: F.lit(0.0))).alias("_u"))
+    a = vecs.select(F.col(id_col).alias("id_a"),
+                    F.col("_u").alias("ua"), "cluster")
+    b = vecs.select(F.col(id_col).alias("id_b"),
+                    F.col("_u").alias("ub"), "cluster")
+    dropped = (
+        a.join(b, "cluster").filter(F.col("id_a") < F.col("id_b"))
+        .filter(_dot(F.col("ua"), F.col("ub")) >= threshold)
+        .select(F.col("id_b").alias(id_col)).distinct()
+    )
+    return corpus.select(id_col).join(dropped, id_col, "left_anti")
+
+
 def test_semantic_dedup_clustered_drops_planted_dup(spark):
     import random
 
@@ -664,6 +691,9 @@ def test_semantic_dedup_clustered_drops_planted_dup(spark):
     ).collect()}
     assert 0 in kept and 100 not in kept
     assert len(kept) == 40
+    ref = _semantic_dedup_column_ref(df, "vec_id", "embedding", k=4,
+                                     threshold=0.999)
+    assert kept == {r.vec_id for r in ref.collect()}
 
 
 def test_quantize_int8_invariants(spark):
@@ -1318,9 +1348,9 @@ def test_lsh_dim_mismatch_is_loud(spark):
 
 
 def test_semantic_dedup_blas_string_ids(spark):
-    """Review-r6: the blas pair engine hardcoded `id long` in its
-    applyInPandas schema; string ids must work on both engines and
-    agree."""
+    """Review-r6: the blas pair step hardcoded `id long` in its
+    applyInPandas schema; string ids must work and agree with the
+    Column self-join reference."""
     import math
     rows = []
     for i in range(12):
@@ -1328,15 +1358,13 @@ def test_semantic_dedup_blas_string_ids(spark):
         rows.append((f"v{i:02d}", [math.cos(a), math.sin(a)]))
     rows.append(("dup", rows[0][1]))  # exact duplicate of v00
     df = spark.createDataFrame(rows, "vid string, embedding array<double>")
-    outs = {}
-    for eng in ("blas", "column"):
-        kept = similarity.semantic_dedup_clustered(
-            df, "vid", "embedding", k=2, threshold=0.999,
-            pair_engine=eng)
-        outs[eng] = sorted(r.vid for r in kept.collect())
-    assert outs["blas"] == outs["column"]
+    got = sorted(r.vid for r in similarity.semantic_dedup_clustered(
+        df, "vid", "embedding", k=2, threshold=0.999).collect())
+    ref = sorted(r.vid for r in _semantic_dedup_column_ref(
+        df, "vid", "embedding", k=2, threshold=0.999).collect())
+    assert got == ref
     # min-id survives: "dup" < "v00" lexicographically
-    assert "v00" not in outs["blas"] and "dup" in outs["blas"]
+    assert "v00" not in got and "dup" in got
 
 
 def test_gif_codec_pattern_and_growth():
@@ -1680,21 +1708,19 @@ def test_contamination_shuffle_path_matches_broadcast(spark):
 
 
 def test_semantic_dedup_zero_norm_and_dup_ids(spark):
-    """Audit r8: an all-zero embedding must not crash the blas engine
-    or silently diverge from the column engine, and duplicate-id rows
-    must not erase the document with no survivor."""
+    """Audit r8: an all-zero embedding must not crash the blas pair step
+    or silently diverge from the Column self-join reference, and
+    duplicate-id rows must not erase the document with no survivor."""
     from gobblin_spark.functions.similarity import semantic_dedup_clustered
 
     rows = [(1, [1.0, 0.0]), (2, [1.0, 0.0001]), (3, [0.0, 0.0]),
             (4, [0.0, 1.0]), (4, [0.0, 1.0])]  # dup id 4
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     a = sorted(r.vec_id for r in semantic_dedup_clustered(
-        df, "vec_id", "embedding", k=1, threshold=0.95,
-        pair_engine="blas").collect())
-    b = sorted(r.vec_id for r in semantic_dedup_clustered(
-        df, "vec_id", "embedding", k=1, threshold=0.95,
-        pair_engine="column").collect())
-    assert a == b  # engines agree
+        df, "vec_id", "embedding", k=1, threshold=0.95).collect())
+    b = sorted(r.vec_id for r in _semantic_dedup_column_ref(
+        df, "vec_id", "embedding", k=1, threshold=0.95).collect())
+    assert a == b  # agrees with the reference
     assert 3 in a  # zero-norm row survives (cosine 0 to everything)
     assert 4 in a  # dup-id doc keeps its rows
     assert 2 not in a and 1 in a  # real near-dup still dropped

@@ -8,6 +8,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import types as T
 
 from gobblin_spark import schema as S, state
+from gobblin_spark.sources import jdbc
 
 # -- strategies ------------------------------------------------------
 
@@ -75,10 +76,13 @@ def test_roundtrip_schema_self_compatible(struct):
 @given(st.text(max_size=40))
 @settings(max_examples=200, deadline=None)
 def test_jdbc_query_escapes_strings(s):
-    q = state.jdbc_incremental_query("t", "name", None, s)
+    q = jdbc.build_extract_sql(
+        "t", None, [jdbc.watermark_predicate("name", None, s)])
     # the literal must contain the doubled-quote escape of every quote
     assert q.count("'") % 2 == 0  # quotes balanced
-    assert q.startswith("SELECT * FROM t WHERE name <= '")
+    head = 'SELECT * FROM "t" WHERE ("name" <= \''
+    assert q.startswith(head) and q.endswith("')")
+    assert q[len(head):-2].replace("''", "'") == s
 
 
 @given(st.one_of(

@@ -72,26 +72,6 @@ def test_with_branch_ids(events):
     assert rows == [(1, 0), (1, 1), (3, 0), (4, 1)]
 
 
-def test_write_branches_single_scan(events, tmp_path):
-    fork.write_branches(
-        events,
-        [
-            (
-                F.col("kind") == "click",
-                lambda d: d.write.mode("overwrite").parquet(str(tmp_path / "a")),
-            ),
-            (
-                F.col("kind") != "click",
-                lambda d: d.write.mode("overwrite").parquet(str(tmp_path / "b")),
-            ),
-        ],
-    )
-    spark = events.sparkSession
-    na = spark.read.parquet(str(tmp_path / "a")).count()
-    nb = spark.read.parquet(str(tmp_path / "b")).count()
-    assert na + nb == events.count()
-
-
 def test_trailing_count_anomalies_flags_planted_spike(spark):
     from gobblin_spark.operators.quality import trailing_count_anomalies
 

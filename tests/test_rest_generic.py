@@ -82,6 +82,60 @@ def test_read_rest_api_strict_fails_on_lost_page(spark):
         rest.fetch_pages(rest.page_manifest(spark, 60, 20), ft, retries=0)
 
 
+def test_http_json_transport_over_loopback(spark):
+    """The real HTTP transport against a loopback server: the
+    {offset}/{limit} URL template, the headers sent and the UTF-8 body,
+    directly and through the distributed page fetch."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+    from urllib.parse import parse_qs, urlparse
+
+    seen = []
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_GET(self):
+            q = parse_qs(urlparse(self.path).query)
+            seen.append((self.path, self.headers.get("X-Api-Key")))
+            off, lim = int(q["offset"][0]), int(q["limit"][0])
+            recs = [{"rid": i, "name": f"n\u00e9{i}"}
+                    for i in range(off, off + lim)]
+            body = json.dumps({"records": recs}, ensure_ascii=False)
+            data = body.encode("utf-8")
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(data)))
+            self.end_headers()
+            self.wfile.write(data)
+
+        def log_message(self, *args):
+            pass
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+    try:
+        port = server.server_address[1]
+        fetch = rest.http_json_transport(
+            f"http://127.0.0.1:{port}/items?offset={{offset}}&limit={{limit}}",
+            timeout_sec=10, headers={"X-Api-Key": "k1"})
+        body = fetch(20, 2)
+        assert seen == [("/items?offset=20&limit=2", "k1")]
+        assert json.loads(body) == {"records": [
+            {"rid": 20, "name": "n\u00e920"}, {"rid": 21, "name": "n\u00e921"}]}
+
+        df = rest.read_rest_api(spark, 25, 10, fetch, "rid INT, name STRING")
+        rows = sorted((r.rid, r.name) for r in df.collect())
+        assert rows == [(i, f"n\u00e9{i}") for i in range(25)]
+        assert sorted(p for p, _ in seen[1:]) == [
+            "/items?offset=0&limit=10", "/items?offset=10&limit=10",
+            "/items?offset=20&limit=5"]
+    finally:
+        server.shutdown()
+        server.server_close()
+        thread.join(10)
+    assert not thread.is_alive()
+
+
 def test_incremental_rest_query():
     params = rest.incremental_rest_query({"q": "all"}, "updated", None, "2024-02-01")
     assert params == {"q": "all", "updated__lte": "2024-02-01"}

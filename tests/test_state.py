@@ -107,17 +107,6 @@ def test_watermark_commit_only_after_publish(spark, sf_dir, store, tmp_path):
     assert store.get("orders") == mid
 
 
-def test_jdbc_incremental_query_sql():
-    q = state.jdbc_incremental_query("orders", "o_orderdate",
-                                     dt.date(2024, 1, 1), dt.date(2024, 2, 1))
-    assert q == ("SELECT * FROM orders WHERE o_orderdate > DATE '2024-01-01' "
-                 "AND o_orderdate <= DATE '2024-02-01'")
-    assert state.jdbc_incremental_query("t", "id", None, 100) == \
-        "SELECT * FROM t WHERE id <= 100"
-    # strings are quoted (and escaped)
-    assert "''" in state.jdbc_incremental_query("t", "name", "o'b", "z")
-
-
 def test_file_snapshot_persistence(spark, tmp_path):
     """FileBasedSource snapshot diff against durable state."""
     import os
