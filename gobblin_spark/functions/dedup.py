@@ -577,7 +577,6 @@ def contamination_check(
     text_col: str,
     bench_text_col: str | None = None,
     n: int = 3,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark-contamination scan: per document, the fraction of its
     n-gram shingles that appear anywhere in *benchmark* (the eval-set
@@ -594,8 +593,7 @@ def contamination_check(
     differ between engines even when the value is identical. Scale shape: the benchmark's
     distinct shingle set is tiny relative to the corpus (eval sets are
     thousands of docs) → broadcast semi-ish join against it; the corpus
-    side streams, nothing quadratic. For a huge benchmark drop the
-    broadcast and it degrades to one shuffle on the shingle hash.
+    side streams, nothing quadratic.
     """
     bcol = bench_text_col or text_col
     # word_shingles emits DISTINCT shingles per row (array_distinct
@@ -612,13 +610,7 @@ def contamination_check(
         word_shingles(benchmark.select(bcol), bcol, n)
         .select("shingle").distinct()
     )
-    bench_marked = bench_sh.withColumn("_hit", F.lit(1))
-    if broadcast_benchmark:
-        bench_marked = F.broadcast(bench_marked)
-    # broadcast_benchmark=False is the documented degrade path for a
-    # benchmark whose shingle set exceeds broadcast limits: one
-    # shuffle on the shingle key instead (audit r8 — the docstring
-    # promised this escape hatch but no parameter existed)
+    bench_marked = F.broadcast(bench_sh.withColumn("_hit", F.lit(1)))
     hits = (
         doc_sh.join(bench_marked, "shingle", "left")
         .groupBy(id_col)

@@ -16,9 +16,11 @@ used when the external ``spark-avro`` module is on the classpath
 is not (this sandbox does not ship it), the same transforms run as
 Arrow-batched ``mapInPandas`` over the pure-Python wire-format codec
 in ``operators/avro_codec.py`` — slower (Python per record), but
-byte-compatible and fully functional; engine='auto' picks JVM when
-available. The JVM path is the 100 TB path; the Python path makes
-Avro-bound pipelines runnable and testable anywhere.
+byte-compatible and fully functional. Each converter picks the codec
+from the platform (``avro_available``): the JVM one wherever
+spark-avro is loaded, the Python one everywhere else. The JVM path is
+the 100 TB path; the Python path makes Avro-bound pipelines runnable
+and testable anywhere.
 """
 
 from __future__ import annotations
@@ -59,20 +61,13 @@ def _fns():
         ) from ex
 
 
-def _resolve_engine(df: DataFrame, engine: str) -> str:
-    if engine in ("jvm", "python"):
-        return engine
-    return "jvm" if avro_available(df.sparkSession) else "python"
-
-
 def record_to_avro_bytes(df: DataFrame, out_col: str = "value",
-                         keep: list[str] | None = None,
-                         engine: str = "auto") -> DataFrame:
+                         keep: list[str] | None = None) -> DataFrame:
     """AvroToBytesConverter.java:41 — pack the whole row into one Avro
-    binary column (writer schema derived from the Catalyst schema).
-    engine='jvm' needs the spark-avro package; 'python' runs the
-    wire-format codec in mapInPandas; 'auto' prefers the JVM."""
-    if _resolve_engine(df, engine) == "jvm":
+    binary column (writer schema derived from the Catalyst schema):
+    ``to_avro`` where spark-avro is loaded, else the wire-format codec
+    in mapInPandas."""
+    if avro_available(df.sparkSession):
         _, to_avro = _fns()
         packed = F.struct(*df.columns)
         cols = [F.col(c) for c in (keep or [])]
@@ -116,11 +111,12 @@ def record_to_avro_bytes(df: DataFrame, out_col: str = "value",
 
 def avro_bytes_to_record(df: DataFrame, bytes_col: str = "value",
                          avro_schema: str | dict | None = None,
-                         spark_schema=None, flatten: bool = True,
-                         engine: str = "auto") -> DataFrame:
+                         spark_schema=None, flatten: bool = True) -> DataFrame:
     """BytesToAvroConverter — decode an Avro binary column. Give either
     the Avro writer schema JSON (preferred: exact resolution) or a
-    Catalyst schema (converted via schema.struct_to_avro)."""
+    Catalyst schema (converted via schema.struct_to_avro). Decodes
+    with ``from_avro`` where spark-avro is loaded, else with the
+    wire-format codec in mapInPandas (record schemas only)."""
     if avro_schema is None:
         if spark_schema is None:
             raise ValueError("need avro_schema or spark_schema")
@@ -128,7 +124,7 @@ def avro_bytes_to_record(df: DataFrame, bytes_col: str = "value",
     if isinstance(avro_schema, dict):
         avro_schema = json.dumps(avro_schema)
 
-    if _resolve_engine(df, engine) == "jvm":
+    if avro_available(df.sparkSession):
         from_avro, _ = _fns()
         decoded = df.withColumn("_rec", from_avro(F.col(bytes_col), avro_schema))
         if not flatten:
@@ -138,7 +134,7 @@ def avro_bytes_to_record(df: DataFrame, bytes_col: str = "value",
 
     rec_type = _schema.avro_to_struct(avro_schema)
     if not isinstance(rec_type, T.StructType):
-        raise ValueError("python engine decodes record schemas only")
+        raise ValueError("the Python codec decodes record schemas only")
     others = [c for c in df.columns if c != bytes_col]
     other_fields = [df.schema[c] for c in others]
     if flatten:
@@ -169,14 +165,13 @@ def avro_bytes_to_record(df: DataFrame, bytes_col: str = "value",
 
 
 def decode_envelope(df: DataFrame, payload_col: str, payload_avro_schema: str | dict,
-                    keep: list[str] | None = None, engine: str = "auto") -> DataFrame:
+                    keep: list[str] | None = None) -> DataFrame:
     """EnvelopePayloadConverter — decode the nested payload bytes column
     of an envelope record, keeping selected envelope columns."""
     return avro_bytes_to_record(
         df.select(*(keep or []), F.col(payload_col).alias("_payload")),
         bytes_col="_payload",
         avro_schema=payload_avro_schema,
-        engine=engine,
     )
 
 

@@ -47,9 +47,10 @@ the write-audit-publish pattern), EXACTLY-ONCE streaming epochs
 summary in the same metadata commit), true COMPARE-AND-SWAP commits
 (metadata() stamps the read version; commits target base+1 with
 create-fails-if-exists, retried with a full re-plan on collision),
-and a SESSIONLESS LOCAL mode (spark=None, plain-file IO) for commit
-hooks that run outside the JVM — the gobblin_iceberg DSv2 faces in
-sources/datasource.py build on all of it.
+and a SESSIONLESS mode (spark=None: no JVM; plain-file IO for local
+paths, pyarrow.fs for remote schemes) — the only metadata reader and
+scan planner the gobblin_iceberg DSv2 faces in sources/datasource.py
+use: they read, plan, stream and commit through it.
 
 Catalog integration is out of scope — with the iceberg-spark-runtime
 jar on the classpath use the real catalog instead
@@ -726,7 +727,7 @@ def _widen_float32_bounds(lo: float, hi: float) -> tuple[float, float]:
 def _range_may_match(lo, hi, op: str, value) -> bool:
     """Scan-planning core: can any v in the inclusive range [lo, hi]
     satisfy ``v op value``? Shared by file-level bounds
-    (_entry_may_match) and manifest-level field_summary pruning so
+    (_prune_entries) and manifest-level field_summary pruning so
     the two levels can never disagree on comparison semantics."""
     if op in ("=", "=="):
         return lo <= value <= hi
@@ -1265,12 +1266,14 @@ def _is_exists_error(ex: BaseException) -> bool:
 class IcebergTable:
     """A HadoopTables-layout Iceberg v2 table on any Hadoop-visible FS.
 
-    ``spark=None`` puts the handle in SESSIONLESS LOCAL mode: metadata
-    and manifest IO go through plain Python file IO (local paths
-    only). This exists for driver-side commit hooks that run OUTSIDE
-    the Spark session — the gobblin_iceberg DSv2 writer's commit()
-    executes in a separate Python worker with no JVM. DataFrame
-    operations (read/append_dataframe/...) still need a session."""
+    ``spark=None`` puts the handle in SESSIONLESS mode: metadata and
+    manifest IO go through plain Python file IO for local paths and
+    pyarrow.fs for remote schemes, with no JVM. The gobblin_iceberg
+    DSv2 faces run in separate Python workers, so they read metadata
+    (metadata()), resolve snapshots (_snapshot_id), plan scans
+    (_entries + _prune_entries) and commit (append_files) through
+    this mode. DataFrame operations (read/append_dataframe/...) still
+    need a session."""
 
     def __init__(self, spark: SparkSession | None, location: str,
                  planning: str = "driver"):
@@ -3135,7 +3138,9 @@ class IcebergTable:
         manifests_total / manifests_skipped. Each returned entry
         carries its ``spec_id``."""
         md = md or self.metadata()
-        sid = snapshot_id if snapshot_id is not None else md["current-snapshot-id"]
+        sid = self._snapshot_id(md, snapshot_id)
+        if sid is None:
+            sid = md["current-snapshot-id"]
         if sid == -1:
             return []
         snap = next(s for s in md["snapshots"] if s["snapshot-id"] == sid)
@@ -3448,20 +3453,80 @@ class IcebergTable:
                 return True  # a drop
         return False
 
-    def _entry_may_match(self, e: dict, f: dict, op: str, value) -> bool:
-        """Scan planning (spec "Scan Planning" / InclusiveMetricsEvaluator
-        semantics): can any row of this data file satisfy `col op value`?
-        Files without bounds for the column can never be pruned."""
-        lo = (e["info"].lower_bounds or {}).get(f["id"])
-        hi = (e["info"].upper_bounds or {}).get(f["id"])
-        if lo is None or hi is None:
-            return True
-        t = f["type"]
-        mn, mx = _sv_deser(lo, t), _sv_deser(hi, t)
-        v = _logical_to_ice(value, t)
-        if mn is None or mx is None or v is None:
-            return True
-        return _range_may_match(mn, mx, op, v)
+    def _prune_entries(self, md: dict, entries: list[dict],
+                       preds: list[tuple]) -> list[dict]:
+        """Per-file scan planning (spec "Scan Planning" /
+        InclusiveMetricsEvaluator semantics): the data *entries* whose
+        rows may satisfy every ``(field, op, value)`` in *preds*
+        (*field* a schema field dict). The one planner behind read()
+        and the gobblin_iceberg DSv2 batch reader.
+
+        Each predicate is projected through THE FILE'S OWN spec
+        (partition evolution) and checked against its partition tuple
+        first: an EXACT per-file value beats min/max bounds (and
+        exists even for string columns, whose bounds are deliberately
+        omitted); tuples are keyed by source field-id, rename-proof.
+        create() restricts partition types to those whose dir segment
+        round-trips exactly, so the comparison is typed; any residual
+        type mismatch falls through to bounds (never a silent False
+        that would prune a matching file). Stored column bounds are
+        ALWAYS consulted too — for bucket fields the tuple check is
+        necessarily weak. Files without bounds for the column, and
+        incomparable values, are never pruned."""
+        import datetime as _dt
+
+        specs: dict[int, list] = {}
+
+        def may_match(e, f, op, value):
+            sp = e.get("spec_id", 0)
+            if sp not in specs:
+                specs[sp] = self._spec_info(md, sp)
+            part = e["info"].partition or {}
+            for si in specs[sp]:
+                if si["source_id"] != f["id"]:
+                    continue
+                proj = _project_pred(si, op, value)
+                if proj is None:
+                    continue
+                pop, pval = proj
+                v = part.get(str(si["source_id"]))
+                if v is None:
+                    continue
+                q = pval
+                if type(q) is _dt.date and isinstance(v, str):
+                    q = q.isoformat()  # dates JSON-decode as ISO text
+                if type(v) is not type(q) and not (
+                        isinstance(v, (int, float))
+                        and isinstance(q, (int, float))):
+                    continue
+                try:
+                    ok = {"=": v == q, "==": v == q, ">": v > q,
+                          ">=": v >= q, "<": v < q, "<=": v <= q}[pop]
+                except TypeError:
+                    continue
+                if not ok:
+                    return False
+            # column value bounds: stored as Appendix-D SERIALIZED
+            # single values — deserialize before comparing
+            lo = (e["info"].lower_bounds or {}).get(f["id"])
+            hi = (e["info"].upper_bounds or {}).get(f["id"])
+            if lo is None or hi is None:
+                return True
+            t = f["type"]
+            mn, mx = _sv_deser(lo, t), _sv_deser(hi, t)
+            v = _logical_to_ice(value, t)
+            if mn is None or mx is None or v is None:
+                return True
+            if t == "float":
+                mn, mx = _widen_float32_bounds(mn, mx)
+            try:
+                return _range_may_match(mn, mx, op, v)
+            except TypeError:
+                return True
+
+        for f, op, value in preds:
+            entries = [e for e in entries if may_match(e, f, op, value)]
+        return entries
 
     def _partition_attach_ctx(self, md: dict, snapshot_id: int | None):
         """Shared planning context for identity-partition
@@ -3574,27 +3639,17 @@ class IcebergTable:
         own plain-history reads)."""
         from pyspark.sql import functions as F
 
+        md_r = self.metadata()  # raises FileNotFoundError: no table
+        # a branch created on an empty table keeps head -1, which
+        # _entries maps to "no files" — NOT to main's data
+        snapshot_id = self._snapshot_id(md_r, snapshot_id, ref)
         # partition-source predicates resolve BEFORE listing entries
         # so the manifest-list field_summary can skip whole manifests
         # (spec 507/508) — at 100 TB the manifest files themselves are
-        # the first scan bottleneck
-        if ref is not None:
-            if snapshot_id is not None:
-                raise ValueError("pass snapshot_id OR ref")
-            # a branch created on an empty table keeps head -1, which
-            # _entries already maps to "no files" — NOT to main's data
-            snapshot_id = self.ref_snapshot(ref)
-        md_r = self.metadata()  # raises FileNotFoundError: no table
-        specs_by_id: dict[int, list] = {}
-
-        def _spec(spec_id: int) -> list[dict]:
-            if spec_id not in specs_by_id:
-                specs_by_id[spec_id] = self._spec_info(md_r, spec_id)
-            return specs_by_id[spec_id]
-
+        # the first scan bottleneck.
         # predicates stay in SOURCE space here: partition evolution
         # means each manifest/file projects them through its OWN spec
-        # (_entries for summaries, _may_match per file)
+        # (_entries for summaries, _prune_entries per file)
         prune_parts = None
         if prune_filters and any(
                 s["fields"] for s in md_r["partition-specs"]):
@@ -3635,65 +3690,22 @@ class IcebergTable:
         # even after the default spec moved on). Transform fields
         # keep the source data in-file.
         ident_ids_by_spec = {
-            sp: {si["source_id"] for si in _spec(sp)
+            sp: {si["source_id"] for si in self._spec_info(md_r, sp)
                  if si["transform"] == "identity"}
             for sp in {e.get("spec_id", 0) for e in data}}
         spec_src_ids = (set().union(*ident_ids_by_spec.values())
                         if ident_ids_by_spec else set())
 
-        def _may_match(e, f, op, value):
-            # partition-tuple checks first (each predicate projected
-            # through THE FILE'S OWN spec): an EXACT per-file value
-            # beats min/max bounds (and exists even for string
-            # columns, whose bounds are deliberately omitted); tuples
-            # are keyed by source field-id, rename-proof. create()
-            # restricts partition types to those whose dir segment
-            # round-trips exactly, so the comparison below is typed;
-            # any residual type mismatch falls through to bounds
-            # (never a silent False that would prune a matching
-            # file). Bounds are ALWAYS consulted too — for bucket
-            # fields the tuple check is necessarily weak.
-            import datetime as _dt
-
-            part = e["info"].partition or {}
-            for si in _spec(e.get("spec_id", 0)):
-                if si["source_id"] != f["id"]:
-                    continue
-                proj = _project_pred(si, op, value)
-                if proj is None:
-                    continue
-                pop, pval = proj
-                v = part.get(str(si["source_id"]))
-                if v is None:
-                    continue
-                q = pval
-                if type(q) is _dt.date and isinstance(v, str):
-                    q = q.isoformat()  # dates JSON-decode as ISO text
-                if type(v) is not type(q) and not (
-                        isinstance(v, (int, float))
-                        and isinstance(q, (int, float))):
-                    continue
-                try:
-                    ok = {"=": v == q, "==": v == q, ">": v > q,
-                          ">=": v >= q, "<": v < q, "<=": v <= q}[pop]
-                except TypeError:
-                    continue
-                if not ok:
-                    return False
-            return self._entry_may_match(e, f, op, value)
-
         n_total = len(data)
-        residual = []
         if prune_filters:
             ice_sch = self._ice_schema_for(snapshot_id, md_r)
             by_name = {f["name"]: f for f in ice_sch["fields"]}
-            for col, op, value in prune_filters:
-                f = by_name.get(col)
-                if f is None:
+            for col, _op, _value in prune_filters:
+                if col not in by_name:
                     raise ValueError(f"prune column {col} not in schema")
-                data = [e for e in data
-                        if _may_match(e, f, op, value)]
-                residual.append((col, op, value))
+            data = self._prune_entries(
+                md_r, data, [(by_name[col], op, value)
+                             for col, op, value in prune_filters])
         self.last_scan = {"files_total": n_total,
                           "files_scanned": len(data)}
 
@@ -3705,7 +3717,7 @@ class IcebergTable:
 
             ops = {"=": "==", "==": "==", "<": "<", "<=": "<=",
                    ">": ">", ">=": ">="}
-            for col, op, value in residual:
+            for col, op, value in prune_filters or ():
                 c = F.col(col)
                 if col in ntz_cols and isinstance(value, _dt.datetime):
                     # PySpark converts datetime literals through the
@@ -3990,12 +4002,32 @@ class IcebergTable:
         self._retry_metadata(mutate)
 
     def ref_snapshot(self, name: str) -> int:
-        refs = self.metadata().get("refs", {})
-        if name == "main" and name not in refs:
-            return self.metadata()["current-snapshot-id"]
-        if name not in refs:
-            raise ValueError(f"unknown reference {name!r}")
-        return refs[name]["snapshot-id"]
+        return self._snapshot_id(self.metadata(), ref=name)
+
+    @staticmethod
+    def _snapshot_id(md: dict, snapshot_id: int | None = None,
+                     ref: str | None = None) -> int | None:
+        """The snapshot a read plans from: *snapshot_id*, or the head
+        of branch/tag *ref* (``main`` falls back to the current
+        snapshot on tables written before refs existed); None when
+        neither is given — the current snapshot, read under the
+        CURRENT schema. -1 is the empty table. An unknown id or ref,
+        or both at once, raises ValueError — the one resolution
+        behind read(), _entries() and the DSv2 reader's options."""
+        if ref is not None:
+            if snapshot_id is not None:
+                raise ValueError("pass snapshot_id OR ref")
+            refs = md.get("refs", {})
+            if ref == "main" and ref not in refs:
+                return md["current-snapshot-id"]
+            if ref not in refs:
+                raise ValueError(f"unknown reference {ref!r}")
+            return refs[ref]["snapshot-id"]
+        if snapshot_id not in (None, -1) and not any(
+                s["snapshot-id"] == snapshot_id
+                for s in md.get("snapshots", [])):
+            raise ValueError(f"snapshot {snapshot_id} not in table history")
+        return snapshot_id
 
     def fast_forward(self, to_branch: str, from_ref: str) -> int:
         """PUBLISH step of write-audit-publish: advance *to_branch*

@@ -69,7 +69,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 
 def _batches_to_table(iterator, target_schema):
@@ -1234,178 +1234,27 @@ class _SqlStreamReader(SimpleDataSourceStreamReader):
 # ----------------------------------------------------------------------
 # gobblin_iceberg: the table format behind Catalyst's OWN pushdown API.
 #
-# spark.read.format("gobblin_iceberg").option("path", loc) plans the
-# scan in pure Python from the table's metadata chain (version-hint ->
-# vN.metadata.json -> manifest list -> manifests). Every file touch is
-# SCHEME-AWARE: bare/file: paths use plain local IO, s3:/hdfs:/gs:
-# locations route through sinks.iceberg's pyarrow.fs helpers (the same
-# `_fs_from_uri` hook the native table's distributed planner uses, with
-# the fsspec fallback for schemes arrow doesn't know) — so the DSv2
-# faces read AND write the remote stores a 100 TB table lives on.
-# pushFilters() feeds the SAME inclusive-projection
-# pruning the native reader uses (manifest field_summary skipping +
+# spark.read.format("gobblin_iceberg").option("path", loc) is a thin
+# adapter over the sessionless IcebergTable(None, loc) in
+# sinks.iceberg: metadata reads (torn-hint retry, stale-hint
+# fast-forward, lost-hint recovery), snapshot/ref resolution, manifest
+# decoding and scan pruning are IcebergTable's own — the same planner
+# IcebergTable.read() uses, with no JVM, so it also runs in the
+# Python worker that plans a DSv2 scan or commits a write. Every file
+# touch is scheme-aware (bare/file: paths use plain local IO;
+# s3:/hdfs:/gs: route through sinks.iceberg's pyarrow.fs helpers).
+# pushFilters() feeds that planner (manifest field_summary skipping +
 # per-file partition-tuple/bounds checks, through each file's OWN spec
 # under partition evolution), partitions() emits ONE InputPartition per
 # surviving data file (how a DSv2 scan parallelizes), and read() serves
 # Arrow batches via pyarrow with identity partition values re-attached
-# driver-side from the hive path. Filters are reported back to Spark
-# unchanged — file pruning is a superset filter, exactly like parquet
-# row-group skipping, so correctness never depends on it.
+# from the hive path. Filters are reported back to Spark unchanged —
+# file pruning is a superset filter, exactly like parquet row-group
+# skipping, so correctness never depends on it.
 #
 # Honest gate: tables carrying delete files raise (merge-on-read needs
 # the anti-join machinery in IcebergTable.read, not a connector face).
 # ----------------------------------------------------------------------
-
-
-def _ice_local(path: str) -> str:
-    return path[len("file:"):] if path.startswith("file:") else path
-
-
-def _ice_is_local(path: str) -> bool:
-    """Bare and ``file:``-prefixed paths keep plain local IO; genuine
-    remote schemes (s3:/hdfs:/gs:) route through the scheme-aware
-    pyarrow.fs helpers in sinks.iceberg (the `_fs_from_uri` hook)."""
-    return "://" not in path or path.startswith("file://")
-
-
-def _ice_read_bytes(path: str) -> bytes:
-    """Scheme-aware byte read for the sessionless DSv2 face (no JVM,
-    no session — executor- and commit-hook-safe)."""
-    if _ice_is_local(path):
-        with open(_ice_local(path), "rb") as fh:
-            return fh.read()
-    from gobblin_spark.sinks.iceberg import _read_bytes_any
-    return _read_bytes_any(path)
-
-
-def _ice_read_md(location: str) -> dict:
-    hint_p = location.rstrip("/") + "/metadata/version-hint.text"
-    # Same torn-read protection as IcebergTable._version(): a
-    # CONCURRENT writer's hint rewrite can expose an empty/partial
-    # read (caught live by the stream-vs-batch commit stress, audit
-    # r9 — the sessionless DSv2 face lacked the retry the native
-    # reader has). A short re-read settles it; a stale-but-complete
-    # value is already safe (an older consistent snapshot).
-    last_err: Exception | None = None
-    for _ in range(5):
-        try:
-            v = int(_ice_read_bytes(hint_p).decode().strip())
-            break
-        except ValueError as ex:
-            last_err = ex
-            time.sleep(0.02)
-        except Exception as ex:
-            # hint MISSING: a committer can crash before the very
-            # first flip, or a PRUNED table (expire keeps only the
-            # newest metadata versions) can lose its hint — recover
-            # from the metadata-dir listing like the native reader
-            # (IcebergTable._recover_version_no_hint); an empty
-            # location still raises (table-exists validation)
-            msg = str(ex)
-            if (isinstance(ex, FileNotFoundError)
-                    or "FileNotFoundException" in msg
-                    or "does not exist" in msg):
-                doc = _ice_recover_md_no_hint(location)
-                if doc is None:
-                    raise
-                return doc
-            raise
-    else:
-        raise RuntimeError(
-            f"unreadable version hint at {hint_p}") from last_err
-    try:
-        doc = json.loads(_ice_read_bytes(
-            location.rstrip("/") + f"/metadata/v{v}.metadata.json"))
-    except Exception as ex:
-        # a VERY stale hint racing expire's pruning: the pointed-at
-        # version is gone with no contiguous successor — recover from
-        # the listing like the missing-hint path (review r13 pass 7)
-        msg = str(ex)
-        if not (isinstance(ex, FileNotFoundError)
-                or "FileNotFoundException" in msg
-                or "does not exist" in msg):
-            raise
-        doc = _ice_recover_md_no_hint(location)
-        if doc is None:
-            raise
-        return doc
-    # Fast-forward past a stale or transiently REGRESSED hint, like
-    # IcebergTable._fast_forward: the hint flip is the commit's last
-    # step, so without the probe this sessionless face (batch reads,
-    # streaming latestOffset, replay sources) serves an older table
-    # than the native reader — and out-of-order flips would REGRESS
-    # the streaming offset, the exact probeless-reader monotonicity
-    # violation tests/test_iceberg_commit_model.py proves (review r13
-    # pass 5). Torn or non-metadata files are refused.
-    return _ice_fast_forward_doc(location, v, doc)
-
-
-def _ice_recover_md_no_hint(location: str):
-    """Missing-hint recovery for the sessionless face: list the
-    metadata dir and adopt the newest version file that parses as
-    table metadata (walking up from v1 would misread PRUNED tables —
-    expire keeps only the newest versions — as empty). Returns None
-    when no committed version exists; listing failures fall back to
-    the v1-up probe, no worse than before."""
-    mdir = location.rstrip("/") + "/metadata"
-    names = None
-    try:
-        if _ice_is_local(mdir):
-            try:
-                names = os.listdir(_ice_local(mdir))
-            except FileNotFoundError:
-                names = []
-        else:
-            import pyarrow.fs as _pafs
-
-            from gobblin_spark.sinks.iceberg import _fs_from_uri
-            fs, rel = _fs_from_uri(mdir)
-            infos = fs.get_file_info(
-                _pafs.FileSelector(rel, allow_not_found=True))
-            names = [i.base_name for i in infos]
-    except Exception:
-        names = None
-    if names is None:
-        return _ice_fast_forward_doc(location, 0, None)
-    from gobblin_spark.sinks.iceberg import _metadata_version_candidates
-    for v in _metadata_version_candidates(names):
-        # newest PARSEABLE wins (a torn top claim never committed);
-        # then fast-forward in case a racer lands mid-recovery
-        doc = _ice_fast_forward_doc(location, v - 1, None)
-        if doc is not None:
-            return doc
-    return None
-
-
-def _ice_fast_forward_doc(location: str, v: int, doc: dict | None):
-    """Adopt contiguous COMPLETE metadata versions above *v*; returns
-    the newest adopted document (or *doc* unchanged if none)."""
-    while True:
-        nxt = location.rstrip("/") + f"/metadata/v{v + 1}.metadata.json"
-        try:
-            raw = _ice_read_bytes(nxt)
-        except Exception as ex:
-            msg = str(ex)
-            if (isinstance(ex, FileNotFoundError)
-                    or "FileNotFoundException" in msg
-                    or "does not exist" in msg):
-                return doc
-            raise
-        try:
-            cand = json.loads(raw)
-        except ValueError:
-            return doc          # torn claim: never logically committed
-        if not (isinstance(cand, dict) and "format-version" in cand):
-            return doc          # parseable junk is still not metadata
-        v, doc = v + 1, cand
-
-
-_ICE_TO_SPARK = {
-    "long": "long", "int": "int", "double": "double", "float": "float",
-    "string": "string", "boolean": "boolean", "date": "date",
-    "timestamp": "timestamp_ntz", "timestamptz": "timestamp",
-    "binary": "binary",
-}
 
 
 class _IcebergFilePartition(InputPartition):
@@ -1419,28 +1268,89 @@ class _IcebergFilePartition(InputPartition):
         self.col_ids = col_ids
 
 
-def _ice_file_cols(schema_arrow, col_ids: dict | None,
-                   path: str) -> dict:
-    """{current column name: name the FILE stores it under}. Without
-    rename/drop history (col_ids None) names map to themselves. With
-    one, resolve through the parquet ``PARQUET:field_id`` metadata —
-    files written before a rename store the old name, and reading the
-    current name would silently null-fill (ADVICE r7). Files lacking
-    embedded ids fail honestly, same contract as IcebergTable.read."""
-    if col_ids is None:
-        return {n: n for n in schema_arrow.names}
-    by_id = {}
-    for fld in schema_arrow:
-        fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-        if fid is not None:
-            by_id[int(fid)] = fld.name
-    if not by_id:
-        raise RuntimeError(
-            f"table history has renames/drops but {path} embeds no "
-            "parquet field ids — rewrite_data_files() first, or read "
-            "via IcebergTable.read")
-    return {name: by_id[fid] for name, fid in col_ids.items()
-            if fid in by_id}
+def _file_partitions(t, md: dict,
+                     entries: list[dict]) -> list[_IcebergFilePartition]:
+    """Planned data-file entries → the read units both DSv2 readers
+    serve. Identity-partition values come from each file's hive path
+    through the file's OWN spec (the dir key can be ANY historical
+    name of the column) and attach under the CURRENT schema's name —
+    the target names the readers resolve, so a renamed partition
+    column keyed by its write-time name would null-fill (audit r8)."""
+    from gobblin_spark.sinks.iceberg import _parse_partition_value
+
+    col_ids = ({f["name"]: f["id"]
+                for f in t._ice_schema_for(None, md)["fields"]}
+               if t._needs_id_resolution(md) else None)
+    hist_names: dict[int, set] = {}
+    for s_ in md["schemas"]:
+        for f_ in s_["fields"]:
+            hist_names.setdefault(f_["id"], set()).add(f_["name"])
+    idents: dict[int, list] = {}
+    parts = []
+    for e in entries:
+        sp = e["spec_id"]
+        if sp not in idents:
+            idents[sp] = [si for si in t._spec_info(md, sp)
+                          if si["transform"] == "identity"]
+        path = e["info"].path
+        segs = dict(seg.split("=", 1)
+                    for seg in path.rsplit("/data/", 1)[-1].split("/")
+                    if "=" in seg)
+        attach = []
+        for si in idents[sp]:
+            key = next((n for n in hist_names[si["source_id"]]
+                        if n in segs), None)
+            if key is not None:
+                attach.append((si["source_name"], _parse_partition_value(
+                    segs[key], si["source_type"])))
+        parts.append(_IcebergFilePartition(path, attach, col_ids))
+    return parts
+
+
+def _file_batches(part: _IcebergFilePartition, target) -> Iterator:
+    """One planned data file as Arrow batches in the *target* schema —
+    the per-file projection both readers share. Each column is read
+    under the name the FILE stores it as: without rename/drop history
+    (``col_ids`` None) names map to themselves; with one, through the
+    parquet ``PARQUET:field_id`` metadata — files written before a
+    rename store the old name, and reading the current name would
+    silently null-fill (ADVICE r7). Files lacking embedded ids fail
+    honestly, same contract as IcebergTable.read. Identity partition
+    columns take the planned attach value; columns the file predates
+    null-fill."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gobblin_spark.sinks.iceberg import (IcebergTable,
+                                             _open_input_file_any)
+
+    path = part.path
+    pf = pq.ParquetFile(
+        IcebergTable._local(path) if IcebergTable._sessionless_is_local(path)
+        else _open_input_file_any(path))
+    file_cols = pf.schema_arrow.names
+    if part.col_ids is None:
+        stored = {n: n for n in file_cols}
+    else:
+        by_id = {}
+        for fld in pf.schema_arrow:
+            fid = (fld.metadata or {}).get(b"PARQUET:field_id")
+            if fid is not None:
+                by_id[int(fid)] = fld.name
+        if not by_id:
+            raise RuntimeError(
+                f"table history has renames/drops but {path} embeds no "
+                "parquet field ids — rewrite_data_files() first, or read "
+                "via IcebergTable.read")
+        stored = {name: by_id[fid] for name, fid in part.col_ids.items()
+                  if fid in by_id}
+    attach = dict(part.attach)
+    for batch in pf.iter_batches(batch_size=65536):
+        yield pa.RecordBatch.from_arrays([
+            batch.column(stored[f.name]).cast(f.type)
+            if stored.get(f.name) in file_cols
+            else pa.array([attach.get(f.name)] * batch.num_rows, type=f.type)
+            for f in target], schema=target)
 
 
 class _IcebergReader(DataSourceReader):
@@ -1466,218 +1376,23 @@ class _IcebergReader(DataSourceReader):
         # the thing correctness rests on
         return list(filters)
 
-    # -- pure-python scan planning over the metadata chain ------------
     def _plan(self):
-        from gobblin_spark.operators import avro_container as ACF
-        from gobblin_spark.sinks import iceberg as I
+        from gobblin_spark.sinks.iceberg import IcebergTable
 
-        md = _ice_read_md(self.location)
-        sid = md["current-snapshot-id"]
-        if self.ref:
-            refs = md.get("refs", {})
-            if self.ref not in refs:
-                raise ValueError(f"unknown reference {self.ref!r}")
-            sid = refs[self.ref]["snapshot-id"]
-        if self.snapshot_id is not None:
-            sid = self.snapshot_id
-        if sid == -1:
-            return []
-        snap = next(s for s in md["snapshots"] if s["snapshot-id"] == sid)
-        schema_id = snap.get("schema-id", md["current-schema-id"])
-        ice = next(s for s in md["schemas"]
-                   if s["schema-id"] == schema_id)
-        by_name = {f["name"]: f for f in ice["fields"]}
-        by_id = {f["id"]: f for f in ice["fields"]}
-        hist_names: dict[int, set] = {}
-        for s_ in md["schemas"]:
-            for f_ in s_["fields"]:
-                hist_names.setdefault(f_["id"], set()).add(f_["name"])
-
-        def spec_info(spec_id):
-            spec = next(s for s in md["partition-specs"]
-                        if s["spec-id"] == spec_id)
-            out = []
-            for pos, pf in enumerate(spec["fields"]):
-                kind, param = I._parse_transform(pf["transform"])
-                src = by_id.get(pf["source-id"])
-                if src is None:
-                    continue  # source column dropped since
-                out.append({
-                    "field_name": pf["name"], "transform": kind,
-                    "param": param, "source_id": pf["source-id"],
-                    "source_name": src["name"],
-                    "source_type": src["type"],
-                    # position in the FULL spec: the manifest's
-                    # field_summary list is spec-ordered, so indexing
-                    # it by the filtered list's enumerate() would read
-                    # a NEIGHBOR's bounds once a source column was
-                    # dropped — and wrongly prune matching manifests
-                    # (audit r8)
-                    "pos": pos,
-                    "result_type": ("int" if kind == "bucket"
-                                    or kind in I._TEMPORAL_TRANSFORMS
-                                    else src["type"]),
-                })
-            return out
-
-        preds = [(by_name[c]["id"], op, v) for c, op, v in self.prune
+        t = IcebergTable(None, self.location)
+        md = t.metadata()
+        sid = t._snapshot_id(md, self.snapshot_id, self.ref)
+        by_name = {f["name"]: f
+                   for f in t._ice_schema_for(sid, md)["fields"]}
+        preds = [(by_name[c], op, v) for c, op, v in self.prune
                  if c in by_name]
-        # rename/drop histories resolve file columns by field-id in
-        # read() — name-based resolution would null-fill renamed
-        # columns out of pre-rename files. The target names are the
-        # CURRENT schema's (that is what schema() reported to Spark),
-        # not the plan snapshot's write-time schema
-        cur_ice = next(s for s in md["schemas"]
-                       if s["schema-id"] == md["current-schema-id"])
-        cur_name_by_id = {f["id"]: f["name"] for f in cur_ice["fields"]}
-        col_ids = ({f["name"]: f["id"] for f in cur_ice["fields"]}
-                   if I.IcebergTable(None, self.location)
-                   ._needs_id_resolution(md) else None)
-
-        def summary_excludes(m, info):
-            sums = m.get("partitions")
-            if not sums or not preds:
-                return False
-            for psid, op, value in preds:
-                for si in info:
-                    i = si["pos"]
-                    if si["source_id"] != psid or i >= len(sums):
-                        continue
-                    proj = I._project_pred(si, op, value)
-                    if proj is None:
-                        continue
-                    pop, pval = proj
-                    t_ice = si["result_type"]
-                    lo = I._summary_deser(sums[i].get("lower_bound"),
-                                          t_ice)
-                    hi = I._summary_deser(sums[i].get("upper_bound"),
-                                          t_ice)
-                    if lo is None or hi is None:
-                        return True
-                    if t_ice == "float":
-                        lo, hi = I._widen_float32_bounds(lo, hi)
-                    try:
-                        if not I._range_may_match(lo, hi, pop, pval):
-                            return True
-                    except TypeError:
-                        continue
-            return False
-
-        def file_may_match(part_tuple, spec, f_lo, f_hi):
-            import datetime as _dt
-
-            for psid, op, value in preds:
-                for si in spec:
-                    if si["source_id"] != psid:
-                        continue
-                    proj = I._project_pred(si, op, value)
-                    if proj is None:
-                        continue
-                    pop, pval = proj
-                    v = (part_tuple or {}).get(str(si["source_id"]))
-                    if v is None:
-                        continue
-                    q = pval
-                    if type(q) is _dt.date and isinstance(v, str):
-                        q = q.isoformat()
-                    if type(v) is not type(q) and not (
-                            isinstance(v, (int, float))
-                            and isinstance(q, (int, float))):
-                        continue
-                    try:
-                        ok = {"=": v == q, ">": v > q, ">=": v >= q,
-                              "<": v < q, "<=": v <= q}[pop]
-                    except TypeError:
-                        continue
-                    if not ok:
-                        return False
-                # column value bounds: stored as Appendix-D SERIALIZED
-                # single values — deserialize before comparing (the
-                # raw bytes would make every comparison a TypeError,
-                # silently disabling bounds pruning; for float columns
-                # the ulp widening would crash outright)
-                fld = by_id.get(psid)
-                if fld and f_lo and f_hi:
-                    lo_b, hi_b = f_lo.get(psid), f_hi.get(psid)
-                    if lo_b is not None and hi_b is not None:
-                        t_ice = fld["type"]
-                        mn = I._sv_deser(lo_b, t_ice)
-                        mx = I._sv_deser(hi_b, t_ice)
-                        v = I._logical_to_ice(value, t_ice)
-                        if None not in (mn, mx, v):
-                            if t_ice == "float":
-                                mn, mx = I._widen_float32_bounds(mn, mx)
-                            try:
-                                if not I._range_may_match(mn, mx, op, v):
-                                    return False
-                            except TypeError:
-                                pass
-            return True
-
-        _, manifests = ACF.read_container(
-            _ice_read_bytes(snap["manifest-list"]))
-        parts = []
-        for m in manifests:
-            info = spec_info(m.get("partition_spec_id", 0))
-            if m.get("content", 0) != 0:
-                raise NotImplementedError(
-                    "table has delete files — use IcebergTable.read "
-                    "(merge-on-read) instead of the connector face")
-            if summary_excludes(m, info):
-                continue
-            _, entries = ACF.read_container(
-                _ice_read_bytes(m["manifest_path"]))
-            sid_by_name = {si["field_name"]: si["source_id"]
-                           for si in info}
-            for e in entries:
-                if e["status"] not in (0, 1):
-                    continue
-                d = e["data_file"]
-                if d.get("content", 0) != 0:
-                    raise NotImplementedError(
-                        "table has delete files — use "
-                        "IcebergTable.read instead")
-                raw = d.get("partition")
-                if isinstance(raw, str):
-                    tup = json.loads(raw)
-                elif raw is not None:
-                    tup = {str(sid_by_name[k]): v
-                           for k, v in raw.items() if k in sid_by_name}
-                else:
-                    tup = None
-                f_lo = I._bounds_from_avro(d.get("lower_bounds"))
-                f_hi = I._bounds_from_avro(d.get("upper_bounds"))
-                if not file_may_match(tup, info, f_lo, f_hi):
-                    continue
-                # identity re-attach values from the hive path (the
-                # write-time column name can be ANY historical name)
-                attach = []
-                ids = {si["source_id"] for si in info
-                       if si["transform"] == "identity"}
-                if ids:
-                    rel = d["file_path"].rsplit("/data/", 1)[-1]
-                    segs = {}
-                    for seg in rel.split("/"):
-                        if "=" in seg:
-                            k, v = seg.split("=", 1)
-                            segs[k] = v
-                    for fid in ids:
-                        fld = by_id[fid]
-                        # attach under the CURRENT schema's name — the
-                        # target names read() resolves are current, so
-                        # a renamed partition column keyed by its
-                        # write-time name would null-fill (audit r8)
-                        tgt = cur_name_by_id.get(fid, fld["name"])
-                        for n in hist_names.get(fid, ()):
-                            if n in segs:
-                                attach.append(
-                                    (tgt,
-                                     I._parse_partition_value(
-                                         segs[n], fld["type"])))
-                                break
-                parts.append(_IcebergFilePartition(d["file_path"],
-                                                   attach, col_ids))
-        return parts
+        entries = t._entries(
+            sid, [(f["id"], op, v) for f, op, v in preds] or None, md)
+        if any(e["content"] != 0 for e in entries):
+            raise NotImplementedError(
+                "table has delete files — use IcebergTable.read "
+                "(merge-on-read) instead of the connector face")
+        return _file_partitions(t, md, t._prune_entries(md, entries, preds))
 
     def partitions(self):
         try:
@@ -1694,34 +1409,9 @@ class _IcebergReader(DataSourceReader):
     def read(self, partition: _IcebergFilePartition):
         if partition is None or not partition.path:
             return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        target = to_arrow_schema(self.schema_)
-        attach = dict(partition.attach)
-        from gobblin_spark.sinks.iceberg import _open_input_file_any
-        pf = pq.ParquetFile(
-            _ice_local(partition.path) if _ice_is_local(partition.path)
-            else _open_input_file_any(partition.path))
-        stored = _ice_file_cols(pf.schema_arrow, partition.col_ids,
-                                partition.path)
-        file_cols = set(pf.schema_arrow.names)
-        for batch in pf.iter_batches(batch_size=65536):
-            arrays = []
-            for i, name in enumerate(target.names):
-                t = target.field(i).type
-                fname = stored.get(name)
-                if fname in file_cols:
-                    arrays.append(
-                        batch.column(batch.schema.get_field_index(fname))
-                        .cast(t))
-                else:  # identity partition column or added-after column
-                    val = attach.get(name)
-                    arrays.append(pa.array([val] * batch.num_rows,
-                                           type=t))
-            yield pa.RecordBatch.from_arrays(arrays, schema=target)
+        yield from _file_batches(partition, to_arrow_schema(self.schema_))
 
 
 class GobblinIcebergDataSource(DataSource):
@@ -1730,18 +1420,12 @@ class GobblinIcebergDataSource(DataSource):
         return "gobblin_iceberg"
 
     def schema(self):
-        md = _ice_read_md(self.options["path"])
-        ice = next(s for s in md["schemas"]
-                   if s["schema-id"] == md["current-schema-id"])
-        fields = []
-        for f in ice["fields"]:
-            t = f["type"]
-            spark_t = (t if t.startswith("decimal")
-                       else _ICE_TO_SPARK.get(t))
-            if spark_t is None:
-                raise TypeError(f"unsupported iceberg type {t}")
-            fields.append(f"{f['name']} {spark_t}")
-        return ", ".join(fields)
+        from gobblin_spark.sinks.iceberg import IcebergTable, _spark_struct
+
+        t = IcebergTable(None, self.options["path"])
+        return StructType([
+            StructField(f.name, f.dataType)
+            for f in _spark_struct(t._ice_schema_for(None, t.metadata()))])
 
     def reader(self, schema: StructType) -> _IcebergReader:
         return _IcebergReader(self.options, schema)
@@ -1765,40 +1449,40 @@ class GobblinIcebergDataSource(DataSource):
 _IcebergCommit = _TaskFilesCommit
 
 
-class _IcebergWriter(DataSourceArrowWriter):
-    """Write face of the connector: each task writes its partition as
-    one parquet file DIRECTLY under ``data/dsv2-<job>/`` — in the
-    table format, files are invisible until a manifest references
-    them, so there is no rename step: the driver-side ``commit()``
-    (all tasks succeeded — COMMIT_ON_FULL_SUCCESS) turns the file set
-    into ONE append snapshot via the normal manifest chain, and
-    ``abort()`` deletes the never-referenced files (anything missed
-    is orphan-collectable by remove_orphan_files). Unpartitioned
-    tables only — partitioned layouts need the transform columns of
-    append_dataframe. Files written here carry no parquet field-id
-    metadata; rename/drop evolution on such files requires a
-    rewrite_data_files first (same contract as pre-field-id data)."""
+class _IcebergWriteFace:
+    """What the batch and streaming write faces share. Each task
+    writes its partition as one parquet file DIRECTLY under
+    ``data/<sub>/`` — in the table format, files are invisible until a
+    manifest references them, so there is no rename step: the
+    driver-side commit turns the file set into ONE append snapshot via
+    the normal manifest chain (in a SESSIONLESS python worker — no
+    JVM — through IcebergTable's local-IO mode with its
+    create-fails-if-exists guard), and abort deletes the
+    never-referenced files (anything missed is orphan-collectable by
+    remove_orphan_files). Unpartitioned tables only — partitioned
+    layouts need the transform columns of append_dataframe. Files
+    written here carry no parquet field-id metadata; rename/drop
+    evolution on such files requires a rewrite_data_files first (same
+    contract as pre-field-id data)."""
 
     def __init__(self, options, schema: StructType):
-        import uuid
+        from gobblin_spark.sinks.iceberg import IcebergTable
 
         self.location = options["path"]
         self.schema_ = schema
-        self.job_token = uuid.uuid4().hex[:12]
-        md = _ice_read_md(self.location)  # validates the table exists
-        spec = next(s for s in md["partition-specs"]
-                    if s["spec-id"] == md["default-spec-id"])
-        if spec["fields"]:
+        t = IcebergTable(None, self.location)
+        md = t.metadata()  # validates the table exists
+        if t._spec_fields_def(md):
             raise NotImplementedError(
                 "gobblin_iceberg writes support unpartitioned tables; "
-                "partitioned layouts go through append_dataframe")
+                "partitioned layouts go through append_dataframe "
+                "(foreachBatch + append_dataframe for streams)")
         # the frame's columns must be a subset of the TABLE schema:
         # unknown columns would land in files and silently vanish on
         # read (the scan schema drops them); missing table columns
         # are fine — reads null-fill, same as add-column evolution
-        cur = next(s for s in md["schemas"]
-                   if s["schema-id"] == md["current-schema-id"])
-        table_cols = {f["name"] for f in cur["fields"]}
+        table_cols = {f["name"]
+                      for f in t._ice_schema_for(None, md)["fields"]}
         unknown = [f.name for f in schema.fields
                    if f.name not in table_cols]
         if unknown:
@@ -1806,81 +1490,92 @@ class _IcebergWriter(DataSourceArrowWriter):
                 f"columns {unknown} are not in the table schema — "
                 "add_column first, or drop them before writing")
 
-    def write(self, iterator) -> _IcebergCommit:
-        # DataSourceArrowWriter: Arrow batches straight through —
-        # no pickled-Row detour (guide §4)
-        import pyarrow.parquet as pq
-
+    def _write_task(self, iterator, sub: str,
+                    suffix: str = "") -> _IcebergCommit:
+        # Arrow batches straight through — no pickled-Row detour
+        # (guide §4)
         from pyspark import TaskContext
         from pyspark.sql.pandas.types import to_arrow_schema
+
+        from gobblin_spark.sinks.iceberg import (IcebergTable,
+                                                 _write_parquet_any)
 
         ctx = TaskContext.get()
         task = ctx.partitionId() if ctx else 0
         attempt = ctx.taskAttemptId() if ctx else 0
-        target = to_arrow_schema(self.schema_)
-        tbl = _batches_to_table(iterator, target)
+        tbl = _batches_to_table(iterator, to_arrow_schema(self.schema_))
         if tbl.num_rows == 0:
             return _IcebergCommit([], 0)
         # attempt-unique name: a speculative twin never clobbers
-        fname = f"task-{task:05d}-{attempt}.parquet"
-        if _ice_is_local(self.location):
-            sub = os.path.join(_ice_local(self.location), "data",
-                               f"dsv2-{self.job_token}")
-            os.makedirs(sub, exist_ok=True)
-            path = os.path.join(sub, fname)
-            pq.write_table(tbl, path)
+        fname = f"task-{task:05d}-{attempt}{suffix}.parquet"
+        if IcebergTable._sessionless_is_local(self.location):
+            path = os.path.join(IcebergTable._local(self.location),
+                                "data", sub, fname)
         else:
-            # remote table (s3:/hdfs:/gs:): scheme-aware executor
-            # write — object stores need no mkdir, pyarrow.fs streams
-            # the file straight to the store
-            from gobblin_spark.sinks.iceberg import _write_parquet_any
-            path = (self.location.rstrip("/")
-                    + f"/data/dsv2-{self.job_token}/{fname}")
-            _write_parquet_any(tbl, path)
+            # remote table (s3:/hdfs:/gs:): object stores need no
+            # mkdir, pyarrow.fs streams the file straight to the store
+            path = f"{self.location.rstrip('/')}/data/{sub}/{fname}"
+        _write_parquet_any(tbl, path)
         return _IcebergCommit([path], tbl.num_rows)
 
-    def commit(self, messages):
-        # runs in a SESSIONLESS python worker (no JVM): the commit
-        # goes through IcebergTable's local-IO mode — plain-file
-        # metadata/manifest writes with the same create-fails-if-
-        # exists concurrency guard
+    def _append(self, t, md: dict, messages,
+                summary_extra: dict | None = None) -> None:
+        """The tasks' files as ONE append snapshot: record counts and
+        column bounds from each footer."""
         import pyarrow.parquet as pq
 
         from gobblin_spark.sinks import iceberg as I
 
-        t = I.IcebergTable(None, self.location)
-        md = t.metadata()
-        cur = next(s for s in md["schemas"]
-                   if s["schema-id"] == md["current-schema-id"])
-        name_to_field = {f["name"]: f for f in cur["fields"]}
+        name_to_field = {f["name"]: f
+                         for f in t._ice_schema_for(None, md)["fields"]}
         files = []
         for m in messages or []:
             for fpath in getattr(m, "files", []) or []:
-                local = _ice_is_local(fpath)
-                fmd = pq.ParquetFile(
-                    fpath if local
-                    else I._open_input_file_any(fpath)).metadata
+                fmd = pq.ParquetFile(I._open_input_file_any(fpath)).metadata
                 if fmd.num_rows == 0:
                     continue
                 lo, hi = I._collect_bounds(fmd, name_to_field)
                 files.append(I.DataFileInfo(
-                    "file:" + os.path.abspath(fpath) if local else fpath,
-                    os.path.getsize(fpath) if local
-                    else I._file_size_any(fpath),
-                    fmd.num_rows,
+                    "file:" + os.path.abspath(fpath)
+                    if I._is_plain_local(fpath) else fpath,
+                    I._file_size_any(fpath), fmd.num_rows,
                     lower_bounds=lo, upper_bounds=hi))
         if files:
-            t.append_files(files)
-        return None
+            t.append_files(files, summary_extra=summary_extra)
 
-    def abort(self, messages):
+    @staticmethod
+    def _delete_staged(messages) -> None:
         from gobblin_spark.sinks.iceberg import _delete_any
+
         for m in messages or []:
             for f in getattr(m, "files", []) or []:
                 try:
-                    os.remove(f) if _ice_is_local(f) else _delete_any(f)
+                    _delete_any(f)
                 except OSError:
                     pass
+
+
+class _IcebergWriter(_IcebergWriteFace, DataSourceArrowWriter):
+    """Batch write face: COMMIT_ON_FULL_SUCCESS — the driver-side
+    ``commit()`` runs only after every task succeeded."""
+
+    def __init__(self, options, schema: StructType):
+        import uuid
+
+        super().__init__(options, schema)
+        self.job_token = uuid.uuid4().hex[:12]
+
+    def write(self, iterator) -> _IcebergCommit:
+        return self._write_task(iterator, f"dsv2-{self.job_token}")
+
+    def commit(self, messages):
+        from gobblin_spark.sinks.iceberg import IcebergTable
+
+        t = IcebergTable(None, self.location)
+        self._append(t, t.metadata(), messages)
+
+    def abort(self, messages):
+        self._delete_staged(messages)
 
 
 class _IcebergStreamReader(SimpleDataSourceStreamReader):
@@ -1915,30 +1610,30 @@ class _IcebergStreamReader(SimpleDataSourceStreamReader):
                 f"got {ow!r}")
         self.overwrites_insert_only = ow == "insert-only"
 
-    @staticmethod
-    def _main_seq(md: dict) -> int:
+    def _main_seq(self) -> int:
         """Highest sequence-number reachable from MAIN's head —
         branch commits bump the table-global last-sequence-number but
         are not main's rows: a stream offset must never advance past
         (or plan from) staged, unaudited write-audit-publish data.
         After fast_forward publishes a branch, its snapshots join
         main's ancestry and the window picks them up then."""
-        from gobblin_spark.sinks import iceberg as I
+        from gobblin_spark.sinks.iceberg import IcebergTable
 
+        md = IcebergTable(None, self.location).metadata()
         return max((s.get("sequence-number", 0)
-                    for s in I.IcebergTable._main_ancestry(md)),
+                    for s in IcebergTable._main_ancestry(md)),
                    default=0)
 
     def initialOffset(self) -> dict:
         if self.from_start:
             return {"seq": 0}
-        return {"seq": self._main_seq(_ice_read_md(self.location))}
+        return {"seq": self._main_seq()}
 
-    def _entries_between(self, lo: int, hi: int):
-        from gobblin_spark.operators import avro_container as ACF
+    def _plan_window(self, lo: int, hi: int) -> list[_IcebergFilePartition]:
         from gobblin_spark.sinks import iceberg as I
 
-        md = _ice_read_md(self.location)
+        t = I.IcebergTable(None, self.location)
+        md = t.metadata()
         if md["current-snapshot-id"] == -1:
             return []
         # plan and bound the window from MAIN's ancestry only: a
@@ -1996,40 +1691,7 @@ class _IcebergStreamReader(SimpleDataSourceStreamReader):
         for o in win_overwrites:
             o_seq = o["sequence-number"]
             eras.append((o_seq - 1, o["snapshot-id"], o_seq))
-        # identity-partition lookup across ALL specs: partitionBy
-        # drops the source column from the data files, so streamed
-        # rows must re-attach values from the hive path like the
-        # batch reader — an unpartitioned-only _rows would emit NULL
-        # for every partition column (audit r8). Keyed by historical
-        # dir name -> (current column name, ice type).
-        cur = next(s for s in md["schemas"]
-                   if s["schema-id"] == md["current-schema-id"])
-        cur_by_id = {f["id"]: f for f in cur["fields"]}
-        hist: dict[str, tuple] = {}
-        for s_ in md["schemas"]:
-            for f_ in s_["fields"]:
-                c = cur_by_id.get(f_["id"])
-                if c is not None:
-                    hist[f_["name"]] = (f_["id"], c["name"], c["type"])
-        ident_ids = {pf["source-id"]
-                     for sp in md.get("partition-specs", [])
-                     for pf in sp["fields"]
-                     if pf["transform"] == "identity"}
-
-        def _attach(path: str):
-            out = []
-            rel = path.rsplit("/data/", 1)[-1]
-            for seg in rel.split("/"):
-                if "=" not in seg:
-                    continue
-                k, v = seg.split("=", 1)
-                ent = hist.get(k)
-                if ent and ent[0] in ident_ids:
-                    out.append((ent[1], I._parse_partition_value(
-                        v, ent[2])))
-            return tuple(out)
-
-        out = []
+        window = []
         for era_lo, walk_id, era_hi in eras:
             # plan each era from the snapshot AS OF its end, not the
             # current one: a later REPLACE rewrites the current
@@ -2038,84 +1700,29 @@ class _IcebergStreamReader(SimpleDataSourceStreamReader):
             # long as that snapshot is retained — the same replay
             # constraint real Iceberg has). Era bounds exclude the
             # replace's own compacted files (seq == era lo).
+            # Carried-forward entries keep their ORIGINAL sequence
+            # numbers, inherited per the spec where null.
             if walk_id is None:
                 continue
-            snap = by_id_snap[walk_id]
-            _, manifests = ACF.read_container(
-                _ice_read_bytes(snap["manifest-list"]))
-            for m in manifests:
-                if m.get("content", 0) != 0:
-                    raise NotImplementedError(
-                        "streaming read over delete-carrying tables")
-                # every manifest must open: carried-forward entries
-                # keep their ORIGINAL sequence numbers regardless of
-                # the manifest's own sequence fields
-                _, entries = ACF.read_container(
-                    _ice_read_bytes(m["manifest_path"]))
-                for e in entries:
-                    if e["status"] not in (0, 1):
-                        continue
-                    d = e["data_file"]
-                    if d.get("content", 0) != 0:
-                        raise NotImplementedError(
-                            "streaming read over delete-carrying "
-                            "tables")
-                    seq = e.get("sequence_number")
-                    if seq is None:
-                        # Iceberg sequence-number INHERITANCE: a null
-                        # entry seq inherits the manifest's (field
-                        # 515) — coercing to 0 would park genuine-
-                        # Iceberg rows outside every window forever
-                        # (audit r8). The spec limits inheritance to
-                        # ADDED (status=1) entries; an EXISTING entry
-                        # with a null seq is a non-compliant writer
-                        # and inheriting the carrying manifest's
-                        # newer seq would shift the file into the
-                        # wrong incremental window (r10 ADVICE).
-                        mseq = m.get("sequence_number") or 0
-                        if e["status"] != 1 and mseq != 0:
-                            raise ValueError(
-                                "non-compliant manifest: EXISTING "
-                                f"entry for {d['file_path']} has no "
-                                "explicit sequence number (manifest "
-                                f"seq {mseq}); inheritance applies "
-                                "to ADDED entries only")
-                        seq = mseq
-                    if era_lo < seq <= era_hi:
-                        out.append((d["file_path"],
-                                    _attach(d["file_path"])))
-        return sorted(set(out))
+            entries = t._entries(walk_id, md=md)
+            if any(e["content"] != 0 for e in entries):
+                raise NotImplementedError(
+                    "streaming read over delete-carrying tables")
+            window += [e for e in entries
+                       if era_lo < e["sequence_number"] <= era_hi]
+        parts = {p.path: p for p in _file_partitions(t, md, window)}
+        return [parts[p] for p in sorted(parts)]
 
     def _rows(self, lo: int, hi: int) -> Iterator[Tuple]:
-        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        from gobblin_spark.sinks import iceberg as I
-
-        md = _ice_read_md(self.location)
-        names = [f.name for f in self.schema_.fields]
-        col_ids = None
-        if I.IcebergTable(None, self.location)._needs_id_resolution(md):
-            cur = next(s for s in md["schemas"]
-                       if s["schema-id"] == md["current-schema-id"])
-            col_ids = {f["name"]: f["id"] for f in cur["fields"]}
-        for path, attach in self._entries_between(lo, hi):
-            tbl = pq.read_table(
-                _ice_local(path) if _ice_is_local(path)
-                else I._open_input_file_any(path))
-            stored = _ice_file_cols(tbl.schema, col_ids, path)
-            att = dict(attach)
-            cols = {}
-            for n in names:
-                fn = stored.get(n)
-                cols[n] = (tbl.column(fn).to_pylist()
-                           if fn in tbl.schema.names
-                           else [att.get(n)] * tbl.num_rows)
-            for i in range(tbl.num_rows):
-                yield tuple(cols[n][i] for n in names)
+        target = to_arrow_schema(self.schema_)
+        for part in self._plan_window(lo, hi):
+            for batch in _file_batches(part, target):
+                yield from zip(*(c.to_pylist() for c in batch.columns))
 
     def read(self, start: dict) -> tuple[Iterator[Tuple], dict]:
-        md = _ice_read_md(self.location)
-        hi = max(self._main_seq(md), start["seq"])
+        hi = max(self._main_seq(), start["seq"])
         return iter(list(self._rows(start["seq"], hi))), {"seq": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[Tuple]:
@@ -2125,7 +1732,7 @@ class _IcebergStreamReader(SimpleDataSourceStreamReader):
         pass  # snapshots are immutable; the checkpoint owns progress
 
 
-class _IcebergStreamWriter(DataSourceStreamArrowWriter):
+class _IcebergStreamWriter(_IcebergWriteFace, DataSourceStreamArrowWriter):
     """NATIVE exactly-once streaming sink for the table format:
     ``writeStream.format("gobblin_iceberg")``. Each micro-batch's
     tasks write parquet files directly under data/ (invisible until
@@ -2136,98 +1743,24 @@ class _IcebergStreamWriter(DataSourceStreamArrowWriter):
     without the foreachBatch boilerplate (this is
     append_dataframe_idempotent's contract surfaced through the
     engine's own streaming API). ``abort`` deletes the batch's
-    never-referenced files. Unpartitioned tables only, same guard as
-    the batch writer."""
-
-    def __init__(self, options, schema: StructType):
-        self.location = options["path"]
-        self.schema_ = schema
-        md = _ice_read_md(self.location)
-        spec = next(s for s in md["partition-specs"]
-                    if s["spec-id"] == md["default-spec-id"])
-        if spec["fields"]:
-            raise NotImplementedError(
-                "gobblin_iceberg streaming writes support "
-                "unpartitioned tables; partitioned layouts go "
-                "through foreachBatch + append_dataframe")
-        cur = next(s for s in md["schemas"]
-                   if s["schema-id"] == md["current-schema-id"])
-        table_cols = {f["name"] for f in cur["fields"]}
-        unknown = [f.name for f in schema.fields
-                   if f.name not in table_cols]
-        if unknown:
-            raise ValueError(
-                f"columns {unknown} are not in the table schema")
+    never-referenced files."""
 
     def write(self, iterator) -> _IcebergCommit:
-        # DataSourceStreamArrowWriter: Arrow batches straight through
-        import uuid as _uuid
+        import uuid
 
-        import pyarrow.parquet as pq
-
-        from pyspark import TaskContext
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        ctx = TaskContext.get()
-        task = ctx.partitionId() if ctx else 0
-        attempt = ctx.taskAttemptId() if ctx else 0
-        target = to_arrow_schema(self.schema_)
-        tbl = _batches_to_table(iterator, target)
-        if tbl.num_rows == 0:
-            return _IcebergCommit([], 0)
-        fname = (f"task-{task:05d}-{attempt}-{_uuid.uuid4().hex[:8]}"
-                 ".parquet")
-        if _ice_is_local(self.location):
-            sub = os.path.join(_ice_local(self.location), "data",
-                               "dsv2stream")
-            os.makedirs(sub, exist_ok=True)
-            path = os.path.join(sub, fname)
-            pq.write_table(tbl, path)
-        else:
-            from gobblin_spark.sinks.iceberg import _write_parquet_any
-            path = (self.location.rstrip("/")
-                    + f"/data/dsv2stream/{fname}")
-            _write_parquet_any(tbl, path)
-        return _IcebergCommit([path], tbl.num_rows)
+        return self._write_task(iterator, "dsv2stream",
+                                f"-{uuid.uuid4().hex[:8]}")
 
     def commit(self, messages, batchId: int) -> None:
-        import pyarrow.parquet as pq
+        from gobblin_spark.sinks.iceberg import IcebergTable
 
-        from gobblin_spark.sinks import iceberg as I
-
-        t = I.IcebergTable(None, self.location)
+        t = IcebergTable(None, self.location)
         token = f"stream-epoch-{batchId}"
         md = t.metadata()
         for s in md.get("snapshots", []):
             if s.get("summary", {}).get("epoch-token") == token:
                 return  # replayed epoch: exactly-once no-op
-        cur = next(s for s in md["schemas"]
-                   if s["schema-id"] == md["current-schema-id"])
-        name_to_field = {f["name"]: f for f in cur["fields"]}
-        files = []
-        for m in messages or []:
-            for fpath in getattr(m, "files", []) or []:
-                local = _ice_is_local(fpath)
-                fmd = pq.ParquetFile(
-                    fpath if local
-                    else I._open_input_file_any(fpath)).metadata
-                if fmd.num_rows == 0:
-                    continue
-                lo, hi = I._collect_bounds(fmd, name_to_field)
-                files.append(I.DataFileInfo(
-                    "file:" + os.path.abspath(fpath) if local else fpath,
-                    os.path.getsize(fpath) if local
-                    else I._file_size_any(fpath),
-                    fmd.num_rows,
-                    lower_bounds=lo, upper_bounds=hi))
-        if files:
-            t.append_files(files, summary_extra={"epoch-token": token})
+        self._append(t, md, messages, summary_extra={"epoch-token": token})
 
     def abort(self, messages, batchId: int) -> None:
-        from gobblin_spark.sinks.iceberg import _delete_any
-        for m in messages or []:
-            for f in getattr(m, "files", []) or []:
-                try:
-                    os.remove(f) if _ice_is_local(f) else _delete_any(f)
-                except OSError:
-                    pass
+        self._delete_staged(messages)

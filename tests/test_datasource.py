@@ -546,12 +546,24 @@ def test_iceberg_datasource_reads_and_prunes(spark, tmp_path):
     r_k = DS._IcebergReader({"path": loc}, sch)
     r_k.prune = [("k", "=", 3)]
     assert len(r_eu._plan()) < n_all and len(r_k._plan()) < n_all
+    # ... and it is the native reader's planner: same file counts
+    for r in (DS._IcebergReader({"path": loc}, sch), r_eu, r_k):
+        t.read(prune_filters=r.prune)
+        assert len(r._plan()) == t.last_scan["files_scanned"]
 
     # snapshot_id option time-travels
     s1 = t.snapshots()[0]["snapshot-id"]
     tt = (spark.read.format("gobblin_iceberg").option("path", loc)
           .option("snapshot_id", str(s1)).load())
     assert tt.count() == 12
+    # an unknown snapshot id is named on both faces
+    with _pytest.raises(ValueError,
+                        match="snapshot 12345 not in table history"):
+        t.read(snapshot_id=12345)
+    with _pytest.raises(Exception,
+                        match="snapshot 12345 not in table history"):
+        (spark.read.format("gobblin_iceberg").option("path", loc)
+         .option("snapshot_id", "12345").load().collect())
 
     # branch refs resolve; empty-table refs read empty, not main
     t.create_branch("audit")
@@ -561,6 +573,13 @@ def test_iceberg_datasource_reads_and_prunes(spark, tmp_path):
     assert br.count() == 36
     assert (spark.read.format("gobblin_iceberg")
             .option("path", loc).load().count() == 24)
+    # snapshot_id AND ref is ambiguous on both faces, never one of them
+    with _pytest.raises(ValueError, match="snapshot_id OR ref"):
+        t.read(snapshot_id=s1, ref="audit")
+    with _pytest.raises(Exception, match="snapshot_id OR ref"):
+        (spark.read.format("gobblin_iceberg").option("path", loc)
+         .option("ref", "audit").option("snapshot_id", str(s1))
+         .load().collect())
 
     # the delete-file gate is honest: merge-on-read needs the native
     # reader, never a silently wrong connector result
@@ -638,6 +657,10 @@ def test_iceberg_datasource_bounds_pruning(spark, tmp_path):
     r2 = DS._IcebergReader({"path": loc}, df.schema)
     r2.prune = [("v", "<", 5.0)]
     assert len(r2._plan()) < n_all
+    # one planner: the native reader keeps the same files
+    for rr in (DS._IcebergReader({"path": loc}, df.schema), r, r2):
+        t.read(prune_filters=rr.prune)
+        assert len(rr._plan()) == t.last_scan["files_scanned"]
     # values stay exact through the full engine path
     DS.register(spark)
     got = (spark.read.format("gobblin_iceberg").option("path", loc)

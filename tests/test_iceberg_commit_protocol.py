@@ -309,13 +309,11 @@ def test_dsv2_reader_probes_past_stale_hint(spark, tmp_path):
     faces serving an older table than IcebergTable.read() (divergent
     views), and a regressed hint must not regress the streaming
     offset."""
-    from gobblin_spark.sources.datasource import _ice_read_md
-
     t, df = _mk(spark, tmp_path, "dsv2probe")
     t.append_dataframe(df)                  # v3
     seq3 = t.metadata()["last-sequence-number"]
     t._write_bytes(f"{t.location}/metadata/version-hint.text", b"2")
-    md = _ice_read_md(t.location)
+    md = IcebergTable(None, t.location).metadata()
     assert md["last-sequence-number"] == seq3
     # hint missing entirely: probe from zero (orphaned first commit)
     mdir = os.path.join(t.location.replace("file:", ""), "metadata")
@@ -323,10 +321,11 @@ def test_dsv2_reader_probes_past_stale_hint(spark, tmp_path):
     crc = os.path.join(mdir, ".version-hint.text.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    assert _ice_read_md(t.location)["last-sequence-number"] == seq3
+    assert IcebergTable(None, t.location).metadata()[
+        "last-sequence-number"] == seq3
     # an empty location still raises (table-exists validation)
     with pytest.raises(Exception):
-        _ice_read_md(str(tmp_path / "nowhere"))
+        IcebergTable(None, str(tmp_path / "nowhere")).metadata()
 
 
 def test_dsv2_reader_recovers_lost_hint_on_pruned_table(spark,
@@ -336,8 +335,6 @@ def test_dsv2_reader_recovers_lost_hint_on_pruned_table(spark,
     walking up from v1 would misread a pruned table as empty and fail
     every batch/stream read until the hint is restored by hand."""
     import time as _time
-
-    from gobblin_spark.sources.datasource import _ice_read_md
 
     df = spark.createDataFrame([(1, "a")], "k long, s string")
     t = IcebergTable.create(spark, str(tmp_path / "dsv2pruned"),
@@ -352,14 +349,15 @@ def test_dsv2_reader_recovers_lost_hint_on_pruned_table(spark,
     crc = os.path.join(mdir, ".version-hint.text.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    md = _ice_read_md(t.location)
+    md = IcebergTable(None, t.location).metadata()
     assert md["last-sequence-number"] == want_seq
     # a torn top claim is skipped during the recovery listing too
     top = IcebergTable(spark, t.location)._version()
     with open(os.path.join(mdir, f"v{top + 1}.metadata.json"),
               "wb") as fh:
         fh.write(b'{"torn')
-    assert _ice_read_md(t.location)["last-sequence-number"] == want_seq
+    assert IcebergTable(None, t.location).metadata()[
+        "last-sequence-number"] == want_seq
 
 
 def test_stale_hint_at_pruned_version_recovers(spark, tmp_path):
@@ -369,8 +367,6 @@ def test_stale_hint_at_pruned_version_recovers(spark, tmp_path):
     both the native reader and the DSv2 face must recover from the
     directory listing instead of failing the read."""
     import time as _time
-
-    from gobblin_spark.sources.datasource import _ice_read_md
 
     df = spark.createDataFrame([(1, "a")], "k long, s string")
     t = IcebergTable.create(spark, str(tmp_path / "stalehint"),
@@ -386,7 +382,8 @@ def test_stale_hint_at_pruned_version_recovers(spark, tmp_path):
     t2 = IcebergTable(spark, t.location)
     assert t2.metadata()["last-sequence-number"] == want
     assert t2.read().count() == 6
-    assert _ice_read_md(t.location)["last-sequence-number"] == want
+    assert IcebergTable(None, t.location).metadata()[
+        "last-sequence-number"] == want
 
 
 def test_probe_and_recovery_on_remote_scheme(spark, tmp_path):

@@ -1689,24 +1689,6 @@ def test_simhash_validates_before_building(spark):
     assert spark._jsc.sc().getPersistentRDDs().size() == before
 
 
-def test_contamination_shuffle_path_matches_broadcast(spark):
-    """Audit r8: broadcast_benchmark=False (the documented huge-
-    benchmark degrade path) returns identical results."""
-    from gobblin_spark.functions.dedup import contamination_check
-
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps"), (2, "lorem ipsum dolor sit"),
-         (3, None)], "doc_id long, text string")
-    bench = spark.createDataFrame(
-        [("quick brown fox runs",)], "text string")
-    a = sorted(map(tuple, contamination_check(
-        docs, bench, "doc_id", "text").collect()))
-    b = sorted(map(tuple, contamination_check(
-        docs, bench, "doc_id", "text",
-        broadcast_benchmark=False).collect()))
-    assert a == b and len(a) == 3
-
-
 def test_semantic_dedup_zero_norm_and_dup_ids(spark):
     """Audit r8: an all-zero embedding must not crash the blas pair step
     or silently diverge from the Column self-join reference, and
