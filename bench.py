@@ -1,20 +1,20 @@
-"""Benchmark driver: headline queries at sf0.1, one JSON line to stdout.
+"""Benchmark driver and the one measurement core the scripts share.
 
-Runs every ``gobblin_spark.queries.HEADLINE`` query against
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints:
+``python bench.py`` runs every ``gobblin_spark.queries.HEADLINE`` query
+against ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
+``local[$SPARK_GRAFT_CPUS]`` in the configuration the engine ships
+with, and prints one JSON line (``headline_line``): the total and
+per-query walls, the sf, total shuffle MB, and the parallel machine
+calibration before and after with its ``drift`` flag. Each query
+executes through a ``noop`` write — full distributed execution, no
+driver collect skew. Per-query telemetry (input rows, shuffle write,
+spill, peak memory from Spark's status REST API, diffed between
+queries) goes to ``BENCH_DETAILS.json`` so regressions show up as
+*shuffle growth*, not just wall time.
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1,
-     "query_details": {"q1_pricing_summary":
-         {"sec": s, "input_rows": n, "shuffle_write_bytes": b,
-          "rows_per_sec": r}, ...}}
-
-Each query executes through a ``noop`` write — full distributed
-execution, no driver collect skew in the timing. ``query_details``
-comes from Spark's own status REST API (per-stage input records and
-shuffle write bytes, diffed between queries) so round-over-round
-regressions show up as *shuffle growth*, not just wall time.
+``scripts/time_query.py``, ``dump_plans.py`` and ``job_timeline.py``
+are thin CLIs over ``session``, ``warm``, ``time_noop`` and
+``_StatusApi`` below.
 """
 
 from __future__ import annotations
@@ -25,6 +25,61 @@ import re
 import sys
 import time
 import urllib.request
+
+ROOT = os.path.dirname(os.path.abspath(__file__))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# codegen warm-up SF: identical generated classes, ~100x less data
+WARM_DIR = "/root/testdata/sf0.001"
+# calibration ratio beyond which two samples disagree — a run whose
+# pre/post samples (or two rounds whose samples) differ by more is
+# machine drift, not a regression or a win
+DRIFT_BOUND = 1.2
+
+
+def session(app: str, ui: bool = False):
+    """The measurement session: the engine's own defaults
+    (``local[$SPARK_GRAFT_CPUS]``, as many shuffle partitions). The UI
+    stays off unless REST telemetry is wanted: its listener and web
+    server add 0.05-0.3 s per query (A/B-measured at sf0.1)."""
+    from gobblin_spark.session import get_spark
+
+    return get_spark(app, extra_conf={
+        "spark.ui.enabled": str(ui).lower(),
+        "spark.ui.showConsoleProgress": "false"})
+
+
+def cli(main, app: str, ui: bool = False) -> int:
+    """Run a script's ``main(argv, spark)`` on its own ``session``."""
+    spark = session(app, ui)
+    try:
+        return main(sys.argv[1:], spark)
+    finally:
+        spark.stop()
+
+
+def query(name: str):
+    from gobblin_spark.queries import QUERIES, TELEMETRY_ONLY
+
+    return QUERIES.get(name) or TELEMETRY_ONLY[name]
+
+
+def time_noop(spark, name: str, sf_dir: str | None = None) -> float:
+    """Wall seconds of one plan build + noop-write execution."""
+    fn = query(name)
+    t0 = time.perf_counter()
+    fn(spark, sf_dir or SF_DIR).write.mode("overwrite").format("noop").save()
+    return time.perf_counter() - t0
+
+
+def warm(spark, names) -> None:
+    """Run each plan shape once at WARM_DIR so timed runs hit the
+    codegen cache (the 64-aggregate MinHash stage alone costs ~3 s of
+    one-time Janino compilation otherwise)."""
+    for name in names:
+        try:
+            time_noop(spark, name, WARM_DIR)
+        except Exception:
+            pass  # a query that only works at the bench SF still times
 
 
 class _StatusApi:
@@ -42,19 +97,23 @@ class _StatusApi:
         except Exception:
             pass
 
-    def _stages(self):
+    def _get(self, path: str):
         if not self.base:
             return None
         try:
-            with urllib.request.urlopen(f"{self.base}/stages?status=complete",
+            with urllib.request.urlopen(f"{self.base}/{path}",
                                         timeout=5) as r:
                 return json.loads(r.read())
         except Exception:
             return None
 
+    def jobs(self):
+        """Every succeeded job (id, submission/completion, stages)."""
+        return self._get("jobs?status=succeeded")
+
     def snapshot(self):
         """Metrics of stages completed since the previous snapshot."""
-        stages = self._stages()
+        stages = self._get("stages?status=complete")
         if stages is None:
             return None
         fresh = [s for s in stages
@@ -81,17 +140,12 @@ class _StatusApi:
 
 
 def _machine_calibration() -> tuple[float, float]:
-    """Machine-speed fingerprint (verdict-r9 #5): a fixed CPU
-    workload (matmul + FFT over a seeded array) on ONE thread and on
-    16 CONCURRENT threads. Two snapshots' calibration ratios separate
-    MACHINE drift (walls and calibration move together — r8 and r9
-    each lost a round of wall comparisons to exactly this) from
-    genuine plan regressions (walls move, calibration doesn't);
-    bench_diff refuses wall flags across a drift boundary. The
-    PARALLEL axis is the one that matters: two same-session r10 runs
-    showed 2-3x per-query wall swings with a FLAT single-thread
-    calibration — firecracker co-tenancy steals cores, not cycles, so
-    only an oversubscribed fingerprint moves with it."""
+    """Machine-speed fingerprint: a fixed CPU workload (matmul + FFT
+    over a seeded array) on ONE thread and on 16 CONCURRENT threads.
+    Calibration that moves with the walls is machine drift, walls
+    that move alone are the plans. The PARALLEL axis is the one that
+    matters: co-tenancy steals cores, not cycles, so same-session
+    runs showed 2-3x wall swings under a FLAT single-thread sample."""
     import threading
 
     import numpy as np
@@ -123,158 +177,100 @@ def _machine_calibration() -> tuple[float, float]:
     return round(best, 4), round(best_par, 4)
 
 
+def drifted(pre: float, post: float) -> bool:
+    """True when two calibration samples disagree beyond DRIFT_BOUND."""
+    return max(pre, post) / min(pre, post) > DRIFT_BOUND
+
+
+def headline_line(timings: dict[str, float], sf: float, shuffle_mb: float,
+                  calib_par_pre: float, calib_par_post: float) -> str:
+    """The final stdout line. The driver tail-captures only ~2 KB
+    (round 3 lost its bench to an oversized line), so separators are
+    compact and walls carry 2 decimals: min-of-2 walls swing +/-20%
+    run to run, so the millisecond digit carries nothing. The
+    parallel calibration rides pre AND post: a min of the two hid a
+    throttle window that opened mid-run."""
+    return json.dumps({
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(timings.values()), 2),
+        "unit": "sec",
+        "queries": {n: round(s, 2) for n, s in timings.items()},
+        "sf": sf,
+        # the one machine-independent axis: wall clock drifts up to
+        # +/-30% with co-tenant load while shuffles stay byte-flat
+        "shuffle_mb_total": shuffle_mb or None,
+        "calib_par_pre": calib_par_pre,
+        "calib_par_post": calib_par_post,
+        "drift": drifted(calib_par_pre, calib_par_post),
+    }, separators=(",", ":"))
+
+
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
+    from gobblin_spark.queries import HEADLINE, TELEMETRY_ONLY
+
+    m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1)) if m else -1.0
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from gobblin_spark.queries import HEADLINE, QUERIES, TELEMETRY_ONLY
-    from gobblin_spark.session import PLAN_HEAVY_CONF, get_spark
-
-    # Timing session runs with the UI OFF: the status listener +
-    # web server add 0.05-0.3 s per query (A/B-measured at sf0.1) and
-    # polluted round 3's numbers vs round 2. The REST telemetry the
-    # details file needs comes from a second, separately-timed pass.
-    # PLAN_HEAVY_CONF (r14): the bench session keeps constraint
-    # propagation off — the r13 rounds timed with it off as a global
-    # engine default; the default moved back to scale-safe ON
-    # (verdict-r13 #3), and carrying the conf HERE keeps the timed
-    # configuration identical to r13's so round-over-round walls stay
-    # comparable. The bench wall it protects is driver plan-build
-    # time, a per-query constant, not an execution-path difference.
-    spark = get_spark("gobblin-spark-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus,
-                      extra_conf={"spark.ui.enabled": "false",
-                                  **PLAN_HEAVY_CONF})
-    # Warm the JVM/codegen paths so timings measure the engine, not
-    # Janino: each headline plan shape is executed once at the smallest
-    # SF (identical generated classes, ~100x less data), so the timed
-    # runs below hit the codegen cache. The 64-aggregate MinHash stage
-    # alone costs ~3s of one-time compilation otherwise.
-    warm_dir = "/root/testdata/sf0.001"
-    for name in HEADLINE:
-        try:
-            QUERIES[name](spark, warm_dir).write.mode("overwrite").format(
-                "noop").save()
-        except Exception:
-            pass  # a query that only works at the bench SF still times below
-
+    spark = session("gobblin-spark-bench")
+    warm(spark, HEADLINE)
     calib_pre, calib_par_pre = _machine_calibration()
-
     # min-of-2 per query: single-shot wall clocks at sf0.1 swing
     # +/-20% run-to-run (GC, page cache, task placement) — enough to
-    # fake regressions in the round-over-round diff. The minimum of
-    # two back-to-back runs is the stable engine-cost estimate.
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop").save()
-            sec = time.time() - t0
-            best = sec if best is None else min(best, sec)
-        timings[name] = round(best, 3)
+    # fake regressions in the round-over-round diff
+    timings = {n: min(time_noop(spark, n) for _ in range(2))
+               for n in HEADLINE}
     spark.stop()
     calib_post, calib_par_post = _machine_calibration()
-    calib = min(calib_pre, calib_post)
-    calib_par = min(calib_par_pre, calib_par_post)
 
     # Telemetry pass: fresh session with the UI on; per-query stage
-    # metrics (input rows / shuffle write) come from the status REST
-    # API. Plans are deterministic so the byte counts transfer to the
-    # timed pass; the wall clocks recorded here are NOT the headline.
+    # metrics come from the status REST API. Plans are deterministic
+    # so the byte counts transfer to the timed pass; the wall clocks
+    # recorded here are NOT the headline. TELEMETRY_ONLY entries ride
+    # this pass alone (fixture-dominated, never in the headline) so
+    # the shuffle/spill axes of expensive-by-design operators stay
+    # visible round over round.
     details: dict[str, dict] = {}
     details_enabled = os.environ.get("SPARK_GRAFT_BENCH_DETAILS", "1") != "0"
     if details_enabled:
-        spark = get_spark("gobblin-spark-bench-telemetry",
-                          master=f"local[{cpus}]", shuffle_partitions=cpus,
-                          extra_conf={"spark.ui.enabled": "true",
-                                      "spark.ui.port": "4049",
-                                      **PLAN_HEAVY_CONF})
+        spark = session("gobblin-spark-bench-telemetry", ui=True)
         api = _StatusApi(spark)
         api.snapshot()
-        # TELEMETRY_ONLY entries ride this pass alone: their walls are
-        # recorded here (fixture-dominated, never in the headline) so
-        # the shuffle/spill axes of expensive-by-design operators —
-        # the delete-heavy changelog — stay visible round over round
         for name in list(HEADLINE) + list(TELEMETRY_ONLY):
-            fn = QUERIES.get(name) or TELEMETRY_ONLY[name]
-            t0 = time.time()
             try:
-                fn(spark, sf_dir).write.mode("overwrite").format(
-                    "noop").save()
+                sec = time_noop(spark, name)
             except Exception as ex:
-                # record the failure instead of silently dropping the
-                # entry — a TELEMETRY_ONLY query that starts erroring
-                # would otherwise just vanish from the sidecar and
-                # its shuffle/spill visibility with it
+                # record the failure instead of dropping the entry, and
+                # re-baseline so its stages are not the next query's
                 details[name] = {"error": f"{type(ex).__name__}: {ex}"[:300]}
                 print(f"telemetry pass: {name} failed: "
                       f"{type(ex).__name__}", file=sys.stderr)
-                # re-baseline: the failed query's completed stages
-                # must not be attributed to the NEXT query's metrics
                 api.snapshot()
                 continue
-            sec = round(time.time() - t0, 3)
             snap = api.snapshot()
             if snap is not None:
                 details[name] = {
-                    "sec_timed_pass": timings.get(name),
-                    "sec_telemetry_pass": sec,
-                    "input_rows": snap["input_rows"],
-                    "shuffle_write_bytes": snap["shuffle_write_bytes"],
-                    "memory_spill_bytes": snap["memory_spill_bytes"],
-                    "disk_spill_bytes": snap["disk_spill_bytes"],
-                    "peak_execution_memory": snap["peak_execution_memory"],
-                    "rows_per_sec": (
-                        round(snap["input_rows"] / sec) if sec else None),
-                }
+                    "sec_timed_pass": round(timings.get(name, 0), 3) or None,
+                    "sec_telemetry_pass": round(sec, 3), **snap,
+                    "rows_per_sec": round(snap["input_rows"] / sec)}
+        spark.stop()
 
-    total = round(sum(timings.values()), 3)
-    # The driver tail-captures only ~2 KB of stdout: keep the final line
-    # compact (metric/value/queries/sf) and park the per-query REST
-    # telemetry in a sidecar file (round 3's inline details pushed the
-    # line past the buffer and the whole bench was lost as parsed:null).
     # a details-disabled run (e.g. the lower-core-count scaling pass)
     # must not clobber the populated sidecar of the main run
     if details_enabled:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAILS.json"), "w") as f:
-            json.dump({"sf": sf, "total_sec": total,
-                       "calib_sec": calib, "calib_par_sec": calib_par,
+        with open(os.path.join(ROOT, "BENCH_DETAILS.json"), "w") as f:
+            json.dump({"sf": sf, "total_sec": round(sum(timings.values()), 3),
+                       "calib_sec": min(calib_pre, calib_post),
+                       "calib_par_sec": min(calib_par_pre, calib_par_post),
                        "calib_sec_pre": calib_pre,
                        "calib_sec_post": calib_post,
                        "calib_par_sec_pre": calib_par_pre,
                        "calib_par_sec_post": calib_par_post,
+                       "drift": drifted(calib_par_pre, calib_par_post),
                        "query_details": details},
                       f, indent=1)
-    # the one machine-independent axis rides IN the headline line
-    # (~30 bytes): wall clock drifts up to ±30% with co-tenant load
-    # (r6 verdict; two r7 re-runs reproduced it with byte-flat
-    # shuffles), so the recorded BENCH_r{N}.json should carry the
-    # signal that distinguishes a slow machine from a slow plan
     shuffle_mb = round(sum(
         d.get("shuffle_write_bytes", 0) for d in details.values()) / 1e6, 2)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "shuffle_mb_total": shuffle_mb or None,
-                # the machine-epoch stamps ride in the recorded line
-                # so future rounds can refuse wall diffs across drift
-                "calib_sec": calib,
-                "calib_par_sec": calib_par,
-            }
-        )
-    )
-    spark.stop()
+    print(headline_line(timings, sf, shuffle_mb, calib_par_pre,
+                        calib_par_post))
     return 0
 
 

@@ -11,6 +11,11 @@ place so a cluster deployment only overrides sizes, not semantics:
   tiny tasks.
 - ``maxPartitionBytes`` 128 MiB: scan parallelism at TB scale comes from
   file splits, not repartition().
+- Constraint propagation stays ON (the Spark default): it infers
+  IsNotNull under inner joins, so null join keys die at the scan
+  instead of crossing the exchange (SPARK-19846). Its cost is a
+  per-query driver constant; the bench and the measurement scripts
+  (``bench.session``) time this same configuration.
 
 Reference context: Gobblin sizes work with bin-packing heuristics
 (gobblin-api/.../workunit/WorkUnitBinPacker.java:25,
@@ -25,18 +30,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_LOCAL_CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-# Opt-out set for PLAN-HEAVY sessions (many wide-aggregate plan builds
-# over small inputs: bench.py, scripts/time_query.py, ab_conf.py,
-# dump_plans.py): constraint propagation re-derives constraint sets
-# over every operator's expressions on every plan — a driver-side
-# constant per query that dominates when the data is ~0.6 MB and the
-# session builds hundreds of 64-term aggregate plans (r13 A/B: 0.85x
-# total across 33 queries). The ENGINE default keeps propagation ON
-# (scale-safe: IsNotNull inference under joins sheds null keys before
-# the exchange); pass this as extra_conf only where plan-build wall is
-# the measured bottleneck.
-PLAN_HEAVY_CONF = {"spark.sql.constraintPropagation.enabled": "false"}
 
 
 def get_spark(
@@ -99,19 +92,6 @@ def get_spark(
         # the write-heavy roundtrips run 0.95x total vs snappy
         # (fewer bytes through the scratch FS) ---
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # --- optimizer: constraint propagation stays ON (the Spark
-        # default). r13 shipped it globally disabled for driver
-        # plan-build latency (0.85x across 33 queries at sf0.1,
-        # simhash 0.73x, tfidf 0.31x — re-deriving constraint sets
-        # over the 64-term aggregates is pure planning cost), but the
-        # win is a per-query driver CONSTANT while the cost scales
-        # with data: without propagation the optimizer stops inferring
-        # IsNotNull under inner joins, so null-heavy join keys ship to
-        # the exchange instead of dying at the scan (SPARK-19846). A
-        # 100 TB engine default must point the scale-safe way
-        # (verdict-r13 #3); plan-heavy sessions (the bench and
-        # measurement scripts, whose wall is dominated by plan builds
-        # over ~0.6 MB scans) opt out via PLAN_HEAVY_CONF below ---
         # --- codegen: the wide-aggregate operators (64-min MinHash,
         # 64-sum SimHash) compile large generated classes; the default
         # 100-entry cache evicts them across a multi-query session and

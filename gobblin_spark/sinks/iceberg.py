@@ -1356,8 +1356,21 @@ class IcebergTable:
             # them and later JVM reads throw ChecksumException —
             # drop the sidecar so Hadoop skips verification
             _drop_crc_sidecar(lp)
-            with open(lp, "wb") as fh:
-                fh.write(data)
+            # write-then-rename: an in-place rewrite truncates first,
+            # and a concurrent reader of the hint saw the empty file
+            # for as long as the writing thread waited on the GIL
+            # (60+ ms under a four-writer stress)
+            tmp = f"{lp}.write-{uuid.uuid4().hex[:12]}.tmp"
+            try:
+                with open(tmp, "wb") as fh:
+                    fh.write(data)
+                os.replace(tmp, lp)
+            except BaseException:
+                try:
+                    os.remove(tmp)
+                except OSError:
+                    pass
+                raise
             return len(data)
         fs, p, _ = self._fs(path)
         out = fs.create(p, True)

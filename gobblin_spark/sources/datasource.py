@@ -1268,18 +1268,20 @@ class _IcebergFilePartition(InputPartition):
         self.col_ids = col_ids
 
 
-def _file_partitions(t, md: dict,
+def _file_partitions(t, md: dict, sid: int | None,
                      entries: list[dict]) -> list[_IcebergFilePartition]:
     """Planned data-file entries → the read units both DSv2 readers
-    serve. Identity-partition values come from each file's hive path
-    through the file's OWN spec (the dir key can be ANY historical
-    name of the column) and attach under the CURRENT schema's name —
-    the target names the readers resolve, so a renamed partition
-    column keyed by its write-time name would null-fill (audit r8)."""
+    serve, in the schema of snapshot *sid* (None: the current one).
+    Identity-partition values come from each file's hive path through
+    the file's OWN spec (the dir key can be ANY historical name of the
+    column) and attach under the read schema's name — the target
+    names the readers resolve, so a renamed partition column keyed by
+    its write-time name would null-fill (audit r8)."""
     from gobblin_spark.sinks.iceberg import _parse_partition_value
 
-    col_ids = ({f["name"]: f["id"]
-                for f in t._ice_schema_for(None, md)["fields"]}
+    fields = t._ice_schema_for(sid, md)["fields"]
+    names = {f["id"]: f["name"] for f in fields}
+    col_ids = ({f["name"]: f["id"] for f in fields}
                if t._needs_id_resolution(md) else None)
     hist_names: dict[int, set] = {}
     for s_ in md["schemas"]:
@@ -1301,8 +1303,9 @@ def _file_partitions(t, md: dict,
             key = next((n for n in hist_names[si["source_id"]]
                         if n in segs), None)
             if key is not None:
-                attach.append((si["source_name"], _parse_partition_value(
-                    segs[key], si["source_type"])))
+                attach.append((
+                    names.get(si["source_id"], si["source_name"]),
+                    _parse_partition_value(segs[key], si["source_type"])))
         parts.append(_IcebergFilePartition(path, attach, col_ids))
     return parts
 
@@ -1353,12 +1356,17 @@ def _file_batches(part: _IcebergFilePartition, target) -> Iterator:
             for f in target], schema=target)
 
 
+def _read_snapshot(t, md: dict, options) -> int | None:
+    """The snapshot the ``snapshot_id`` / ``ref`` options select —
+    the one resolution both the schema and the scan plan from."""
+    return t._snapshot_id(md, (int(options["snapshot_id"])
+                               if "snapshot_id" in options else None),
+                          options.get("ref"))
+
+
 class _IcebergReader(DataSourceReader):
     def __init__(self, options, schema: StructType):
-        self.location = options["path"]
-        self.snapshot_id = (int(options["snapshot_id"])
-                            if "snapshot_id" in options else None)
-        self.ref = options.get("ref")
+        self.options = options
         self.schema_ = schema
         self.prune: list[tuple] = []  # (col, op, value) source space
 
@@ -1379,9 +1387,9 @@ class _IcebergReader(DataSourceReader):
     def _plan(self):
         from gobblin_spark.sinks.iceberg import IcebergTable
 
-        t = IcebergTable(None, self.location)
+        t = IcebergTable(None, self.options["path"])
         md = t.metadata()
-        sid = t._snapshot_id(md, self.snapshot_id, self.ref)
+        sid = _read_snapshot(t, md, self.options)
         by_name = {f["name"]: f
                    for f in t._ice_schema_for(sid, md)["fields"]}
         preds = [(by_name[c], op, v) for c, op, v in self.prune
@@ -1392,7 +1400,8 @@ class _IcebergReader(DataSourceReader):
             raise NotImplementedError(
                 "table has delete files — use IcebergTable.read "
                 "(merge-on-read) instead of the connector face")
-        return _file_partitions(t, md, t._prune_entries(md, entries, preds))
+        return _file_partitions(t, md, sid,
+                                t._prune_entries(md, entries, preds))
 
     def partitions(self):
         try:
@@ -1420,12 +1429,16 @@ class GobblinIcebergDataSource(DataSource):
         return "gobblin_iceberg"
 
     def schema(self):
-        from gobblin_spark.sinks.iceberg import IcebergTable, _spark_struct
+        """The schema of the snapshot the options select: a time-travel
+        read answers under that snapshot's column names, as
+        ``IcebergTable.read(snapshot_id=)`` does."""
+        from gobblin_spark.sinks.iceberg import IcebergTable
 
         t = IcebergTable(None, self.options["path"])
+        md = t.metadata()
         return StructType([
             StructField(f.name, f.dataType)
-            for f in _spark_struct(t._ice_schema_for(None, t.metadata()))])
+            for f in t._schema_for(_read_snapshot(t, md, self.options), md)])
 
     def reader(self, schema: StructType) -> _IcebergReader:
         return _IcebergReader(self.options, schema)
@@ -1710,7 +1723,7 @@ class _IcebergStreamReader(SimpleDataSourceStreamReader):
                     "streaming read over delete-carrying tables")
             window += [e for e in entries
                        if era_lo < e["sequence_number"] <= era_hi]
-        parts = {p.path: p for p in _file_partitions(t, md, window)}
+        parts = {p.path: p for p in _file_partitions(t, md, None, window)}
         return [parts[p] for p in sorted(parts)]
 
     def _rows(self, lo: int, hi: int) -> Iterator[Tuple]:

@@ -30,6 +30,9 @@ import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from bench import DRIFT_BOUND  # noqa: E402
 
 
 def load_round_timings() -> tuple[dict[int, dict[str, float]],
@@ -59,10 +62,12 @@ def load_round_timings() -> tuple[dict[int, dict[str, float]],
                     queries = None
         if queries:
             rounds[rnum] = {k: float(v) for k, v in queries.items()}
-            if line.get("calib_sec"):
-                calibs[rnum] = (float(line["calib_sec"]),
-                                float(line.get("calib_par_sec") or 0)
-                                or None)
+            # rounds up to r14 stamp (calib_sec, calib_par_sec); later
+            # lines carry only the parallel pre/post pair
+            par = line.get("calib_par_sec") or min(
+                line.get("calib_par_pre") or 0, line.get("calib_par_post") or 0)
+            if line.get("calib_sec") or par:
+                calibs[rnum] = (line.get("calib_sec"), par or None)
     return rounds, calibs
 
 
@@ -71,9 +76,9 @@ def load_details(path: str):
         doc = json.load(open(path))
         calib = ((doc["calib_sec"], doc.get("calib_par_sec"))
                  if doc.get("calib_sec") else None)
-        return doc.get("query_details", {}), calib
+        return doc.get("query_details", {}), calib, bool(doc.get("drift"))
     except Exception:
-        return {}, None
+        return {}, None, False
 
 
 def main() -> int:
@@ -87,7 +92,7 @@ def main() -> int:
     args = ap.parse_args()
 
     rounds, calibs = load_round_timings()
-    cur_details, cur_calib = load_details(args.current)
+    cur_details, cur_calib, run_drift = load_details(args.current)
     cur = {n: d.get("sec_timed_pass") for n, d in cur_details.items()
            if d.get("sec_timed_pass") is not None}
     if not cur and rounds:
@@ -110,9 +115,9 @@ def main() -> int:
     # r8 and r9 each burned a round on exactly these phantom flags.
     # The PARALLEL axis dominates: co-tenancy steals cores, so the
     # 16-thread fingerprint moves while the single-thread one stays
-    # flat (proven by two same-session r10 runs). Shuffle/spill
-    # comparisons are machine-independent and stay on.
-    DRIFT_BOUND = 1.2
+    # flat (proven by two same-session r10 runs). A run whose own
+    # pre/post samples disagree (``drift``) is refused the same way.
+    # Shuffle/spill comparisons are machine-independent and stay on.
     prior_calib = calibs.get(prior_round)
     drift_ratio = None
     machine_drift = False
@@ -122,6 +127,7 @@ def main() -> int:
                   if a and b]
         drift_ratio = round(max(ratios), 3) if ratios else None
         machine_drift = bool(drift_ratio) and drift_ratio > DRIFT_BOUND
+    machine_drift = machine_drift or run_drift
 
     flagged, improved, first_time = [], [], []
     for name, sec in sorted(cur.items()):
@@ -192,9 +198,6 @@ def main() -> int:
         "machine_drift_ratio": drift_ratio,
         "machine_drift": machine_drift,
         "n_compared": len(cur) - len(first_time),
-        # bench timings switched to min-of-2 in round 5; BENCH_r*.json
-        # for rounds <= 4 are single-shot, so cross-method 'improved'
-        # rows overstate gains by the old +/-20% noise band
         "timing_method": "min_of_2",
         "flagged": flagged,
         "improved": improved,
@@ -213,12 +216,9 @@ def main() -> int:
         out["wall_flags_suppressed_machine_drift"] = suppressed
         out["note_drift"] = (
             f"machine calibration moved {drift_ratio}x between rounds "
-            f"(bound {DRIFT_BOUND}) — wall-clock flags suppressed; "
-            "shuffle/spill axes remain authoritative")
-    if prior_round is not None and prior_round <= 4:
-        out["note"] = ("prior round timed single-shot; this round is "
-                       "min-of-2 — improvements are overstated by the "
-                       "old noise band")
+            f"(in-run drift: {run_drift}; bound {DRIFT_BOUND}) — "
+            "wall-clock flags suppressed; shuffle/spill axes remain "
+            "authoritative")
     with open(args.write, "w") as f:
         json.dump(out, f, indent=1)
 
@@ -227,8 +227,6 @@ def main() -> int:
           f"{len(first_time)} first-timers: {', '.join(first_time) or '-'}")
     if "note_drift" in out:
         print(f"  MACHINE DRIFT: {out['note_drift']}")
-    if "note" in out:
-        print(f"  note: {out['note']}")
     for row in flagged:
         print(f"  REGRESSED {row['query']}: {row[f'sec_r{prior_round}']}s -> "
               f"{row['sec']}s ({row['ratio']}x)")

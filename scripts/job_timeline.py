@@ -1,62 +1,36 @@
 """Per-query Spark job timeline: job walls + driver gaps between jobs.
 
-Runs each named query once (after an sf0.001 codegen warm) in a
-UI-enabled session, then reads /api/v1/.../jobs to print each job's
-submission/completion and the GAP since the previous job finished —
-gaps are driver-side work (planning, py4j, python planner rounds,
-metadata IO), the part invisible to stage metrics.
-Usage: python scripts/job_timeline.py <query> [query ...]
+Runs each named query once (after a codegen warm) in a UI-enabled
+bench session, then reads the status API's job list to print each
+job's wall and the GAP since the previous job finished — gaps are
+driver-side work (planning, py4j, python planner rounds, metadata IO),
+the part invisible to stage metrics.
+Usage: python scripts/job_timeline.py [query ...]   (default: HEADLINE)
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import json
+import os
 import sys
-import time
-import urllib.request
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from gobblin_spark.session import get_spark  # noqa: E402
-
-SF_DIR = "/root/testdata/sf0.1"
+import bench  # noqa: E402
+from gobblin_spark.queries import HEADLINE  # noqa: E402
 
 
 def parse_ts(s):
     return dt.datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
 
 
-def main():
-    names = sys.argv[1:]
-    from gobblin_spark.queries import HEADLINE, QUERIES, TELEMETRY_ONLY
-
-    if not names:
-        names = list(HEADLINE)
-    spark = get_spark("job-timeline", shuffle_partitions=32,
-                      extra_conf={"spark.ui.enabled": "true",
-                                  "spark.ui.port": "4058",
-                                  "spark.ui.showConsoleProgress": "false"})
-    base = (f"{spark.sparkContext.uiWebUrl}/api/v1/applications/"
-            f"{spark.sparkContext.applicationId}")
-
-    def jobs():
-        with urllib.request.urlopen(f"{base}/jobs?status=succeeded",
-                                    timeout=5) as r:
-            return json.loads(r.read())
-
-    for n in names:
-        fn = QUERIES.get(n) or TELEMETRY_ONLY.get(n)
-        try:
-            fn(spark, "/root/testdata/sf0.001").write.mode(
-                "overwrite").format("noop").save()
-        except Exception:
-            pass
-        seen = {j["jobId"] for j in jobs()}
-        t0 = time.perf_counter()
-        fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-        wall = time.perf_counter() - t0
-        fresh = sorted((j for j in jobs() if j["jobId"] not in seen),
+def main(argv, spark) -> int:
+    api = bench._StatusApi(spark)
+    for n in argv or HEADLINE:
+        bench.warm(spark, [n])
+        seen = {j["jobId"] for j in api.jobs() or []}
+        wall = bench.time_noop(spark, n)
+        fresh = sorted((j for j in api.jobs() or [] if j["jobId"] not in seen),
                        key=lambda j: j["jobId"])
         print(f"== {n}: wall {wall:.3f}s, {len(fresh)} jobs")
         prev_end = None
@@ -73,8 +47,8 @@ def main():
             prev_end = end
         print(f"   sum(job)={tot_job:.3f}s sum(gaps)={tot_gap:.3f}s"
               f"  pre/post+overhead={wall - tot_job - tot_gap:.3f}s")
-    spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(bench.cli(main, "gobblin-job-timeline", ui=True))

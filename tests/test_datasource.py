@@ -990,6 +990,21 @@ def test_iceberg_dsv2_read_resolves_renames_by_field_id(spark, tmp_path):
         .option("path", loc).load().schema)
     rows = list(sr.readBetweenOffsets({"seq": 0}, {"seq": 1}))
     assert sorted(r[2] for r in rows) == [float(i) for i in range(8)]
+    # a time-travel read answers under the SNAPSHOT's column names, as
+    # the native reader does, and prunes on them the same way
+    s1 = t.snapshots()[0]["snapshot-id"]
+    tt = (spark.read.format("gobblin_iceberg").option("path", loc)
+          .option("snapshot_id", str(s1)).load())
+    assert tt.columns == t.read(snapshot_id=s1).columns == ["k", "s", "v"]
+    assert sorted(r.v for r in tt.filter("v >= 4").collect()) == [
+        4.0, 5.0, 6.0, 7.0]
+    for lo in (4.0, 100.0):
+        r = DS._IcebergReader({"path": loc, "snapshot_id": str(s1)},
+                              tt.schema)
+        r.prune = [("v", ">=", lo)]
+        t.read(snapshot_id=s1, prune_filters=r.prune)
+        assert len(r._plan()) == t.last_scan["files_scanned"]
+    assert t.last_scan["files_scanned"] == 0  # v >= 100 prunes every file
 
 
 def test_iceberg_stream_attaches_identity_partition_values(spark, tmp_path):

@@ -243,23 +243,36 @@ def test_every_oracle_describes_in_duckdb():
 
 def test_bench_line_stays_under_driver_capture():
     """The driver tail-captures ~2 KB of stdout; round 3 lost its bench
-    to an oversized line. Estimate the final JSON line from the current
-    HEADLINE and keep comfortable headroom."""
-    import json as _json
-
+    to an oversized line. Build the real final line from the current
+    HEADLINE with every field at its worst-case width and keep
+    comfortable headroom."""
+    import bench
     from gobblin_spark.queries import HEADLINE, QUERIES
 
     assert set(HEADLINE) <= set(QUERIES)
     assert len(HEADLINE) == len(set(HEADLINE))
-    fake = {
-        "metric": "headline_queries_total_wall",
-        "value": 9999.999,
-        "unit": "sec",
-        "queries": {n: 99.999 for n in HEADLINE},  # worst-case widths
-        "sf": 0.1,
-    }
-    line = _json.dumps(fake)
+    # walls under 100 s each, two decimals that never round away
+    line = bench.headline_line({n: 99.989 for n in HEADLINE}, 0.001,
+                               99999.99, 99.9999, 99.9999)
+    doc = json.loads(line)
+    assert {"metric", "value", "unit", "queries", "sf", "calib_par_pre",
+            "calib_par_post", "drift"} <= set(doc)
     assert len(line) < 1900, f"bench line would be {len(line)} bytes"
+
+
+def test_bench_line_flags_calibration_drift():
+    """A throttle window that opens mid-run shows as pre/post parallel
+    calibration samples that disagree; the line says so instead of
+    hiding it behind their minimum."""
+    import bench
+
+    walls = {"q1_pricing_summary": 0.25}
+    drifted = json.loads(bench.headline_line(walls, 0.1, 1.0, 0.46, 0.93))
+    assert drifted["drift"] is True
+    assert (drifted["calib_par_pre"], drifted["calib_par_post"]) == (0.46,
+                                                                     0.93)
+    quiet = json.loads(bench.headline_line(walls, 0.1, 1.0, 0.93, 0.88))
+    assert quiet["drift"] is False
 
 
 # -- pure-Python media codecs ---------------------------------------
