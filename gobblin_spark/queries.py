@@ -1429,8 +1429,8 @@ def multimodal_decode_wav(spark, sf_dir):
     composed 0.30 s vs fused 0.35 s at sf0.1; fusion only pays when
     the codec dominates (see multimodal_decode_jpeg_color)."""
     docs = load_docs(spark, sf_dir)
-    media = multimodal.synth_wav_media(docs)
-    return multimodal.decode_wav_features(media)
+    media = multimodal.synth_media(docs, "wav")
+    return multimodal.decode_media(media, "wav")
 
 
 @q(
@@ -1462,8 +1462,8 @@ def multimodal_decode_bmp(spark, sf_dir):
     replays the sums in closed form — a byte-real encode→decode round
     trip through the image plumbing."""
     docs = load_docs(spark, sf_dir)
-    media = multimodal.synth_bmp_media(docs)
-    return multimodal.decode_bmp_features(media)
+    media = multimodal.synth_media(docs, "bmp")
+    return multimodal.decode_media(media, "bmp")
 
 
 @q(
@@ -1497,8 +1497,8 @@ def multimodal_decode_png(spark, sf_dir):
     'JPEG/PNG honestly gated' row: PNG is now real, JPEG (needs a DCT
     library) remains the honest gate."""
     docs = load_docs(spark, sf_dir)
-    media = multimodal.synth_png_media(docs)
-    return multimodal.decode_png_features(media)
+    media = multimodal.synth_media(docs, "png")
+    return multimodal.decode_media(media, "png")
 
 
 @q(
@@ -1533,8 +1533,8 @@ def multimodal_decode_jpeg(spark, sf_dir):
     row for grayscale; color (4:4:4 + 4:2:0) and progressive (SOF2)
     have their own entries."""
     docs = load_docs(spark, sf_dir)
-    media = multimodal.synth_jpeg_media(docs)
-    return multimodal.decode_jpeg_features(media)
+    media = multimodal.synth_media(docs, "jpeg")
+    return multimodal.decode_media(media, "jpeg")
 
 
 @q(
@@ -1617,8 +1617,8 @@ def multimodal_decode_jpeg420(spark, sf_dir):
     cadence check); progressive mode decodes too
     (multimodal_decode_jpeg_prog)."""
     docs = load_docs(spark, sf_dir)
-    media = multimodal.synth_jpeg_420_media(docs)
-    return multimodal.decode_jpeg_color_features(media)
+    media = multimodal.synth_media(docs, "jpeg420")
+    return multimodal.decode_media(media, "jpeg420")
 
 
 # ------------------------------------------------------------------
@@ -2014,6 +2014,10 @@ def q5_region_volume(spark, sf_dir):
 # ------------------------------------------------------------------
 
 
+# the publish dir of the last sink_roundtrip_partitioned call
+_SINK_RT_DIR: str | None = None
+
+
 @q(
     "sink_roundtrip_partitioned",
     """
@@ -2029,13 +2033,21 @@ def sink_roundtrip_partitioned(spark, sf_dir):
     (TimeBasedWriterPartitioner.java:59), audit the staged row count,
     publish via atomic rename + _SUCCESS, then aggregate the PUBLISHED
     files — green iff layout + publish preserved every row."""
+    import shutil
     import tempfile
 
     from gobblin_spark.operators import quality
     from gobblin_spark.sinks import publish as P, writers as W
 
+    # the returned frame reads the published dir lazily, so it must
+    # outlive this call: release the PREVIOUS call's dir instead (the
+    # rule IcebergTable.changelog applies to its cached frames)
+    global _SINK_RT_DIR
+    if _SINK_RT_DIR:
+        shutil.rmtree(_SINK_RT_DIR, ignore_errors=True)
+    _SINK_RT_DIR = tempfile.mkdtemp(prefix="gobblin_sink_rt_")
     orders = load_table(spark, sf_dir, "orders")
-    final = tempfile.mkdtemp(prefix="gobblin_sink_rt_") + "/orders"
+    final = _SINK_RT_DIR + "/orders"
     part_df, cols = W.with_time_partitions(orders, "o_orderdate", "month")
     staged = P.stage(part_df, final, partition_by=cols, cluster=True)
     # extracted = the stage write's in-plan Observation (rows entering
@@ -8957,8 +8969,8 @@ def multimodal_decode_jpeg_prog(spark, sf_dir):
     .../converter/EmbeddedExtractor semantics); remaining gates:
     arithmetic coding, hierarchical mode, MP3/video (ffmpeg)."""
     docs = load_docs(spark, sf_dir)
-    media = multimodal.synth_jpeg_prog_media(docs)
-    return multimodal.decode_jpeg_features(media)
+    media = multimodal.synth_media(docs, "jpeg_prog")
+    return multimodal.decode_media(media, "jpeg_prog")
 
 
 @q(
@@ -8993,8 +9005,8 @@ def multimodal_decode_gif(spark, sf_dir):
     GIF). Interlacing, local palettes, and animation remain honest
     gates."""
     docs = load_docs(spark, sf_dir)
-    media = multimodal.synth_gif_media(docs)
-    return multimodal.decode_gif_features(media)
+    media = multimodal.synth_media(docs, "gif")
+    return multimodal.decode_media(media, "gif")
 
 
 @q(
@@ -9208,8 +9220,8 @@ def multimodal_audio_spectral(spark, sf_dir):
     curation pipeline (the segmentation half is
     multimodal_audio_segments); MP3 stays the honest decode gate."""
     docs = load_docs(spark, sf_dir)
-    media = multimodal.synth_wav_media(docs)
-    return multimodal.decode_wav_spectral(media)
+    media = multimodal.synth_media(docs, "wav")
+    return multimodal.decode_media(media, "wav_spectral")
 
 
 @q(
@@ -9243,8 +9255,8 @@ def multimodal_decode_tiff(spark, sf_dir):
     boundary plus multi-clear and KwKwK paths. Remaining TIFF gates:
     big-endian, predictors, tiles, palette/RGB."""
     docs = load_docs(spark, sf_dir)
-    media = multimodal.synth_tiff_media(docs)
-    return multimodal.decode_tiff_features(media)
+    media = multimodal.synth_media(docs, "tiff")
+    return multimodal.decode_media(media, "tiff")
 
 
 @q(

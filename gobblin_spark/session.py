@@ -147,20 +147,22 @@ def local_rows_df(spark, rows, schema):
     0.10 s on a 4-row lookup). Columns are kept ``object``-dtype so
     int64 values never round-trip through float64 (a 63-bit snapshot
     id would silently lose precision) and ``None`` stays a real null.
-    Falls back to the list path if pandas cannot represent the rows."""
+    No rows give the empty JVM relation (an empty python list would
+    still be a python RDD: counting one cost 0.4 s vs 0.1 s). Falls
+    back to the list path if pandas cannot represent the rows."""
     rows = list(rows)
+    if not rows:
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
     try:
-        if rows:
-            import pandas as pd
+        import pandas as pd
 
-            ncol = len(rows[0])
-            pdf = pd.DataFrame({
-                i: pd.Series([r[i] for r in rows], dtype=object)
-                for i in range(ncol)})
-            return spark.createDataFrame(pdf, schema)
+        ncol = len(rows[0])
+        pdf = pd.DataFrame({
+            i: pd.Series([r[i] for r in rows], dtype=object)
+            for i in range(ncol)})
+        return spark.createDataFrame(pdf, schema)
     except Exception:
-        pass
-    return spark.createDataFrame(rows, schema)
+        return spark.createDataFrame(rows, schema)
 
 
 # Width bound for ensure_parallelism: one task per this many bytes of

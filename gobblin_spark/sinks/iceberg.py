@@ -69,6 +69,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, types as T
 
 from gobblin_spark.operators import avro_container as ACF
+from gobblin_spark.session import local_rows_df
 
 _SPARK_TO_ICEBERG = {
     T.BooleanType(): "boolean",
@@ -2466,11 +2467,7 @@ class IcebergTable:
         to_id = (md["current-snapshot-id"] if to_snapshot_id is None
                  else to_snapshot_id)
         if to_id == -1:
-            return self.spark.createDataFrame(
-                self.spark.sparkContext.emptyRDD(),
-                self._schema_for(None, md)
-                .add("_change_type", T.StringType())
-                .add("_commit_snapshot_id", T.LongType()))
+            return self._empty_changelog(self._schema_for(None, md))
         if to_id not in snaps:
             raise ValueError(
                 f"changelog: to_snapshot_id {to_id} is not a retained "
@@ -2681,11 +2678,7 @@ class IcebergTable:
         st = self._schema_for(to_id, md)
         if (not window and not pos_dels and not eq_dels
                 and not any(r for r, *_ in ow_removed)):
-            return self.spark.createDataFrame(
-                self.spark.sparkContext.emptyRDD(),
-                self._schema_for(to_id, md)
-                .add("_change_type", T.StringType())
-                .add("_commit_snapshot_id", T.LongType()))
+            return self._empty_changelog(st)
         # same column-resolution rule as read(): field-ids only when
         # the schema history demands it, else strip the id metadata so
         # this read can't inherit a stale session-wide conf
@@ -2756,7 +2749,6 @@ class IcebergTable:
                 # so the residue's sequence guards stay exact; the
                 # anti-joins themselves are read()'s shared helper —
                 # ONE copy of the spec's sequence-guard semantics
-                from gobblin_spark.session import local_rows_df
                 seq_lk = local_rows_df(
                     self.spark,
                     [(self._path_uri_form(e["info"].path),
@@ -3082,13 +3074,16 @@ class IcebergTable:
                 dels = hit if dels is None else dels.unionByName(hit)
 
         if ins is None:
-            return dels if dels is not None else (
-                self.spark.createDataFrame(
-                    self.spark.sparkContext.emptyRDD(),
-                    T.StructType(list(st.fields))
-                    .add("_change_type", T.StringType())
-                    .add("_commit_snapshot_id", T.LongType())))
+            return dels if dels is not None else self._empty_changelog(st)
         return ins if dels is None else ins.unionByName(dels)
+
+    def _empty_changelog(self, st: T.StructType) -> DataFrame:
+        """An empty changelog frame: ``st`` plus the two change
+        columns."""
+        return local_rows_df(self.spark, [], T.StructType(
+            list(st.fields)
+            + [T.StructField("_change_type", T.StringType()),
+               T.StructField("_commit_snapshot_id", T.LongType())]))
 
     def release_changelog_cache(self) -> int:
         """Unpersist the base frames the last changelog() call cached
@@ -3124,8 +3119,6 @@ class IcebergTable:
         the URI form ``_metadata.file_path`` reports, while manifests
         store the listing's literal Path.toString() —
         see ``_path_uri_form``."""
-        from gobblin_spark.session import local_rows_df
-
         # LocalRelation, not a python-RDD frame: this lookup is built
         # per changelog read and only ever broadcast (see local_rows_df)
         return local_rows_df(
@@ -3751,12 +3744,8 @@ class IcebergTable:
             return df
 
         if not data:
-            # empty JVM RDD, not an empty python list: createDataFrame
-            # over a list builds a PYTHON RDD whose every action spins
-            # python workers — counting an empty table cost 0.4 s
-            # (A/B: 0.44 -> 0.11 s); the JVM path is 0 tasks
-            return _residual(self.spark.createDataFrame(
-                self.spark.sparkContext.emptyRDD(), st))
+            # the empty JVM relation (session.local_rows_df): 0 tasks
+            return _residual(local_rows_df(self.spark, [], st))
         if not spec_src_ids and (not (dels_eq or dels_pos)
                                  or not apply_deletes):
             return _residual(self.spark.read.schema(st).parquet(
@@ -4574,8 +4563,6 @@ class IcebergTable:
         cells are transform-space and per-spec typed (epoch-day dates
         among them), where the Arrow lift's coercion could diverge
         from the pickle path's."""
-        from gobblin_spark.session import local_rows_df
-
         if name == "snapshots":
             rows = [(s["snapshot-id"], s["sequence-number"],
                      s["timestamp-ms"], s["summary"].get("operation"),

@@ -3,7 +3,8 @@
 Runs every ``queries()`` entry at sf0.01 and compares against its
 ``oracle_sql()`` via DuckDB: row count, sorted column names, and an
 order-insensitive value comparison (columns sorted by name, rows sorted,
-values normalized). Exits nonzero if any declared oracle mismatches.
+values normalized). Exits nonzero if any declared oracle mismatches,
+or at once, before DuckDB or Spark starts, if a named entry is unknown.
 
 Usage: python scripts/check_oracles.py [name ...]
 """
@@ -88,13 +89,18 @@ def table_key(rows, cols):
 
 
 def main(only: list[str]) -> int:
+    queries = entrymod.queries()
+    unknown = sorted(set(only) - set(queries))
+    if unknown:
+        # a typo or retired name would otherwise run 0 queries and pass
+        print(f"unknown entries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
     spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
     ran = 0

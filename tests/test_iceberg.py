@@ -4713,3 +4713,22 @@ def test_append_dataframe_groups_matches_sequential_appends(
         raise AssertionError("partitioned table must refuse groups")
     except ValueError:
         pass
+
+
+def test_empty_changelog_keeps_schema_and_has_no_rows(spark, tmp_path):
+    """Both early exits of ``changelog`` — a table with no snapshot
+    yet, and a window that ends where it starts — return the one empty
+    frame: the table schema plus the two change columns, 0 rows."""
+    from gobblin_spark.sinks.iceberg import IcebergTable
+
+    df = spark.createDataFrame([(1, "a")], "k long, s string")
+    t = IcebergTable.create(spark, str(tmp_path / "clempty"), df.schema)
+    want = [("k", "bigint"), ("s", "string"), ("_change_type", "string"),
+            ("_commit_snapshot_id", "bigint")]
+    fresh = t.changelog(None)
+    assert fresh.dtypes == want and fresh.count() == 0
+    t.append_dataframe(df)
+    s1 = t.metadata()["current-snapshot-id"]
+    empty = t.changelog(s1, to_snapshot_id=s1)
+    assert empty.dtypes == want and empty.count() == 0
+    assert t.changelog(None).count() == 1

@@ -181,18 +181,9 @@ def test_multimodal_metadata_matches_hashlib(docs, spark):
     assert row.sha256 == hashlib.sha256(raw).hexdigest()
 
 
-def test_multimodal_decode_fake_deterministic(docs):
-    media = multimodal.documents_as_media(docs.filter(F.col("text").isNotNull()))
-    feats = multimodal.decode_image_features(media, fake=True)
-    a = sorted((r.media_id, r.width, r.height, r.feature_hash) for r in feats.collect())
-    b = sorted((r.media_id, r.width, r.height, r.feature_hash) for r in feats.collect())
-    assert a == b
-    assert all(64 <= w < 256 for _, w, _, _ in a)
-
-
 def test_multimodal_decode_real_raises(docs):
     media = multimodal.documents_as_media(docs.limit(1))
-    feats = multimodal.decode_image_features(media, fake=False)
+    feats = multimodal.decode_image_features(media)
     import pytest as _pytest
 
     with _pytest.raises(Exception):  # NotImplementedError inside the UDF
@@ -1182,38 +1173,37 @@ def test_decode_image_features_real_jpeg_color(spark):
     ids = spark.range(3).select(F.col("id").alias("doc_id"))
     color = {r.media_id: r.feature_hash
              for r in multimodal.decode_image_features(
-                 multimodal.synth_jpeg_color_media(ids)).collect()}
+                 multimodal.synth_media(ids, "jpeg_color")).collect()}
     gray = {r.media_id: r.feature_hash
             for r in multimodal.decode_image_features(
-                multimodal.synth_jpeg_media(ids)).collect()}
+                multimodal.synth_media(ids, "jpeg")).collect()}
     assert color == gray
 
 
 def test_media_roundtrip_features_fused_identity(spark):
-    """The single-crossing fusion (r13 optimization) computes exactly
-    the two-operator composition, row for row, for both kinds."""
-    ids = spark.range(24).select(F.col("id").alias("doc_id"))
-    for kind, synth, decode in (
-        ("wav", multimodal.synth_wav_media,
-         multimodal.decode_wav_features),
-        ("jpeg_color", multimodal.synth_jpeg_color_media,
-         multimodal.decode_jpeg_color_features),
-    ):
-        fused = multimodal.media_roundtrip_features(ids, kind)
-        composed = decode(synth(ids))
-        assert fused.schema == composed.schema, kind
-        assert fused.exceptAll(composed).count() == 0, kind
-        assert composed.exceptAll(fused).count() == 0, kind
+    """The single-crossing fusion computes exactly the two-operator
+    composition ``decode_media(synth_media(...))``, row for row, for
+    every kind in the codec table."""
     import pytest as _pytest
-    with _pytest.raises(ValueError):
-        multimodal.media_roundtrip_features(ids, "mp3")
+
+    ids = spark.range(24).select(F.col("id").alias("doc_id"))
+    for kind in sorted(multimodal._CODECS):
+        fused = multimodal.media_roundtrip_features(ids, kind)
+        composed = multimodal.decode_media(
+            multimodal.synth_media(ids, kind), kind)
+        assert fused.schema == composed.schema, kind
+        assert sorted(fused.collect()) == sorted(composed.collect()), kind
+    for entry in (multimodal.media_roundtrip_features,
+                  multimodal.synth_media, multimodal.decode_media):
+        with _pytest.raises(ValueError):
+            entry(ids, "mp3")
 
 
 def test_decode_image_features_real_jpeg(spark):
     """The magic sniff routes JPEG payloads to the real baseline
     decoder — dims come from the stream's SOF0, not a stub."""
     ids = spark.range(3).select(F.col("id").alias("doc_id"))
-    media = multimodal.synth_jpeg_media(ids)
+    media = multimodal.synth_media(ids, "jpeg")
     feats = {r.media_id: (r.width, r.height)
              for r in multimodal.decode_image_features(media).collect()}
     assert feats == {m: multimodal._jpeg_dims(m) for m in (0, 1, 2)}
@@ -1238,7 +1228,7 @@ def test_decode_image_features_real_bmp(spark):
     """decode_image_features now REALLY decodes BMP payloads (magic
     sniff) instead of raising — dims come from the container header."""
     ids = spark.range(3).select(F.col("id").alias("doc_id"))
-    media = multimodal.synth_bmp_media(ids)
+    media = multimodal.synth_media(ids, "bmp")
     feats = {r.media_id: (r.width, r.height)
              for r in multimodal.decode_image_features(media).collect()}
     assert feats == {m: multimodal._bmp_dims(m) for m in (0, 1, 2)}
@@ -1251,10 +1241,10 @@ def test_decode_image_features_real_png(spark):
     ids = spark.range(3).select(F.col("id").alias("doc_id"))
     png_feats = {r.media_id: (r.width, r.height, r.feature_hash)
                  for r in multimodal.decode_image_features(
-                     multimodal.synth_png_media(ids)).collect()}
+                     multimodal.synth_media(ids, "png")).collect()}
     bmp_feats = {r.media_id: (r.width, r.height, r.feature_hash)
                  for r in multimodal.decode_image_features(
-                     multimodal.synth_bmp_media(ids)).collect()}
+                     multimodal.synth_media(ids, "bmp")).collect()}
     assert png_feats == bmp_feats
 
 

@@ -1,9 +1,13 @@
 """The measurement CLIs (``scripts/time_query.py``, ``dump_plans.py``,
 ``job_timeline.py``) run on bench.py's shared core: driven here on the
-tests' session at the test SF, one cheap headline query each."""
+tests' session at the test SF, one cheap headline query each. The
+oracle sweep (``check_oracles.py``) is checked only for its argument
+guard, which runs before any engine starts."""
+
+import pytest
 
 import bench
-from scripts import dump_plans, job_timeline, time_query
+from scripts import check_oracles, dump_plans, job_timeline, time_query
 
 Q = "q6_forecast_revenue"
 
@@ -58,3 +62,23 @@ def test_job_timeline_lists_the_query(spark, sf_dir, monkeypatch, capsys):
     monkeypatch.setattr(bench, "SF_DIR", sf_dir)
     assert job_timeline.main([Q], spark) == 0
     assert f"== {Q}: wall" in capsys.readouterr().out
+
+
+def test_job_time_is_the_union_of_overlapping_jobs():
+    # a broadcast build (1..3) running inside the main job (0..4), then
+    # an idle second and a last job: 4 + 2 busy seconds, not 4 + 2 + 2
+    assert job_timeline.busy_s([(0.0, 4.0), (1.0, 3.0), (5.0, 7.0)]) == 6.0
+    assert job_timeline.busy_s([(0.0, 2.0), (1.0, 3.0)]) == 3.0
+    assert job_timeline.busy_s([]) == 0.0
+
+
+def test_check_oracles_rejects_an_unknown_name(monkeypatch, capsys):
+    def boom(*a, **k):
+        raise AssertionError("an engine started")
+
+    monkeypatch.setattr(check_oracles.duckdb, "connect", boom)
+    monkeypatch.setattr(check_oracles, "get_spark", boom)
+    assert check_oracles.main(["q6_forecast_revenue", "no_such_entry"]) != 0
+    assert "no_such_entry" in capsys.readouterr().err
+    with pytest.raises(AssertionError, match="an engine started"):
+        check_oracles.main(["q6_forecast_revenue"])

@@ -284,3 +284,23 @@ def test_local_fs_path_authority_parsing(spark, lineitem, tmp_path):
     assert W._local_fs_path(lineitem, "file://localhost/tmp/x") == "/tmp/x"
     assert W._local_fs_path(lineitem, "file://otherhost/tmp/x") is None
     assert W._local_fs_path(lineitem, "hdfs://nn/tmp/x") is None
+
+
+def test_sink_roundtrip_keeps_only_the_last_publish_dir(spark, sf_dir,
+                                                        monkeypatch,
+                                                        tmp_path):
+    """Each call of the catalog's sink round trip publishes into a
+    fresh temp dir its lazy result reads; the next call releases it, so
+    repeated runs hold one dir, not one per call."""
+    import tempfile
+
+    from gobblin_spark import queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(queries, "_SINK_RT_DIR", None)
+    frames = [queries.sink_roundtrip_partitioned(spark, sf_dir)
+              for _ in range(3)]
+    left = [p.name for p in tmp_path.iterdir()]
+    assert len(left) == 1 and left[0].startswith("gobblin_sink_rt_")
+    # the survivor is the last call's: its lazy result still reads
+    assert frames[-1].count() > 0
