@@ -19,6 +19,8 @@ Determinism rules used throughout (so Spark and DuckDB hash-match):
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -64,6 +66,22 @@ def load_docs(spark, sf_dir, bytes_per_task: int | None = None):
             key, ensure_parallelism(load_table(spark, sf_dir, "documents"),
                                     bytes_per_task=bytes_per_task))
     return df
+
+
+# the live scratch directory of each catalog prefix
+_SCRATCH: dict[str, str] = {}
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp directory for one call of a catalog entry. The
+    entry's lazy result may still read it after the call returns, so
+    the NEXT call with the same *prefix* releases it: each prefix holds
+    at most one directory. Collect a result before calling its entry
+    again."""
+    if prefix in _SCRATCH:
+        shutil.rmtree(_SCRATCH[prefix], ignore_errors=True)
+    _SCRATCH[prefix] = tempfile.mkdtemp(prefix=prefix)
+    return _SCRATCH[prefix]
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -2014,10 +2032,6 @@ def q5_region_volume(spark, sf_dir):
 # ------------------------------------------------------------------
 
 
-# the publish dir of the last sink_roundtrip_partitioned call
-_SINK_RT_DIR: str | None = None
-
-
 @q(
     "sink_roundtrip_partitioned",
     """
@@ -2033,21 +2047,11 @@ def sink_roundtrip_partitioned(spark, sf_dir):
     (TimeBasedWriterPartitioner.java:59), audit the staged row count,
     publish via atomic rename + _SUCCESS, then aggregate the PUBLISHED
     files — green iff layout + publish preserved every row."""
-    import shutil
-    import tempfile
-
     from gobblin_spark.operators import quality
     from gobblin_spark.sinks import publish as P, writers as W
 
-    # the returned frame reads the published dir lazily, so it must
-    # outlive this call: release the PREVIOUS call's dir instead (the
-    # rule IcebergTable.changelog applies to its cached frames)
-    global _SINK_RT_DIR
-    if _SINK_RT_DIR:
-        shutil.rmtree(_SINK_RT_DIR, ignore_errors=True)
-    _SINK_RT_DIR = tempfile.mkdtemp(prefix="gobblin_sink_rt_")
     orders = load_table(spark, sf_dir, "orders")
-    final = _SINK_RT_DIR + "/orders"
+    final = scratch_dir("gobblin_sink_rt_") + "/orders"
     part_df, cols = W.with_time_partitions(orders, "o_orderdate", "month")
     staged = P.stage(part_df, final, partition_by=cols, cluster=True)
     # extracted = the stage write's in-plan Observation (rows entering
@@ -2093,14 +2097,12 @@ def incremental_pull_union(spark, sf_dir):
     (prev_hwm, hwm]. Green iff the three pulls are DISJOINT and their
     union is the FULL table — the oracle assigns every row to exactly
     one interval, so any overlap or gap breaks the per-pull counts."""
-    import tempfile
-
     from gobblin_spark import state
 
     import datetime as _dt
 
     orders = load_table(spark, sf_dir, "orders")
-    store = state.WatermarkStore(spark, tempfile.mkdtemp(prefix="gobblin_wm_"))
+    store = state.WatermarkStore(spark, scratch_dir("gobblin_wm_"))
     lo, hi = orders.agg(F.min("o_orderdate"), F.max("o_orderdate")).first()
     # integer-µs cut math, mirrored exactly by the oracle's epoch_us//3
     span_us = (hi - lo) // _dt.timedelta(microseconds=1)
@@ -2176,12 +2178,10 @@ def streaming_ingest_parity(spark, sf_dir):
     PUBLISHED output is aggregated. Green iff streaming ingest is
     exactly row-preserving vs the batch table — the FIXTURES §8
     stream==batch invariant, made hash-checkable."""
-    import tempfile
-
     from gobblin_spark import state as S, streaming
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="gobblin_stream_")
+    tmp = scratch_dir("gobblin_stream_")
     indir, out = f"{tmp}/in", f"{tmp}/out"
     ev.repartition(4).write.parquet(indir)
     stream = streaming.file_stream(spark, indir, schema=ev.schema,
@@ -2441,12 +2441,10 @@ def stateful_dedup_users(spark, sf_dir):
     file stream: each user_id is emitted exactly once across epochs —
     the emitted key set is therefore exactly the batch-side DISTINCT,
     which is the oracle (full value-hash check, not rows-only)."""
-    import tempfile
-
     from gobblin_spark.streaming.stateful import stateful_dedup_stream
 
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    tmp = tempfile.mkdtemp(prefix="gobblin_sdedup_")
+    tmp = scratch_dir("gobblin_sdedup_")
     ev.repartition(4).write.parquet(f"{tmp}/in")
     stream = (spark.readStream.schema("user_id bigint")
               .option("maxFilesPerTrigger", "2").parquet(f"{tmp}/in"))
@@ -2480,11 +2478,9 @@ def pipeline_fork_publish(spark, sf_dir):
     staged write → job-level FULL_SUCCESS commit; the PUBLISHED dirs are
     read back and aggregated. Green iff routing + publish moved every
     passing row to exactly one branch."""
-    import tempfile
-
     from gobblin_spark import plans
 
-    out = tempfile.mkdtemp(prefix="gobblin_plan_")
+    out = scratch_dir("gobblin_plan_")
     pl = plans.Pipeline(
         source=lambda s: load_table(s, sf_dir, "events"),
         row_policies=[quality_range_0_100()],
@@ -2530,13 +2526,12 @@ def hive_register_query(spark, sf_dir):
     """HiveRegister.java:62 — publish a dir, register it as an external
     catalog table, query THROUGH the catalog name. Green iff the
     registered table serves exactly the published rows."""
-    import tempfile
     import uuid
 
     from gobblin_spark.sinks import hive, writers as W
 
     ev = load_table(spark, sf_dir, "events")
-    loc = tempfile.mkdtemp(prefix="gobblin_hive_") + "/events"
+    loc = scratch_dir("gobblin_hive_") + "/events"
     W.write_data(ev, loc)
     tname = f"gobblin_reg_{uuid.uuid4().hex[:8]}"
     hive.register_external_table(spark, tname, loc)
@@ -2557,14 +2552,12 @@ def hive_register_query(spark, sf_dir):
 def format_convert_roundtrip(spark, sf_dir):
     """HiveSerDeConverter as a job (Avro→ORC materializer analog):
     parquet → ORC conversion, aggregate read back from the ORC copy."""
-    import tempfile
-
     from gobblin_spark.sinks import hive, writers as W
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
-    tmp = tempfile.mkdtemp(prefix="gobblin_fmt_")
+    tmp = scratch_dir("gobblin_fmt_")
     W.write_data(li, f"{tmp}/src", fmt="parquet")
     hive.convert_format(spark, f"{tmp}/src", f"{tmp}/dst", "parquet", "orc")
     back = spark.read.orc(f"{tmp}/dst")
@@ -2618,8 +2611,6 @@ def iceberg_snapshot_read(spark, sf_dir):
     (IcebergMetadataWriter.java:634), then read the surviving current
     snapshot (must see both appends). Green iff both reads are
     value-exact and expiry kept exactly the current snapshot."""
-    import tempfile
-
     from gobblin_spark.sinks import iceberg as I
 
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -2627,7 +2618,7 @@ def iceberg_snapshot_read(spark, sf_dir):
     ).select("o_orderkey", "o_orderpriority", "o_totalprice")
     first = orders.filter(F.col("o_orderkey") % 8 == 0)
     second = orders.filter(F.col("o_orderkey") % 8 != 0)
-    loc = tempfile.mkdtemp(prefix="gobblin_ice_")
+    loc = scratch_dir("gobblin_ice_")
     t = I.IcebergTable.create(spark, f"{loc}/tbl", orders.schema)
     s1 = t.append_dataframe(first)
     t.append_dataframe(second)
@@ -2657,14 +2648,12 @@ def avro_container_roundtrip(spark, sf_dir):
     iff the on-disk roundtrip is value-exact including the timestamp
     logical type. With spark-avro on the classpath the same write_data
     call uses the JVM datasource instead."""
-    import tempfile
-
     from gobblin_spark.sinks import writers as W
 
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 7 == 0
     ).select("o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate")
-    tmp = tempfile.mkdtemp(prefix="gobblin_avro_")
+    tmp = scratch_dir("gobblin_avro_")
     W.write_data(orders, tmp, fmt="avro")
     return W.read_data(spark, tmp, "avro")
 
@@ -2714,11 +2703,9 @@ def flow_multihop_compile(spark, sf_dir):
     instantiates into a .pull job, and the compiled 2-hop flow executes
     on run_flow — hop 2 reads hop 1's published dir. The returned frame
     is the mart dataset, hash-checked against doing both hops in SQL."""
-    import tempfile
-
     from gobblin_spark.plans import flow as FL, flowgraph as FG
 
-    tmp = tempfile.mkdtemp(prefix="gobblin_flow_")
+    tmp = scratch_dir("gobblin_flow_")
     g = FG.FlowGraph()
     g.add_node(FG.DataNode("lake", props={"sf": sf_dir}))
     g.add_node(FG.DataNode("staging", props={"dir": f"{tmp}/staging"}))
@@ -3066,8 +3053,6 @@ def iceberg_evolve_delete_read(spark, sf_dir):
     the merge-on-read scan reproduces exactly that algebra — after a
     final RENAME of both the delete-key and a value column, which
     every earlier file serves via its embedded parquet field-ids."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from gobblin_spark.sinks import iceberg as I
@@ -3077,7 +3062,7 @@ def iceberg_evolve_delete_read(spark, sf_dir):
     ).select("o_orderkey", "o_totalprice", "o_orderpriority")
     first = base.filter(F.col("o_orderkey") % 8 == 0).drop("o_orderpriority")
     second = base.filter(F.col("o_orderkey") % 8 != 0)
-    loc = tempfile.mkdtemp(prefix="gobblin_ice2_")
+    loc = scratch_dir("gobblin_ice2_")
     t = I.IcebergTable.create(spark, f"{loc}/tbl", first.schema)
     t.append_dataframe(first)
     t.add_column("o_orderpriority", T.StringType())
@@ -3113,8 +3098,6 @@ def envelope_decode_registry(spark, sf_dir):
     the id back through the registry to the writer schema before the
     pure-Python codec unpacks the payload. Green iff the full
     register → id-prefix → lookup → decode chain is value-exact."""
-    import tempfile
-
     from gobblin_spark import schema as S
     from gobblin_spark.operators import avro_serde
     from gobblin_spark.sources.registry import FileSchemaRegistry
@@ -3122,7 +3105,7 @@ def envelope_decode_registry(spark, sf_dir):
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey") % 5 == 0
     ).select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-    reg = FileSchemaRegistry(tempfile.mkdtemp(prefix="gobblin_reg_"))
+    reg = FileSchemaRegistry(scratch_dir("gobblin_reg_"))
     sid = reg.register("customer-value", S.struct_to_avro(cust.schema))
     env = avro_serde.record_to_avro_bytes(cust, out_col="payload").withColumn(
         "schema_id", F.lit(sid)
@@ -3441,13 +3424,11 @@ def streaming_window_parity(spark, sf_dir):
     GROUP BY. The replay holds event-time order within the watermark,
     so nothing drops and stream==batch is exact — the invariant that
     certifies the watermark plumbing never loses on-time rows."""
-    import tempfile
-
     from gobblin_spark import streaming
     from gobblin_spark.streaming import runner as R
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="gobblin_swin_")
+    tmp = scratch_dir("gobblin_swin_")
     ev.repartition(4).write.parquet(f"{tmp}/in")
     stream = streaming.file_stream(spark, f"{tmp}/in", schema=ev.schema,
                                    max_files_per_trigger=2)
@@ -3532,13 +3513,11 @@ def filesource_snapshot_diff(spark, sf_dir):
     the new files and the pull reads just those paths. Green iff the
     diffed read returns exactly the second batch's rows — a re-read of
     batch 1 (the classic reprocessing bug) would double them."""
-    import tempfile
-
     from gobblin_spark.sources import files as FS
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.year("o_orderdate").alias("_y"))
-    d = tempfile.mkdtemp(prefix="gobblin_snapdiff_")
+    d = scratch_dir("gobblin_snapdiff_")
     orders.filter(F.col("_y") <= 1997).drop("_y").write.mode(
         "append").parquet(d)
     snapshot = FS.list_files(spark, d).filter(
@@ -3566,12 +3545,10 @@ def copy_distcp_roundtrip(spark, sf_dir):
     Arrow-chunked executor copy → atomic staging publish, then read
     back from the DESTINATION. Green iff the copied bytes decode to
     exactly the source rows and the publish flip happened."""
-    import tempfile
-
     from gobblin_spark.sources import copy as CP
 
-    src = tempfile.mkdtemp(prefix="gobblin_distcp_src_") + "/data"
-    dst = tempfile.mkdtemp(prefix="gobblin_distcp_dst_") + "/data"
+    src = scratch_dir("gobblin_distcp_src_") + "/data"
+    dst = scratch_dir("gobblin_distcp_dst_") + "/data"
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey") % 3 == 0
     ).select("c_custkey", "c_name", "c_acctbal")
@@ -3597,8 +3574,6 @@ def commit_policy_partial(spark, sf_dir):
     the red one's staging. Green iff the good dataset's rows publish
     exactly and the bad dataset's final dir does not exist — the
     per-dataset isolation a FULL_SUCCESS policy would deny."""
-    import tempfile
-
     from gobblin_spark.operators import quality
     from gobblin_spark.sinks import publish as P
 
@@ -3607,7 +3582,7 @@ def commit_policy_partial(spark, sf_dir):
         "o_orderkey", "o_totalprice")
     bad_df = orders.filter(F.col("o_orderpriority") == "5-LOW").select(
         "o_orderkey", "o_totalprice")
-    root = tempfile.mkdtemp(prefix="gobblin_policy_")
+    root = scratch_dir("gobblin_policy_")
     good = P.stage(good_df, f"{root}/good")
     bad = P.stage(bad_df, f"{root}/bad")
     n_good = good_df.count()
@@ -3675,13 +3650,11 @@ def zorder_clustered_scan(spark, sf_dir):
     exactly; the file-skipping property itself (either column's
     predicate touches a minority of files) is plan-asserted in
     tests/test_skew_bucketing.py."""
-    import tempfile
-
     from gobblin_spark.sinks import writers as W
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity")
-    out = tempfile.mkdtemp(prefix="gobblin_zorder_") + "/li"
+    out = scratch_dir("gobblin_zorder_") + "/li"
     W.write_zordered(li, out, ["l_orderkey", "l_partkey"], n_files=16)
     return spark.read.parquet(out).filter(
         (F.col("l_orderkey") <= 3000) & (F.col("l_partkey") <= 400))
@@ -3768,15 +3741,13 @@ def commit_sequence_replay(spark, sf_dir):
     exactly one copy of the rows (a non-idempotent publish would
     double them or fail) and the replay left the marker/watermark
     unchanged."""
-    import tempfile
-
     from gobblin_spark.sinks import commit_sequence as CS
     from gobblin_spark.sinks import writers as W
 
     high = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "2-HIGH"
     ).select("o_orderkey", "o_custkey", "o_totalprice")
-    root = tempfile.mkdtemp(prefix="gobblin_cseq_")
+    root = scratch_dir("gobblin_cseq_")
     staging, final = f"{root}/staging", f"{root}/final"
     W.write_data(high, staging, fmt="parquet")
     seq = CS.Sequence(job_id="replay_demo", steps=[
@@ -5155,13 +5126,12 @@ def streaming_epoch_replay(spark, sf_dir):
     dataset still equals the source exactly. Plain mode('append')
     would show 2-3x row counts here."""
     import datetime as _dt
-    import tempfile
 
     from gobblin_spark import state as S
     from gobblin_spark.streaming import runner
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") % 7 == 0)
-    tmp = tempfile.mkdtemp(prefix="gobblin_epoch_replay_")
+    tmp = scratch_dir("gobblin_epoch_replay_")
     out = f"{tmp}/out"
     spec = runner.IngestSpec(
         final_dir=out, ts_col="ts",
@@ -5510,8 +5480,6 @@ def sink_schema_partitioned(spark, sf_dir):
     to the widest schema), and the read-back recovers each
     generation's row count and null-filled columns exactly. The
     oracle recomputes the md5 partition keys from the schema strings."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from gobblin_spark import schema as S
@@ -5526,7 +5494,7 @@ def sink_schema_partitioned(spark, sf_dir):
         T.StructField("value", T.DoubleType(), True),
         T.StructField("schema_id", T.StringType(), True),
     ])
-    out = tempfile.mkdtemp(prefix="gobblin_schema_part_") + "/data"
+    out = scratch_dir("gobblin_schema_part_") + "/data"
     W.retry_write(
         S.conform_to(W.with_schema_partition(v1), target), out,
         mode="overwrite", partition_by=["schema_id"])
@@ -5555,12 +5523,10 @@ def source_workunit_retry(spark, sf_dir):
     unit directory), and the published dataset equals the source
     exactly — nothing lost to the crash, nothing doubled by the
     retry."""
-    import tempfile
-
     from gobblin_spark import state as S
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="gobblin_wu_retry_")
+    tmp = scratch_dir("gobblin_wu_retry_")
     out = f"{tmp}/out"
     store = S.WatermarkStore(spark, f"{tmp}/wm")
     units = ["0", "1", "2", "3"]
@@ -5842,7 +5808,6 @@ def streaming_dedup_ingest(spark, sf_dir):
     the store is append-only parquet, each epoch reads it once for the
     sketch + the sliver verify, and no epoch ever reshuffles history."""
     import os
-    import tempfile
 
     from gobblin_spark.functions import bloom
 
@@ -5851,7 +5816,7 @@ def streaming_dedup_ingest(spark, sf_dir):
         .filter(F.col("text").isNotNull())
         .select("doc_id", text.fingerprint(F.col("text")).alias("fp"))
     )
-    tmp = tempfile.mkdtemp(prefix="gobblin_dedup_ingest_")
+    tmp = scratch_dir("gobblin_dedup_ingest_")
     store = f"{tmp}/store"
     for ep in (0, 1, 2):
         batch = docs.filter(F.col("doc_id") % 3 == ep)
@@ -6507,14 +6472,13 @@ def streaming_join_parity(spark, sf_dir):
     store neither drops nor duplicates matches. Watermark spans the
     replay so nothing is late; at production horizons state is bounded
     by rate x (watermark + delay)."""
-    import tempfile
     import uuid as _uuid
 
     from gobblin_spark import streaming
     from gobblin_spark.streaming import runner as R
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="gobblin_sjoin_")
+    tmp = scratch_dir("gobblin_sjoin_")
     ev.filter(F.col("event_type") == "view").repartition(3).write.parquet(
         f"{tmp}/views")
     ev.filter(F.col("event_type") == "purchase").repartition(3).write.parquet(
@@ -6572,14 +6536,13 @@ def streaming_session_parity(spark, sf_dir):
     the session-merge state machine (out-of-epoch arrivals within the
     watermark merge into existing sessions instead of opening new
     ones)."""
-    import tempfile
     import uuid as _uuid
 
     from gobblin_spark import streaming
     from gobblin_spark.streaming import runner as R
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="gobblin_ssess_")
+    tmp = scratch_dir("gobblin_ssess_")
     ev.repartition(4).write.parquet(f"{tmp}/in")
     stream = streaming.file_stream(
         spark, f"{tmp}/in", schema=ev.schema, max_files_per_trigger=2
@@ -6614,7 +6577,6 @@ def streaming_dropdup_parity(spark, sf_dir):
     the original table exactly: every planted duplicate dropped, no
     on-time row lost. At production horizons the state store holds one
     key per event inside the watermark, not per stream lifetime."""
-    import tempfile
     import uuid as _uuid
 
     from gobblin_spark import streaming
@@ -6622,7 +6584,7 @@ def streaming_dropdup_parity(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="gobblin_sdd_")
+    tmp = scratch_dir("gobblin_sdd_")
     ev.repartition(3).write.parquet(f"{tmp}/in")
     # duplicates land as a SEPARATE later file batch
     ev.filter(F.col("event_id") % 7 == 0).repartition(1).write.mode(
@@ -6671,13 +6633,12 @@ def rest_datasource_pull(spark, sf_dir):
     instead of serializing the feed on the driver."""
     import json as _json
     import os as _os
-    import tempfile
 
     from gobblin_spark.sources import datasource as DS
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="gobblin_restds_")
+    tmp = scratch_dir("gobblin_restds_")
     paged = ev.withColumn(
         "page", F.floor(F.col("event_id") / 500).cast("int"))
 
@@ -6720,14 +6681,12 @@ def retry_write_roundtrip(spark, sf_dir):
     doubled rows from the failed attempt. The overwrite-staging design
     is precisely what makes job-level retry idempotent; this row
     value-checks it instead of trusting the unit test."""
-    import tempfile
-
     from gobblin_spark.sinks import writers
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus",
         F.round("o_totalprice", 4).alias("o_totalprice"))
-    tmp = tempfile.mkdtemp(prefix="gobblin_retry_") + "/out"
+    tmp = scratch_dir("gobblin_retry_") + "/out"
     calls = {"n": 0}
     orig = writers.write_data
 
@@ -7042,13 +7001,11 @@ def sql_datasource_pull(spark, sf_dir):
     columnar end-to-end. Values must hash-match the parquet the
     database was loaded from — the round trip certifies schema
     inference, partition planning, and pushdown at once."""
-    import tempfile
-
     import duckdb
 
     orders = load_table(spark, sf_dir, "orders")
     hi = orders.agg(F.max("o_orderkey")).first()[0]
-    db = tempfile.mkdtemp(prefix="gobblin_sqlds_") + "/w.duckdb"
+    db = scratch_dir("gobblin_sqlds_") + "/w.duckdb"
     con = duckdb.connect(db)
     con.execute(
         "CREATE TABLE orders AS SELECT o_orderkey, o_custkey, "
@@ -7089,12 +7046,10 @@ def sql_write_read_roundtrip(spark, sf_dir):
     declared types. The table then comes BACK through the
     `format("gobblin_sql")` partitioned reader. Green iff the round
     trip hash-matches the source parquet exactly."""
-    import tempfile
-
     from gobblin_spark.sources import datasource as DS
 
     DS.register(spark)
-    db = tempfile.mkdtemp(prefix="gobblin_sqlrt_") + "/rt.duckdb"
+    db = scratch_dir("gobblin_sqlrt_") + "/rt.duckdb"
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal")
     even = sup.filter(F.col("s_suppkey") % 2 == 0)
@@ -7152,8 +7107,6 @@ def safe_commit_isolation(spark, sf_dir):
     reports the publish outcome AND the rows actually readable from
     the final dir — the oracle recomputes both from the source
     counts."""
-    import tempfile
-
     from gobblin_spark.operators import quality
     from gobblin_spark.sinks import publish as P
 
@@ -7164,7 +7117,7 @@ def safe_commit_isolation(spark, sf_dir):
         (P.JobCommitPolicy.COMMIT_SUCCESSFUL_TASKS, "successful_tasks"),
         (P.JobCommitPolicy.COMMIT_ON_FULL_SUCCESS, "full_success"),
     ):
-        root = tempfile.mkdtemp(prefix=f"gobblin_safe_{tag}_")
+        root = scratch_dir(f"gobblin_safe_{tag}_")
         staged = []
         for p in prios:
             df = orders.filter(F.col("o_orderpriority") == p).select(
@@ -7207,14 +7160,12 @@ def filesize_policy_report(spark, sf_dir):
     policy's own inputs (file count, bytes from the FS listing, not
     the data) plus its verdict — the oracle recomputes all of it from
     the corpus."""
-    import tempfile
-
     from gobblin_spark.operators import quality
     from gobblin_spark.sinks.writers import write_data
 
     docs = load_docs(spark, sf_dir).filter(F.col("text").isNotNull())
     sources = sorted(r.source for r in docs.select("source").distinct().collect())
-    root = tempfile.mkdtemp(prefix="gobblin_fsz_")
+    root = scratch_dir("gobblin_fsz_")
     out = []
     for s in sources:
         wr = write_data(
@@ -7244,14 +7195,13 @@ def http_sink_roundtrip(spark, sf_dir):
     than the unreachable endpoints it fronts."""
     import glob
     import json as _json
-    import tempfile
 
     from gobblin_spark.sinks import generic
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
         F.round("value", 4).alias("value"))
-    outdir = tempfile.mkdtemp(prefix="gobblin_httpsink_")
+    outdir = scratch_dir("gobblin_httpsink_")
 
     def sender_factory():
         import os as _os
@@ -7379,8 +7329,6 @@ def csv_quoted_roundtrip(spark, sf_dir):
     the corner the reference's CsvToJson path and every flat-file
     exchange lives or dies on; the oracle rebuilds the same tricky
     value from the source table, so any quoting loss hash-fails."""
-    import tempfile
-
     docs = load_docs(spark, sf_dir).filter(F.col("text").isNotNull())
     tricky = docs.select(
         "doc_id",
@@ -7388,7 +7336,7 @@ def csv_quoted_roundtrip(spark, sf_dir):
         .alias("tricky"),
         "lang",
     )
-    tmp = tempfile.mkdtemp(prefix="gobblin_csvq_")
+    tmp = scratch_dir("gobblin_csvq_")
     (tricky.write.option("header", True).option("quoteAll", True)
      .option("escape", '"').csv(f"{tmp}/out"))
     return (
@@ -7415,10 +7363,8 @@ def codec_roundtrip(spark, sf_dir):
     gzip, and zstd parquet, read back, and aggregated — value
     equality across codecs certifies the storage layer end-to-end
     (the reference's writer.codec.type surface)."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders").select("o_totalprice")
-    tmp = tempfile.mkdtemp(prefix="gobblin_codec_")
+    tmp = scratch_dir("gobblin_codec_")
     outs = []
     for codec in ("snappy", "gzip", "zstd"):
         path = f"{tmp}/{codec}"
@@ -7451,13 +7397,11 @@ def iceberg_rewrite_read(spark, sf_dir):
     impossible predicate must prune every file, an always-true one
     none). Compact-then-expire is how Gobblin's small-file compaction
     maps onto the table-format layer."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", F.round("c_acctbal", 4).alias("c_acctbal"))
-    loc = tempfile.mkdtemp(prefix="gobblin_icerw_") + "/t"
+    loc = scratch_dir("gobblin_icerw_") + "/t"
     t = IcebergTable.create(spark, loc, cust.schema)
     n = cust.count()
     third = (n + 2) // 3
@@ -7498,12 +7442,10 @@ def incremental_rollup_merge(spark, sf_dir):
     maintained store must equal the one-shot GROUP BY over all events
     (the oracle) by algebra. History is never rescanned; each epoch
     shuffles only its own batch plus the keys-sized store."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         F.col("ts").cast("date").alias("day"), "event_type", "value",
         "event_id")
-    store = tempfile.mkdtemp(prefix="gobblin_rollup_") + "/store"
+    store = scratch_dir("gobblin_rollup_") + "/store"
     for ep in (0, 1, 2):
         batch = ev.filter(F.col("event_id") % 3 == ep)
         merged = compaction.merge_rollup_store(
@@ -7729,11 +7671,9 @@ def orc_roundtrip(spark, sf_dir):
     """ORC write+read round trip (HiveWritableHdfsDataWriter's default
     container format): rows must survive the columnar re-encode
     bit-for-bit; the oracle reads the original parquet."""
-    import tempfile
-
     nat = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey")
-    tmp = tempfile.mkdtemp(prefix="gobblin_orc_")
+    tmp = scratch_dir("gobblin_orc_")
     nat.write.orc(f"{tmp}/out")
     return spark.read.orc(f"{tmp}/out")
 
@@ -8552,13 +8492,12 @@ def flush_roll_census(spark, sf_dir):
     per epoch (4 input files x maxFilesPerTrigger=1), no rows lost
     across rolls, sidecar self-consistent."""
     import json as _json
-    import tempfile
 
     from gobblin_spark import state as S, streaming
     from gobblin_spark.sinks import publish as P
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="gobblin_flushroll_")
+    tmp = scratch_dir("gobblin_flushroll_")
     indir, out = f"{tmp}/in", f"{tmp}/out"
     ev.repartition(4).write.parquet(indir)
     stream = streaming.file_stream(spark, indir, schema=ev.schema,
@@ -8616,13 +8555,11 @@ def example_source_roundtrip(spark, sf_dir):
     BOTH example formats — JSON-lines via read_json and raw lines via
     read_text + parse — and the union must recover every row exactly
     twice. Green iff both example extractors are lossless."""
-    import tempfile
-
     from gobblin_spark.sources import files as FS
 
     nat = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey")
-    tmp = tempfile.mkdtemp(prefix="gobblin_example_src_")
+    tmp = scratch_dir("gobblin_example_src_")
     nat.write.json(f"{tmp}/j")
     nat.select(F.concat_ws(
         "\t",
@@ -8906,14 +8843,12 @@ def pull_flow_csv(spark, sf_dir):
     policy into one Catalyst plan. Exercises the CSV reader kwarg
     path fixed in the round-7 audit (read_csv's `sep`) end-to-end
     with a value hash, not just a pytest."""
-    import tempfile
-
     from gobblin_spark.plans import jobconf as J
 
     src = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 5 == 0
     ).select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-    tmp = tempfile.mkdtemp(prefix="gobblin_pullcsv_")
+    tmp = scratch_dir("gobblin_pullcsv_")
     src.write.option("header", True).mode("overwrite").csv(f"{tmp}/drop")
     pull = f"""
     job.name=CsvDropPull
@@ -9036,13 +8971,11 @@ def iceberg_bucket_prune_read(spark, sf_dir):
     dataset layout (gobblin-data-management
     .../TimePartitionedDataPublisher semantics lifted to the
     table-format layer)."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment")
-    loc = tempfile.mkdtemp(prefix="gobblin_icebk_") + "/t"
+    loc = scratch_dir("gobblin_icebk_") + "/t"
     t = IcebergTable.create(
         spark, loc, cust.schema,
         partition_spec=[("c_custkey", "bucket[8]"),
@@ -9081,13 +9014,11 @@ def iceberg_time_partition_read(spark, sf_dir):
     makes retention windows and incremental reads touch days, not the
     table. Hour/month/year variants share the same transform engine
     (pytest-pinned incl. pre-1970 floor semantics)."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", F.round("value", 4).alias("value"))
-    loc = tempfile.mkdtemp(prefix="gobblin_iceday_") + "/t"
+    loc = scratch_dir("gobblin_iceday_") + "/t"
     t = IcebergTable.create(spark, loc, ev.schema,
                             partition_spec=[("ts", "day")])
     t.append_dataframe(ev.coalesce(1))
@@ -9121,12 +9052,10 @@ def iceberg_partitions_table(spark, sf_dir):
     manifest scale — at 100 TB you watch the table without scanning
     it. snapshots/history/files variants are pytest-pinned
     (tests/test_iceberg.py::test_metadata_tables_inspect)."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    loc = tempfile.mkdtemp(prefix="gobblin_icemeta_") + "/t"
+    loc = scratch_dir("gobblin_icemeta_") + "/t"
     t = IcebergTable.create(spark, loc, ev.schema,
                             partition_spec=[("ts", "day")])
     t.append_dataframe(ev.coalesce(1))
@@ -9161,13 +9090,11 @@ def iceberg_partition_evolution_read(spark, sf_dir):
     data. Values equal the plain three-batch SQL union filtered the
     same way. This is why a 100 TB table's layout can track its
     query patterns without a migration outage."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment")
-    loc = tempfile.mkdtemp(prefix="gobblin_icevo_") + "/t"
+    loc = scratch_dir("gobblin_icevo_") + "/t"
     schema = cust.withColumn("batch", F.lit(0)).schema
     t = IcebergTable.create(spark, loc, schema)
     t.append_dataframe(cust.withColumn("batch", F.lit(0)).coalesce(1))
@@ -9281,14 +9208,12 @@ def streaming_iceberg_ingest(spark, sf_dir):
     (gobblin-core .../extractor/FlushingExtractor.java:81) carried
     onto Iceberg snapshots; at 100 TB, replay-safe commits are what
     let a streaming writer restart without a dedup pass."""
-    import tempfile
-
     from gobblin_spark import streaming
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="gobblin_icestream_")
+    tmp = scratch_dir("gobblin_icestream_")
     indir = f"{tmp}/in"
     ev.repartition(4).write.parquet(indir)
     t = IcebergTable.create(spark, f"{tmp}/table", ev.schema)
@@ -9338,13 +9263,11 @@ def iceberg_wap_publish(spark, sf_dir):
     one pointer flip instead of a directory move. Tags, expiry
     retention of ref heads, and non-fast-forward refusal are
     pytest-pinned."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal")
-    loc = tempfile.mkdtemp(prefix="gobblin_icewap_") + "/t"
+    loc = scratch_dir("gobblin_icewap_") + "/t"
     t = IcebergTable.create(spark, loc, cust.schema)
     even = cust.filter(F.col("c_custkey") % 2 == 0)
     odd = cust.filter(F.col("c_custkey") % 2 == 1)
@@ -9383,13 +9306,11 @@ def iceberg_distributed_plan_read(spark, sf_dir):
     bit-identical entry lists), aggregated against plain SQL. The
     10^5-10^6-live-file driver bound (PLANS.md) is what this path
     removes at 100 TB. Pre-staged r9 entry."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice")
-    loc = tempfile.mkdtemp(prefix="gobblin_icedp_") + "/t"
+    loc = scratch_dir("gobblin_icedp_") + "/t"
     t = IcebergTable.create(spark, loc, orders.schema)
     for m in range(5):
         t.append_dataframe(
@@ -9421,13 +9342,11 @@ def iceberg_time_travel_read(spark, sf_dir):
     timestamps) and returns exactly the first commit — the
     reproducibility handle that re-runs yesterday's training job
     against yesterday's table. Pre-staged r9 entry."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority")
-    loc = tempfile.mkdtemp(prefix="gobblin_icett_") + "/t"
+    loc = scratch_dir("gobblin_icett_") + "/t"
     t = IcebergTable.create(spark, loc, orders.schema)
     t.append_dataframe(orders.filter(F.col("o_orderkey") % 3 == 0)
                        .coalesce(1))
@@ -9465,26 +9384,26 @@ def iceberg_changelog_delete_read(spark, sf_dir):
     composed with the spec's delete read paths): two append commits,
     a POSITION-delete of every urgent order, an EQUALITY-delete of
     every low-priority orderkey, then ``changelog(None)`` replays the
-    full history — every row as an insert stamped with its committing
-    ordinal AND every deleted row again as ``_change_type='delete'``
-    stamped with its deleting commit. The position-retraction scan
-    opens ONLY the data files the delete parquet references; the
-    equality retraction is the PARENT state semi-joined with the
-    tuples (exceeding the reference analog — Iceberg's own Spark
-    changelog still gates equality deletes). Read-path agreement (no
+    full history under its one rule: each commit emits the change it
+    made to the table — the rows of the files it adds as inserts, the
+    rows live before it and not after as deletes, each stamped with
+    that commit's ordinal — and the compaction rewrite emits nothing.
+    The position delete's retractions scan only the data files it
+    references; the equality delete's are its parent's state
+    semi-joined with the tuples (exceeding the reference analog —
+    Iceberg's own Spark changelog still gates equality deletes), and
+    planning launches no Spark job. Read-path agreement (no
     urgent/low rows survive) is asserted in-query. Snapshot ids are
     run-random; the oracle checks deterministic commit ORDINALS
     derived from them. This entry RETIRED iceberg_changelog_read
     (r10): the insert-only stamping it certified is a strict subset
     of this replay, and the bounded-window semantics stay
     pytest-pinned (test_time_travel_by_timestamp_and_changelog)."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority")
-    loc = tempfile.mkdtemp(prefix="gobblin_icecld_") + "/t"
+    loc = scratch_dir("gobblin_icecld_") + "/t"
     t = IcebergTable.create(spark, loc, orders.schema)
     # both append snapshots' data files come out of ONE write job
     # (r14, guide §1.2: the r13 shape paid a full Spark write command
@@ -9559,15 +9478,13 @@ def iceberg_datasource_read(spark, sf_dir):
     superset, parquet-row-group-skipping semantics), so values always
     equal the plain SQL filter. Delete-carrying tables raise in the
     planner — merge-on-read stays with IcebergTable.read."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
     from gobblin_spark.sources import datasource as DS
 
     DS.register(spark)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment")
-    loc = tempfile.mkdtemp(prefix="gobblin_icedsv2_") + "/t"
+    loc = scratch_dir("gobblin_icedsv2_") + "/t"
     t = IcebergTable.create(
         spark, loc, cust.schema,
         partition_spec=[("c_custkey", "bucket[8]"),
@@ -9611,8 +9528,6 @@ def iceberg_datasource_write_roundtrip(spark, sf_dir):
     write face, commit protocol, and manifest bounds certified in
     one hash. COMMIT_ON_FULL_SUCCESS semantics: abort() deletes the
     never-referenced task files."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
     from gobblin_spark.sources import datasource as DS
 
@@ -9621,7 +9536,7 @@ def iceberg_datasource_write_roundtrip(spark, sf_dir):
         F.col("o_orderkey") % 4 == 0).select(
         "o_orderkey", "o_custkey", "o_orderpriority",
         F.round("o_totalprice", 2).alias("o_totalprice"))
-    loc = tempfile.mkdtemp(prefix="gobblin_icedsw_") + "/t"
+    loc = scratch_dir("gobblin_icedsw_") + "/t"
     t = IcebergTable.create(spark, loc, sub.schema)
     # r11: the whole DSv2 round trip is addressed through the
     # loopback scheme (loop:// → local FS inside _fs_from_uri), so
@@ -9678,8 +9593,6 @@ def iceberg_stream_incremental(spark, sf_dir):
     the reference's Kafka-to-lake relay becomes lake-to-lake CDC-less
     incremental sync. Delete-carrying tables raise (a streamed row
     cannot be retracted)."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
     from gobblin_spark.sources import datasource as DS
 
@@ -9687,7 +9600,7 @@ def iceberg_stream_incremental(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_id") % 2 == 0).select(
         "event_id", "ts", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="gobblin_icestrin_")
+    tmp = scratch_dir("gobblin_icestrin_")
     t = IcebergTable.create(spark, f"{tmp}/table", ev.schema)
     for i in range(3):
         t.append_dataframe(
@@ -9725,15 +9638,13 @@ def streaming_wap_publish(spark, sf_dir):
     BaseDataPublisher's atomic publish — as THREE pointer-safe
     metadata operations; at 100 TB no reader ever sees a torn
     stream. Values equal the batch SQL exactly."""
-    import tempfile
-
     from gobblin_spark import streaming
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_id") % 3 == 0).select(
         "event_id", "ts", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="gobblin_icewapstr_")
+    tmp = scratch_dir("gobblin_icewapstr_")
     indir = f"{tmp}/in"
     ev.repartition(4).write.parquet(indir)
     t = IcebergTable.create(spark, f"{tmp}/table", ev.schema)
@@ -9797,8 +9708,6 @@ def curation_lakehouse_roundtrip(spark, sf_dir):
     pointer, not a glob. Fingerprints use md5 so DuckDB replays them
     exactly; dedup keep-first is the same keep-min-id contract as
     dedup_exact_docs."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from gobblin_spark.sinks.iceberg import IcebergTable
@@ -9810,7 +9719,7 @@ def curation_lakehouse_roundtrip(spark, sf_dir):
             .filter(F.col("rn") == 1)
             .select("doc_id", "lang", F.col("n_chars").cast("long")
                     .alias("n_chars")))
-    loc = tempfile.mkdtemp(prefix="gobblin_curlake_") + "/t"
+    loc = scratch_dir("gobblin_curlake_") + "/t"
     t = IcebergTable.create(spark, loc, kept.schema,
                             partition_spec=[("lang", "truncate[1]")])
     # the explicit coalesce(1) is DELIBERATE here (unlike
@@ -9845,8 +9754,6 @@ def iceberg_stream_sink_native(spark, sf_dir):
     the table equals the batch aggregate — the fourth and final
     connector face (batch read/write, stream read/write), making the
     table format a complete engine citizen."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
     from gobblin_spark.sources import datasource as DS
 
@@ -9854,7 +9761,7 @@ def iceberg_stream_sink_native(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_id") % 5 == 0).select(
         "event_id", "ts", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="gobblin_icesink_")
+    tmp = scratch_dir("gobblin_icesink_")
     indir = f"{tmp}/in"
     ev.repartition(4).write.parquet(indir)
     t = IcebergTable.create(spark, f"{tmp}/table", ev.schema)
@@ -9894,13 +9801,11 @@ def iceberg_changelog_identity_read(spark, sf_dir):
     TimeBasedWriterPartitioner-layout case (the common one) that
     raised NotImplementedError before round 9. Pre-staged r10
     entry."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority")
-    loc = tempfile.mkdtemp(prefix="gobblin_icecli_") + "/t"
+    loc = scratch_dir("gobblin_icecli_") + "/t"
     t = IcebergTable.create(spark, loc, orders.schema,
                             partition_cols=["o_orderpriority"])
     snaps = []
@@ -9938,13 +9843,11 @@ def iceberg_position_delete_read(spark, sf_dir):
     delete survive (asserted by re-inserting the %14 slice and
     expecting it back). Complements `iceberg_evolve_delete_read`
     (equality flavor)."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice")
-    loc = tempfile.mkdtemp(prefix="gobblin_icepd_") + "/t"
+    loc = scratch_dir("gobblin_icepd_") + "/t"
     t = IcebergTable.create(spark, loc, orders.schema)
     t.append_dataframe(orders.coalesce(2))
     positions = (t.read()
@@ -10033,14 +9936,13 @@ def iceberg_rollback_read(spark, sf_dir):
     time-travelable by id. The rollback itself lands in the
     snapshot-log, so snapshot_as_of AFTER it resolves to the restored
     head (asserted in-query). Pre-staged r10 entry."""
-    import tempfile
     import time as _time
 
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority")
-    loc = tempfile.mkdtemp(prefix="gobblin_icerb_") + "/t"
+    loc = scratch_dir("gobblin_icerb_") + "/t"
     t = IcebergTable.create(spark, loc, orders.schema)
     s1 = t.append_dataframe(orders.filter(F.col("o_orderkey") % 3 == 0)
                             .coalesce(1))
@@ -10065,13 +9967,11 @@ def bench_changelog_delete_heavy(spark, sf_dir):
     changelog. The run-sharing path reconstructs the base state ONCE
     for all five commits (one scan + broadcast anti/semi joins)
     instead of five merge-on-read reconstructions."""
-    import tempfile
-
     from gobblin_spark.sinks.iceberg import IcebergTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority")
-    loc = tempfile.mkdtemp(prefix="gobblin_icecdh_") + "/t"
+    loc = scratch_dir("gobblin_icecdh_") + "/t"
     t = IcebergTable.create(spark, loc, orders.schema)
     t.append_dataframe(orders.coalesce(4))
     for m in range(5):  # five consecutive eq-delete commits

@@ -64,7 +64,11 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import cache, reduce
+from itertools import count
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
@@ -1182,6 +1186,11 @@ def _delete_any(path: str) -> None:
 # commits that share one reconstructed base frame (see changelog())
 _EQ_RUN_CAP = 16
 
+# the spec schema of a position-delete file: read with it, no Spark
+# job infers it
+_POS_SCHEMA = T.StructType([T.StructField("file_path", T.StringType()),
+                            T.StructField("pos", T.LongType())])
+
 
 def _metadata_version_candidates(names) -> list[int]:
     """Version numbers parsed from metadata file basenames, newest
@@ -1199,9 +1208,9 @@ def _split_eras(splitters: list[dict], lo: int, hi: int,
                 snaps: dict, chain: list[dict],
                 final_walk, label: str) -> list[tuple]:
     """Split the incremental window (lo, hi] into ERAS at each
-    file-superseding snapshot (replace/overwrite) — shared by
-    changelog() and the DSv2 stream reader so the boundary semantics
-    can never diverge. Returns [(era_lo_seq, walk_snapshot_id,
+    file-superseding snapshot (replace/overwrite) — the era rule of
+    ``IcebergTable._window_commits``, the one walker changelog() and
+    the DSv2 stream reader share. Returns [(era_lo_seq, walk_snapshot_id,
     era_hi_seq)]: era k's commits are planned from the snapshot just
     BEFORE splitter k+1 (its parent), where they are still live under
     their true sequences; the final era plans at *final_walk*. The
@@ -1243,6 +1252,19 @@ def _split_eras(splitters: list[dict], lo: int, hi: int,
     if hi > prev_hi or not eras:
         eras.append((prev_hi, final_walk, hi))
     return eras
+
+
+class _Commit(NamedTuple):
+    """One commit of an incremental window (``_window_commits``):
+    the manifest entries (data and delete files) it ``added``, the
+    entries live at its parent that it ``removed``, and ``before()``,
+    every entry live at its parent."""
+    snap: dict
+    op: str | None
+    parent: int | None
+    added: list
+    removed: list
+    before: Callable[[], list]
 
 
 class _NoCommit(Exception):
@@ -2378,111 +2400,127 @@ class IcebergTable:
         return self.read(snapshot_id=self.snapshot_as_of(timestamp_ms),
                          **kwargs)
 
+    def _window_commits(self, md: dict, chain: list[dict], lo: int,
+                        hi: int, label: str):
+        """The incremental window walker of changelog() and the DSv2
+        stream reader: one ``_Commit`` per commit of *chain* (a head's
+        ancestry, head first) with sequence in (lo, hi], in sequence
+        order. Replace commits are content-neutral and not yielded.
+
+        Replaces and overwrites supersede every earlier manifest, so
+        they split the window into eras (``_split_eras``): the commits
+        of an era are read from ONE memoized ``_entries`` walk, where
+        they are still live under their own sequences, and an
+        overwrite from the walks at it and at its parent. It never
+        walks once per commit."""
+        snaps = {s["snapshot-id"]: s for s in md["snapshots"]}
+        win = sorted((s for s in chain
+                      if lo < s.get("sequence-number", 0) <= hi),
+                     key=lambda s: s["sequence-number"])
+        op = {s["snapshot-id"]: s.get("summary", {}).get("operation")
+              for s in win}
+        head = max((s for s in chain
+                    if s.get("sequence-number", 0) <= hi),
+                   key=lambda s: s.get("sequence-number", 0), default={})
+        eras = _split_eras(
+            [s for s in win
+             if op[s["snapshot-id"]] in ("replace", "overwrite")],
+            lo, hi, snaps, chain, head.get("snapshot-id"), label)
+        walks: dict = {None: []}
+        by_seq: dict = {None: {}}
+
+        def walk(sid):
+            if sid not in walks:
+                walks[sid] = self._entries(sid, md=md)
+                by_seq[sid] = {}
+                for e in walks[sid]:
+                    by_seq[sid].setdefault(
+                        e["sequence_number"], []).append(e)
+            return walks[sid]
+
+        for s in win:
+            sid, seq = s["snapshot-id"], s["sequence-number"]
+            parent = s.get("parent-snapshot-id")
+            if op[sid] == "replace":
+                continue
+            removed = []
+            if op[sid] == "overwrite":
+                at, prior = sid, parent if parent in snaps else None
+                live = {e["info"].path for e in walk(at)}
+                removed = [e for e in walk(prior)
+                           if e["info"].path not in live]
+            else:
+                at = prior = next((w for e_lo, w, e_hi in eras
+                                   if e_lo < seq <= e_hi), None)
+                walk(at)
+            yield _Commit(
+                s, op[sid], parent, by_seq[at].get(seq, []), removed,
+                lambda w=prior, q=seq: [e for e in walks[w]
+                                        if e["sequence_number"] < q])
+
     def changelog(self, from_snapshot_id: int | None,
                   to_snapshot_id: int | None = None,
                   ref: str | None = None) -> DataFrame:
-        """INCREMENTAL APPEND-DIFF (Iceberg's changelog/incremental
-        read; the engine face of the reference's incremental copy —
-        IcebergDatasetFinder plans exactly this delta): rows of data
-        files whose commit sequence landed AFTER *from_snapshot_id*
-        (exclusive) up to *to_snapshot_id* (inclusive, default current
-        main head), each stamped ``_change_type='insert'`` and
-        ``_commit_snapshot_id``. Planning walks only manifest metadata
-        — the delta of a 100 TB table with one new commit reads one
-        commit's files. Execution is ONE multi-path scan per partition
-        spec (NOT one union branch per commit — plan width stays
-        constant as the window grows; a month of minutely commits is
-        still a handful of scans) with the file→committing-snapshot
-        mapping applied as a broadcast lookup joined on the scan's
-        ``_metadata.file_path`` (the manifest stores the same
-        Path.toString() the metadata column reports — the position-
-        delete path relies on the identical equality). Identity-
-        partitioned layouts re-attach their partition values from the
-        path exactly as read() does (shared _attach_identity_cols).
+        """Iceberg's changelog read, the engine face of the reference's
+        incremental copy (IcebergDatasetFinder plans exactly this
+        delta): the change rows of every commit after
+        *from_snapshot_id* (exclusive) up to *to_snapshot_id*
+        (inclusive, default main's head), each stamped
+        ``_change_type`` and ``_commit_snapshot_id``.
 
-        DELETE commits in the window emit the RETRACTED rows: a
-        POSITION-delete snapshot's rows come back stamped
-        ``_change_type='delete'`` with that commit's snapshot id —
-        planned by reading only the delete file's referenced data
-        files (the delete parquet's ``file_path`` column names them;
-        the scan never touches the rest of the table) and semi-joining
-        the broadcast (file, pos) set on the parquet metadata columns,
-        the same addressing the read path's anti-join uses. A row
-        inserted AND deleted inside one window yields both records
-        (per-commit changelog, not net-changes — Iceberg's
-        create_changelog_view contract). EQUALITY-delete commits also
-        replay: the retracted rows are the table state AS OF the
-        delete's parent semi-joined with its tuples null-safely (one
-        read(parent) per delete commit — predicates, unlike
-        positions, don't address rows; this exceeds the reference
-        analog, which still gates equality deletes). REPLACE
-        snapshots (rewrite_data_files compaction) are CONTENT-NEUTRAL
-        and emit no change rows; the window is split into eras at
-        each one so commits the rewrite superseded still replay from
-        the pre-replace manifests (one extra metadata walk per
-        in-window replace — zero when there are none). OVERWRITE
-        snapshots (copy-on-write engines' row-level DELETE/UPDATE/
-        MERGE, INSERT OVERWRITE) emit retractions for every
-        PARENT-LIVE row of their REMOVED file set (the parent's
-        eq/pos-delete residue is applied to the restricted scan, so a
-        row an earlier delete killed never re-retracts) and inserts
-        for their added files; MoR-style overwrites (RowDelta: added
-        delete files, nothing removed) route their delete files
-        through the ordinary retraction machinery anchored at the
-        parent. HYBRID commits that BOTH remove data files AND add
-        delete files (COW+MoR in one snapshot — no known engine emits
-        it, but the shape is spec-legal) replay via a file-disjoint
-        split: removed files' parent-live rows retract wholesale,
-        added pos-deletes resolve against the commit's own live files
-        (which exclude the removed set by construction), and added
-        eq-deletes anchor at the parent-live rows of the KEPT parent
-        files only — so no row can retract through two paths. Delete
-        commits OUTSIDE the window are ignored: they changed state the
-        window does not cover.
+        One rule covers every commit shape. For each non-replace
+        commit c with parent p in the window:
 
-        ``ref``: diff a BRANCH/TAG head instead of main — the
-        write-audit-publish reviewer's view of exactly what a staged
-        branch would add (same contract as ``read(ref=...)``;
-        mutually exclusive with *to_snapshot_id*)."""
+        - inserts: every row of the data files c adds, stamped c.
+          This is before c's own deletes apply, so a row that c's own
+          position delete kills emits both an insert and a delete.
+        - deletes: every row that was live just before c and is not
+          live at c, once each, stamped c. "Live just before c" means
+          live at p, or in a file that c adds. Rows are keyed by
+          (``_metadata.file_path``, ``_metadata.row_index``).
+
+        Replace commits (compaction) emit nothing. A row inserted and
+        deleted inside one window yields both records: a per-commit
+        changelog, not net changes.
+
+        Planning walks manifest metadata only (``_window_commits``).
+        The inserts of the whole window are ONE multi-path scan per
+        partition spec, stamped through a broadcast file→commit
+        lookup. A commit's deletes read only the files it touches: the
+        files it removes, the files its position deletes reference
+        and, for equality deletes, the live earlier files, with p's
+        delete residue applied by read()'s anti-joins. A run of
+        consecutive equality-delete-only commits shares one persisted
+        ``read(p)`` (at most ``_EQ_RUN_CAP`` commits), freed by the
+        next call or ``release_changelog_cache``.
+
+        ``ref``: diff a branch or tag head instead of main (mutually
+        exclusive with *to_snapshot_id*)."""
         from pyspark.sql import functions as F
 
         if ref is not None:
             if to_snapshot_id is not None:
                 raise ValueError("pass to_snapshot_id OR ref")
             to_snapshot_id = self.ref_snapshot(ref)
-        # unpersist the PREVIOUS changelog call's cached eq-run base
-        # frames FIRST — at the top so early returns and raises
-        # release them too; the persists below must outlive their own
-        # (lazy) return value, so next-call entry is the release point
+        # the previous call's eq-run frames must outlive its lazy
+        # result, so this call is their release point
         self.release_changelog_cache()
         md = self.metadata()
         snaps = {s["snapshot-id"]: s for s in md["snapshots"]}
-        if from_snapshot_id is not None and from_snapshot_id not in snaps:
-            raise ValueError(
-                f"changelog: from_snapshot_id {from_snapshot_id} is not "
-                "a retained snapshot — it expired (or never existed); "
-                "the window base state is gone")
-        lo_seq = (0 if from_snapshot_id is None
-                  else snaps[from_snapshot_id]["sequence-number"])
         to_id = (md["current-snapshot-id"] if to_snapshot_id is None
                  else to_snapshot_id)
+        for sid in (from_snapshot_id, None if to_id == -1 else to_id):
+            if sid is not None and sid not in snaps:
+                raise ValueError(f"changelog: snapshot {sid} is not a "
+                                 "retained snapshot — it expired (or "
+                                 "never existed)")
         if to_id == -1:
             return self._empty_changelog(self._schema_for(None, md))
-        if to_id not in snaps:
-            raise ValueError(
-                f"changelog: to_snapshot_id {to_id} is not a retained "
-                "snapshot — it expired (or never existed)")
-        hi_seq = snaps[to_id]["sequence-number"]
-        # gate + era detection walk TO_ID's ancestry (not the head's —
-        # a rollback can put replaces on main that to_id never saw)
+        # walk TO_ID's ancestry, not the head's: a rolled-back main or
+        # a diverged branch shares sequences with commits to_id never
+        # saw, and the window would emit their inserts without the
+        # abandoned lineage's retractions
         chain = self._main_ancestry({**md, "current-snapshot-id": to_id})
-        # the window is only meaningful when FROM is on the head's
-        # lineage (audit r13 — changelog(ref=)/rollback edges): a
-        # rolled-back main or a diverged branch head shares sequences
-        # with commits the window head never saw, and the
-        # sequence-bounded walk would silently emit inserts WITHOUT the
-        # retractions of the abandoned lineage (Iceberg's incremental
-        # scan rejects a non-ancestor base the same way)
         if (from_snapshot_id is not None
                 and from_snapshot_id not in {s["snapshot-id"]
                                              for s in chain}):
@@ -2491,591 +2529,216 @@ class IcebergTable:
                 f"an ancestor of the window head {to_id} — an upstream "
                 "rollback_to abandoned it, or it lives on a diverged "
                 "branch; diff from a shared ancestor instead")
-        win_replaces = []
-        win_overwrites = []
-        for s in chain:
-            op = s.get("summary", {}).get("operation")
-            if not (lo_seq < s.get("sequence-number", 0) <= hi_seq):
-                continue
-            if op == "replace":
-                win_replaces.append(s)
-            elif op == "overwrite":
-                # a genuine OVERWRITE (copy-on-write engines' row-
-                # level DELETE/UPDATE/MERGE and INSERT OVERWRITE) IS
-                # row-changing: retractions from its removed file set
-                # + inserts from its added files, both stamped with
-                # the overwrite snapshot. It also supersedes earlier
-                # manifests, so it splits eras exactly like a replace.
-                win_overwrites.append(s)
-            elif op not in ("append", "delete", None):
-                raise NotImplementedError(
-                    f"non-append snapshot (operation={op!r}) in the "
-                    "changelog window")
-        # A 'replace' (rewrite_data_files compaction) is CONTENT-
-        # NEUTRAL by its spec contract — correct CDC emission is NO
-        # change rows for it. But its manifest list supersedes every
-        # earlier file, so a single entries(to_id) walk cannot see
-        # window commits that landed BEFORE an in-window replace.
-        # Split the window into ERAS at each replace: era k's adds and
-        # delete files are read from the entries of the snapshot just
-        # before replace k+1 (its parent), where they are still live
-        # and carry their true commit sequences; the final era reads
-        # at to_id. The replace's own compacted files sit exactly ON
-        # an era boundary (seq == era lo) and are excluded by the
-        # strict lower bound. No replace in the window ⇒ one era at
-        # to_id — the original single-walk plan, byte for byte.
-        eras = _split_eras(win_replaces + win_overwrites, lo_seq,
-                           hi_seq, snaps, chain, to_id, "changelog")
-        # per-snapshot entry cache: an overwrite's parent often
-        # anchors an era too, and each _entries() walk re-opens every
-        # manifest (a separate Spark job under distributed planning)
-        _ents_cache: dict[int, list] = {}
-
-        def _ents(sid: int) -> list[dict]:
-            if sid not in _ents_cache:
-                _ents_cache[sid] = self._entries(sid, md=md)
-            return _ents_cache[sid]
-
-        # delete files are immutable — each one's referenced-file set
-        # is read from its parquet ONCE per changelog() call (review
-        # r13: the residue-aware retraction loop otherwise re-read
-        # every earlier pos-delete once per later delete, O(P^2)
-        # driver round-trips on a delete-heavy window)
-        _refs_cache: dict[str, set] = {}
-
-        def _refs(path: str) -> set:
-            if path not in _refs_cache:
-                import pyarrow.parquet as _pq
-                _refs_cache[path] = set(_pq.read_table(
-                    _open_input_file_any(path),
-                    columns=["file_path"])["file_path"].to_pylist())
-            return _refs_cache[path]
-        window = []     # content=0 data files committed in the window
-        pos_dels = []   # [(entry, era_idx)] pos-delete files in window
-        eq_dels = []    # content=2 equality-delete files in the window
-        era_data = []   # per era: every live data file at its walk
-        era_dels = []   # per era: every live DELETE file at its walk
-        #               (window or not — the pos-retraction scan needs
-        #               the full earlier residue, audit r13)
-        # [(removed data entries, overwrite snapshot id,
-        #   parent-live pos-delete entries, parent-live eq-delete
-        #   entries)] — the residue is APPLIED to the removed scan so
-        #   rows an earlier delete already killed are not re-retracted
-        ow_removed = []
-        # pos-delete files ADDED BY an overwrite (MoR RowDelta commits
-        # report operation=overwrite): their references resolve
-        # against the OVERWRITE's own live data set (parent-kept plus
-        # its same-commit added files — the spec applies pos-deletes
-        # inclusively), not an era walk
-        ow_pos_dels = []
-        # eq-delete files added by a HYBRID overwrite (one commit that
-        # both removes data files and adds delete files): their
-        # retraction anchor is the parent-live rows of the KEPT parent
-        # files only — see the emission block for the disjointness
-        # argument (r13, closes the r12 hybrid gate)
-        hybrid_eq = []
-        for o in win_overwrites:
-            o_id = o["snapshot-id"]
-            o_seq = o["sequence-number"]
-            parent = o.get("parent-snapshot-id")
-            if parent is None or parent not in snaps:
-                raise ValueError(
-                    f"changelog: overwrite snapshot {o_id} has no "
-                    "retained parent — the rows it removed are not "
-                    "reconstructable")
-            ents_p = _ents(parent)
-            ents_o = _ents(o_id)
-            o_added = [e for e in ents_o
-                       if e["sequence_number"] == o_seq]
-            o_add_dels = [e for e in o_added if e["content"] != 0]
-            o_data_paths = {e["info"].path for e in ents_o
-                            if e["content"] == 0}
-            removed = [e for e in ents_p if e["content"] == 0
-                       and e["info"].path not in o_data_paths]
-            # retractions: every PARENT-LIVE row of the files the
-            # overwrite REMOVED; the parent's delete residue is
-            # carried along and applied in the emission below
-            ow_removed.append(
-                (removed, o_id,
-                 [e for e in ents_p if e["content"] == 1],
-                 [e for e in ents_p if e["content"] == 2]))
-            # a MoR-style overwrite's ADDED delete files are ordinary
-            # in-window retractions — routed through the same pos/eq
-            # machinery (their seq sits ON the era boundary, so the
-            # era walks exclude them and this is the only collection
-            # point). Equality deletes apply to STRICTLY-earlier data
-            # (never the commit's own adds); position deletes apply
-            # INCLUSIVELY (spec: data seq <= delete seq — Flink's
-            # upsert writer addresses same-checkpoint rows exactly
-            # this way, r12 review #2), so their reference set is the
-            # overwrite's OWN live data: parent-kept + its added files
-            # — which by construction EXCLUDES the removed files, so a
-            # pos-delete is disjoint from the removed-path retractions
-            # in every shape (a reference into a removed file finds no
-            # live target: those rows retract via the removed path).
-            o_add_eq = [e for e in o_add_dels if e["content"] == 2]
-            if removed and o_add_eq:
-                # HYBRID COW+MoR (r13 — was a NotImplementedError
-                # through r12): the added eq-deletes' matches could
-                # overlap the removed rows, double-counting. The two
-                # retraction sets ARE disjoint once the eq anchor is
-                # restricted BY FILE: rows of REMOVED files retract via
-                # the removed path (all of them — whether or not the
-                # eq tuples also match); rows the eq-deletes kill in
-                # SURVIVING parent files retract here. Same-commit
-                # added data files are never eq-targets (strictly-
-                # earlier rule), and the kept-file scan carries the
-                # parent's own delete residue exactly like the removed
-                # path, so already-dead rows don't re-retract.
-                kept = [e for e in ents_p if e["content"] == 0
-                        and e["info"].path in o_data_paths]
-                hybrid_eq.append(
-                    (o_add_eq, kept, o_id,
-                     [e for e in ents_p if e["content"] == 1],
-                     [e for e in ents_p if e["content"] == 2]))
-            else:
-                eq_dels.extend(o_add_eq)
-            ow_pos_dels.extend(
-                (e, o_id) for e in o_add_dels if e["content"] == 1)
-            # inserts: the files it ADDED ride the normal insert scan
-            # (seq == the overwrite's own, so the era bounds exclude
-            # them and this is the only collection point)
-            window.extend(e for e in o_added if e["content"] == 0)
-        for era_lo, walk_id, era_hi in eras:
-            all_data = []
-            all_dels = []
-            idx = len(era_data)
-            for e in _ents(walk_id):
-                in_win = era_lo < e["sequence_number"] <= era_hi
-                if e["content"] == 2:
-                    all_dels.append(e)
-                    if in_win:
-                        eq_dels.append(e)
-                    continue
-                if e["content"] == 1:
-                    all_dels.append(e)
-                    if in_win:
-                        pos_dels.append((e, idx))
-                    continue
-                all_data.append(e)
-                if in_win:
-                    window.append(e)
-            era_data.append(all_data)
-            era_dels.append(all_dels)
-        # overwrite-added pos-deletes resolve against the OVERWRITE's
-        # live data set (parent-kept + its own added files — position
-        # deletes apply inclusively to same-sequence data, r12 review
-        # #2) — registered as extra reference eras, one per overwrite
-        _ow_ref_idx: dict[int, int] = {}
-        for e, ref_id in ow_pos_dels:
-            if ref_id not in _ow_ref_idx:
-                _ow_ref_idx[ref_id] = len(era_data)
-                era_data.append([x for x in _ents(ref_id)
-                                 if x["content"] == 0])
-                era_dels.append([x for x in _ents(ref_id)
-                                 if x["content"] != 0])
-            pos_dels.append((e, _ow_ref_idx[ref_id]))
-        st = self._schema_for(to_id, md)
-        if (not window and not pos_dels and not eq_dels
-                and not any(r for r, *_ in ow_removed)):
-            return self._empty_changelog(st)
-        # same column-resolution rule as read(): field-ids only when
-        # the schema history demands it, else strip the id metadata so
-        # this read can't inherit a stale session-wide conf
-        if self._needs_id_resolution(md):
-            self.spark.conf.set("spark.sql.parquet.fieldId.read.enabled",
-                                "true")
-        else:
-            st = T.StructType([
-                T.StructField(f.name, f.dataType, f.nullable)
-                for f in st.fields])
-        seq_of_snap = {s["sequence-number"]: s["snapshot-id"]
-                       for s in md["snapshots"]}
+        commits = list(self._window_commits(
+            md, chain, 0 if from_snapshot_id is None
+            else snaps[from_snapshot_id]["sequence-number"],
+            snaps[to_id]["sequence-number"], "changelog"))
+        st = self._read_schema(md, to_id)
+        names = [f.name for f in st.fields]
+        id_to_name = {f["id"]: f["name"]
+                      for f in self._ice_schema_for(to_id, md)["fields"]}
         snap_name_to_id, hist_names, data_prefix = \
             self._partition_attach_ctx(md, to_id)
+        @cache
+        def _refs(path: str) -> frozenset:
+            # a delete file's referenced paths, read driver-side once
+            # per call (delete files are immutable)
+            import pyarrow.parquet as _pq
+            return frozenset(_pq.read_table(
+                _open_input_file_any(path),
+                columns=["file_path"])["file_path"].to_pylist())
+
+        def _forms(e) -> set:
+            # manifests store the literal Path.toString(), delete files
+            # and _metadata.file_path the URI form (_path_uri_form)
+            return {e["info"].path, self._path_uri_form(e["info"].path)}
 
         def _scan_grouped(entries, with_pos: bool):
             """ONE multi-path scan per partition spec over *entries*,
-            identity columns re-attached; optionally carries the
-            parquet metadata (file, row) identity columns."""
-            grouped = None
+            identity columns re-attached, carrying the file path (and
+            with *with_pos* the row index) as ``_cl_fp``/``_cl_pos``."""
+            scans = []
             for sp in sorted({e.get("spec_id", 0) for e in entries}):
                 ids = {si["source_id"] for si in self._spec_info(md, sp)
                        if si["transform"] == "identity"}
-                paths = [e["info"].path for e in entries
-                         if e.get("spec_id", 0) == sp]
-                base_st = (T.StructType([
+                part = self.spark.read.schema(T.StructType([
                     f for f in st.fields
-                    if snap_name_to_id.get(f.name) not in ids])
-                    if ids else st)
-                part = self.spark.read.schema(base_st).parquet(*paths)
+                    if snap_name_to_id.get(f.name) not in ids])).parquet(
+                        *[e["info"].path for e in entries
+                          if e.get("spec_id", 0) == sp])
                 if ids:
                     part = self._attach_identity_cols(
                         part, st, ids, snap_name_to_id, hist_names,
                         data_prefix)
-                extra = ([F.col("_metadata.file_path").alias("_cl_fp"),
-                          F.col("_metadata.row_index").alias("_cl_pos")]
-                         if with_pos
-                         else [F.col("_metadata.file_path")
-                               .alias("_cl_fp")])
-                part = part.select(*[f.name for f in st.fields], *extra)
-                grouped = (part if grouped is None
-                           else grouped.unionByName(part))
-            return grouped
+                scans.append(part.select(
+                    *names, F.col("_metadata.file_path").alias("_cl_fp"),
+                    *([F.col("_metadata.row_index").alias("_cl_pos")]
+                      if with_pos else [])))
+            return reduce(DataFrame.unionByName, scans)
 
-        def _parent_live(entries, p_dels_pos, p_dels_eq,
-                         force_pos=False):
-            """Live rows of *entries* as of some anchor commit: one
-            grouped scan with the given delete residue applied through
-            read()'s shared anti-join helper. Applicability is decided
-            from the manifests first: eq-deletes apply to STRICTLY-
-            earlier data files; pos-deletes only to files they
-            actually reference (a driver-local column read of each
-            small delete file). ``force_pos`` keeps the (file, pos)
-            metadata columns on the output even when no pos residue
-            applies (the pos-retraction path joins on them)."""
+        def _lookup(out, rows, col: str, what: str):
+            """*out* left-joined on ``_cl_fp`` with the broadcast
+            (path, *col*) *rows*. A scanned file missing from them, a
+            path-form mismatch, raises instead of leaving *col* NULL:
+            a NULL stamp would bucket rows under a phantom commit, a
+            NULL sequence silently skip the residue anti-joins."""
+            lk = local_rows_df(self.spark, rows,
+                               f"_lk_path string, {col} long")
+            return out.join(
+                F.broadcast(lk), out["_cl_fp"] == lk["_lk_path"], "left"
+            ).withColumn(col, F.when(F.col(col).isNull(), F.raise_error(
+                F.concat(F.lit(f"changelog: scanned file missing from "
+                               f"the {what} lookup (path-form mismatch): "),
+                         F.col("_cl_fp"))).cast("long"),
+            ).otherwise(F.col(col)))
+
+        def _parent_live(entries, p_dels):
+            """Rows of *entries* live just before a commit whose parent
+            holds the delete files *p_dels*, keyed (_cl_fp, _cl_pos):
+            one grouped scan with the applicable residue anti-joined by
+            read()'s shared helper. Equality deletes apply to strictly
+            earlier files, position deletes to the files they
+            reference."""
             min_seq = min(e["sequence_number"] for e in entries)
-            paths = ({e["info"].path for e in entries}
-                     | {self._path_uri_form(e["info"].path)
-                        for e in entries})
-            eq_app = [e for e in p_dels_eq
-                      if e["sequence_number"] > min_seq]
-            pos_app = [d for d in p_dels_pos
-                       if _refs(d["info"].path) & paths]
-            out = _scan_grouped(entries,
-                                with_pos=force_pos or bool(pos_app))
-            if eq_app or pos_app:
-                # per-file commit sequence rides a broadcast lookup
-                # so the residue's sequence guards stay exact; the
-                # anti-joins themselves are read()'s shared helper —
-                # ONE copy of the spec's sequence-guard semantics
-                seq_lk = local_rows_df(
-                    self.spark,
-                    [(self._path_uri_form(e["info"].path),
-                      e["sequence_number"]) for e in entries],
-                    "_sq_path string, _data_seq long")
-                out = out.join(
-                    F.broadcast(seq_lk),
-                    out["_cl_fp"] == seq_lk["_sq_path"], "left")
-                # every scanned file is in the lookup by construction,
-                # so a NULL _data_seq can only mean a path-form
-                # mismatch _path_uri_form did not normalize — and the
-                # sequence guards downstream would evaluate to NULL and
-                # silently SKIP the anti-joins (already-dead rows would
-                # re-retract). Fail loudly like the insert path's stamp
-                # (advice-r12).
-                out = out.withColumn("_data_seq", F.when(
-                    F.col("_data_seq").isNull(),
-                    F.raise_error(F.concat(
-                        F.lit("changelog: scanned file missing from "
-                              "the sequence lookup (path-form "
-                              "mismatch): "),
-                        F.col("_cl_fp"))).cast("long"),
-                ).otherwise(F.col("_data_seq")))
-                out = self._anti_join_deletes(
-                    out, pos_app, eq_app, st, id_to_name,
-                    fp_col="_cl_fp", pos_col="_cl_pos")
-            return out
+            paths = set().union(*map(_forms, entries))
+            eq_app = [e for e in p_dels if e["content"] == 2
+                      and e["sequence_number"] > min_seq]
+            pos_app = [d for d in p_dels if d["content"] == 1
+                       and _refs(d["info"].path) & paths]
+            out = _scan_grouped(entries, with_pos=True)
+            if not (eq_app or pos_app):
+                return out
+            return self._anti_join_deletes(
+                _lookup(out, [(self._path_uri_form(e["info"].path),
+                               e["sequence_number"]) for e in entries],
+                        "_data_seq", "sequence"),
+                pos_app, eq_app, st, id_to_name,
+                fp_col="_cl_fp", pos_col="_cl_pos")
 
-        ins = None
+        parts = []
+        window = [e for c in commits for e in c.added if e["content"] == 0]
         if window:
-            # file path -> committing snapshot: O(window files) slim
-            # rows, broadcast onto the scan (planning already walked
-            # these); URI-form keying lives in _changelog_lookup
-            lookup = self._changelog_lookup(window, seq_of_snap)
-            out = _scan_grouped(window, with_pos=False)
-            # every scanned file is by construction in the lookup, so
-            # a NULL stamp can only mean a path-form mismatch
-            # _uri_form did not normalize — fail LOUDLY in the
-            # projection instead of silently misbucketing rows under a
-            # phantom NULL commit (advice-r9; same lazy raise_error
-            # shape as rest.py strict)
-            stamp = F.when(
-                F.col("_commit_snapshot_id").isNull(),
-                F.raise_error(F.concat(
-                    F.lit("changelog: scanned file missing from the "
-                          "commit lookup (path-form mismatch): "),
-                    F.col("_cl_fp"))).cast("long"),
-            ).otherwise(F.col("_commit_snapshot_id"))
-            ins = (
-                out.join(F.broadcast(lookup),
-                         out["_cl_fp"] == lookup["_cl_path"], "left")
-                .withColumn("_commit_snapshot_id", stamp)
+            parts.append(_lookup(
+                _scan_grouped(window, with_pos=False),
+                self._changelog_lookup(
+                    window, {s["sequence-number"]: s["snapshot-id"]
+                             for s in md["snapshots"]}),
+                "_commit_snapshot_id", "commit")
                 .withColumn("_change_type", F.lit("insert"))
-                .select(*[f.name for f in st.fields],
-                        "_change_type", "_commit_snapshot_id"))
+                .select(*names, "_change_type", "_commit_snapshot_id"))
 
-        ice = self._ice_schema_for(to_id, md)
-        id_to_name = {f["id"]: f["name"] for f in ice["fields"]}
-        cur_id_by_name = {f["name"]: f["id"] for f in ice["fields"]}
+        _alias = count()
 
-        dels = None
-        # delete files store the URI form _metadata.file_path reports
-        # (delete_positions' contract) while manifests store the
-        # literal Path.toString() — key the live set under BOTH forms
-        # or an encoded path (space in a partition value) silently
-        # drops its retraction (caught by the identity-partitioned
-        # retraction pin, audit r10)
-        era_maps: list[dict] = []
-        for all_data in era_data:
-            data_by_path = {}
-            for e in all_data:
-                data_by_path[e["info"].path] = e
-                data_by_path[self._path_uri_form(e["info"].path)] = e
-            era_maps.append(data_by_path)
-        for d, era_idx in sorted(pos_dels,
-                                 key=lambda t: t[0]["sequence_number"]):
-            # resolve references against the delete's OWN era — a
-            # later in-window replace supersedes the referenced files
-            # at to_id, but they were live when the delete committed
-            data_by_path = era_maps[era_idx]
-            d_seq = d["sequence_number"]
-            d_snap = seq_of_snap.get(d_seq)
-            # the delete parquet's file_path column names EXACTLY the
-            # data files it touches — a driver-local column read of
-            # one small file (memoized), so the retraction scan opens
-            # only the referenced data files, never the rest of the
-            # table
-            refs = _refs(d["info"].path)
-            # spec guard: a position delete applies to data files with
-            # sequence <= the delete's. A reference missing from the
-            # live set addressed already-dead positions — a no-op.
-            ref_entries = [
-                data_by_path[p] for p in sorted(refs)
-                if p in data_by_path
-                and data_by_path[p]["sequence_number"] <= d_seq]
-            if not ref_entries:
+        def _group(right, on, sid):
+            """A retraction group: the base rows matching *right* on
+            [(base column, right column)] null-safely, stamped *sid*."""
+            a = f"_g{next(_alias)}"
+            cond = F.lit(True)
+            for b_col, r_col in on:
+                cond = cond & F.col(f"_b.{b_col}").eqNullSafe(
+                    F.col(f"{a}.{r_col}"))
+            return right.alias(a), cond, sid
+
+        def _eq_groups(dfiles, sid):
+            # one group per equality-id set; the tuple columns resolve
+            # by field-id against to_id's schema, as read() does
+            by_ids: dict[tuple, list] = {}
+            for e in dfiles:
+                by_ids.setdefault(tuple(e["equality_ids"] or ()),
+                                  []).append(e["info"].path)
+            return [_group(self.spark.read.schema(T.StructType(
+                [st[id_to_name[i]] for i in ids])).parquet(*paths),
+                [(id_to_name[i], id_to_name[i]) for i in ids], sid)
+                for ids, paths in sorted(by_ids.items())]
+
+        def _retract(base, groups):
+            """The per-commit diff: each group's rows of *base*, once
+            each — the group's own side semi-joined after every
+            earlier group's is anti-joined out."""
+            for right, cond, sid in groups:
+                parts.append(base.join(F.broadcast(right), cond,
+                                       "left_semi").select(
+                    *names, F.lit("delete").alias("_change_type"),
+                    F.lit(sid).cast("long").alias("_commit_snapshot_id")))
+                base = base.join(F.broadcast(right), cond, "left_anti")
+
+        runs: list[list[_Commit]] = []
+        for c in commits:
+            sid = c.snap["snapshot-id"]
+            if c.op not in ("append", "delete", "overwrite", None):
+                raise NotImplementedError(
+                    f"non-append snapshot (operation={c.op!r}) in the "
+                    "changelog window")
+            eq_only = c.added and not c.removed and all(
+                e["content"] == 2 for e in c.added)
+            # an overwrite's removed rows and an equality run's base
+            # are read at the parent
+            if (eq_only or c.op == "overwrite") and c.parent not in snaps:
+                raise ValueError(
+                    f"changelog: snapshot {sid} has no retained parent — "
+                    "the rows it removed are not reconstructable")
+            if eq_only:
+                # extends the equality run its parent ends
+                if (runs and len(runs[-1]) < _EQ_RUN_CAP
+                        and c.parent == runs[-1][-1].snap["snapshot-id"]):
+                    runs[-1].append(c)
+                else:
+                    runs.append([c])
                 continue
-            positions = (self.spark.read.parquet(d["info"].path)
-                         .select("file_path", "pos"))
-            # EARLIER residue (audit r13): a position this delete
-            # addresses may already be dead — killed by an earlier
-            # delete (in-window or not), which already retracted it at
-            # ITS commit — so the scan must be the rows live just
-            # BEFORE this delete, or net multiplicities go negative
-            # (a pos-delete re-targeting an eq-killed row, two
-            # pos-deletes addressing one position). Earlier = strictly
-            # lower sequence; within one commit, eq siblings win
-            # (<=, they retract the row through the eq path) and pos
-            # siblings tiebreak on file path so exactly one emits.
-            e_dels = era_dels[era_idx]
-            earlier_eq = [e for e in e_dels if e["content"] == 2
-                          and e["sequence_number"] <= d_seq]
-            earlier_pos = [
-                e for e in e_dels if e["content"] == 1
-                and e["info"].path != d["info"].path
-                and (e["sequence_number"] < d_seq
-                     or (e["sequence_number"] == d_seq
-                         and e["info"].path < d["info"].path))]
-            hit = (
-                _parent_live(ref_entries, earlier_pos, earlier_eq,
-                             force_pos=True)
-                .join(F.broadcast(positions),
-                      (F.col("_cl_fp") == positions["file_path"])
-                      & (F.col("_cl_pos") == positions["pos"]),
-                      "left_semi")
-                .select(*[f.name for f in st.fields])
-                .withColumn("_change_type", F.lit("delete"))
-                .withColumn("_commit_snapshot_id",
-                            F.lit(d_snap).cast("long")))
-            dels = hit if dels is None else dels.unionByName(hit)
+            d_pos = [e["info"].path for e in c.added if e["content"] == 1]
+            d_eq = [e for e in c.added if e["content"] == 2]
+            gone = set().union(*(_forms(e) for e in c.removed
+                                 if e["content"] == 0))
+            if not (d_pos or d_eq or gone):
+                continue  # an append
+            before = c.before()
+            refs = set().union(*map(_refs, d_pos))
 
-        # EQUALITY-delete retractions: the rows commit D removes are
-        # exactly the table state AS OF D's PARENT (all earlier
-        # deletes applied — read() does that) matching D's tuples
-        # null-safely. A retraction replay of an equality delete is
-        # inherently a scan for the matching rows (the delete file
-        # stores predicates, not addresses) — but a RUN of CONSECUTIVE
-        # eq-delete commits (parent chain unbroken, no data/pos-delete
-        # files riding the same snapshots) shares ONE persisted
-        # read(base-parent): commit i's retraction is the shared frame
-        # anti-joined with every earlier tuple set in the run and
-        # semi-joined with its own — broadcast hash joins on a cached
-        # frame instead of one full merge-on-read reconstruction per
-        # commit (verdict-r10 #3: a delete-heavy GDPR window paid O(K)
-        # reconstructions; now one per run). Within one commit,
-        # multiple equality-id sets dedupe the same way (earlier
-        # subgroups anti-joined out), so a row matching two delete
-        # files of one commit retracts ONCE, not twice. This EXCEEDS
-        # the reference analog — Iceberg's own Spark changelog still
-        # gates equality deletes.
-        eq_by_seq: dict[int, dict[tuple, list[dict]]] = {}
-        for e in eq_dels:
-            eq_by_seq.setdefault(e["sequence_number"], {}).setdefault(
-                tuple(e["equality_ids"] or ()), []).append(e)
-        # a run extends over commit s only if s added NOTHING but
-        # equality-delete files — a data or pos-delete file in the
-        # same snapshot changes the state the next commit's parent
-        # read must see (replace commits break the parent chain check
-        # by being snapshots themselves)
-        seqs_with_other = ({e["sequence_number"] for e in window}
-                           | {d["sequence_number"] for d, _ in pos_dels})
-        # run length is CAPPED: commit i carries i anti-joins against
-        # the earlier tuple sets, so an unbounded run puts O(K²/2)
-        # join nodes in one Catalyst plan (a 200-commit purge window
-        # would be ~20k) — chunking at 16 bounds the plan at ~136
-        # joins per chunk while still saving 15/16 of the
-        # reconstructions; chunk 2's base is chunk 1's last eq-delete
-        # snapshot, which read() reconstructs exactly (r11 review)
-        runs: list[list[int]] = []
-        for s in sorted(eq_by_seq):
-            d_snap = seq_of_snap.get(s)
-            parent = snaps.get(d_snap, {}).get("parent-snapshot-id")
-            if (runs and len(runs[-1]) < _EQ_RUN_CAP
-                    and parent == seq_of_snap.get(runs[-1][-1])
-                    and runs[-1][-1] not in seqs_with_other):
-                runs[-1].append(s)
-            else:
-                runs.append([s])
-        _alias_seq = [0]
-
-        def _eq_tuple_hits(base, groups, left_col, sel_cols):
-            """ONE copy of the eq tuple-retraction discipline (review
-            r13 — the hybrid emission had grown a near-duplicate):
-            group delete files by equality-id set, read each group's
-            tuples under to_id's field-id-resolved names, anti-join
-            every EARLIER group out of the base, semi-join the group's
-            own tuples — so a row matching two groups retracts ONCE.
-            ``left_col(field_id)`` supplies the base-side column for
-            the join condition (the run machinery maps through the
-            base snapshot's schema with typed-null fallback; the
-            hybrid path uses to_id's names directly); ``groups`` is
-            [(ids, delete_files, snapshot_id_to_stamp)] in application
-            order. Yields one hit frame per group."""
-            def cond(a, a_ids):
-                c = F.lit(True)
-                for i in a_ids:
-                    c = c & left_col(i).eqNullSafe(
-                        F.col(f"{a}.{id_to_name[i]}"))
-                return c
-
-            earlier: list[tuple[tuple, str, DataFrame]] = []
-            for ids, dfiles, d_snap in groups:
-                # tuple columns resolve by FIELD-ID against to_id's
-                # schema, same rule as read()'s equality-delete block
-                cols = [id_to_name[i] for i in ids]
-                dschema = T.StructType([
-                    f for c in cols for f in st.fields if f.name == c])
-                dd = None
-                for e in dfiles:
-                    one = self.spark.read.schema(dschema).parquet(
-                        e["info"].path)
-                    dd = one if dd is None else dd.unionByName(one)
-                # no dropDuplicates: left_semi is duplicate-
-                # insensitive, and the dedup would cost a shuffle on
-                # the tuple frame the broadcast hash table dedups
-                # anyway
-                alias = f"_dtup{_alias_seq[0]}"
-                _alias_seq[0] += 1
-                dd = dd.alias(alias)
-                cur = base
-                for e_ids, e_alias, e_dd in earlier:
-                    cur = cur.join(F.broadcast(e_dd),
-                                   cond(e_alias, e_ids), "left_anti")
-                yield (cur.join(F.broadcast(dd), cond(alias, ids),
-                                "left_semi")
-                       .select(*sel_cols)
-                       .withColumn("_change_type", F.lit("delete"))
-                       .withColumn("_commit_snapshot_id",
-                                   F.lit(d_snap).cast("long")))
-                earlier.append((ids, alias, dd))
+            def _pos():
+                return ([_group(
+                    self.spark.read.schema(_POS_SCHEMA).parquet(*d_pos),
+                    [("_cl_fp", "file_path"), ("_cl_pos", "pos")], sid)]
+                    if d_pos else [])
+            gone_group = ([_group(
+                local_rows_df(self.spark, [(p,) for p in sorted(gone)],
+                              "path string"), [("_cl_fp", "path")], sid)]
+                if gone else [])
+            for ents, groups in (
+                    # p's live files c removes or its deletes reach ...
+                    ([e for e in before if e["content"] == 0
+                      and (d_eq or e["info"].path in gone
+                           or _forms(e) & refs)],
+                     gone_group + _eq_groups(d_eq, sid) + _pos()),
+                    # ... and c's own files, which only its position
+                    # deletes reach
+                    ([e for e in c.added if e["content"] == 0
+                      and _forms(e) & refs], _pos())):
+                if ents and groups:
+                    _retract(_parent_live(
+                        ents, [e for e in before if e["content"]])
+                        .alias("_b"), groups)
 
         for run in runs:
-            first_snap = seq_of_snap.get(run[0])
-            base = snaps.get(first_snap, {}).get("parent-snapshot-id")
-            if base is None or base not in snaps:
-                raise ValueError(
-                    f"changelog: equality-delete snapshot {first_snap} "
-                    "has no retained parent — the pre-delete state "
-                    "(the rows it retracted) is not reconstructable "
-                    "(expired or pre-parent-pointer history)")
-            # the base state reads under ITS schema — map its column
-            # names to to_id's by field-id (rename-proof),
-            # null-filling columns added after the base snapshot
-            # (metadata-only schema changes inside the run resolve
-            # identically: matching is by field-id, and a column
-            # added mid-run holds no data yet, so null-fill agrees)
-            p_ice = self._ice_schema_for(base, md)
-            p_name_by_id = {f["id"]: f["name"] for f in p_ice["fields"]}
-            prev = self.read(snapshot_id=base).alias("_prev")
-            n_sub = sum(len(eq_by_seq[s]) for s in run)
-            if n_sub > 1:
+            base = run[0].parent
+            groups = [g for c in run
+                      for g in _eq_groups(c.added, c.snap["snapshot-id"])]
+            prev = self.read(snapshot_id=base)
+            if len(groups) > 1:
                 prev = prev.persist()
                 self._changelog_cached.append(prev)
-            prev_cols = set(prev.columns)
-            sel = []
-            for f in st.fields:
-                p_c = p_name_by_id.get(cur_id_by_name.get(f.name))
-                sel.append(
-                    F.col(f"_prev.{p_c}").alias(f.name)
-                    if p_c in prev_cols
-                    else F.lit(None).cast(f.dataType).alias(f.name))
+            # the base reads under ITS schema: map to to_id's names by
+            # field-id, null-filling columns added after it
+            p_name = {f["id"]: f["name"]
+                      for f in self._ice_schema_for(base, md)["fields"]}
+            p_col = {n: p_name.get(i) for i, n in id_to_name.items()}
+            _retract(prev.select(*[
+                prev[p_col[f.name]].alias(f.name)
+                if p_col[f.name] in prev.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in st.fields]).alias("_b"), groups)
 
-            def _run_left_col(i, _p=p_name_by_id, _pc=prev_cols):
-                p_c = _p.get(i)
-                if p_c is not None and p_c in _pc:
-                    return F.col(f"_prev.{p_c}")
-                # field-id absent from the BASE snapshot's schema
-                # (added by a mid-run metadata-only change): the
-                # column held no data at base, so the join side is a
-                # typed null — referencing _prev.<current-name> would
-                # AnalysisException (advice r11; null-fill on the
-                # SELECT list doesn't reach the join condition)
-                return F.lit(None).cast(st[id_to_name[i]].dataType)
-
-            groups = [(ids, dfiles, seq_of_snap.get(d_seq))
-                      for d_seq in run
-                      for ids, dfiles in sorted(eq_by_seq[d_seq].items())]
-            for hit in _eq_tuple_hits(prev, groups, _run_left_col, sel):
-                dels = hit if dels is None else dels.unionByName(hit)
-
-        # OVERWRITE retractions: every PARENT-LIVE row of the files
-        # the commit removed — one multi-path scan per partition spec,
-        # same plan as the insert side (the removed set is
-        # delta-sized). Parent-live means the parent's delete residue
-        # is APPLIED to the restricted scan (the same anti-join shapes
-        # read() uses): a row an earlier eq/pos-delete already killed
-        # was retracted by THAT commit and must not re-retract here.
-        for removed, o_id, p_dels_pos, p_dels_eq in ow_removed:
-            if not removed:
-                continue
-            hit = (_parent_live(removed, p_dels_pos, p_dels_eq)
-                   .select(*[f.name for f in st.fields])
-                   .withColumn("_change_type", F.lit("delete"))
-                   .withColumn("_commit_snapshot_id",
-                               F.lit(o_id).cast("long")))
-            dels = hit if dels is None else dels.unionByName(hit)
-
-        # HYBRID overwrite eq-delete retractions (r13): the added
-        # eq-deletes kill rows among the commit's SURVIVING parent
-        # files only — the removed files' rows already retracted above
-        # (file-disjoint by construction), and same-commit added data
-        # files are never eq-targets (strictly-earlier rule). The
-        # anchor is the parent-live scan of the kept files with the
-        # parent's residue applied, semi-joined with each tuple set;
-        # a row matching two ID SETS of one commit retracts once
-        # (anti-join chain, same discipline as the eq-run machinery).
-        for o_add_eq, kept, o_id, p_dels_pos, p_dels_eq in hybrid_eq:
-            if not kept:
-                # the overwrite removed every parent data file: its
-                # eq-deletes have nothing strictly-earlier to kill
-                continue
-            base = _parent_live(kept, p_dels_pos, p_dels_eq).alias("_hb")
-            by_ids: dict[tuple, list[dict]] = {}
-            for e in o_add_eq:
-                by_ids.setdefault(
-                    tuple(e["equality_ids"] or ()), []).append(e)
-            groups = [(ids, dfiles, o_id)
-                      for ids, dfiles in sorted(by_ids.items())]
-            for hit in _eq_tuple_hits(
-                    base, groups,
-                    lambda i: F.col(f"_hb.{id_to_name[i]}"),
-                    [f.name for f in st.fields]):
-                dels = hit if dels is None else dels.unionByName(hit)
-
-        if ins is None:
-            return dels if dels is not None else self._empty_changelog(st)
-        return ins if dels is None else ins.unionByName(dels)
+        return (reduce(DataFrame.unionByName, parts) if parts
+                else self._empty_changelog(st))
 
     def _empty_changelog(self, st: T.StructType) -> DataFrame:
         """An empty changelog frame: ``st`` plus the two change
@@ -3114,19 +2777,32 @@ class IcebergTable:
                    .toUri().toString())
 
     def _changelog_lookup(self, window: list[dict],
-                          seq_of_snap: dict[int, int]) -> DataFrame:
-        """The changelog's file→committing-snapshot broadcast side, in
-        the URI form ``_metadata.file_path`` reports, while manifests
+                          seq_of_snap: dict[int, int]) -> list[tuple]:
+        """The changelog's file→committing-snapshot rows, keyed by the
+        URI form ``_metadata.file_path`` reports, while manifests
         store the listing's literal Path.toString() —
         see ``_path_uri_form``."""
-        # LocalRelation, not a python-RDD frame: this lookup is built
-        # per changelog read and only ever broadcast (see local_rows_df)
-        return local_rows_df(
-            self.spark,
-            [(self._path_uri_form(e["info"].path),
-              seq_of_snap.get(e["sequence_number"]))
-             for e in window],
-            "_cl_path string, _commit_snapshot_id long")
+        return [(self._path_uri_form(e["info"].path),
+                 seq_of_snap.get(e["sequence_number"])) for e in window]
+
+    def _read_schema(self, md: dict, snapshot_id: int | None
+                     ) -> T.StructType:
+        """The schema a scan of *snapshot_id* reads with. Columns
+        resolve BY FIELD-ID (the spec's projection rule) exactly when
+        the schema history demands it — some id was renamed or
+        dropped, so name matching would be wrong. The conf is
+        session-sticky, so for plain histories (including tables
+        written before files embedded ids) the schema is STRIPPED of id
+        metadata instead: name resolution, and an earlier evolved-table
+        read in the same session cannot leak id-resolution into this
+        one."""
+        st = self._schema_for(snapshot_id, md)
+        if self._needs_id_resolution(md):
+            self.spark.conf.set("spark.sql.parquet.fieldId.read.enabled",
+                                "true")
+            return st
+        return T.StructType([T.StructField(f.name, f.dataType, f.nullable)
+                             for f in st.fields])
 
     def _entries(self, snapshot_id: int | None = None,
                  prune_parts: list[tuple] | None = None,
@@ -3671,22 +3347,7 @@ class IcebergTable:
         data = [e for e in entries if e["content"] == 0]
         dels_pos = [e for e in entries if e["content"] == 1]
         dels_eq = [e for e in entries if e["content"] == 2]
-        st = self._schema_for(snapshot_id, md_r)
-        # Column resolution is BY FIELD-ID (the spec's projection rule)
-        # exactly when the schema history demands it — some id was
-        # renamed or dropped, so name matching would be wrong. The conf
-        # is session-sticky, so for plain histories (including tables
-        # written before files embedded ids) the read schema is
-        # STRIPPED of id metadata instead: name resolution as before,
-        # and an earlier evolved-table read in the same session cannot
-        # leak id-resolution into this one.
-        if self._needs_id_resolution(md_r):
-            self.spark.conf.set("spark.sql.parquet.fieldId.read.enabled",
-                                "true")
-        else:
-            st = T.StructType([
-                T.StructField(f.name, f.dataType, f.nullable)
-                for f in st.fields])
+        st = self._read_schema(md_r, snapshot_id)
 
         # only IDENTITY fields drop their source column from the data
         # files (partitionBy used the source column itself) — those
@@ -3834,8 +3495,7 @@ class IcebergTable:
         commit sequence (``_data_seq``) and — when pos-deletes apply —
         the parquet (file, row) identity columns: the spec's
         sequence-guarded anti-joins, shared by read() and changelog's
-        overwrite retraction (r12 review #4 — one copy of the
-        semantics instead of three hand-synced ones).
+        per-commit diff (one copy of the semantics).
 
         Equality deletes apply to STRICTLY earlier data files; a
         delete row with a NULL value matches data rows whose column is
@@ -3867,8 +3527,8 @@ class IcebergTable:
         if dels_pos:
             pd_ = None
             for e in dels_pos:
-                one = self.spark.read.parquet(e["info"].path).select(
-                    "file_path", "pos").withColumn(
+                one = self.spark.read.schema(_POS_SCHEMA).parquet(
+                    e["info"].path).withColumn(
                         "_del_seq", F.lit(e["sequence_number"]))
                 pd_ = one if pd_ is None else pd_.unionByName(one)
             pd_ = pd_.alias("_pdel")
@@ -4372,9 +4032,10 @@ class IcebergTable:
 
     def delete_positions(self, positions: DataFrame) -> int:
         """Commit a POSITION-delete snapshot (spec "Position Delete
-        Files", content=1): *positions* must carry exactly
-        (file_path string, pos long) — the target data file's path as
-        stored in the manifest and the 0-based row index within it.
+        Files", content=1): *positions* must carry exactly the columns
+        (file_path, pos) — the target data file's path as stored in the
+        manifest and the 0-based row index within it — and is stored
+        cast to the spec types (string, long).
         Produce it from a read with Spark's parquet metadata columns:
         ``_metadata.file_path`` / ``_metadata.row_index``. Applied at
         read as an anti-join on (file, row) against data files with
@@ -4382,6 +4043,9 @@ class IcebergTable:
         if sorted(positions.columns) != ["file_path", "pos"]:
             raise ValueError(
                 f"positions needs (file_path, pos), got {positions.columns}")
+        # stored under the spec types, the schema every reader passes
+        positions = positions.select(
+            *[positions[f.name].cast(f.dataType) for f in _POS_SCHEMA])
         sub = f"{self.location}/data/{uuid.uuid4().hex[:12]}-posdeletes"
         positions.dropDuplicates().write.mode("overwrite").parquet(sub)
         return self._commit_files(self._list_delete_parquet(sub),

@@ -1598,8 +1598,8 @@ class _IcebergStreamReader(SimpleDataSourceStreamReader):
     ``sequence_number`` landed in (start, end]. Append snapshots carry
     prior manifests forward, so the CURRENT manifest list names every
     historical data file with its original commit sequence — replay
-    (``readBetweenOffsets``) is pure metadata. Tables with delete
-    files raise: a streamed row can't be retracted. Batches route via
+    (``readBetweenOffsets``) is pure metadata. A delete commit in the
+    window raises: a streamed row can't be retracted. Batches route via
     the driver (SimpleDataSourceStreamReader by design); throughput
     feeds would use per-partition planning like the batch reader."""
 
@@ -1649,80 +1649,28 @@ class _IcebergStreamReader(SimpleDataSourceStreamReader):
         md = t.metadata()
         if md["current-snapshot-id"] == -1:
             return []
-        # plan and bound the window from MAIN's ancestry only: a
-        # branch head can carry staged unaudited data, and its
-        # manifest list can omit main-committed files — both wrong
-        # for a stream of the published table
-        main = I.IcebergTable._main_ancestry(md)
-        # a REPLACE snapshot (rewrite_data_files) re-sequences
-        # EXISTING rows — streaming its compacted files would
-        # duplicate the feed, so the replace itself emits NOTHING and
-        # the window splits into ERAS at each one (r11; same planning
-        # as changelog): era k's appends are planned from the
-        # snapshot just before replace k+1 (its parent), where they
-        # are still live under their true commit sequences. This
-        # EXCEEDS Iceberg's own streaming read, which fails on any
-        # replace in the window. Genuinely row-changing operations
-        # (overwrite) still raise.
-        win_replaces = []
-        win_overwrites = []
-        for s in main:
-            op = s.get("summary", {}).get("operation")
-            if not (lo < s.get("sequence-number", 0) <= hi):
-                continue
-            if op == "replace":
-                win_replaces.append(s)
-            elif op == "overwrite" and self.overwrites_insert_only:
-                # opted-in contract (see __init__): era-split like a
-                # replace, added files emitted as inserts, removed
-                # rows NEVER retracted — an append-only stream can't
-                win_overwrites.append(s)
-            elif op not in ("append", None):
+        # the same window walker as changelog(), over MAIN's ancestry
+        # only: a branch head can carry staged unaudited data. A
+        # REPLACE re-sequences existing rows, so it emits nothing (the
+        # walker skips it; Iceberg's own streaming read fails on it);
+        # an append emits its added files, each exactly once
+        ok = ("append", None) + (("overwrite",)
+                                 if self.overwrites_insert_only else ())
+        window = []
+        for c in t._window_commits(md, I.IcebergTable._main_ancestry(md),
+                                   lo, hi, "stream window"):
+            if c.op not in ok:
                 raise NotImplementedError(
-                    f"non-append snapshot (operation={op!r}) in the "
+                    f"non-append snapshot (operation={c.op!r}) in the "
                     "stream window"
                     + (" — an append-only stream cannot retract an "
                        "overwrite's removed rows; opt into insert-"
                        "only consumption with .option('overwrites', "
-                       "'insert-only')" if op == "overwrite" else ""))
-        by_id_snap = {s["snapshot-id"]: s
-                      for s in md.get("snapshots", [])}
-        eligible = [s for s in main
-                    if s.get("sequence-number", 0) <= hi]
-        final_walk = (max(eligible,
-                          key=lambda s: s.get("sequence-number", 0))
-                      ["snapshot-id"] if eligible else None)
-        # SHARED era splitter (sinks.iceberg._split_eras — the same
-        # boundary semantics changelog() uses, so the two incremental
-        # readers can never disagree on a history)
-        eras = I._split_eras(win_replaces + win_overwrites, lo, hi,
-                             by_id_snap, main, final_walk,
-                             "stream window")
-        # an opted-in overwrite's ADDED files sit exactly ON an era
-        # boundary (seq == its own) — emit them through a pseudo-era
-        # covering just that commit, walked at the overwrite snapshot
-        for o in win_overwrites:
-            o_seq = o["sequence-number"]
-            eras.append((o_seq - 1, o["snapshot-id"], o_seq))
-        window = []
-        for era_lo, walk_id, era_hi in eras:
-            # plan each era from the snapshot AS OF its end, not the
-            # current one: a later REPLACE rewrites the current
-            # manifest list, but replaying an already-committed
-            # window must see the table as it stood then (works as
-            # long as that snapshot is retained — the same replay
-            # constraint real Iceberg has). Era bounds exclude the
-            # replace's own compacted files (seq == era lo).
-            # Carried-forward entries keep their ORIGINAL sequence
-            # numbers, inherited per the spec where null.
-            if walk_id is None:
-                continue
-            entries = t._entries(walk_id, md=md)
-            if any(e["content"] != 0 for e in entries):
+                       "'insert-only')" if c.op == "overwrite" else ""))
+            if any(e["content"] for e in c.added):
                 raise NotImplementedError(
                     "streaming read over delete-carrying tables")
-            window += [e for e in entries
-                       if era_lo < e["sequence_number"] <= era_hi]
+            window += c.added
         parts = {p.path: p for p in _file_partitions(t, md, None, window)}
         return [parts[p] for p in sorted(parts)]
 

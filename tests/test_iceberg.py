@@ -4216,7 +4216,8 @@ def test_changelog_net_effect_random_history(spark, tmp_path):
     equality-delete / rewrite (replace) commits, the changelog's net
     effect reconstructs the table — multiset(inserts) −
     multiset(retractions) == multiset(read()), with rewrites emitting
-    NOTHING (content-neutral). Seeded random histories; catches
+    NOTHING (content-neutral) — and so does every single commit's
+    stamped slice against its parent. Seeded random histories; catches
     retraction over/under-emission for interleavings the pointwise
     tests don't enumerate."""
     import random
@@ -4415,17 +4416,37 @@ def test_changelog_net_effect_random_history(spark, tmp_path):
         # no negative multiplicities: never retract more than inserted
         assert not (dels - ins), (trial, dels - ins)
 
-        # WINDOWED net effect (r11): for random snapshot pairs a < b,
-        # state(a) + inserts(a,b] − retractions(a,b] == state(b) —
-        # the strongest era-interaction property: windows that start
-        # or end mid-history, straddle rewrites, or cover only them
-        snaps_hist = [s["snapshot-id"]
-                      for s in sorted(t.metadata()["snapshots"],
-                                      key=lambda s: s["sequence-number"])]
+        snaps_sorted = sorted(t.metadata()["snapshots"],
+                              key=lambda s: s["sequence-number"])
+        snaps_hist = [s["snapshot-id"] for s in snaps_sorted]
         states = {
             sid: Counter((r.k, r.s)
                          for r in t.read(snapshot_id=sid).collect())
             for sid in snaps_hist}
+        # PER-COMMIT contract: each commit's rows are the change it
+        # made, so a retraction stamped on the wrong commit fails here
+        # even when the whole-window net above balances. Exactly:
+        # state(p) + inserts_c == state(c) + deletes_c, which implies
+        # inserts_c − deletes_c == state(c) − state(p)
+        for s in snaps_sorted:
+            c = s["snapshot-id"]
+            before = states.get(s.get("parent-snapshot-id"), Counter())
+            ins_c = Counter((r.k, r.s) for r in cl
+                            if r._change_type == "insert"
+                            and r._commit_snapshot_id == c)
+            del_c = Counter((r.k, r.s) for r in cl
+                            if r._change_type == "delete"
+                            and r._commit_snapshot_id == c)
+            assert ins_c - del_c == states[c] - before, (trial, c)
+            assert before + ins_c == states[c] + del_c, (
+                trial, c, s["summary"]["operation"],
+                (before + ins_c) - (states[c] + del_c),
+                (states[c] + del_c) - (before + ins_c))
+
+        # WINDOWED net effect (r11): for random snapshot pairs a < b,
+        # state(a) + inserts(a,b] − retractions(a,b] == state(b) —
+        # the strongest era-interaction property: windows that start
+        # or end mid-history, straddle rewrites, or cover only them
         pairs = [tuple(sorted(rng.sample(range(len(snaps_hist)), 2)))
                  for _ in range(3)]
         for i, j in set(pairs):
@@ -4440,6 +4461,40 @@ def test_changelog_net_effect_random_history(spark, tmp_path):
             assert lhs - wdel == states[b], (
                 trial, i, j, (lhs - wdel) - states[b],
                 states[b] - (lhs - wdel))
+
+
+def test_changelog_and_read_plan_without_spark_jobs(spark, tmp_path):
+    """Building changelog() and read() over a table with position and
+    equality deletes launches no Spark job before an action: every
+    parquet read passes its schema (position deletes the spec's
+    ``file_path string, pos long``), so none infers one."""
+    from pyspark.sql import functions as F
+
+    from gobblin_spark.sinks.iceberg import IcebergTable
+
+    t = IcebergTable.create(
+        spark, str(tmp_path / "nojobs"),
+        spark.createDataFrame([(1, "a")], "k long, s string").schema)
+    t.append_dataframe(spark.createDataFrame(
+        [(k, f"v{k}") for k in range(8)], "k long, s string"))
+    t.delete_positions(
+        t.read(apply_deletes=False)
+        .select(F.col("_metadata.file_path").alias("file_path"),
+                F.col("_metadata.row_index").alias("pos"), "k")
+        .filter(F.col("k") < 2).drop("k"))
+    for k in (2, 3):  # a two-commit equality run: a persisted base
+        t.delete_equality(spark.createDataFrame([(k,)], "k long"))
+
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(None))
+    t2 = IcebergTable(spark, t.location)
+    cl, rd = t2.changelog(None), t2.read()
+    assert set(tracker.getJobIdsForGroup(None)) == jobs
+    assert sorted(r.k for r in rd.collect()) == [4, 5, 6, 7]
+    assert sorted((r.k, r._change_type) for r in cl.collect()
+                  if r._change_type == "delete") == [
+        (0, "delete"), (1, "delete"), (2, "delete"), (3, "delete")]
+    t2.release_changelog_cache()
 
 
 def test_changelog_retractions_identity_partitioned(spark, tmp_path):

@@ -297,10 +297,33 @@ def test_sink_roundtrip_keeps_only_the_last_publish_dir(spark, sf_dir,
     from gobblin_spark import queries
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    monkeypatch.setattr(queries, "_SINK_RT_DIR", None)
+    monkeypatch.setattr(queries, "_SCRATCH", {})
     frames = [queries.sink_roundtrip_partitioned(spark, sf_dir)
               for _ in range(3)]
     left = [p.name for p in tmp_path.iterdir()]
     assert len(left) == 1 and left[0].startswith("gobblin_sink_rt_")
     # the survivor is the last call's: its lazy result still reads
     assert frames[-1].count() > 0
+
+
+def test_catalog_scratch_dir_keeps_one_dir_per_prefix(spark, sf_dir,
+                                                      monkeypatch,
+                                                      tmp_path):
+    """Every catalog entry takes its temp dirs from
+    ``queries.scratch_dir``: a repeated entry holds one dir per prefix,
+    not one per call, and the last call's lazy result still reads."""
+    import tempfile
+
+    from gobblin_spark import queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(queries, "_SCRATCH", {})
+    for _ in range(3):
+        cl = queries.iceberg_changelog_delete_read(spark, sf_dir)
+    left = [p.name for p in tmp_path.iterdir()]
+    assert len(left) == 1 and left[0].startswith("gobblin_icecld_"), left
+    assert cl.count() > 0
+    # no entry mints a temp dir around the helper
+    import inspect
+    assert "mkdtemp" not in inspect.getsource(queries).replace(
+        inspect.getsource(queries.scratch_dir), "")
