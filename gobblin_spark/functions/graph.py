@@ -18,13 +18,17 @@ needed = graph diameter; near-dup graphs are piles of small cliques
 rounds. Labels are ``localCheckpoint``-ed each round — iterative self-joins
 otherwise DOUBLE the logical plan every iteration and the driver dies
 planning, not computing (on a cluster prefer reliable
-``checkpoint()`` to survive executor loss). The loop breaks on a zero
+``checkpoint()`` to survive executor loss). A round's table is released
+once the next one has materialized, and the edge table on return, so a
+call leaves only the returned labels pinned. The loop breaks on a zero
 changed-count; ``max_iter`` bounds adversarial chains. Convergence is
 checked with a 1-row count, not a collect of labels."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from gobblin_spark.session import release_checkpoint
 
 
 def connected_components(
@@ -69,9 +73,10 @@ def connected_components(
     )
     comp_type = dict(labels.dtypes)["component"]
     for _ in range(max_iter):
+        cur = labels.select("id", "component")
         # neighbor's current label, folded with my own, min per node
         nbr = (
-            bi.join(labels.withColumnRenamed("id", "v"), "v")
+            bi.join(cur.withColumnRenamed("id", "v"), "v")
             .select(F.col("u").alias("id"), "component")
         )
         # the convergence check rides INSIDE the label fold: each node's
@@ -85,7 +90,7 @@ def connected_components(
         # the changed-count so each round plans against a materialized
         # table, not the whole iteration history
         fused = (
-            labels.withColumn("_old", F.col("component"))
+            cur.withColumn("_old", F.col("component"))
             .unionByName(nbr.withColumn(
                 "_old", F.lit(None).cast(comp_type)))
             .groupBy("id")
@@ -93,14 +98,18 @@ def connected_components(
                  F.max("_old").alias("_old"))
             .localCheckpoint()
         )
+        release_checkpoint(labels)  # superseded by the materialized fused
+        labels = fused
         changed = (
             fused.filter(~F.col("component").eqNullSafe(F.col("_old")))
             .limit(1)
             .count()
         )
-        labels = fused.select("id", "component")
         if changed == 0:
-            return labels
+            release_checkpoint(bi)
+            return fused.select("id", "component")
+    release_checkpoint(bi)
+    release_checkpoint(labels)
     raise RuntimeError(
         f"connected_components: no convergence in {max_iter} "
         "iterations (graph diameter too large — raise max_iter)")

@@ -9,7 +9,7 @@ Reference mapping (all relative to /root/reference/):
   order every Gobblin task runs. ``Pipeline`` holds exactly those slots.
 - Task execution (gobblin-runtime/.../task/Task.java:173-260): per-fork
   converter→quality→writer chains; here each ``Branch`` carries its own
-  transforms and sink over the shared, persisted parent.
+  transforms and sink over the shared parent rows.
 - JobLauncher commit (gobblin-runtime/.../AbstractJobLauncher.java:442):
   stage everything, evaluate task-level policies, then the job-level
   commit policy decides what publishes — delegated to sinks/publish.py.
@@ -18,10 +18,13 @@ Spark design: a Pipeline never materializes intermediate rows — it
 COMPOSES lazy DataFrame plans, so Catalyst optimizes across stage
 boundaries (a converter's projection pushes into the scan even though
 the user declared it three stages later). The fork point is ONE
-row-policy-flagged frame, persisted when several writes read it; the
-branches and the quarantine are filters over it, staged concurrently,
-so the source is scanned once. Streaming mode wraps the identical
-composition in a foreachBatch epoch (streaming/runner.py semantics).
+row-policy-flagged frame; when several writes read it, its rows are
+kept in a lazy local checkpoint: the first write to reach a partition
+stores that partition's rows once, as rows (no column encoding), and
+the other writes read them back. The branches and the quarantine are
+filters over it, staged concurrently, so the source is scanned once.
+Streaming mode wraps the identical composition in a foreachBatch epoch
+(streaming/runner.py semantics).
 """
 
 from __future__ import annotations
@@ -34,6 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from gobblin_spark.operators import quality as Q
+from gobblin_spark.session import release_checkpoint
 from gobblin_spark.sinks import publish as P
 
 Transform = Callable[[DataFrame], DataFrame]
@@ -114,18 +118,27 @@ def _branch_frame(passed: DataFrame, b: Branch) -> DataFrame:
 
 
 def run(pipeline: Pipeline, spark: SparkSession) -> PipelineResult:
-    """Execute the spec: one scan of the persisted flagged frame feeds
-    every write; branch and quarantine staging writes, plus branch
-    audits, run concurrently. ONE job-level commit then publishes the
-    branches per the commit policy (AbstractJobLauncher.java:442); the
-    quarantine publishes with that commit (directly when no branch
-    writes) and is aborted with it, so a retry never re-appends what a
-    failed attempt quarantined. ``result.quarantined`` is the quarantine
-    write's row observation (-1 if unavailable: published anyway); an
-    empty quarantine is dropped, creating no dir.
+    """Execute the spec: one scan of the source, kept as the flagged
+    frame's checkpointed rows, feeds every write; branch and quarantine
+    staging writes, plus branch audits, run concurrently. ONE job-level
+    commit then publishes the branches per the commit policy
+    (AbstractJobLauncher.java:442); the quarantine publishes with that
+    commit (directly when no branch writes) and is aborted with it, so
+    a retry never re-appends what a failed attempt quarantined.
+    ``result.quarantined`` is the quarantine write's row observation (-1
+    if unavailable: published anyway); an empty quarantine is dropped,
+    creating no dir.
 
     Branches without a ``final_dir`` are returned as DataFrames instead
-    of written — a pipeline can end in further programmatic use.
+    of written — a pipeline can end in further programmatic use. They
+    are built on the flagged frame before its checkpoint, so they
+    recompute from the source and stay readable after the run releases
+    the checkpointed rows.
+
+    Failure mode: Spark never recomputes a lost local-checkpoint block
+    (an executor lost mid-run). A write that needs one fails, and so
+    does ``run()``: every staging dir is aborted and nothing publishes,
+    so the caller's watermark does not move and a retry is safe.
 
     Every run is instrumented (gobblin-metrics analog): a per-job
     MetricContext under the process root carries quarantined/rows/files
@@ -135,10 +148,16 @@ def run(pipeline: Pipeline, spark: SparkSession) -> PipelineResult:
 
     ctx = M.root_context().child(f"job.{pipeline.job_id or 'job'}")
     flagged = _flagged(pipeline, spark)
+    # returned frames read the source, never the checkpoint released below
+    returned, _ = _split(flagged)
     fan_out = (len(pipeline.branches) > 1
                or pipeline.quarantine_dir is not None)
     if fan_out:
-        flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
+        # the fork's rows, stored once by whichever write reaches a
+        # partition first (lazy: no job of its own); see the failure
+        # mode in the docstring — a lost block is not recomputed
+        flagged = flagged.localCheckpoint(
+            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     passed, quarantined = _split(flagged)
     result = PipelineResult(report=None, metrics=ctx)
 
@@ -148,13 +167,12 @@ def run(pipeline: Pipeline, spark: SparkSession) -> PipelineResult:
     staged: dict[int, P.StagedDataset] = {}  # by index into writes
     try:
         for b in pipeline.branches:
-            bdf = _branch_frame(passed, b)
             if b.final_dir:
-                writes.append((bdf, b))
+                writes.append((_branch_frame(passed, b), b))
             else:
-                result.dataframes[b.name] = bdf
+                result.dataframes[b.name] = _branch_frame(returned, b)
         if not pipeline.branches:  # sink-less pipeline: expose the main frame
-            result.dataframes["main"] = passed
+            result.dataframes["main"] = returned
         n_branch = len(writes)
         if pipeline.quarantine_dir is not None:
             # staged + rename-merged, NOT a direct append: a failed v2-
@@ -162,12 +180,13 @@ def run(pipeline: Pipeline, spark: SparkSession) -> PipelineResult:
             writes.append((quarantined, Branch(
                 "quarantine", final_dir=pipeline.quarantine_dir)))
 
-        # staging writes are INDEPENDENT jobs over the shared persisted
-        # parent: a small thread pool lets a later write's tasks back-
-        # fill executors freed by an earlier one's tail (guide §2.6).
-        # Concurrent first-computation of a cached partition scans
-        # once: the BlockManager's per-partition lock lets one task
-        # compute and the others read the stored block.
+        # staging writes are INDEPENDENT jobs over the shared
+        # checkpointed rows: a small thread pool lets a later write's
+        # tasks back-fill executors freed by an earlier one's tail
+        # (guide §2.6). Concurrent first-computation of a checkpointed
+        # partition scans once: the BlockManager's per-partition lock
+        # lets one task compute and store the rows and the others read
+        # the stored block.
         def _stage_one(i):
             bdf, b = writes[i]
             s = P.stage(bdf, b.final_dir, name=b.name, fmt=b.fmt,
@@ -234,7 +253,7 @@ def run(pipeline: Pipeline, spark: SparkSession) -> PipelineResult:
     finally:
         job_timer.update(_time.monotonic() - t0)
         if fan_out:
-            flagged.unpersist()
+            release_checkpoint(flagged)
     return result
 
 

@@ -165,6 +165,23 @@ def local_rows_df(spark, rows, schema):
         return spark.createDataFrame(rows, schema)
 
 
+def release_checkpoint(df) -> None:
+    """Free the stored rows of *df*, a frame ``localCheckpoint()``
+    returned — the one place that finds a checkpointed frame's RDD.
+
+    ``DataFrame.unpersist`` does not reach these rows (the cache manager
+    never saw them): they belong to the RDD under the frame's
+    ``LogicalRDD`` root, which is unpersisted here. Spark never
+    recomputes a local checkpoint, so *df* and every frame built on it
+    become unreadable; frames built on the same rows before the
+    checkpoint are unaffected."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        raise TypeError("release_checkpoint takes the frame "
+                        "localCheckpoint() returned")
+    plan.rdd().unpersist(False)
+
+
 # Width bound for ensure_parallelism: one task per this many bytes of
 # (compressed) scan estimate. 64 KiB fits the shuffle-heavy dedup
 # operators (simhash/minhash/line-dedup: arm-alternating A/B r13 s5);

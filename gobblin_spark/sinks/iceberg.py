@@ -2576,22 +2576,6 @@ class IcebergTable:
                       if with_pos else [])))
             return reduce(DataFrame.unionByName, scans)
 
-        def _lookup(out, rows, col: str, what: str):
-            """*out* left-joined on ``_cl_fp`` with the broadcast
-            (path, *col*) *rows*. A scanned file missing from them, a
-            path-form mismatch, raises instead of leaving *col* NULL:
-            a NULL stamp would bucket rows under a phantom commit, a
-            NULL sequence silently skip the residue anti-joins."""
-            lk = local_rows_df(self.spark, rows,
-                               f"_lk_path string, {col} long")
-            return out.join(
-                F.broadcast(lk), out["_cl_fp"] == lk["_lk_path"], "left"
-            ).withColumn(col, F.when(F.col(col).isNull(), F.raise_error(
-                F.concat(F.lit(f"changelog: scanned file missing from "
-                               f"the {what} lookup (path-form mismatch): "),
-                         F.col("_cl_fp"))).cast("long"),
-            ).otherwise(F.col(col)))
-
         def _parent_live(entries, p_dels):
             """Rows of *entries* live just before a commit whose parent
             holds the delete files *p_dels*, keyed (_cl_fp, _cl_pos):
@@ -2609,16 +2593,17 @@ class IcebergTable:
             if not (eq_app or pos_app):
                 return out
             return self._anti_join_deletes(
-                _lookup(out, [(self._path_uri_form(e["info"].path),
-                               e["sequence_number"]) for e in entries],
-                        "_data_seq", "sequence"),
+                self._path_lookup(
+                    out, [(self._path_uri_form(e["info"].path),
+                           e["sequence_number"]) for e in entries],
+                    "_data_seq", "sequence"),
                 pos_app, eq_app, st, id_to_name,
                 fp_col="_cl_fp", pos_col="_cl_pos")
 
         parts = []
         window = [e for c in commits for e in c.added if e["content"] == 0]
         if window:
-            parts.append(_lookup(
+            parts.append(self._path_lookup(
                 _scan_grouped(window, with_pos=False),
                 self._changelog_lookup(
                     window, {s["sequence-number"]: s["snapshot-id"]
@@ -2775,6 +2760,24 @@ class IcebergTable:
             return p
         return str(self.spark._jvm.org.apache.hadoop.fs.Path(p)
                    .toUri().toString())
+
+    def _path_lookup(self, out, rows, col: str, what: str):
+        """*out* left-joined on ``_cl_fp`` (its rows' ``_metadata.file_path``)
+        with the broadcast (path, *col*) *rows*, paths in
+        ``_path_uri_form``. A scanned file missing from them, a
+        path-form mismatch, raises instead of leaving *col* NULL: a NULL
+        stamp would bucket rows under a phantom commit, a NULL sequence
+        silently skip the delete anti-joins."""
+        from pyspark.sql import functions as F
+
+        lk = local_rows_df(self.spark, rows, f"_lk_path string, {col} long")
+        return out.join(
+            F.broadcast(lk), out["_cl_fp"] == lk["_lk_path"], "left"
+        ).withColumn(col, F.when(F.col(col).isNull(), F.raise_error(
+            F.concat(F.lit(f"scanned file missing from the {what} "
+                           "lookup (path-form mismatch): "),
+                     F.col("_cl_fp"))).cast("long"),
+        ).otherwise(F.col(col)))
 
     def _changelog_lookup(self, window: list[dict],
                           seq_of_snap: dict[int, int]) -> list[tuple]:
@@ -3511,13 +3514,7 @@ class IcebergTable:
             cols = [id_to_name[i] for i in ids]
             dschema = T.StructType([
                 f for c in cols for f in st.fields if f.name == c])
-            dd = None
-            for e in dfiles:
-                one = self.spark.read.schema(dschema).parquet(
-                    e["info"].path).withColumn(
-                        "_del_seq", F.lit(e["sequence_number"]))
-                dd = one if dd is None else dd.unionByName(one)
-            dd = dd.alias("_del")
+            dd = self._scan_deletes(dschema, dfiles).alias("_del")
             df = df.alias("_dat")
             cond = F.col("_del._del_seq") > F.col("_dat._data_seq")
             for c in cols:
@@ -3525,13 +3522,7 @@ class IcebergTable:
                     F.col(f"_del.{c}"))
             df = df.join(F.broadcast(dd), cond, "left_anti")
         if dels_pos:
-            pd_ = None
-            for e in dels_pos:
-                one = self.spark.read.schema(_POS_SCHEMA).parquet(
-                    e["info"].path).withColumn(
-                        "_del_seq", F.lit(e["sequence_number"]))
-                pd_ = one if pd_ is None else pd_.unionByName(one)
-            pd_ = pd_.alias("_pdel")
+            pd_ = self._scan_deletes(_POS_SCHEMA, dels_pos).alias("_pdel")
             df = df.alias("_dat")
             cond = (
                 (F.col("_pdel._del_seq") >= F.col("_dat._data_seq"))
@@ -3540,6 +3531,20 @@ class IcebergTable:
             )
             df = df.join(F.broadcast(pd_), cond, "left_anti")
         return df
+
+    def _scan_deletes(self, schema: T.StructType, entries: list):
+        """ONE multi-path scan of the delete files *entries*, each row
+        carrying its file's commit sequence as ``_del_seq`` from the
+        broadcast ``_path_lookup`` — not one scan per file."""
+        from pyspark.sql import functions as F
+
+        scan = self.spark.read.schema(schema).parquet(
+            *[e["info"].path for e in entries]).select(
+                "*", F.col("_metadata.file_path").alias("_cl_fp"))
+        return self._path_lookup(
+            scan, [(self._path_uri_form(e["info"].path),
+                    e["sequence_number"]) for e in entries],
+            "_del_seq", "delete-sequence").select(*schema.names, "_del_seq")
 
     # -- schema evolution ------------------------------------------------
     def _retry_metadata(self, mutate, max_attempts: int = 4):

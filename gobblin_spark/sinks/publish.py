@@ -183,8 +183,14 @@ def stage(
         df = df.hint("rebalance", *partition_by)
     sdir = staging_dir_for(final_dir, job_id)
     try:
+        # no committer _SUCCESS in staging: publish_staged skips it and
+        # writes its own in the final dir (each file create forks a
+        # chmod where Hadoop has no native library)
         res = write_data(df, sdir, fmt=fmt, mode="overwrite",
-                         partition_by=partition_by, options=options)
+                         partition_by=partition_by, options={
+                             **(options or {}),
+                             "mapreduce.fileoutputcommitter"
+                             ".marksuccessfuljobs": "false"})
     except BaseException:
         # a failed staging write leaves nothing worth keeping — drop
         # the partial staging dir so retried jobs don't accumulate

@@ -50,8 +50,78 @@ def _enable_nano_reads(spark: SparkSession) -> None:
         pass  # older/newer Spark without the flag — reads may still work
 
 
+def _hidden(name: str) -> bool:
+    """Spark's listing filter (``InMemoryFileIndex.shouldFilterOutPathName``):
+    ``_``/``.`` names and in-flight ``._COPYING_`` files are skipped,
+    except hive ``_k=v`` dirs and the parquet summary files."""
+    exclude = ((name.startswith("_") and "=" not in name)
+               or name.startswith(".") or name.endswith("._COPYING_"))
+    return exclude and not name.startswith(("_common_metadata", "_metadata"))
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The data schema Spark infers for a non-merging parquet read of
+    *path* (``ParquetUtils.inferSchema``), from ONE footer read on the
+    driver; None when no file qualifies or the path is missing.
+
+    The candidate files are the leaves Spark's file index returns: glob
+    matches, the visible files directly under each matched dir, and
+    those of hive ``k=v`` subdirs. A summary file wins
+    (``_common_metadata``, then ``_metadata``); otherwise the first data
+    file in path order. The footer converts with Spark's own
+    ``readSchemaFromFooter`` and a converter built from the session conf
+    (so the nanos-as-long flag set just before applies)."""
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    pattern = jvm.org.apache.hadoop.fs.Path(path)
+    fs = pattern.getFileSystem(hconf)
+    leaves: list = []  # (path string, name, FileStatus)
+
+    def visit(st, root: bool) -> None:
+        name = st.getPath().getName()
+        if st.isDirectory():
+            if root or ("=" in name and not _hidden(name)):
+                for child in fs.listStatus(st.getPath()):
+                    visit(child, False)
+        elif not _hidden(name):
+            leaves.append((st.getPath().toString(), name, st))
+
+    for st in fs.globStatus(pattern) or []:
+        visit(st, True)
+    if not leaves:
+        return None
+    summary = ("_common_metadata", "_metadata")
+    pick = min(leaves, key=lambda t: (
+        summary.index(t[1]) if t[1] in summary else len(summary), t[0]))[2]
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    footer = jvm.org.apache.parquet.hadoop.Footer(
+        pick.getPath(),
+        pq.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+                pick, hconf),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+            .SKIP_ROW_GROUPS))
+    converter = pq.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf())
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    return _parse_datatype_json_string(schema.json())
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet reader with nano-timestamp normalization.
+
+    The schema comes from one footer read on the driver (``_footer_schema``,
+    Spark's inference rule for reads that do not merge schemas: a summary
+    file if present, else the first data file in path order, skipping
+    hidden ``_``/``.`` names, walking hive ``k=v`` dirs, expanding
+    globs) and is handed to ``spark.read.schema``, so no Spark job runs
+    at read time — a plain ``spark.read.parquet`` launches one just to
+    read that footer. With no qualifying file or a missing path the plain
+    read runs instead, so Spark raises its usual error. (The engine's
+    sessions never set ``spark.sql.parquet.mergeSchema``; a session that
+    did would merge every footer where this reads one.)
 
     TIMESTAMP(NANOS) columns arrive as epoch-nano longs (legacy flag);
     they are converted to timestamp_ntz at µs precision with *integer*
@@ -62,7 +132,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     (session tz is pinned UTC, so wall-clock is preserved).
     """
     _enable_nano_reads(spark)
-    df = spark.read.parquet(path)
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     for f in df.schema.fields:
         if f.name in _NANO_TS_COLS and isinstance(f.dataType, LongType):
             # timestampadd on an NTZ base stays NTZ end-to-end — no
@@ -78,9 +150,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 #: lazy-plan memo for the immutable testdata tables, keyed per Spark
-#: application. ``spark.read.parquet`` pays ~90 ms of driver-side
-#: listing + footer schema inference PER CALL (measured warm at sf0.1);
-#: a suite that loads a table hundreds of times re-paid it every time.
+#: application. Every read pays driver-side listing + a footer read PER
+#: CALL (``spark.read.parquet`` measured ~90 ms warm at sf0.1, before
+#: ``read_parquet`` read one footer itself); a suite that loads a table
+#: hundreds of times re-paid it every time.
 #: Only the unexecuted plan object is reused — no data, no results:
 #: every action on the returned frame still scans the parquet files.
 _TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}

@@ -80,6 +80,20 @@ def test_convergence_guard_raises(spark):
         G.connected_components(df, max_iter=2)
 
 
+def test_components_release_superseded_checkpoints(spark):
+    """Each round's label table is released once the next has
+    materialized, and the edge table on return: a call pins at most
+    one RDD, the returned labels — a chain of 12 runs a dozen rounds."""
+    sc = spark._jsc.sc()
+    df = spark.createDataFrame([(i, i + 1) for i in range(12)],
+                               "id_a long, id_b long")
+    before = sc.getPersistentRDDs().size()
+    kept = [G.connected_components(df) for _ in range(3)]
+    assert sc.getPersistentRDDs().size() <= before + 3
+    for cc in kept:
+        assert {r.component for r in cc.collect()} == {0}
+
+
 def _pr_reference(edges, iterations=3, d=0.85):
     # plain-Python reference: undirected, rank' = (1-d)/N + d*sum(in)/deg
     adj = {}

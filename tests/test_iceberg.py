@@ -4787,3 +4787,29 @@ def test_empty_changelog_keeps_schema_and_has_no_rows(spark, tmp_path):
     empty = t.changelog(s1, to_snapshot_id=s1)
     assert empty.dtypes == want and empty.count() == 0
     assert t.changelog(None).count() == 1
+
+
+def test_position_delete_files_read_in_one_scan(spark, tmp_path):
+    """Four position-delete commits plan ONE multi-path delete-file scan
+    (each row's commit sequence joined from a broadcast path lookup),
+    not one scan per file: the read is the data scan plus that one."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from gobblin_spark.sinks.iceberg import IcebergTable
+
+    df = spark.createDataFrame([(k, f"v{k}") for k in range(8)],
+                               "k long, s string")
+    t = IcebergTable.create(spark, str(tmp_path / "posdel4"), df.schema)
+    t.append_dataframe(df.coalesce(1))
+    for k in range(4):
+        t.delete_positions(
+            t.read(apply_deletes=False)
+            .select(F.col("_metadata.file_path").alias("file_path"),
+                    F.col("_metadata.row_index").alias("pos"), "k")
+            .filter(F.col("k") == k).drop("k"))
+    rd = t.read()
+    plan = rd._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"FileScan parquet", plan)) == 2
+    assert sorted(r.k for r in rd.collect()) == [4, 5, 6, 7]

@@ -406,3 +406,27 @@ def test_fork_scans_source_once_and_releases_cache(spark, sf_dir, tmp_path):
                 for d in ("clicks", "rest", "quar"))
     assert n_out == total and res.quarantined > 0
     assert _n_persisted(spark) == before
+
+
+def test_returned_branch_outlives_the_fork_checkpoint(spark, sf_dir, tmp_path):
+    """A branch without ``final_dir`` is returned built on the source,
+    not on the fork's checkpointed rows: it still counts after ``run()``
+    has released them, and nothing stays pinned."""
+    ev = files.load_table(spark, sf_dir, "events")
+    pl = plans.Pipeline(
+        source=events_source(sf_dir),
+        row_policies=[quality.range_policy("value", 0, 80)],
+        quarantine_dir=str(tmp_path / "quar"),
+        branches=[
+            plans.Branch("clicks", F.col("event_type") == "click",
+                         final_dir=str(tmp_path / "clicks")),
+            plans.Branch("rest", F.col("event_type") != "click"),
+        ],
+    )
+    before = _n_persisted(spark)
+    res = plans.run(pl, spark)
+    assert res.report.committed and res.quarantined > 0
+    assert _n_persisted(spark) == before
+    ok = F.coalesce(F.col("value").between(0, 80), F.lit(False))
+    assert res.dataframes["rest"].count() == ev.filter(
+        ok & (F.col("event_type") != "click")).count()

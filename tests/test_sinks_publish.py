@@ -220,6 +220,25 @@ def test_audit_reads_with_writer_options_csv_header(spark, tmp_path):
     assert back.count() == 20 and set(back.columns) == {"k", "s"}
 
 
+def test_staged_write_leaves_success_marker_to_publish(spark, lineitem,
+                                                      tmp_path):
+    """The committer writes no ``_SUCCESS`` into staging (publish would
+    skip it and delete the dir); publish writes the final dir's one
+    marker. The caller's options are not altered."""
+    opts = {"compression": "snappy"}
+    staged = P.stage(lineitem, str(tmp_path / "final"), options=opts,
+                     partition_by=["l_linenumber"])
+    assert not any("_SUCCESS" in files
+                   for _, _, files in os.walk(staged.staging_dir))
+    assert staged.options == {"compression": "snappy"}
+    P.publish_staged(staged, spark)
+    markers = [os.path.join(d, f) for d, _, files in os.walk(tmp_path / "final")
+               for f in files if f == "_SUCCESS"]
+    assert markers == [str(tmp_path / "final" / "_SUCCESS")]
+    assert spark.read.parquet(str(tmp_path / "final")).count() == (
+        lineitem.count())
+
+
 def test_jdbc_swap_sql_never_drops_before_replace():
     """The swap DDL must keep the old table reachable until the new
     one is in place (auto-committing-DDL engines)."""
