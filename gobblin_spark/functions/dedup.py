@@ -4,7 +4,9 @@ These are the training-data-pipeline dedup families, built Spark-first:
 
 - Exact: fingerprint (md5 of normalized text) → hash groupBy. One
   shuffle keyed on a 128-bit digest; at 100 TB the shuffle carries only
-  (fingerprint, doc_id), not document bodies.
+  (fingerprint, doc_id), not document bodies. An input small enough
+  for one task skips the shuffle: it is read as one partition and
+  aggregated inside its scan task.
 - N-gram Jaccard: shingle → inverted-index self-join on shingle →
   per-pair intersection counts → |A∩B|/(|A|+|B|-|A∩B|). Exact but
   quadratic in docs-per-shingle; use for verification and small/medium
@@ -40,7 +42,8 @@ import random
 from pyspark.sql import Column, DataFrame, GroupedData, functions as F
 
 from gobblin_spark.functions.text import fingerprint, normalize_text, word_shingles
-from gobblin_spark.session import ensure_parallelism
+from gobblin_spark.session import (
+    ensure_parallelism, is_repartitioned, width_target)
 
 MERSENNE_P = (1 << 31) - 1  # 2^31-1, prime; keeps a*h+b < 2^62 (no int64 overflow)
 
@@ -51,14 +54,16 @@ def dedup_exact(
     """Exact near-identical dedup: keep the min-id doc per fingerprint.
 
     Returns (kept id, fingerprint, dup_count). Single hash shuffle on the
-    digest; map-side partial aggregation applies.
+    digest; map-side partial aggregation applies. An input that fits one
+    task (``_dedup_input``) aggregates inside its scan task instead, with
+    no shuffle at all.
 
     Null-text documents have no content to compare — md5(null) is null
     and grouping on it would collapse *distinct* empty docs into one
     survivor. They pass through as singletons (fp null, dup_count 1)
     instead of being deduped away.
     """
-    base = ensure_parallelism(df.select(id_col, text_col)).select(
+    base = _dedup_input(df, id_col, text_col).select(
         F.col(id_col), fingerprint(F.col(text_col)).alias("fp")
     )
     return (
@@ -68,10 +73,34 @@ def dedup_exact(
     )
 
 
+def _dedup_input(df: DataFrame, id_col: str, text_col: str,
+                 *carry: str) -> DataFrame:
+    """The exact dedups' input ``(id, *carry, text)``, sized on its
+    ``(id, text)`` projection so both dedups plan one frame alike.
+
+    When ``width_target`` says one task and no upstream repartition set
+    the width, the input is read through ``coalesce(1)``: its
+    ``SinglePartition`` satisfies the ``(fp, _solo)`` grouping, so the
+    partial and final aggregates and the write run in the scan's one
+    task with no exchange (a curation pass over a 3,000-doc corpus:
+    5 jobs and 6 tasks down to 2 and 2, no shuffle bytes). Every other
+    input — above the bound, without statistics (they leave the full
+    width), or already widened, which a coalesce would fold back into
+    one task — keeps the ``ensure_parallelism`` plan and its hash
+    exchange."""
+    slim = df.select(id_col, *carry, text_col)
+    # the same frame when nothing is carried: its optimizer estimate is
+    # then computed once, here and in ensure_parallelism
+    sized = df.select(id_col, text_col) if carry else slim
+    if width_target(sized)[0] > 1 or is_repartitioned(slim):
+        return ensure_parallelism(slim)
+    return slim.coalesce(1)
+
+
 def _fp_groups(base: DataFrame, id_col: str) -> GroupedData:
     """Group ``base`` on ``(fp, _solo)``: ``_solo`` is the id when fp is
     null and null otherwise, so equal fingerprints share one group and
-    every null-text doc is a singleton. ONE scan + ONE shuffle, and no
+    every null-text doc is a singleton. ONE scan + at most ONE shuffle, no
     string buffer to carry fp through the aggregate (fp is a key)."""
     solo = F.when(F.col("fp").isNull(), F.col(id_col)).alias("_solo")
     return base.groupBy(F.col("fp"), solo)
@@ -657,7 +686,8 @@ def dedup_keep_best(
     .../RecordKeyDedupReducerBase.java) — the comparator here is
     (score DESC, id ASC).
 
-    ONE aggregate shuffle on the 16-byte fingerprint: argmax is
+    At most ONE aggregate shuffle on the 16-byte fingerprint — none
+    when the input fits one task (``_dedup_input``): argmax is
     expressed as ``min_by(struct(id, score), struct(-score, id))`` so
     the partial aggregate combines map-side and the exchange carries
     one candidate row per (mapper, distinct doc) — the
@@ -668,8 +698,7 @@ def dedup_keep_best(
     scale) still applies. Groups on ``(fp, _solo)`` like ``dedup_exact``,
     so null-fp docs pass through as singletons.
     """
-    base = ensure_parallelism(
-        df.select(id_col, score_col, text_col)).select(
+    base = _dedup_input(df, id_col, text_col, score_col).select(
         F.col(id_col),
         F.col(score_col),
         fingerprint(F.col(text_col)).alias("fp"),

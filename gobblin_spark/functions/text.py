@@ -6,8 +6,9 @@ Two tiers, chosen per op:
   ID, fingerprinting, shingles, PII redaction, Gopher metrics,
   perplexity. These run at scan speed over 100 TB and each has an
   exact ANSI-SQL twin used as the DuckDB oracle. Character counts keep
-  their regex form in the oracle; the engine counts with ``translate``
-  and ``replace`` (identical values, no per-match string arrays).
+  their ``regexp_count`` form in the oracle; the engine counts what a
+  run-deleting ``regexp_replace`` (or ``replace``) removes from the
+  length (identical values, no per-match string arrays).
 - Arrow-batched pandas UDFs ONLY where the algorithm is genuinely
   imperative: BPE segmentation (data-dependent merge loop) and zlib
   compression ratio (DEFLATE). Deterministic, unit-tested against
@@ -35,14 +36,22 @@ LANG_MARKERS: dict[str, list[str]] = {
 # punctuation — a portable stand-in for a real subword vocab.
 BPE_ISH_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
-# Java regex's ASCII ``\s`` class, spelled out for ``translate``.
+# Java regex's ASCII ``\s`` class, spelled out as characters.
 _SPACE_CHARS = " \t\n\x0b\f\r"
 
 
 def _count_chars(col: Column, chars: str) -> Column:
     """Code points of ``col`` that are in ``chars`` — the same count as
-    ``regexp_count(col, '[chars]')`` without building a match array."""
-    return F.length(col) - F.length(F.translate(col, chars, ""))
+    ``regexp_count(col, '[chars]')`` without building a match array.
+
+    Deletes whole RUNS of class characters with one ``regexp_replace``
+    and subtracts lengths: the compiled class tests each character in
+    place, where ``translate`` looks each one up in a string-keyed hash
+    map.
+    ``chars`` is literal: the class metacharacters ``\\ [ ] ^ - &``
+    are escaped here."""
+    cls = "".join("\\" + c if c in "\\[]^-&" else c for c in chars)
+    return F.length(col) - F.length(F.regexp_replace(col, f"[{cls}]+", ""))
 
 
 def whitespace_token_count(col: Column) -> Column:
@@ -61,9 +70,9 @@ def bpe_ish_token_count(col: Column) -> Column:
 def punct_ratio(col: Column) -> Column:
     """Punctuation chars / total chars (0 for empty)."""
     n = F.length(col)
-    # [^A-Za-z0-9\s]: what is left once alphanumerics and \s are deleted
-    p = F.length(F.translate(
-        col, string.ascii_letters + string.digits + _SPACE_CHARS, ""))
+    # [^A-Za-z0-9\s]: every char that is not alphanumeric or \s
+    p = n - _count_chars(
+        col, string.ascii_letters + string.digits + _SPACE_CHARS)
     return F.when(n == 0, F.lit(0.0)).otherwise(p.cast("double") / n.cast("double"))
 
 
@@ -188,9 +197,9 @@ def gopher_quality_metrics(col: Column) -> dict[str, Column]:
     - stopword_hits: count of common-English-stopword occurrences
 
     Every metric is oracle-checkable: the DuckDB oracle keeps the regex
-    form, while the engine counts non-space characters and symbols with
-    ``translate`` and ``replace`` — identical values, no per-match
-    arrays. Null text counts as empty (fails the word-count floor)
+    form, while the engine counts space characters and symbols by what
+    ``regexp_replace`` and ``replace`` delete — identical values, no
+    per-match arrays. Null text counts as empty (fails the word-count floor)
     rather than poisoning downstream AND chains with SQL nulls."""
     col = F.coalesce(col, F.lit(""))
     trimmed = F.trim(col)
@@ -198,7 +207,7 @@ def gopher_quality_metrics(col: Column) -> dict[str, Column]:
     wc = F.when(trimmed == "", F.lit(0)).otherwise(F.size(words))
     wc_d = wc.cast("double")
     # mean word length over non-space characters
-    nonspace = F.length(F.translate(trimmed, _SPACE_CHARS, ""))
+    nonspace = F.length(trimmed) - _count_chars(trimmed, _SPACE_CHARS)
     mean_len = F.when(wc == 0, F.lit(0.0)).otherwise(
         nonspace.cast("double") / wc_d)
     # '...' occurrences are counted left to right without overlap, as

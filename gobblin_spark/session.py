@@ -192,6 +192,40 @@ def release_checkpoint(df) -> None:
 BYTES_PER_TASK_DEFAULT = 65536
 
 
+def width_target(df, min_partitions: int | None = None,
+                 bytes_per_task: int | None = None):
+    """The size-bounded width for *df*: ``(target, full, size)``.
+
+    ``full`` is *min_partitions* (default: cluster parallelism) and
+    ``size`` the optimizer's input-size estimate in bytes, ``None`` when
+    the plan has no statistics. ``target`` is one task per
+    *bytes_per_task* (default ``BYTES_PER_TASK_DEFAULT``) of that
+    estimate, at least 1 and at most ``full``; unknown statistics leave
+    ``full``. One estimate, no job: ``ensure_parallelism`` widens to it
+    and the exact dedups read a target-1 input in one task."""
+    full = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    bpt = bytes_per_task or BYTES_PER_TASK_DEFAULT
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan()
+                   .stats().sizeInBytes())
+    except Exception:
+        return full, full, None
+    return min(full, max(1, size // bpt)), full, size
+
+
+def is_repartitioned(df) -> bool:
+    """Whether an upstream ``ensure_parallelism`` (or an explicit
+    repartition or coalesce) already decided *df*'s width — an
+    analyzed-plan string check only, because a ``df.rdd`` partition
+    probe forces FULL physical planning: ~0.3 s per call on
+    expression-heavy inputs (cProfile: 0.67 s of the corpus-curation
+    build was two of these probes)."""
+    try:
+        return "Repartition" in df._jdf.queryExecution().logical().toString()
+    except Exception:
+        return False
+
+
 def ensure_parallelism(df, min_partitions: int | None = None,
                        bytes_per_task: int | None = None):
     """Guarantee at least *min_partitions* (default: cluster parallelism)
@@ -205,13 +239,15 @@ def ensure_parallelism(df, min_partitions: int | None = None,
     slim input projection costs one small shuffle and buys full-width
     execution — only worth it BEFORE per-row work that dominates it.
 
-    The width is bounded by the optimizer's input-size estimate: one
-    task per ~64 KiB of (compressed) scan — below that, per-task
-    scheduling overhead exceeds the per-row work the widening exists
-    to parallelize (A/B at sf0.1: the 64-bit simhash is flat from 8
-    to 32 partitions and every lighter operator pays for unneeded
-    width; guide §2 scale-adaptive partitioning). Unknown statistics
-    (the estimate degrades to Long.Max-ish) leave the full target.
+    The width is ``width_target``'s: one task per ~64 KiB of
+    (compressed) scan estimate — below that, per-task scheduling
+    overhead exceeds the per-row work the widening exists to
+    parallelize (A/B at sf0.1: the 64-bit simhash is flat from 8 to 32
+    partitions and every lighter operator pays for unneeded width;
+    guide §2 scale-adaptive partitioning). A target of 1 returns *df*
+    unchanged, as does an input ``is_repartitioned`` already widened.
+    Unknown statistics (the estimate degrades to Long.Max-ish) leave
+    the full target.
     RE-CONFIRMED r13 session 5 with an arm-ALTERNATING same-session
     A/B (sequential-block A/Bs are warming-biased toward the later
     arm): a 16 KiB bound is 1.25-1.8x SLOWER across the 8-operator
@@ -219,31 +255,12 @@ def ensure_parallelism(df, min_partitions: int | None = None,
     0.38 -> 0.69) — the extra width costs more in task launch + shuffle
     block fan-out than the ~tens of ms of per-task compute it spreads.
     """
-    spark = df.sparkSession
-    full = min_partitions or spark.sparkContext.defaultParallelism
-    bpt = bytes_per_task or BYTES_PER_TASK_DEFAULT
-    target = full
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-        target = min(full, max(1, size // bpt))
-    except Exception:
-        size = None
-    if target <= 1:
+    target, full, size = width_target(df, min_partitions, bytes_per_task)
+    if target <= 1 or is_repartitioned(df):
         # one small chunk: widening buys nothing, and skipping all
-        # probes below avoids driver planning round trips
+        # probes below avoids driver planning round trips; or the
+        # width is already decided upstream
         return df
-    try:
-        if "Repartition" in df._jdf.queryExecution().logical().toString():
-            # an upstream ensure_parallelism (or explicit repartition)
-            # already decided the width — analyzed-plan string check
-            # only, because the old df.rdd partition probe forces FULL
-            # physical planning: ~0.3 s per call on expression-heavy
-            # inputs (cProfile: 0.67 s of the corpus-curation build
-            # was two of these probes)
-            return df
-    except Exception:
-        pass
     if target < full:
         # the size bound bit, so the input is small — a scan this
         # size yields fewer splits than target; repartition without
@@ -251,7 +268,8 @@ def ensure_parallelism(df, min_partitions: int | None = None,
         return _pushdown_barrier(df.repartition(target))
     if size is not None:
         try:
-            maxpb = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+            maxpb = int(df.sparkSession.conf.get(
+                "spark.sql.files.maxPartitionBytes"))
         except Exception:
             maxpb = 128 * 1024 * 1024
         if maxpb > 0 and size // maxpb + 1 < full:

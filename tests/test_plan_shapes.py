@@ -228,9 +228,9 @@ def test_dedup_exact_hash_aggregates(spark, sf_dir):
 
 @pytest.mark.parametrize("name", ["text_quality_scores", "dedup_exact_docs"])
 def test_text_kernels_build_no_match_arrays(spark, sf_dir, name):
-    """Character-class counts run as translate/length, not as
-    regexp_count — which Spark plans as size(regexp_extract_all(...)),
-    one string allocated per match."""
+    """Character-class counts subtract the length left after a
+    run-deleting regexp_replace, not regexp_count — which Spark plans as
+    size(regexp_extract_all(...)), one string allocated per match."""
     plan = _plan(spark, sf_dir, name)
     assert "regexp_extract_all" not in plan, plan[:1200]
 

@@ -1,12 +1,17 @@
-"""The regex-free text kernels return exactly what their regex forms
-return. Each rewritten kernel is compared with the regex expression it
-replaced (kept here only as the reference, and still the form the
-DuckDB oracles run) over hypothesis-generated strings that stress the
-edges: every Java ``\\s`` character, NUL, runs of dots, the ellipsis,
-case-folding oddities and supplementary code points.
+"""The rewritten text kernels return exactly what their match-counting
+regex forms return. Each kernel — character counts that delete class runs
+with ``regexp_replace`` and subtract lengths, a single-pass normalizer —
+is compared with the ``regexp_count``-style expression it replaced (kept
+here only as the reference, and still the form the DuckDB oracles run)
+over hypothesis-generated strings that stress the edges: every Java
+``\\s`` character, NUL, runs of dots, the ellipsis, case-folding
+oddities and supplementary code points. ``_count_chars`` escapes the
+class metacharacters itself; a Python ``re`` check pins that.
 
 Hypothesis only draws the corpus; all of it is checked in one
-``select``, so the property costs one Spark job."""
+``select``, so each property costs one Spark job."""
+
+import re
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -15,9 +20,9 @@ from gobblin_spark.functions import text
 
 # characters a naive rewrite gets wrong: all of Java's ASCII \s (with
 # \x0b and \f), NUL, the Gopher symbols, the Kelvin sign and dotted
-# capital I (Unicode case mappings onto ASCII letters), sharp s and two
-# supplementary code points
-_EDGE_CHARS = (list(" \t\n\x0b\f\r\x00#.…!?,-_")
+# capital I (Unicode case mappings onto ASCII letters), sharp s, two
+# supplementary code points and the regex class metacharacters
+_EDGE_CHARS = (list(" \t\n\x0b\f\r\x00#.…!?,-_]\\^[&")
                + ["\u212a", "\u0130", "\u00df", "\U0001f600", "\U00010400"])
 
 _chars = st.one_of(
@@ -107,4 +112,29 @@ def test_kernels_match_their_regex_forms(spark):
              .filter(~F.array_min("same")).collect())
     failures = [(corpus[r.i], [name for name, ok in zip(pairs, r.same)
                                if not ok]) for r in bad]
+    assert not failures, failures[:10]
+
+
+# literal character sets whose metacharacters a bare ``[...]`` would
+# misread: a closing bracket, a backslash escape, a leading negation,
+# ranges, a nested class and an intersection
+_CLASS_SETS = ["]", "\\", "^", "-", "a-z", "^a", "]\\^-", "z-a", "[x]",
+               "&&a", "#…", " \t\n\x0b\f\r"]
+
+
+def test_count_chars_escapes_class_metacharacters(spark):
+    corpus = _corpus(300) + ["a-z]\\^[&", "^^--]]\\\\", "[x]&&a"]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(corpus)],
+                               "i int, t string")
+    got = df.select("i", *[text._count_chars(F.col("t"), chars)
+                          .alias(f"c{k}")
+                          for k, chars in enumerate(_CLASS_SETS)]).collect()
+    failures = []
+    for r in got:
+        s = corpus[r.i]
+        for k, chars in enumerate(_CLASS_SETS):
+            want = (None if s is None else
+                    len(re.findall(f"[{re.escape(chars)}]", s)))
+            if r[f"c{k}"] != want:
+                failures.append((s, chars, r[f"c{k}"], want))
     assert not failures, failures[:10]
