@@ -20,9 +20,12 @@ boundaries (a converter's projection pushes into the scan even though
 the user declared it three stages later). The fork point is ONE
 row-policy-flagged frame; when several writes read it, its rows are
 kept in a lazy local checkpoint: the first write to reach a partition
-stores that partition's rows once, as rows (no column encoding), and
-the other writes read them back. The branches and the quarantine are
-filters over it, staged concurrently, so the source is scanned once.
+stores that partition's rows once, as deserialized ``UnsafeRow``
+objects (``MEMORY_AND_DISK_DESER``: no Java serialization, no column
+encoding; a block that does not fit in memory spills to disk), and
+the other writes read those objects back. The branches and the
+quarantine are filters over it, staged concurrently, so the source is
+scanned once.
 Streaming mode wraps the identical composition in a foreachBatch epoch
 (streaming/runner.py semantics).
 """
@@ -119,7 +122,8 @@ def _branch_frame(passed: DataFrame, b: Branch) -> DataFrame:
 
 def run(pipeline: Pipeline, spark: SparkSession) -> PipelineResult:
     """Execute the spec: one scan of the source, kept as the flagged
-    frame's checkpointed rows, feeds every write; branch and quarantine
+    frame's checkpointed rows (deserialized ``UnsafeRow``s in memory,
+    spilling to disk), feeds every write; branch and quarantine
     staging writes, plus branch audits, run concurrently. ONE job-level
     commit then publishes the branches per the commit policy
     (AbstractJobLauncher.java:442); the quarantine publishes with that
@@ -155,9 +159,11 @@ def run(pipeline: Pipeline, spark: SparkSession) -> PipelineResult:
     if fan_out:
         # the fork's rows, stored once by whichever write reaches a
         # partition first (lazy: no job of its own); see the failure
-        # mode in the docstring — a lost block is not recomputed
+        # mode in the docstring — a lost block is not recomputed.
+        # PySpark's MEMORY_AND_DISK is the SERIALIZED level: every row
+        # would pass through Java serialization on store and on read
         flagged = flagged.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER)
     passed, quarantined = _split(flagged)
     result = PipelineResult(report=None, metrics=ctx)
 

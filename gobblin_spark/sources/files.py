@@ -16,6 +16,12 @@ Reference mapping:
 The testdata loader also normalizes TIMESTAMP(NANOS) parquet columns
 (Spark reads them only as long via the legacy flag; we convert back to
 TimestampType at µs precision so downstream semantics are standard).
+
+``footer_int_bounds`` reads, per parquet file, the min/max of one flat
+signed-integer column from the footer's row-group statistics — one
+footer read per file through the Hadoop filesystem, no Spark job. The
+incremental pull (state.py) uses it to leave out files that hold no
+row inside its watermark window.
 """
 
 from __future__ import annotations
@@ -107,6 +113,69 @@ def _footer_schema(spark: SparkSession, path: str):
     from pyspark.sql.types import _parse_datatype_json_string
 
     return _parse_datatype_json_string(schema.json())
+
+
+def footer_int_bounds(spark: SparkSession, statuses, column: str
+                      ) -> list[tuple[str, tuple[int, int] | None]]:
+    """``(file_path, bounds)`` per parquet file of *statuses* (Hadoop
+    ``FileStatus`` objects, as a file index's ``allFiles()`` lists them).
+
+    ``file_path`` is the file's URI in the form Spark's
+    ``_metadata.file_path`` column carries (the path re-parsed from its
+    string form, percent-encoded, ``file:/x`` rather than ``file:///x``).
+    ``bounds`` is ``(min, max)`` of the leaf *column* over every row
+    group, from the footer's statistics alone. It is None, meaning
+    "cannot bound", unless the file schema is flat, holds a leaf named
+    exactly *column* whose type is INT32 or INT64 with no annotation or
+    a signed integer one, and every row group (at least one) has
+    statistics with a non-null min and max; an all-null row group has
+    no min/max, so its file is never bounded.
+
+    Each footer is read with Spark's ``ParquetFooterReader`` through
+    ``HadoopInputFile`` (every Hadoop scheme works), and a row group's
+    statistics are looked up by leaf index, so the py4j calls per file
+    grow with its row groups, not with its columns."""
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    reader = jvm.org.apache.spark.sql.execution.datasources.parquet \
+        .ParquetFooterReader
+    input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+    no_filter = jvm.org.apache.parquet.format.converter \
+        .ParquetMetadataConverter.NO_FILTER
+    hpath = jvm.org.apache.hadoop.fs.Path
+    out = []
+    for st in statuses:
+        uri = hpath(st.getPath().toString()).toUri().toString()
+        meta = reader.readFooter(input_file.fromStatus(st, hconf), no_filter)
+        out.append((uri, _int_leaf_bounds(meta, column)))
+    return out
+
+
+def _int_leaf_bounds(meta, column: str) -> tuple[int, int] | None:
+    """``footer_int_bounds``'s rule over one ``ParquetMetadata``."""
+    schema = meta.getFileMetaData().getSchema()
+    if (schema.getPaths().size() != schema.getFieldCount()
+            or not schema.containsField(column)):
+        return None  # nested schema, or no such leaf
+    idx = schema.getFieldIndex(column)
+    leaf = schema.getType(idx).asPrimitiveType()
+    if leaf.getPrimitiveTypeName().name() not in ("INT32", "INT64"):
+        return None
+    logical = leaf.getLogicalTypeAnnotation()
+    if logical is not None and not (
+            logical.getClass().getSimpleName() == "IntLogicalTypeAnnotation"
+            and logical.isSigned()):
+        return None  # unsigned ints, timestamps, decimals, dates
+    blocks = meta.getBlocks()
+    lo = hi = None
+    for i in range(blocks.size()):
+        stats = blocks.get(i).getColumns().get(idx).getStatistics()
+        if not stats.hasNonNullValue():
+            return None  # no statistics, or an all-null row group
+        bmin, bmax = stats.genericGetMin(), stats.genericGetMax()
+        lo = bmin if lo is None else min(lo, bmin)
+        hi = bmax if hi is None else max(hi, bmax)
+    return None if lo is None else (lo, hi)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

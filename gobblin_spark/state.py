@@ -24,10 +24,15 @@ Reference mapping (all relative to /root/reference/):
   absorbs.
 
 Scale notes: state is O(datasets × runs) tiny JSON files of driver-side
-metadata — never row data. The pull predicate is a plain Column
-comparison, so Catalyst pushes it into the parquet/JDBC scan
-(PushedFilters) and partition-prunes date-partitioned layouts; the
-incremental read touches only the new interval's files.
+metadata — never row data; a ledger read or commit costs the same
+number of py4j round trips however many entries the ledger holds. The
+pull predicate is a plain Column comparison, so Catalyst pushes it into
+the parquet/JDBC scan (PushedFilters) and partition-prunes
+date-partitioned layouts. When the watermark is a plain integer column
+of one parquet scan, the pull also leaves out every file whose footer
+statistics prove it holds no row of the window (Partitioner.java:167
+makes work only for the window), so a landing dir holding already
+pulled files plans tasks only for the new ones.
 """
 
 from __future__ import annotations
@@ -38,7 +43,10 @@ import uuid
 from dataclasses import dataclass
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from gobblin_spark.sources import files as _files
 
 _WM_PREFIX = "wm-"
 
@@ -117,18 +125,25 @@ class WatermarkStore:
         return jvm.org.apache.hadoop.fs.Path(f"{self.root}/{dataset}")
 
     def _entries(self, dataset: str) -> list[tuple[int, str]]:
+        """``(seq, path)`` of every ledger file, oldest first. The whole
+        listing crosses py4j as ONE NUL-joined string of paths (NUL
+        never occurs in a path), so the round trips do not grow with
+        the ledger's length."""
         fs, jvm = self._fs()
         dpath = self._dataset_path(jvm, dataset)
         if not fs.exists(dpath):
             return []
+        listing = jvm.scala.collection.mutable.ArraySeq.make(
+            jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(
+                fs.listStatus(dpath))).mkString("\0")
         out = []
-        for st in fs.listStatus(dpath):
-            name = st.getPath().getName()
+        for path in filter(None, listing.split("\0")):
+            name = path.rsplit("/", 1)[-1]
             if name.startswith(_WM_PREFIX) and name.endswith(".json"):
                 head = name[len(_WM_PREFIX):-len(".json")].split("-", 1)[0]
                 if not head.isdigit():
                     continue  # foreign file (wm-backup.json, editor junk)
-                out.append((int(head), st.getPath().toString()))
+                out.append((int(head), path))
         return sorted(out)
 
     def _read_json(self, path: str) -> dict:
@@ -408,6 +423,66 @@ class IncrementalPull:
     commit: Callable[[], int]
 
 
+_INT_TYPES = ("byte", "short", "integer", "long")
+
+
+def _scan_file_bounds(source_df: DataFrame, wm_col: str):
+    """``(file_path column, footer_int_bounds list)`` when *wm_col* is a
+    plain integer column of a single parquet scan, else None.
+
+    Plain means: *source_df* is deterministic; *wm_col* resolves to a
+    bare attribute of the parquet ``LogicalRelation`` itself, with only
+    Projects, Filters and aliases of the whole frame between them (a
+    column rebuilt by ``withColumn`` — ``read_parquet``'s nano
+    timestamps, say — is a new attribute and never qualifies: its
+    footer statistics are in other units); its Spark type is
+    byte/short/int/long; it is not a partition column; and the frame
+    resolves the scan's ``_metadata`` column. The walk reads the
+    already-analyzed plan, so the check optimizes nothing."""
+    jdf = source_df._jdf
+    node = jdf.queryExecution().analyzed()
+    if not node.deterministic():
+        return None
+    attr = jdf.resolve(wm_col)
+    if attr.getClass().getSimpleName() != "AttributeReference":
+        return None  # a nested field or other expression
+    while node.getClass().getSimpleName() in (
+            "Project", "Filter", "SubqueryAlias"):
+        node = node.child()
+    if node.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = node.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName()
+            != "ParquetFileFormat"
+            or not node.outputSet().contains(attr)
+            or attr.dataType().typeName() not in _INT_TYPES
+            or rel.partitionSchema().getFieldIndex(attr.name()).isDefined()):
+        return None
+    try:
+        path_col = source_df.metadataColumn("_metadata").getField("file_path")
+    except AnalysisException:
+        return None  # e.g. a data column named _metadata hides it
+    listed = rel.location().allFiles()
+    statuses = [listed.apply(i) for i in range(listed.length())]
+    return path_col, _files.footer_int_bounds(
+        source_df.sparkSession, statuses, attr.name())
+
+
+def _skip_outside(source_df: DataFrame, found, lwm, hwm) -> DataFrame:
+    """*source_df* less the files whose bounds prove no row lies in
+    ``(lwm, hwm]`` (either end None: open): ``max <= lwm`` or
+    ``min > hwm``. The exclusion is a ``_metadata.file_path`` filter,
+    which Spark applies as file pruning when it plans the scan; a file
+    without bounds is always kept."""
+    if found is None:
+        return source_df
+    path_col, bounds = found
+    skipped = [path for path, b in bounds if b is not None and (
+        (lwm is not None and b[1] <= lwm) or (hwm is not None and b[0] > hwm))]
+    return source_df.filter(~path_col.isin(skipped)) if skipped else source_df
+
+
 def pull_incremental(
     source_df: DataFrame,
     wm_col: str,
@@ -423,10 +498,30 @@ def pull_incremental(
 
     Successive runs yield disjoint half-open intervals whose union is
     the full table — the FIXTURES §4 invariant.
+
+    Watermark pruning: when *wm_col* is a plain integer column of one
+    parquet scan (``_scan_file_bounds``: Projects and Filters over one
+    parquet relation, the column read as is, byte/short/int/long) and
+    the LWM and HWM are integers, each listed file's footer min/max of
+    the column is read (``files.footer_int_bounds``: one footer per
+    file, a flat schema with that exact leaf name, statistics on every
+    row group). A file is left out only when those bounds prove it
+    holds no row of ``(lwm, hwm]``: ``max <= lwm``, or ``min > hwm``
+    (a first pull, ``lwm=None``, skips only the latter); the HWM probe
+    skips by ``max <= lwm`` alone. Any other source, or a file its
+    footer cannot bound, keeps today's plan, so a derived watermark
+    (``withColumn``), a timestamp, a CSV or a union never changes.
     """
     lwm = store.get(dataset, default=default_lwm)
+    found = None
+    if (lwm is not None or hwm is not None) and all(
+            v is None or (isinstance(v, int) and not isinstance(v, bool))
+            for v in (lwm, hwm)):
+        found = _scan_file_bounds(source_df, wm_col)
     if hwm is None:
-        tail = source_df if lwm is None else source_df.filter(F.col(wm_col) > _lit(lwm))
+        tail = _skip_outside(source_df, found, lwm, None)
+        if lwm is not None:
+            tail = tail.filter(F.col(wm_col) > _lit(lwm))
         hwm = tail.agg(F.max(wm_col)).first()[0]
     if hwm is None:  # nothing new — empty pull, watermark unchanged
         empty = source_df.filter(F.lit(False))
@@ -435,7 +530,8 @@ def pull_incremental(
     # decimal.Decimal) must fail before the pull runs, not inside
     # commit() AFTER the downstream publish already succeeded
     _encode(hwm)
-    bounded = source_df.filter(incremental_predicate(wm_col, lwm, hwm))
+    bounded = _skip_outside(source_df, found, lwm, hwm).filter(
+        incremental_predicate(wm_col, lwm, hwm))
     return IncrementalPull(
         bounded, dataset, wm_col, lwm, hwm,
         lambda: store.commit(dataset, hwm, monotonic=True),

@@ -430,3 +430,35 @@ def test_returned_branch_outlives_the_fork_checkpoint(spark, sf_dir, tmp_path):
     ok = F.coalesce(F.col("value").between(0, 80), F.lit(False))
     assert res.dataframes["rest"].count() == ev.filter(
         ok & (F.col("event_type") != "click")).count()
+
+
+def test_fork_checkpoint_keeps_deserialized_rows(spark, sf_dir, tmp_path,
+                                                 monkeypatch):
+    """The fork's checkpointed rows are stored deserialized (no Java
+    serialization on store or read) and may spill to disk. PySpark's
+    ``MEMORY_AND_DISK`` is the serialized level."""
+    from gobblin_spark.plans import pipeline as PL
+
+    levels = []
+    real = PL.release_checkpoint
+
+    def spy(df):
+        level = df._jdf.queryExecution().logical().rdd().getStorageLevel()
+        levels.append((level.deserialized(), level.useDisk(),
+                       level.useMemory()))
+        real(df)
+
+    monkeypatch.setattr(PL, "release_checkpoint", spy)
+    pl = plans.Pipeline(
+        source=events_source(sf_dir),
+        row_policies=[quality.range_policy("value", 0, 80)],
+        quarantine_dir=str(tmp_path / "quar"),
+        branches=[
+            plans.Branch("clicks", F.col("event_type") == "click",
+                         final_dir=str(tmp_path / "clicks")),
+            plans.Branch("rest", F.col("event_type") != "click",
+                         final_dir=str(tmp_path / "rest")),
+        ],
+    )
+    assert plans.run(pl, spark).report.committed
+    assert levels == [(True, True, True)]
