@@ -578,8 +578,11 @@ def decode_png_rgb8(payload: bytes) -> tuple[int, int, int, int, int]:
 # matmuls), clamp, crop. Flat 8x8 blocks survive the DCT EXACTLY
 # (DC-only coefficients), which is what makes a closed-form SQL
 # oracle possible for a lossy format; arbitrary content round-trips
-# within +/-1/pixel at the all-ones table (pytest-pinned). Arithmetic
-# coding and hierarchical mode stay honest NotImplementedError gates.
+# within +/-1/pixel at the all-ones table (pytest-pinned). The written
+# bytes do not depend on the BLAS kernel that runs the DCT matmuls
+# (``_jpeg_coefs`` rounds exact ties the same way on every kernel).
+# Arithmetic coding and hierarchical mode stay honest
+# NotImplementedError gates.
 # ------------------------------------------------------------------
 
 _JPEG_ZIGZAG = [
@@ -665,14 +668,24 @@ class _JpegBitWriter:
 
 def _jpeg_coefs(block, C):
     """Forward DCT of one level-shifted 8x8 block, zigzag-ordered and
-    quantized by the flat-1 tables: 64 int64 coefficients. np.rint
-    rounds half-to-even exactly like builtins.round on float64 (pinned
-    by the codec tests) — a per-coefficient round() loop was the
+    quantized by the flat-1 tables: 64 int64 coefficients, each the
+    half-to-even rounding of the EXACT DCT coefficient.
+
+    With integer pixels the (0,0), (0,4), (4,0) and (4,4) coefficients
+    are signed pixel sums over 8, so they are often exact half-integer
+    ties; the float64 matmul lands such a tie one ulp above or below .5
+    depending on the BLAS kernel (FMA or not) picked for the CPU. The
+    product is therefore snapped to a 1e-9 grid before np.rint: the
+    matmul's error at |coef| <= 1024 is ~1e-11 at most, so an exact tie
+    snaps back to .5 on every kernel and rounds to even. Only a
+    coefficient within 5e-10 of a half-integer without being one is
+    rounded as if it were the tie. np.rint rounds half-to-even like
+    builtins.round on float64 — a per-coefficient round() loop was the
     encoder's hottest line."""
     import numpy as np
 
     flat = (C @ block @ C.T).reshape(64)
-    return np.rint(flat[_JPEG_ZIGZAG_IDX]).astype(np.int64)
+    return np.rint(np.round(flat[_JPEG_ZIGZAG_IDX], 9)).astype(np.int64)
 
 
 def _jpeg_put_dc(bw, dc_codes, diff: int) -> None:
