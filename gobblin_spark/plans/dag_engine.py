@@ -44,6 +44,8 @@ from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field as dc_field
 from enum import Enum
 
+from gobblin_spark.claim import replace
+
 
 class DagActionType(Enum):
     LAUNCH = "LAUNCH"
@@ -164,10 +166,7 @@ class FSDagStateStore:
                 for n, s in dag.nodes.items()
             },
         }
-        tmp = self._path(dag.spec.dag_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._path(dag.spec.dag_id))
+        replace(self._path(dag.spec.dag_id), json.dumps(doc).encode())
 
     def load(self, dag_id: str) -> dict | None:
         try:

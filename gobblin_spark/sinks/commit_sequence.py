@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from gobblin_spark.claim import claim
 from gobblin_spark.sinks import publish as P
 from gobblin_spark.state import WatermarkStore
 
@@ -73,10 +74,11 @@ class CommitSequenceStore:
     version pinned the journal to the LOCAL filesystem — on a cluster
     the sequence store must live on shared storage or a driver restart
     loses every pending commit). Journals are VERSIONED
-    (``seq-<job>.v<n>.json``): each persist writes the next version
-    then prunes older ones, so a crash mid-write strands at worst an
-    unreadable newest version and recovery falls back to the previous
-    — replacing os.replace's atomicity, which Hadoop rename lacks."""
+    (``seq-<job>.v<n>.json``): each persist claims the next version
+    (complete or absent, see :mod:`gobblin_spark.claim`) then prunes
+    older ones. Recovery takes the newest version that parses, so a
+    torn one left by the claim's O_EXCL fallback falls back to its
+    predecessor."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -105,16 +107,14 @@ class CommitSequenceStore:
             "steps": [{"kind": s.kind, "params": s.params, "done": s.done}
                       for s in seq.steps],
         }
-        fs, rootp, jvm = P._fs(self.spark, self.root)
+        fs, _, jvm = P._fs(self.spark, self.root)
         old = self._versions(seq.job_id)
         n = (old[-1][1] + 1) if old else 1
-        p = jvm.org.apache.hadoop.fs.Path(
-            rootp, f"seq-{seq.job_id}.v{n}.json")
-        out = fs.create(p, False)
-        try:
-            out.write(bytearray(json.dumps(payload).encode("utf-8")))
-        finally:
-            out.close()
+        p = f"{self.root}/seq-{seq.job_id}.v{n}.json"
+        if not claim(p, json.dumps(payload).encode("utf-8"), fs):
+            raise FileExistsError(
+                f"{p}: another executor of job {seq.job_id!r} wrote "
+                "this journal version")
         for _, _, stale in old:  # prune AFTER the new version is durable
             fs.delete(jvm.org.apache.hadoop.fs.Path(stale), False)
 

@@ -46,7 +46,7 @@ the write-audit-publish pattern), EXACTLY-ONCE streaming epochs
 (append_dataframe_idempotent: the epoch token rides the snapshot
 summary in the same metadata commit), true COMPARE-AND-SWAP commits
 (metadata() stamps the read version; commits target base+1 with
-create-fails-if-exists, retried with a full re-plan on collision),
+a single-winner claim, retried with a full re-plan on collision),
 and a SESSIONLESS mode (spark=None: no JVM; plain-file IO for local
 paths, pyarrow.fs for remote schemes) — the only metadata reader and
 scan planner the gobblin_iceberg DSv2 faces in sources/datasource.py
@@ -72,6 +72,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from gobblin_spark import claim as _claim
 from gobblin_spark.operators import avro_container as ACF
 from gobblin_spark.session import local_rows_df
 
@@ -1014,7 +1015,7 @@ def _write_bytes_if_absent_any(path: str, data: bytes) -> None:
     existing destination at the namenode) the bytes go to a unique
     temp sibling first and ``fs.move`` promotes them: two committers
     racing from the same base make exactly one rename succeed — a true
-    single-winner CAS, same strength as the local O_EXCL branch. On
+    single-winner CAS, same strength as the local link(2) claim. On
     object stores (s3:/gs: — "move" is copy+delete and OVERWRITES)
     this degrades to the documented existence-check + write, the same
     guarantee Hadoop's create(overwrite=false) gives on S3A
@@ -1276,16 +1277,6 @@ class _NoCommit(Exception):
         self.result = result
 
 
-def _is_exists_error(ex: BaseException) -> bool:
-    """Classify a Hadoop ``fs.create(path, overwrite=False)`` failure:
-    True only for the already-exists collision (the optimistic-
-    concurrency signal). Py4J wraps the Java exception, so the class
-    name rides the message text."""
-    msg = str(ex)
-    return ("FileAlreadyExistsException" in msg
-            or "already exists" in msg.lower())
-
-
 class IcebergTable:
     """A HadoopTables-layout Iceberg v2 table on any Hadoop-visible FS.
 
@@ -1322,17 +1313,7 @@ class IcebergTable:
         self._changelog_cached: list = []
 
     # -- fs helpers ----------------------------------------------------
-    @staticmethod
-    def _local(path: str) -> str:
-        return path[len("file:"):] if path.startswith("file:") else path
-
-    @staticmethod
-    def _sessionless_is_local(path: str) -> bool:
-        """In sessionless mode, bare and ``file:``-prefixed paths keep
-        the original plain-file IO branch (CRC sidecar hygiene, O_EXCL
-        commits); genuine remote schemes route through the
-        scheme-aware pyarrow.fs helpers."""
-        return _is_plain_local(path) or path.startswith("file:")
+    _local = staticmethod(_claim.os_path)
 
     def _fs(self, path: str):
         jvm = self.spark._jvm
@@ -1341,29 +1322,22 @@ class IcebergTable:
 
     def _session_claims_local(self, path: str) -> bool:
         """Whether a SESSION-mode commit may claim *path* on the
-        driver's local disk. ``file:`` paths always may; a BARE path
-        is local only when the session's ``fs.defaultFS`` is the
-        local filesystem — Hadoop resolves schemeless paths through
-        defaultFS, so link-claiming them locally under an hdfs:
-        default would split the metadata file and the hint across two
-        filesystems (review r13 pass 5). Sessionless callers resolve
-        bare paths locally by construction (no JVM, no defaultFS)."""
-        if path.startswith("file:"):
-            return True
-        if not _is_plain_local(path):
-            return False
-        if self.spark is None:
-            return True
+        driver's local disk: :func:`gobblin_spark.claim.is_local`
+        under the session's Hadoop configuration — link-claiming a
+        bare path locally under an hdfs: default would split the
+        metadata file and the hint across two filesystems (review r13
+        pass 5). Sessionless callers resolve bare paths locally by
+        construction (no JVM, no defaultFS)."""
+        if self.spark is None or not _is_plain_local(path):
+            return _claim.is_local(path)
         cached = getattr(self, "_dfs_is_local", None)
         if cached is None:      # one py4j lookup per table handle
-            dfs = self.spark._jsc.hadoopConfiguration().get(
-                "fs.defaultFS", "file:///")
-            cached = dfs.startswith("file:")
-            self._dfs_is_local = cached
+            cached = self._dfs_is_local = _claim.is_local(
+                path, self.spark._jsc.hadoopConfiguration())
         return cached
 
     def _write_bytes(self, path: str, data: bytes) -> int:
-        if self.spark is None and not self._sessionless_is_local(path):
+        if self.spark is None and not _claim.is_local(path):
             # sessionless REMOTE (s3:/hdfs:/gs:): the DSv2 commit
             # hook runs with no JVM — pyarrow.fs carries the write
             return _write_bytes_any(path, data)
@@ -1373,27 +1347,16 @@ class IcebergTable:
             # metadata file, which dominates commit latency (r13
             # profile: ~1.5 s/query of socket waits on metadata IO)
             lp = self._local(path)
-            os.makedirs(os.path.dirname(lp), exist_ok=True)
             # Hadoop LocalFS leaves .<name>.crc sidecars; a plain
             # rewrite (version-hint flips every commit) would desync
             # them and later JVM reads throw ChecksumException —
             # drop the sidecar so Hadoop skips verification
             _drop_crc_sidecar(lp)
-            # write-then-rename: an in-place rewrite truncates first,
-            # and a concurrent reader of the hint saw the empty file
-            # for as long as the writing thread waited on the GIL
-            # (60+ ms under a four-writer stress)
-            tmp = f"{lp}.write-{uuid.uuid4().hex[:12]}.tmp"
-            try:
-                with open(tmp, "wb") as fh:
-                    fh.write(data)
-                os.replace(tmp, lp)
-            except BaseException:
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-                raise
+            # not an in-place rewrite: that truncates first, and a
+            # concurrent reader of the hint saw the empty file for as
+            # long as the writing thread waited on the GIL (60+ ms
+            # under a four-writer stress)
+            _claim.replace(lp, data)
             return len(data)
         fs, p, _ = self._fs(path)
         out = fs.create(p, True)
@@ -1404,7 +1367,7 @@ class IcebergTable:
         return len(data)
 
     def _read_bytes(self, path: str) -> bytes:
-        if self.spark is None and not self._sessionless_is_local(path):
+        if self.spark is None and not _claim.is_local(path):
             return _read_bytes_any(path)
         if self.spark is None or self._session_claims_local(path):
             with open(self._local(path), "rb") as fh:
@@ -1571,7 +1534,7 @@ class IcebergTable:
                 f"{self.location}/metadata/v{v}.metadata.json")
         md = json.loads(raw)
         # remember which version this dict was READ from: the commit
-        # targets base+1 with create-fails-if-exists, making the pair
+        # targets base+1 with a single-winner claim, making the pair
         # a true compare-and-swap (private key, stripped at write)
         md["_base_version"] = v
         return md
@@ -1603,128 +1566,49 @@ class IcebergTable:
             node = rec["parent-snapshot-id"]
         return out
 
-    def _claim_metadata_local(self, lp: str, data: bytes,
-                              path: str) -> None:
-        """Atomic single-winner claim of a local metadata version
-        file: the payload is fully written to a temp sibling, then
-        hard-linked onto the canonical name — link(2) fails with
-        EEXIST if any racer claimed the version first, and a crash at
-        any point leaves either nothing or a complete, probe-adoptable
-        version file (never a torn final that wedges every later
-        claim). Filesystems without link(2) fall back to an O_EXCL
-        create of the canonical name, which reintroduces the
-        torn-on-crash window — the same documented degradation as the
-        schema registry's fallback; the probe refuses to adopt such a
-        file and the collision diagnosis below names it."""
-        os.makedirs(os.path.dirname(lp), exist_ok=True)
-        # a previous table generation's JVM write may have left a
-        # checksum sidecar for this name — desynced, it would fail
-        # later JVM reads of the linked payload
-        _drop_crc_sidecar(lp)
-        tmp = f"{lp}.claim-{uuid.uuid4().hex[:12]}.tmp"
+    def _collision(self, path: str, local: bool) -> RuntimeError:
+        """Diagnose a lost claim of metadata version file *path*. A
+        collider that parses as table metadata is a concurrent commit:
+        re-read and retry. An unparseable one is a crashed claim's torn
+        file or a foreign file and never heals, so retrying the CAS
+        against it is pointless: name the wedge instead — unless the
+        claim took the O_EXCL fallback (no link(2) here), the one path
+        that exposes a LIVE racer's partial write, where the signal
+        stays retryable and carries the unwedge action for the
+        persistent case (review r13 pass 5)."""
         try:
-            with open(tmp, "wb") as fh:
-                fh.write(data)
-        except BaseException:
-            # a failed temp write (ENOSPC, EIO) must not leak the
-            # .tmp forever — nothing sweeps metadata/ by default
-            # (review r13 pass 5)
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-            raise
-        try:
-            os.link(tmp, lp)
-            return
-        except FileExistsError as ex:
-            # on the link path every collider a COMMITTER produced is
-            # complete — an unparseable collider is a crashed O_EXCL-
-            # fallback writer's torn prefix or a foreign file, and it
-            # never heals, so retrying the CAS against it is pointless:
-            # name the wedge instead of burning the retries on
-            # "concurrent commit"
-            try:
-                with open(lp, "rb") as fh:
-                    doc = json.loads(fh.read())
-                genuine = isinstance(doc, dict) and "format-version" in doc
-            except ValueError:
-                genuine = False
-            except OSError:
-                genuine = True   # vanished/unreadable: treat as a race
-            if not genuine:
-                raise RuntimeError(
-                    f"metadata version file {path} exists but is not "
-                    "parseable table metadata — a crashed claim's torn "
-                    "file or a foreign file is wedging the commit "
-                    "path; verify no committer is mid-write and delete "
-                    "it to unwedge") from ex
-            raise RuntimeError(
-                f"concurrent commit detected: {path} already exists "
-                "(another committer advanced the table from the same "
-                "base version) — re-read metadata and retry") from ex
-        except OSError:
-            # link(2) unsupported (object-store FUSE mounts, some
-            # network filesystems): O_EXCL create of the canonical
-            # name — still single-winner, but a crash inside the
-            # create->write gap leaves a torn final (documented
-            # residual; only link(2) closes it)
-            created = False
-            try:
-                fh = open(lp, "xb")
-                created = True
-                with fh:
-                    fh.write(data)
-            except FileExistsError as ex:
-                # on THIS path a torn collider may be a live racer
-                # mid-gap, so the signal stays retryable — but a
-                # crashed claim's junk never heals, so the message
-                # carries the unwedge action for the persistent case
-                # (review r13 pass 5)
-                try:
-                    with open(lp, "rb") as cfh:
-                        cdoc = json.loads(cfh.read())
-                    cgen = (isinstance(cdoc, dict)
-                            and "format-version" in cdoc)
-                except ValueError:
-                    cgen = False
-                except OSError:
-                    cgen = True
-                note = ("" if cgen else
-                        " (the collider is currently unparseable — a "
-                        "racing committer mid-write, or a crashed "
-                        "claim's torn file; if this persists across "
-                        "retries, delete it to unwedge)")
-                raise RuntimeError(
-                    f"concurrent commit detected: {path} already "
-                    "exists (another committer advanced the table "
-                    "from the same base version) — re-read metadata "
-                    f"and retry{note}") from ex
-            except BaseException:
-                if created:
-                    # the write failed while WE are alive: remove our
-                    # own torn final instead of leaving the permanent
-                    # wedge the link path exists to prevent (review
-                    # r13 pass 5)
-                    try:
-                        os.remove(lp)
-                    except OSError:
-                        pass
-                raise
-        finally:
-            try:
-                os.remove(tmp)
-            except FileNotFoundError:
-                pass  # an aggressive orphan sweep raced the claim;
-                # the linked canonical (or the O_EXCL create) already
-                # carries the payload
+            doc = json.loads(self._read_bytes(path))
+            genuine = isinstance(doc, dict) and "format-version" in doc
+        except ValueError:
+            genuine = False
+        except Exception:  # noqa: BLE001 - vanished/unreadable: a race
+            genuine = True
+        retry = (f"concurrent commit detected: {path} already exists "
+                 "(another committer advanced the table from the same "
+                 "base version) — re-read metadata and retry")
+        if genuine:
+            return RuntimeError(retry)
+        if local and not _claim.links(self._local(path)):
+            return RuntimeError(
+                f"{retry} (the collider is currently unparseable — a "
+                "racing committer mid-write, or a crashed claim's torn "
+                "file; if this persists across retries, delete it to "
+                "unwedge)")
+        return RuntimeError(
+            f"metadata version file {path} exists but is not parseable "
+            "table metadata — a crashed claim's torn file or a foreign "
+            "file is wedging the commit path; verify no committer is "
+            "mid-write and delete it to unwedge")
 
     def _commit_metadata(self, md: dict) -> int:
-        """HadoopTables commit protocol: write the NEW vN file with
-        create-fails-if-exists (the optimistic-concurrency guard —
-        two committers racing from the same base version make the
-        loser ERROR instead of silently overwriting the winner's
-        snapshot), then flip the version hint last.
+        """HadoopTables commit protocol: CLAIM the NEW vN file (the
+        optimistic-concurrency guard — two committers racing from the
+        same base version make the loser ERROR instead of silently
+        overwriting the winner's snapshot), then flip the version hint
+        last. The claim (gobblin_spark.claim) is complete-or-absent: a
+        committer crash can no longer leave an unparseable v(N+1) that
+        collides every later claim forever (r13 commit-protocol model
+        check), except through the O_EXCL fallback.
 
         The target version is BASE+1 where base is the version the
         md dict was READ from (metadata() stamps it) — computing it
@@ -1734,7 +1618,9 @@ class IcebergTable:
         base = md.pop("_base_version", None)
         v = (base if base is not None else self._version()) + 1
         path = f"{self.location}/metadata/v{v}.metadata.json"
-        if self.spark is None and not self._sessionless_is_local(path):
+        data = json.dumps(md, indent=2).encode()
+        hint = f"{self.location}/metadata/version-hint.text"
+        if self.spark is None and not _claim.is_local(path):
             # sessionless REMOTE: rename-atomic stores (hdfs:)
             # get a temp-write + single-winner fs.move CAS; object
             # stores degrade to existence check + write — the SAME
@@ -1742,47 +1628,21 @@ class IcebergTable:
             # S3A (HEAD-then-PUT), i.e. no weaker than the JVM
             # path on the same store (see
             # _write_bytes_if_absent_any)
-            _write_bytes_if_absent_any(
-                path, json.dumps(md, indent=2).encode())
-            _write_bytes_any(
-                f"{self.location}/metadata/version-hint.text",
-                str(v).encode())
+            _write_bytes_if_absent_any(path, data)
+            _write_bytes_any(hint, str(v).encode())
             return v
-        if self._session_claims_local(path):
-            # ALL local commits (session or not) claim via hard-link
-            # of a fully-written temp file: atomic single-winner like
-            # the JVM create(overwrite=false), but with NO torn-final
-            # window — a committer crash mid-write used to leave an
-            # unparseable v(N+1) that collided every later claim
-            # forever (r13 commit-protocol model check; the registry's
-            # claim path, applied to table metadata)
-            self._claim_metadata_local(
-                self._local(path), json.dumps(md, indent=2).encode(),
-                path)
-            self._write_bytes(
-                f"{self.location}/metadata/version-hint.text",
-                str(v).encode())
-            return v
-        fs, p, _ = self._fs(path)
-        try:
-            out = fs.create(p, False)  # atomic create-fails-if-exists
-        except Exception as ex:
-            # only an exists-collision is a concurrency signal; a
-            # transient IO or permission failure must propagate as
-            # itself, not be silently retried as a "conflict"
-            if not _is_exists_error(ex):
-                raise
-            raise RuntimeError(
-                f"concurrent commit detected: {path} already exists "
-                "(another committer advanced the table from the same "
-                "base version) — re-read metadata and retry") from ex
-        try:
-            out.write(bytearray(json.dumps(md, indent=2).encode()))
-        finally:
-            out.close()
-        # the version hint flips last
-        self._write_bytes(f"{self.location}/metadata/version-hint.text",
-                          str(v).encode())
+        local = self._session_claims_local(path)
+        if local:
+            # a previous table generation's JVM write may have left a
+            # checksum sidecar for this name — desynced, it would fail
+            # later JVM reads of the claimed payload
+            _drop_crc_sidecar(self._local(path))
+            won = _claim.claim(path, data)
+        else:
+            won = _claim.claim(path, data, self._fs(path)[0])
+        if not won:
+            raise self._collision(path, local)
+        self._write_bytes(hint, str(v).encode())  # the hint flips last
         return v
 
     # -- lifecycle ------------------------------------------------------
@@ -1953,7 +1813,7 @@ class IcebergTable:
         snapshot's manifests (rewrite_data_files).
 
         OPTIMISTIC CONCURRENCY: a commit that loses the
-        create-fails-if-exists race RE-PLANS from fresh metadata —
+        single-winner claim race RE-PLANS from fresh metadata —
         new base version, new sequence number, new parent, re-carried
         manifests — and retries (the reference's IcebergMetadataWriter
         commit-retry loop; data FILES are immutable, so only the
@@ -2132,7 +1992,7 @@ class IcebergTable:
             for p in (mlist_path, manifest_path):
                 try:
                     if self.spark is None:
-                        if self._sessionless_is_local(p):
+                        if _claim.is_local(p):
                             os.remove(self._local(p))
                         else:
                             _delete_any(p)

@@ -38,6 +38,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from gobblin_spark.claim import is_local
+
 FORMATS = ("parquet", "orc", "json", "csv", "text", "avro")
 
 
@@ -63,8 +65,7 @@ def _local_fs_path(df: DataFrame, path: str) -> str | None:
     """The local-filesystem path for *path* when the session resolves
     it to local disk, else None. ``file:`` paths always resolve
     locally; a BARE path is local only when ``fs.defaultFS`` is the
-    local filesystem (same rule as the Iceberg sink's
-    ``_session_claims_local``)."""
+    local filesystem (:func:`gobblin_spark.claim.is_local`)."""
     if path.startswith("file:"):
         # parse properly: 'file://HOST/p' carries an authority —
         # naive slash-stripping turned it into '/HOST/p' (a wrong,
@@ -86,8 +87,7 @@ def _local_fs_path(df: DataFrame, path: str) -> str | None:
     key = id(sc)
     cached = _DFS_LOCAL_CACHE.get(key)
     if cached is None:
-        dfs = sc._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
-        cached = dfs.startswith("file:")
+        cached = is_local(path, sc._jsc.hadoopConfiguration())
         _DFS_LOCAL_CACHE[key] = cached
     return path if cached else None
 

@@ -71,6 +71,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructField, StructType
 
+from gobblin_spark.claim import is_local
+
 
 def _batches_to_table(iterator, target_schema):
     """Arrow RecordBatch iterator → one pyarrow Table in
@@ -1329,7 +1331,7 @@ def _file_batches(part: _IcebergFilePartition, target) -> Iterator:
 
     path = part.path
     pf = pq.ParquetFile(
-        IcebergTable._local(path) if IcebergTable._sessionless_is_local(path)
+        IcebergTable._local(path) if is_local(path)
         else _open_input_file_any(path))
     file_cols = pf.schema_arrow.names
     if part.col_ids is None:
@@ -1470,7 +1472,7 @@ class _IcebergWriteFace:
     driver-side commit turns the file set into ONE append snapshot via
     the normal manifest chain (in a SESSIONLESS python worker — no
     JVM — through IcebergTable's local-IO mode with its
-    create-fails-if-exists guard), and abort deletes the
+    single-winner claim), and abort deletes the
     never-referenced files (anything missed is orphan-collectable by
     remove_orphan_files). Unpartitioned tables only — partitioned
     layouts need the transform columns of append_dataframe. Files
@@ -1521,7 +1523,7 @@ class _IcebergWriteFace:
             return _IcebergCommit([], 0)
         # attempt-unique name: a speculative twin never clobbers
         fname = f"task-{task:05d}-{attempt}{suffix}.parquet"
-        if IcebergTable._sessionless_is_local(self.location):
+        if is_local(self.location):
             path = os.path.join(IcebergTable._local(self.location),
                                 "data", sub, fname)
         else:

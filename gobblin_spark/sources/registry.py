@@ -32,11 +32,11 @@ import hashlib
 import json
 import os
 import time
-import uuid
 
 from pyspark.sql import types as T
 
 from gobblin_spark import schema as _schema
+from gobblin_spark.claim import claim
 
 
 def schema_id(avro_schema: dict | str) -> str:
@@ -132,7 +132,6 @@ class FileSchemaRegistry:
         if isinstance(avro_schema, str):
             avro_schema = json.loads(avro_schema)
         sid = schema_id(avro_schema)
-        os.makedirs(self._subject_dir(subject), exist_ok=True)
         lost = 0
         while lost < 16:
             # Re-scan EVERY attempt: a racer may have just registered
@@ -176,52 +175,20 @@ class FileSchemaRegistry:
             v = (versions[-1][0] + 1) if versions else 1
             payload = {"id": sid, "version": v, "subject": subject,
                        "schema": avro_schema}
-            # Atomic single-winner claim (audit r12/r13): the version is
-            # claimed by hard-linking a FULLY-WRITTEN temp file onto the
-            # canonical per-version name — link(2) is atomic and fails
-            # with EEXIST if any racer claimed it first, so exactly one
-            # writer can ever own a version and readers never observe a
-            # torn payload. (The previous write-then-list tiebreak was
-            # itself check-then-act: two racers could each list before
-            # the other wrote and both "win".)
+            # Single-winner claim of the canonical per-version name
+            # (gobblin_spark.claim): exactly one writer can ever own a
+            # version, and readers never see a torn payload except from
+            # a crashed O_EXCL-fallback claim, which _load() skips (the
+            # burned version number keeps allocation moving). RESIDUAL
+            # of that fallback: a racer whose create->write gap exceeds
+            # TORN_GRACE_SEC is treated as crashed, so a registration
+            # racing it can skip the compat check against (or
+            # re-register the sid of) its eventually-landing schema.
             path = os.path.join(self._subject_dir(subject),
                                 f"v{v:06d}.json")
-            tmp = os.path.join(self._subject_dir(subject),
-                               f".claim-{uuid.uuid4().hex}.tmp")
-            with open(tmp, "w") as f:
-                json.dump(payload, f)
-            try:
-                os.link(tmp, path)
+            if claim(path, json.dumps(payload).encode()):
                 return sid
-            except FileExistsError:
-                lost += 1
-                continue  # lost this version — retry at the next one
-            except OSError:
-                # link(2) unsupported (object-store FUSE mounts, some
-                # network filesystems — review r13): fall back to an
-                # O_EXCL create of the canonical name. Still single-
-                # winner; the losses are (a) torn-on-crash payloads,
-                # which every reader tolerates via _load() (the burned
-                # version number keeps allocation moving), and (b) a
-                # RESIDUAL race the young-torn grace above only
-                # narrows: a racer whose create->write gap exceeds
-                # TORN_GRACE_SEC is treated as crashed, so a
-                # registration racing it can skip the compat check
-                # against (or re-register the sid of) its
-                # eventually-landing schema. Only the atomic link(2)
-                # claim closes this completely — the fallback is a
-                # documented degradation for filesystems without it.
-                try:
-                    fd = os.open(path,
-                                 os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                except FileExistsError:
-                    lost += 1
-                    continue  # lost this version
-                with os.fdopen(fd, "w") as f:
-                    json.dump(payload, f)
-                return sid
-            finally:
-                os.remove(tmp)
+            lost += 1  # lost this version — retry at the next one
         raise RuntimeError(
             f"schema registration for {subject!r} lost the version "
             "race 16 times — registry under pathological contention")

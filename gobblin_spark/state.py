@@ -13,8 +13,8 @@ Reference mapping (all relative to /root/reference/):
   into disjoint half-open intervals — no row is pulled twice, none is
   skipped.
 - FsStateStore versioned job-state files (gobblin-metastore/.../
-  FsStateStore.java): each commit is a NEW sequenced file (create is
-  atomic on HDFS-like stores); the current watermark is the max
+  FsStateStore.java): each commit is a NEW sequenced file, claimed
+  through gobblin_spark.claim; the current watermark is the max
   sequence. History is retained for audit/rollback.
 - Exactly-once ordering (gobblin-runtime/.../SafeDatasetCommit.java:67):
   the watermark is committed ONLY after the data publish succeeds —
@@ -46,6 +46,7 @@ from collections.abc import Callable
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from gobblin_spark.claim import claim
 from gobblin_spark.sources import files as _files
 
 _WM_PREFIX = "wm-"
@@ -96,7 +97,7 @@ class ConcurrentWriterError(RuntimeError):
 
 
 class _SeqTaken(Exception):
-    """Internal: an atomic ledger create lost to an EXISTING file at
+    """Internal: a ledger claim lost to an EXISTING file at
     that sequence — a genuine writer collision, distinguished from raw
     IO faults so callers never misreport a disk error as a rival (or
     retry a fault as if it were a race)."""
@@ -106,8 +107,8 @@ class WatermarkStore:
     """Versioned per-dataset watermark store on any Hadoop filesystem.
 
     Layout: ``<root>/<dataset>/wm-<seq:010d>-<token>.json``. Each commit
-    creates a new file (atomic create, no read-modify-write race on the
-    current pointer); the live watermark is the max sequence. The store
+    claims a new file (no read-modify-write race on the current
+    pointer); the live watermark is the max sequence. The store
     is driver-side metadata — O(bytes), not O(rows).
     """
 
@@ -156,9 +157,9 @@ class WatermarkStore:
             stream.close()
 
     def _read_latest(self, entries: list[tuple[int, str]]):
-        """Decode the newest PARSEABLE entry. A driver crash inside a
-        commit's create->write window leaves a torn/empty file at the
-        top sequence (audit r8); that commit never logically happened,
+        """Decode the newest PARSEABLE entry. A driver crash inside the
+        claim's O_EXCL fallback leaves a torn/empty file at the top
+        sequence (audit r8); that commit never logically happened,
         so reads fall back to the previous one instead of wedging
         every replay on a JSONDecodeError. The torn file still holds
         its sequence number, so later commits allocate past it."""
@@ -179,12 +180,11 @@ class WatermarkStore:
         """Persist *value* as the new watermark; returns its sequence.
 
         The sequence file is named WITHOUT the run token
-        (``wm-<seq>.json``) so the atomic ``create(overwrite=False)``
-        actually detects two committers racing at the same sequence —
-        token-suffixed names let both creates succeed and silently
-        shadowed one commit. On collision the loser re-reads and
-        retries at the next sequence (bounded). Legacy token-suffixed
-        files still parse.
+        (``wm-<seq>.json``) so the claim actually detects two
+        committers racing at the same sequence — token-suffixed names
+        let both writes succeed and silently shadowed one commit. On
+        collision the loser re-reads and retries at the next sequence
+        (bounded). Legacy token-suffixed files still parse.
 
         ``monotonic=True`` (incremental-pull watermarks) rejects a
         value ordered BELOW the current one — a delayed retry must not
@@ -200,7 +200,7 @@ class WatermarkStore:
             entries = self._entries(dataset)
             # the monotonic guard runs INSIDE the retry loop, against
             # the entries just re-read: a committer that loses the
-            # create() race must re-compare against the RACE WINNER's
+            # claim race must re-compare against the RACE WINNER's
             # value before taking the next sequence, or a stale lower
             # watermark could still rewind the frontier one seq later
             if monotonic and entries:
@@ -227,28 +227,20 @@ class WatermarkStore:
 
     def _create_seq_file(self, fs, jvm, dpath, dataset: str, seq: int,
                          value, token: str) -> None:
-        """ONE copy of the ledger file format + atomic create (shared
-        by commit and commit_fenced — a format change applied to one
-        and not the other would silently fork the ledger). Raises
+        """ONE copy of the ledger file format + its claim (shared by
+        commit and commit_fenced — a format change applied to one and
+        not the other would silently fork the ledger). Raises
         :class:`_SeqTaken` when the sequence file already EXISTS (a
-        genuine writer collision); raw IO faults in create/write/close
-        propagate untouched — a torn file this crash leaves behind is
-        our own artifact, which readers' torn-entry fallback skips and
-        later commits allocate past."""
+        genuine writer collision); raw IO faults propagate untouched.
+        The claim is complete-or-absent with one winner on local disk
+        and HDFS (see :mod:`gobblin_spark.claim`); readers still skip
+        a torn entry, which the claim's O_EXCL fallback can leave."""
         fname = f"{_WM_PREFIX}{seq:010d}.json"
-        target = jvm.org.apache.hadoop.fs.Path(dpath, fname)
         payload = dict(_encode(value), dataset=dataset, seq=seq,
                        run_id=token)
-        try:
-            out = fs.create(target, False)
-        except Exception as ex:
-            if fs.exists(target):
-                raise _SeqTaken(fname) from ex
-            raise
-        try:
-            out.write(bytearray(json.dumps(payload).encode("utf-8")))
-        finally:
-            out.close()
+        if not claim(f"{self.root}/{dataset}/{fname}",
+                     json.dumps(payload).encode("utf-8"), fs):
+            raise _SeqTaken(fname)
 
     def get_with_fence(self, dataset: str, default=None):
         """``(current watermark or default, fence)``. The fence is the
@@ -304,21 +296,22 @@ class WatermarkStore:
         writer advanced the ledger past the state THIS commit was
         computed from — retrying at a later sequence would silently
         interleave two writers' epoch machines. Raises
-        :class:`ConcurrentWriterError` instead (the same single-writer
-        fencing Structured Streaming gets from its batch-file
-        create-no-overwrite CAS in HDFSMetadataLog)."""
+        :class:`ConcurrentWriterError` instead (the single-writer
+        fencing Structured Streaming's HDFSMetadataLog gets from
+        publishing each batch file once; here the claim of
+        :mod:`gobblin_spark.claim`)."""
         fs, jvm = self._fs()
         dpath = self._dataset_path(jvm, dataset)
         fs.mkdirs(dpath)
         seq = fence + 1
-        # the create-no-overwrite CAS alone goes blind once a PRUNE has
+        # the claim alone goes blind once a PRUNE has
         # deleted the colliding file (a rival that advanced the ledger
         # past keep_last while this writer was paused): pre-check the
         # live top against the fence so a stale writer dies instead of
         # landing a shadowed low-sequence record (review r13 pass 3).
-        # The residual list->create window needs a rival to complete
-        # > keep_last commits AND a prune inside it — the create CAS
-        # still catches everything smaller.
+        # The residual list->claim window needs a rival to complete
+        # > keep_last commits AND a prune inside it — the claim still
+        # catches everything smaller.
         top = self.fence(dataset)
         if top != fence:
             raise ConcurrentWriterError(
@@ -367,8 +360,8 @@ class WatermarkStore:
 
     def prune(self, dataset: str, keep_last: int = 100) -> int:
         """Delete all but the newest *keep_last* commits of a dataset
-        key. The store grows one file per commit by design (atomic
-        create, no read-modify-write); long-lived streaming ledgers
+        key. The store grows one file per commit by design (one claim
+        per commit, no read-modify-write); long-lived streaming ledgers
         (~8.6k commits/day at a 10s trigger) need this or every
         get/commit pays an ever-growing listStatus (audit r8). Returns
         the number of files deleted; rollback() reach shrinks to the
@@ -551,7 +544,7 @@ def persist_file_snapshot(listing: DataFrame, root: str, dataset: str) -> None:
     deleted the previous snapshot before the new write committed, so a
     crash mid-write lost ALL snapshot state (next run re-ingested
     everything). Each run writes ``_file_snapshot-v<seq>`` and flips a
-    pointer through the same atomic-create WatermarkStore ledger the
+    pointer through the same WatermarkStore ledger the
     watermarks use; superseded versions are pruned AFTER the flip."""
     base = snapshot_store_path(root, dataset)
     ptr_store = WatermarkStore(listing.sparkSession, root)

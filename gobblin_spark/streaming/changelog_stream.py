@@ -32,9 +32,10 @@ through a row-server hop.
 Scale shape (100 TB): everything here is driver-side metadata except
 the delivered DataFrame, whose plan is the audited changelog plan —
 per-epoch cost is O(delta), never O(table). The checkpoint is a
-WatermarkStore ledger (atomic create-if-absent per sequence, torn-file
-fallback, pruning), so the offset directory works on any Hadoop
-filesystem the session reaches.
+WatermarkStore ledger (one claim per sequence, see gobblin_spark.claim
+for its guarantee on each filesystem; torn-entry skipping; pruning),
+so the offset directory works on any Hadoop filesystem the session
+reaches.
 """
 
 from __future__ import annotations

@@ -43,6 +43,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from gobblin_spark.claim import claim
 from gobblin_spark.state import WatermarkStore
 
 LATE_DIR = "_late"
@@ -204,8 +205,9 @@ def _run_token(checkpoint_dir: str, spark=None) -> str:
     """Epoch ids restart at 0 for every new checkpoint LINEAGE; this
     token namespaces the epoch ledger and the epoch partition values.
     The token binds to the lineage's QUERY ID (the ``metadata`` file
-    Spark keeps at the checkpoint root — created here first if absent,
-    Spark adopts a pre-existing one), not just the path: deleting and
+    Spark keeps at the checkpoint root — claimed here first if absent,
+    Spark adopts a pre-existing one; a racer that loses the claim
+    adopts the winner's id), not just the path: deleting and
     recreating a checkpoint dir restarts epoch ids at 0, and a
     path-only token would then mark every re-read batch as a replay
     and silently drop it (audit r8). Without a session the path-only
@@ -220,22 +222,16 @@ def _run_token(checkpoint_dir: str, spark=None) -> str:
         jvm = spark._jvm
         mpath = jvm.org.apache.hadoop.fs.Path(f"{base}/metadata")
         fs = mpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(mpath):
-            stream = fs.open(mpath)
-            try:
-                raw = bytes(jvm.org.apache.commons.io.IOUtils
-                            .toByteArray(stream))
-            finally:
-                stream.close()
-            qid = _json.loads(raw.decode())["id"]
-        else:
-            qid = str(_uuid.uuid4())
-            out = fs.create(mpath, False)
-            try:
-                out.write(bytearray(
-                    _json.dumps({"id": qid}).encode()))
-            finally:
-                out.close()
+        if not fs.exists(mpath):
+            claim(f"{base}/metadata",
+                  _json.dumps({"id": str(_uuid.uuid4())}).encode(), fs)
+        stream = fs.open(mpath)
+        try:
+            raw = bytes(jvm.org.apache.commons.io.IOUtils
+                        .toByteArray(stream))
+        finally:
+            stream.close()
+        qid = _json.loads(raw.decode())["id"]
     return hashlib.md5(f"{base}:{qid}".encode()).hexdigest()[:8]
 
 

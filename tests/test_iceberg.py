@@ -1682,22 +1682,6 @@ def test_epoch_token_rechecked_inside_commit_retry(spark, tmp_path):
     assert t.read().count() == 1
 
 
-def test_exists_error_classification():
-    """Only an already-exists collision maps to the retried
-    'concurrent commit' signal; transient IO / permission failures
-    propagate as themselves (ADVICE r7 low)."""
-    from gobblin_spark.sinks.iceberg import _is_exists_error
-
-    assert _is_exists_error(Exception(
-        "org.apache.hadoop.fs.FileAlreadyExistsException: v3"))
-    assert _is_exists_error(Exception(
-        "java.io.IOException: File already exists: v3.metadata.json"))
-    assert not _is_exists_error(Exception(
-        "org.apache.hadoop.security.AccessControlException: denied"))
-    assert not _is_exists_error(Exception(
-        "java.io.IOException: Connection reset by peer"))
-
-
 def test_commit_metadata_reraises_non_exists_failures(spark, tmp_path, monkeypatch):
     """A permission failure during fs.create must surface unchanged —
     not be relabeled 'concurrent commit' and silently retried 4x by
